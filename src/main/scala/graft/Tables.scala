@@ -1,6 +1,11 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Registers the driver-generated parquet testdata (TESTDATA.md) as temp
   * views so queries can be expressed in the Hive-ish SQL dialect Spark SQL
@@ -16,13 +21,75 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   // skip re-registration while the session's views already point at this
-  // sfDir: re-reading 10 parquet footers per query is pure overhead.
-  // Temp views are PER SparkSession, so key by the session itself
-  // (weakly — sessions must stay collectable), remembering only the
-  // LAST dir: switching sfDir must re-register.
+  // sfDir: re-registering costs 10 view definitions per query, and 10
+  // Spark schema-inference jobs whenever `schemas` misses. Temp views
+  // are PER SparkSession, so key by the session itself (weakly —
+  // sessions must stay collectable), remembering only the LAST dir:
+  // switching sfDir must re-register.
   private val registered =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
+
+  // (qualified path, session's parquet-inference confs) -> (identity of
+  // every leaf file under the path, the schema inference returned).
+  // JVM-wide, unlike `registered`: the schema is a function of the files
+  // and those confs alone, so a new session reuses it.
+  private val schemas = new scala.collection.concurrent.TrieMap[
+    (String, Seq[(String, String)]), (Seq[(String, Long, Long)], StructType)]()
+
+  // every session setting Spark's parquet schema inference reads
+  // (ParquetUtils.inferSchema and ParquetToSparkSchemaConverter);
+  // `nanosAsLong`, which `register` sets, is under the legacy prefix
+  private val inferenceConfPrefixes = Seq("spark.sql.parquet.",
+    "spark.sql.legacy.parquet.", "spark.sql.caseSensitive",
+    "spark.sql.files.ignoreCorruptFiles")
+
+  /** Read a parquet path the way `spark.read.parquet(path)` does, without
+    * re-running Spark's schema-inference job (one job per call, even for
+    * a single file) when this JVM already inferred the same files.
+    *
+    * Invariant: a memo hit returns exactly the schema inference would
+    * return in this session. The memo checks every input of inference —
+    * each leaf file's qualified path, length and modification time, and
+    * the session's settings under `inferenceConfPrefixes` — so a changed
+    * file or conf is a miss that infers again (and replaces the path's
+    * stale entry: one entry per path and conf set). A miss is the plain
+    * `spark.read.parquet(path)`, so the first read of a file in a JVM
+    * and its errors (missing path, no parquet files) are unchanged. The
+    * price of a hit is one file listing, which the read itself repeats. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    parquet(spark, path, spark.sessionState.newHadoopConf())
+
+  private def parquet(spark: SparkSession, path: String,
+                      hadoopConf: Configuration): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    val files =
+      try {
+        val it = fs.listFiles(p, true)
+        val b = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        b.result().sortBy(_._1)
+      } catch {
+        // a missing path (or a glob, which only Spark expands) reads
+        // unmemoized, so Spark raises or resolves it exactly as before
+        case _: FileNotFoundException => return spark.read.parquet(path)
+      }
+    val confs = spark.conf.getAll.iterator.filter { case (k, _) =>
+      inferenceConfPrefixes.exists(k.startsWith)
+    }.toSeq.sorted
+    val key = (fs.makeQualified(p).toString, confs)
+    schemas.get(key) match {
+      case Some((`files`, schema)) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemas.put(key, (files, df.schema))
+        df
+    }
+  }
 
   def register(spark: SparkSession, sfDir: String): Unit = {
     if (registered.get(spark) == sfDir) return
@@ -34,8 +101,9 @@ object Tables {
     // NTZ→TZ cast is value-preserving) — queries and the DuckDB oracle
     // then see identical µs instants either way (FIXTURES.md §2).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val hadoopConf = spark.sessionState.newHadoopConf()
     names.foreach { t =>
-      val raw = spark.read.parquet(s"$sfDir/$t.parquet")
+      val raw = parquet(spark, s"$sfDir/$t.parquet", hadoopConf)
       val df =
         if (t == "events") {
           import org.apache.spark.sql.functions._

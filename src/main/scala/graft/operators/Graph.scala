@@ -51,35 +51,44 @@ object Graph {
   // The co-purchase edge list is the SHARED input of the whole graph
   // family (12 queries build the identical relation) — in production it
   // is a materialized table the analytics suite reads, not a per-query
-  // derivation, so it is built and persisted ONCE per (session, sfDir).
+  // derivation, so it is persisted ONCE per (session, sfDir).
   // Oracles keep the inline derivation (DuckDB's one-statement
   // protocol), so correctness still checks the full pipeline per query.
-  private val edgesMemo =
-    new scala.collection.concurrent.TrieMap[(Int, String), DataFrame]()
+  //
+  // The memo records only WHICH sfDirs a session persisted. Every call
+  // rebuilds the (lazy) DataFrame in the calling session, and Spark's
+  // CacheManager serves it from the persisted data while that is cached,
+  // matching by plan. Keyed by the session itself, weakly (the
+  // Tables.register pattern): a session can never receive another
+  // session's DataFrame, and since the memo holds no DataFrame (which
+  // would pin its session), an entry dies with its session.
+  private val edgesPersisted =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession,
+        scala.collection.concurrent.TrieMap[String, Unit]]())
 
-  private def weightedEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    val df = edgesMemo.getOrElseUpdate((System.identityHashCode(spark), sfDir), {
-      Tables.register(spark, sfDir)
-      val io = spark.table("lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val a = io.select(col("o"), col("p").as("src"))
-      val b = io.select(col("o"), col("p").as("dst"))
-      a.join(b, Seq("o")).where(col("src") < col("dst"))
-        .groupBy(col("src"), col("dst"))
-        .agg(count(lit(1)).as("w"))
-        .where(col("w") >= 2)
-        .select(col("src"), col("dst"),
-          floor(lit(1000000.0) / col("w")).cast("bigint").as("cost"))
-        .persist()
-    })
-    // deliberately NO re-persist here: an external cache clear (Bench
-    // between timed passes) unpersists the shared DF, and re-marking it
+  private[graft] def weightedEdges(spark: SparkSession, sfDir: String): DataFrame = {
+    Tables.register(spark, sfDir)
+    val io = spark.table("lineitem")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct()
+    val a = io.select(col("o"), col("p").as("src"))
+    val b = io.select(col("o"), col("p").as("dst"))
+    val df = a.join(b, Seq("o")).where(col("src") < col("dst"))
+      .groupBy(col("src"), col("dst"))
+      .agg(count(lit(1)).as("w"))
+      .where(col("w") >= 2)
+      .select(col("src"), col("dst"),
+        floor(lit(1000000.0) / col("w")).cast("bigint").as("cost"))
+    // persist on the FIRST build only: an external cache clear (Bench
+    // between timed passes) unpersists the shared data, and re-marking it
     // made single-use queries pay a cache write per pass for reuse they
     // never get (kcore +1.9 s). Queries that loop over the edges
     // re-mark persist at their call site (MST); sequential multi-query
     // sessions (Verify: 285 queries, no clears) share the first build.
-    df
+    val dirs = edgesPersisted.computeIfAbsent(spark,
+      _ => scala.collection.concurrent.TrieMap.empty)
+    if (dirs.putIfAbsent(sfDir, ()).isEmpty) df.persist() else df
   }
 
   private def edges(spark: SparkSession, sfDir: String): DataFrame =

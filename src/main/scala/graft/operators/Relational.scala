@@ -617,7 +617,7 @@ object Relational {
     // file_row_number — an independent reader of the real per-file
     // layout, valid on single-file and multi-part fixtures alike.
     "scan_block_offset" -> ((spark, sfDir) => {
-      spark.read.parquet(s"$sfDir/documents.parquet")
+      Tables.parquet(spark, s"$sfDir/documents.parquet")
         .select(col("doc_id"),
           regexp_extract(input_file_name(), "[^/]+$", 0).as("fname"),
           col("_metadata.row_index").as("block_offset"))

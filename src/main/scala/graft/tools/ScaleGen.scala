@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Bench-only scale-up generator: replicates an existing SF directory
   * K× (default 10) into `<dest>`, preserving the statistical shape the
@@ -103,7 +104,7 @@ object ScaleGen {
     spark.sparkContext.setLogLevel("WARN")
 
     def replicate(t: String)(f: (DataFrame, org.apache.spark.sql.Column) => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$src/$t.parquet")
+      val base = Tables.parquet(spark, s"$src/$t.parquet")
       val reps = spark.range(k).withColumnRenamed("id", "graft_r")
       val out = f(base.crossJoin(reps), col("graft_r")).drop("graft_r")
       out.write.mode("overwrite").parquet(s"$dest/$t.parquet")
@@ -116,7 +117,7 @@ object ScaleGen {
       * driver-side constant (translate's image string). */
     def vocabReplicate(t: String, idCol: String, textCol: String): Unit = {
       val reps = (0 until k).map { r =>
-        spark.read.parquet(s"$src/$t.parquet")
+        Tables.parquet(spark, s"$src/$t.parquet")
           .withColumn(idCol, col(idCol) + lit(r.toLong * Off))
           .withColumn(textCol, translate(col(textCol), Alphabet, affineImage(r)))
       }
@@ -127,7 +128,7 @@ object ScaleGen {
 
     // dimensions: copy, don't scale
     for (t <- Seq("region", "nation")) {
-      spark.read.parquet(s"$src/$t.parquet")
+      Tables.parquet(spark, s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$dest/$t.parquet")
       println(s"[scalegen] $t: copied")
     }
