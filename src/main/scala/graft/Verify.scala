@@ -47,6 +47,14 @@ object Verify {
         // remaining ~96 (mirrors Bench)
         spark.catalog.clearCache()
     }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(sfDir))
+    spark.stop()
+  }
+
+  /** The oracle_sql.json text for `sfDir`: every SparkEntry oracle
+    * statement by query name. The one writer of that file, shared with
+    * `tools.DumpOracleSql`, so both produce the same bytes. */
+  def oracleJson(sfDir: String): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -68,11 +76,9 @@ object Verify {
       val p = s"$sfDir/documents.parquet"
       if (new java.io.File(p).isDirectory) s"$p/*.parquet" else p
     }
-    val json = SparkEntry.oracleSql
+    SparkEntry.oracleSql
       .map { case (k, v) =>
         s"${q(k)}: ${q(v.replace("__GRAFT_DOCUMENTS_PARQUET__", docsPath))}" }
       .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

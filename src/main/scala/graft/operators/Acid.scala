@@ -343,10 +343,9 @@ object Acid {
       .map(_.toLong).getOrElse(60000L)
     val ttlMs = spark.conf.getOption("graft.acid.lockTtlMs")
       .map(_.toLong).getOrElse(3600000L)
-    // same knob-validation discipline as graft.ann.lsh*: a non-positive
-    // TTL would declare EVERY live writer's lock stale and break it —
-    // silent lost-update territory, so refuse it here by name (and
-    // before any catalog/filesystem work)
+    // a non-positive TTL would declare EVERY live writer's lock stale
+    // and break it — silent lost-update territory, so refuse it here by
+    // name (and before any catalog/filesystem work)
     require(waitMs >= 0, s"graft.acid.lockWaitMs must be >= 0 (got $waitMs)")
     require(ttlMs > 0, s"graft.acid.lockTtlMs must be > 0 (got $ttlMs)")
     val lock = lockPath(spark, table)

@@ -777,10 +777,9 @@ object Dedup {
     // PLANES ARE ADAPTIVE (r15 sf10 finding: with 6 fixed planes there
     // are only 64 buckets/table, so past ~sf0.2 EVERY bucket exceeds
     // the cap and the operator silently returns ZERO pairs — the exact
-    // opposite of "the 100 TB answer"): pe = smallest p in [6, 18]
-    // with n ≤ 64·2^p, i.e. average bucket ≤ the cap. Integer-exact
-    // (no float log2 — ceil(log/log) is an ulp landmine at exact
-    // powers of two), identical arithmetic in the oracle. Plane
+    // opposite of "the 100 TB answer"): `Similarity.lshGeometry`'s
+    // pe = smallest p in [6, 18] with n ≤ 64·2^p, i.e. average bucket
+    // ≤ the cap, identical arithmetic in the oracle. Plane
     // signs are seeded per (table, plane, dim) independent of the
     // plane COUNT and bucket bit p is plane p, so pe planes equal the
     // first pe of any larger family — results at pe=6 SFs (the driver
@@ -791,9 +790,9 @@ object Dedup {
       Tables.register(spark, sfDir)
       val emb = spark.table("embeddings")
       val n = emb.count()
-      val pe = (6 to 18).find(p => n <= 64L * (1L << p)).getOrElse(18)
+      val (tables, pe) = Similarity.lshGeometry(n)
       System.err.println(s"[graft-scale] dedup_embedding_lsh pe=$pe n=$n")
-      val cand = lshCandidatePairs(emb, tables = 16, planes = pe, maxBucket = 64)
+      val cand = lshCandidatePairs(emb, tables, planes = pe, maxBucket = 64)
       cand
         .join(emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea")), "vec_a")
         .join(emb.select(col("vec_id").as("vec_b"), col("embedding").as("eb")), "vec_b")

@@ -668,35 +668,16 @@ object Similarity {
       ORDER BY qid, is_pos DESC, rn"""
   }
 
-  /** The LSH bucket geometry shared by the batch and indexed-serving
-    * paths: 16 tables, ADAPTIVE planes — pe = smallest p in [6, 18]
-    * with n ≤ 64·2^p (the r15 finding: a fixed plane count lets
-    * per-bucket occupancy, and so probe cost, grow linearly with the
-    * corpus). Integer-exact; `graft.ann.lshTables`/`lshPlanes` knobs
-    * override for deployment tuning (DiagLshKnob), but the driver
-    * never sets them, so every oracled run is adaptive. */
-  private[graft] def lshGeometry(spark: SparkSession,
-                                 emb: DataFrame): (Int, Int) = {
-    val tables = spark.conf.getOption("graft.ann.lshTables")
-      .map(_.toInt).getOrElse(16)
-    val planes = spark.conf.getOption("graft.ann.lshPlanes")
-      .map(_.toInt).getOrElse {
-        val n = emb.count()
-        val pe = (6 to 18).find(p => n <= 64L * (1L << p)).getOrElse(18)
-        System.err.println(s"[graft-scale] ann_lsh pe=$pe n=$n")
-        pe
-      }
-    // buckets are encoded as a signed-Int bitmask of plane signs and
-    // signs are indexed per table — out-of-range knobs would corrupt
-    // buckets (planes > 31 overflows 1 << p) or crash deep inside the
-    // kernel (tables = 0). Fail here with the knob's own name.
-    require(tables >= 1,
-      s"graft.ann.lshTables must be >= 1 (got $tables)")
-    require(planes >= 1 && planes <= 31,
-      s"graft.ann.lshPlanes must be in [1, 31] (got $planes): bucket " +
-        "ids are signed-Int sign masks")
-    (tables, planes)
-  }
+  /** The LSH bucket geometry shared by the batch, dedup and
+    * indexed-serving paths, a pure function of the corpus size n:
+    * 16 tables and ADAPTIVE planes — pe = smallest p in [6, 18] with
+    * n ≤ 64·2^p, i.e. average bucket occupancy ≤ 64 (the r15 finding:
+    * a fixed plane count lets per-bucket occupancy, and so probe cost,
+    * grow linearly with the corpus). Integer-exact (no float log2 —
+    * ceil(log/log) is an ulp landmine at exact powers of two); the
+    * oracles spell the same arithmetic in SQL. */
+  private[graft] def lshGeometry(n: Long): (Int, Int) =
+    (16, (6 to 18).find(p => n <= 64L * (1L << p)).getOrElse(18))
 
   // ------------------------------------------------------------------
   // ANN serving path (r16 verdict "What's missing #2"): the batch LSH
@@ -751,87 +732,95 @@ object Similarity {
     Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sig))
   }
 
-  /** Builds (once per warehouse, marker-gated) the persisted LSH index
-    * for `sfDir`'s embeddings: rows (key, vec_id, embedding) where
-    * key = tbl·2^planes + bucket, routed into `IndexBuckets` Hive
-    * bucket files by HiveHash(invRouteKey) — the pe-invariant routing
-    * that keeps epoch steps file-local — and SORTED by key inside each
-    * file
-    * (parquet row-group stats make per-key reads sub-file). The
-    * embedding rides IN the index (the Faiss inverted-list discipline:
-    * ~tables× storage so the probe path never touches the base table).
-    * Build = one map pass (bucketing kernel) + the one routing shuffle.
-    * Returns (dir, tables, planes) — geometry is read back from the
-    * index's own meta on reuse, REVALIDATED against the current
-    * session (r17 review finding: a knob change or a regenerated
-    * corpus must rebuild, or the probe path silently serves geometry
-    * the batch query and the oracle no longer compute): the meta
-    * carries (tables, planes, source fingerprint); reuse requires the
-    * fingerprint to match (metadata-only FS listing — still no corpus
-    * recount) and any SET knob to agree with the recorded geometry.
-    * With knobs unset a matching fingerprint proves the recorded
-    * adaptive pe is still the adaptive answer. */
-  private[graft] def lshIndexFixture(spark: SparkSession,
-                                     sfDir: String): (String, Int, Int) =
+  /** Tag of the persisted-index meta line; a meta in any other format
+    * is stale and rebuilds. */
+  private val IndexMetaFormat = "ann1"
+
+  /** The one build-once path of every persisted ANN index. The index
+    * lives in `_graft_fixtures/<name>_<hash(sfDir)>` under the
+    * warehouse and is reused while its layout's commit marker
+    * (`committed`) exists and its meta carries `IndexMetaFormat` and
+    * the current source fingerprint (a metadata-only FS listing, no
+    * job: a regenerated corpus rebuilds). A (re)build deletes the old
+    * meta, registers the fixture's views, runs `build(dir, embeddings,
+    * n)` and writes the meta LAST, so a crash anywhere in a multi-step
+    * build can never be served from cache. The meta records the corpus
+    * size n the index was built over, so a reuse never recounts.
+    * Returns (dir, n). */
+  private def persistedIndex(spark: SparkSession, sfDir: String,
+                             name: String, meta: String = "_LSH_META",
+                             committed: String = "_BUCKETS_OK")(
+      build: (String, DataFrame, Long) => Unit): (String, Long) =
     indexLock.synchronized {
       import org.apache.hadoop.fs.Path
-      val base = spark.conf.get("spark.sql.warehouse.dir") + "/_graft_fixtures"
-      val dir = s"$base/lsh_index_" +
-        java.lang.Integer.toHexString(sfDir.hashCode)
-      val meta = new Path(dir, "_LSH_META")
-      val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val dir = spark.conf.get("spark.sql.warehouse.dir") +
+        s"/_graft_fixtures/${name}_" + Integer.toHexString(sfDir.hashCode)
+      val metaPath = new Path(dir, meta)
+      val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val fp = embSourceFingerprint(spark, sfDir)
-      // meta: tables,planes,fingerprint,kbT,kbP — PER-KNOB flags (r17
-      // ADVICE: one combined bit let an index built with only
-      // lshPlanes set be reused by a session that set only lshTables —
-      // the unset planes knob agreed vacuously while the session's
-      // adaptive pe diverged from the recorded knob-forced one). Each
-      // parameter's knob-present state must match the build's
-      // individually, AND any set knob's value must equal the recorded
-      // geometry; clearing either knob still invalidates.
-      val knobT = spark.conf.getOption("graft.ann.lshTables").map(_.toInt)
-      val knobP = spark.conf.getOption("graft.ann.lshPlanes").map(_.toInt)
-      val cached: Option[(Int, Int)] =
-        if (fs.exists(new Path(dir, "_BUCKETS_OK")) && fs.exists(meta)) {
-          val in = fs.open(meta)
-          val line = scala.io.Source.fromInputStream(in).mkString.trim
-          in.close()
-          line.split(",") match {
-            case Array("r32", t, p, f, kbT, kbP) if f == fp =>
-              val (tm, pm) = (t.toInt, p.toInt)
-              val sameT = (kbT == "1") == knobT.isDefined && knobT.forall(_ == tm)
-              val sameP = (kbP == "1") == knobP.isDefined && knobP.forall(_ == pm)
-              if (sameT && sameP) Some((tm, pm))
-              else None // a knob's state or value disagrees with the build
-            case _ => None // stale fingerprint or older meta format
-          }
-        } else None
-      cached match {
-        case Some((t, p)) => (dir, t, p)
-        case None =>
-          Tables.register(spark, sfDir)
-          GraftFunctions.register(spark)
-          val emb = spark.table("embeddings")
-          val (tables, planes) = lshGeometry(spark, emb)
-          val rows = emb
-            .withColumn("bs",
-              GraftFunctions.lsh_buckets(col("embedding"), tables, planes))
-            .select(col("vec_id"), col("embedding"),
-              posexplode(col("bs")).as(Seq("tbl", "bucket")))
-            .select(
-              (col("tbl").cast("long") * (1L << planes) + col("bucket"))
-                .as("key"),
-              col("vec_id"), col("embedding"))
-          graft.sources.HiveBucketedIO.writeBucketed(
-            rows, dir, IndexBuckets, Seq(col("key")),
-            invRouteKey(col("key"), planes))
-          val out = fs.create(meta, true)
-          val kbT = if (knobT.isDefined) "1" else "0"
-          val kbP = if (knobP.isDefined) "1" else "0"
-          out.write(s"r32,$tables,$planes,$fp,$kbT,$kbP".getBytes("UTF-8"))
-          out.close()
-          (dir, tables, planes)
+      val cached =
+        if (!fs.exists(new Path(dir, committed)) || !fs.exists(metaPath)) None
+        else {
+          val in = fs.open(metaPath)
+          try scala.io.Source.fromInputStream(in).mkString.trim.split(",") match {
+            case Array(IndexMetaFormat, `fp`, n) => Some(n.toLong)
+            case _ => None // stale fingerprint or an older meta format
+          } finally in.close()
+        }
+      val n = cached.getOrElse {
+        fs.delete(metaPath, false)
+        Tables.register(spark, sfDir)
+        GraftFunctions.register(spark)
+        val emb = spark.table("embeddings")
+        val n = emb.count()
+        build(dir, emb, n)
+        val out = fs.create(metaPath, true)
+        try out.write(s"$IndexMetaFormat,$fp,$n".getBytes("UTF-8"))
+        finally out.close()
+        n
       }
+      (dir, n)
+    }
+
+  /** An LSH index through `persistedIndex`: `build(dir, embeddings,
+    * tables, planes)` writes the layout at the corpus's geometry, which
+    * a reuse derives again from the n the meta recorded. Returns
+    * (dir, tables, planes). */
+  private def lshIndex(spark: SparkSession, sfDir: String, name: String)(
+      build: (String, DataFrame, Int, Int) => Unit): (String, Int, Int) = {
+    val (dir, n) = persistedIndex(spark, sfDir, name) { (dir, emb, n) =>
+      val (tables, planes) = lshGeometry(n)
+      build(dir, emb, tables, planes)
+    }
+    val (tables, planes) = lshGeometry(n)
+    (dir, tables, planes)
+  }
+
+  /** LSH index rows (key, vec_id, embedding) of a (vec_id, embedding)
+    * input: one row per (vector, table), key = tbl·2^planes + bucket. */
+  private[graft] def lshIndexRows(emb: DataFrame, tables: Int,
+                                  planes: Int): DataFrame =
+    emb.withColumn("bs",
+        GraftFunctions.lsh_buckets(col("embedding"), tables, planes))
+      .select(col("vec_id"), col("embedding"),
+        posexplode(col("bs")).as(Seq("tbl", "bucket")))
+      .select((col("tbl").cast("long") * (1L << planes) + col("bucket"))
+        .as("key"), col("vec_id"), col("embedding"))
+
+  /** The persisted LSH index for `sfDir`'s embeddings: `lshIndexRows`
+    * routed into `IndexBuckets` Hive bucket files by
+    * HiveHash(invRouteKey) — the pe-invariant routing that keeps epoch
+    * steps file-local — and SORTED by key inside each file (parquet
+    * row-group stats make per-key reads sub-file). The embedding rides
+    * IN the index (the Faiss inverted-list discipline: ~tables×
+    * storage so the probe path never touches the base table). Build =
+    * one map pass (bucketing kernel) + the one routing shuffle. */
+  private[graft] def lshIndexFixture(spark: SparkSession,
+                                     sfDir: String): (String, Int, Int) =
+    lshIndex(spark, sfDir, "lsh_index") { (dir, emb, tables, planes) =>
+      graft.sources.HiveBucketedIO.writeBucketed(
+        lshIndexRows(emb, tables, planes), dir, IndexBuckets,
+        Seq(col("key")), invRouteKey(col("key"), planes))
     }
 
   /** Driver-pruned index read for a probe key set: each key's Hive
@@ -887,15 +876,11 @@ object Similarity {
     * queries — the answers must be byte-identical to the batch form. */
   private[graft] def probeIndexTopK(spark: SparkSession, dir: String,
                                     tables: Int, planes: Int): DataFrame = {
-    val emb = spark.table("embeddings")
-    val qemb = emb.where(col("vec_id") < 50)
+    val batch = spark.table("embeddings").where(col("vec_id") < 50)
+    val qemb = batch
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-    val qkeys = qemb
-      .withColumn("bs",
-        GraftFunctions.lsh_buckets(col("qemb"), tables, planes))
-      .select(col("qid"), posexplode(col("bs")).as(Seq("tbl", "bucket")))
-      .select(col("qid"),
-        (col("tbl").cast("long") * (1L << planes) + col("bucket")).as("key"))
+    val qkeys = lshIndexRows(batch, tables, planes)
+      .select(col("vec_id"), col("key"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val (pruned, _) = prunedIndexScan(spark, dir, qkeys.map(_._2).distinct, planes)
     import spark.implicits._
@@ -929,60 +914,14 @@ object Similarity {
     * append path covers everything between re-bucketing epochs. */
   private[graft] def lshIndexIncrFixture(spark: SparkSession,
                                          sfDir: String): (String, Int, Int) =
-    indexLock.synchronized {
-      import org.apache.hadoop.fs.Path
-      val base = spark.conf.get("spark.sql.warehouse.dir") + "/_graft_fixtures"
-      val dir = s"$base/lsh_index_incr_" +
-        java.lang.Integer.toHexString(sfDir.hashCode)
-      val meta = new Path(dir, "_LSH_META")
-      val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fp = embSourceFingerprint(spark, sfDir)
-      val cached: Option[(Int, Int)] =
-        if (fs.exists(new Path(dir, "_BUCKETS_OK")) && fs.exists(meta)) {
-          val in = fs.open(meta)
-          val line = scala.io.Source.fromInputStream(in).mkString.trim
-          in.close()
-          line.split(",") match {
-            case Array("r32", t, p, f, "0", "0") if f == fp &&
-                spark.conf.getOption("graft.ann.lshTables").isEmpty &&
-                spark.conf.getOption("graft.ann.lshPlanes").isEmpty =>
-              Some((t.toInt, p.toInt))
-            case _ => None
-          }
-        } else None
-      cached match {
-        case Some((t, p)) => (dir, t, p)
-        case None =>
-          Tables.register(spark, sfDir)
-          GraftFunctions.register(spark)
-          val emb = spark.table("embeddings")
-          val (tables, planes) = lshGeometry(spark, emb)
-          def indexRows(part: DataFrame) = part
-            .withColumn("bs",
-              GraftFunctions.lsh_buckets(col("embedding"), tables, planes))
-            .select(col("vec_id"), col("embedding"),
-              posexplode(col("bs")).as(Seq("tbl", "bucket")))
-            .select(
-              (col("tbl").cast("long") * (1L << planes) + col("bucket"))
-                .as("key"),
-              col("vec_id"), col("embedding"))
-          graft.sources.HiveBucketedIO.writeBucketed(
-            indexRows(emb.where(col("vec_id") % 4 =!= 0)),
-            dir, IndexBuckets, Seq(col("key")),
-            invRouteKey(col("key"), planes))
-          graft.sources.HiveBucketedIO.appendBucketed(
-            indexRows(emb.where(col("vec_id") % 4 === 0)),
-            dir, IndexBuckets, Seq(col("key")),
-            invRouteKey(col("key"), planes))
-          val out = fs.create(meta, true)
-          val kbT = if (spark.conf.getOption("graft.ann.lshTables").isDefined)
-            "1" else "0"
-          val kbP = if (spark.conf.getOption("graft.ann.lshPlanes").isDefined)
-            "1" else "0"
-          out.write(s"r32,$tables,$planes,$fp,$kbT,$kbP".getBytes("UTF-8"))
-          out.close()
-          (dir, tables, planes)
-      }
+    lshIndex(spark, sfDir, "lsh_index_incr") { (dir, emb, tables, planes) =>
+      def rows(part: Column) = lshIndexRows(emb.where(part), tables, planes)
+      graft.sources.HiveBucketedIO.writeBucketed(
+        rows(col("vec_id") % 4 =!= 0), dir, IndexBuckets,
+        Seq(col("key")), invRouteKey(col("key"), planes))
+      graft.sources.HiveBucketedIO.appendBucketed(
+        rows(col("vec_id") % 4 === 0), dir, IndexBuckets,
+        Seq(col("key")), invRouteKey(col("key"), planes))
     }
 
   /** The 64 per-bucket migration branches of a pe → pe+1 re-bucketing
@@ -1045,116 +984,33 @@ object Similarity {
     * batch form — the oracle is the identical replication. */
   private[graft] def lshIndexMigratedFixture(spark: SparkSession,
                                              sfDir: String): (String, Int, Int) =
-    indexLock.synchronized {
-      import org.apache.hadoop.fs.Path
-      val base = spark.conf.get("spark.sql.warehouse.dir") + "/_graft_fixtures"
-      val dir = s"$base/lsh_index_mig_" +
-        java.lang.Integer.toHexString(sfDir.hashCode)
-      val meta = new Path(dir, "_LSH_META")
-      val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fp = embSourceFingerprint(spark, sfDir)
-      val cached: Option[(Int, Int)] =
-        if (fs.exists(new Path(dir, "_BUCKETS_OK")) && fs.exists(meta)) {
-          val in = fs.open(meta)
-          val line = scala.io.Source.fromInputStream(in).mkString.trim
-          in.close()
-          line.split(",") match {
-            case Array("r32", t, p, f, "0", "0") if f == fp &&
-                spark.conf.getOption("graft.ann.lshTables").isEmpty &&
-                spark.conf.getOption("graft.ann.lshPlanes").isEmpty =>
-              Some((t.toInt, p.toInt))
-            case _ => None
-          }
-        } else None
-      cached match {
-        case Some((t, p)) => (dir, t, p)
-        case None =>
-          Tables.register(spark, sfDir)
-          GraftFunctions.register(spark)
-          val emb = spark.table("embeddings")
-          val (tables, planes) = lshGeometry(spark, emb)
-          val peOld = planes - 1 // ≥ 5: the adaptive domain floor is 6
-          val epoch0 = dir + "_epoch0"
-          val rows = emb
-            .withColumn("bs",
-              GraftFunctions.lsh_buckets(col("embedding"), tables, peOld))
-            .select(col("vec_id"), col("embedding"),
-              posexplode(col("bs")).as(Seq("tbl", "bucket")))
-            .select(
-              (col("tbl").cast("long") * (1L << peOld) + col("bucket"))
-                .as("key"),
-              col("vec_id"), col("embedding"))
-          graft.sources.HiveBucketedIO.writeBucketed(
-            rows, epoch0, IndexBuckets, Seq(col("key")),
-            invRouteKey(col("key"), peOld))
-          migrateLshIndexPeStep(spark, epoch0, dir, peOld)
-          val out = fs.create(meta, true)
-          out.write(s"r32,$tables,$planes,$fp,0,0".getBytes("UTF-8"))
-          out.close()
-          (dir, tables, planes)
-      }
+    lshIndex(spark, sfDir, "lsh_index_mig") { (dir, emb, tables, planes) =>
+      val peOld = planes - 1 // ≥ 5: lshGeometry's floor is 6
+      val epoch0 = dir + "_epoch0"
+      graft.sources.HiveBucketedIO.writeBucketed(
+        lshIndexRows(emb, tables, peOld), epoch0, IndexBuckets,
+        Seq(col("key")), invRouteKey(col("key"), peOld))
+      migrateLshIndexPeStep(spark, epoch0, dir, peOld)
     }
 
   /** Fixture for the tombstoned-index serving query: the full-corpus
     * index with a delete batch (every 10th non-query vector) applied
     * as tombstone files — base files byte-untouched, O(delta) work
     * (`HiveBucketedIO.deleteBucketed`). The tombstone rows are the
-    * deleted vectors' own (key, vec_id) index entries, recomputed from
-    * their embeddings with the build geometry read back from the
-    * meta, so each tombstone lands in exactly the bucket file holding
-    * the row it retires and the probe path's pruning covers both
-    * sides. Meta written LAST (after the delete) so a crash between
-    * build and delete can never serve undeleted answers from cache. */
+    * deleted vectors' own (key, vec_id) index entries at the build
+    * geometry, so each tombstone lands in exactly the bucket file
+    * holding the row it retires and the probe path's pruning covers
+    * both sides. */
   private[graft] def lshIndexDeletedFixture(spark: SparkSession,
                                             sfDir: String): (String, Int, Int) =
-    indexLock.synchronized {
-      import org.apache.hadoop.fs.Path
-      val base = spark.conf.get("spark.sql.warehouse.dir") + "/_graft_fixtures"
-      val dir = s"$base/lsh_index_del_" +
-        java.lang.Integer.toHexString(sfDir.hashCode)
-      val meta = new Path(dir, "_LSH_META")
-      val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fp = embSourceFingerprint(spark, sfDir)
-      val cached: Option[(Int, Int)] =
-        if (fs.exists(new Path(dir, "_BUCKETS_OK")) && fs.exists(meta)) {
-          val in = fs.open(meta)
-          val line = scala.io.Source.fromInputStream(in).mkString.trim
-          in.close()
-          line.split(",") match {
-            case Array("r32", t, p, f, "0", "0") if f == fp &&
-                spark.conf.getOption("graft.ann.lshTables").isEmpty &&
-                spark.conf.getOption("graft.ann.lshPlanes").isEmpty =>
-              Some((t.toInt, p.toInt))
-            case _ => None
-          }
-        } else None
-      cached match {
-        case Some((t, p)) => (dir, t, p)
-        case None =>
-          Tables.register(spark, sfDir)
-          GraftFunctions.register(spark)
-          val emb = spark.table("embeddings")
-          val (tables, planes) = lshGeometry(spark, emb)
-          def indexRows(part: DataFrame) = part
-            .withColumn("bs",
-              GraftFunctions.lsh_buckets(col("embedding"), tables, planes))
-            .select(col("vec_id"), col("embedding"),
-              posexplode(col("bs")).as(Seq("tbl", "bucket")))
-            .select(
-              (col("tbl").cast("long") * (1L << planes) + col("bucket"))
-                .as("key"),
-              col("vec_id"), col("embedding"))
-          graft.sources.HiveBucketedIO.writeBucketed(
-            indexRows(emb), dir, IndexBuckets, Seq(col("key")),
-            invRouteKey(col("key"), planes))
-          graft.sources.HiveBucketedIO.deleteBucketed(
-            indexRows(emb.where(deletedVecs)).select(col("key"), col("vec_id")),
-            dir, IndexBuckets, invRouteKey(col("key"), planes))
-          val out = fs.create(meta, true)
-          out.write(s"r32,$tables,$planes,$fp,0,0".getBytes("UTF-8"))
-          out.close()
-          (dir, tables, planes)
-      }
+    lshIndex(spark, sfDir, "lsh_index_del") { (dir, emb, tables, planes) =>
+      graft.sources.HiveBucketedIO.writeBucketed(
+        lshIndexRows(emb, tables, planes), dir, IndexBuckets,
+        Seq(col("key")), invRouteKey(col("key"), planes))
+      graft.sources.HiveBucketedIO.deleteBucketed(
+        lshIndexRows(emb.where(deletedVecs), tables, planes)
+          .select(col("key"), col("vec_id")),
+        dir, IndexBuckets, invRouteKey(col("key"), planes))
     }
 
   /** Hive-bucket-file count of the persisted PQ code table (codes are
@@ -1163,8 +1019,8 @@ object Similarity {
     * deployment just like IndexBuckets). */
   private val PqCodeBuckets = 16
 
-  /** Builds (once per warehouse, fingerprint-gated like the LSH index)
-    * the persisted PQ index: `codebook` (640 (s, cw, d, cv) rows — the
+  /** The persisted PQ index (through `persistedIndex`, like the LSH
+    * index): `codebook` (640 (s, cw, d, cv) rows — the
     * 40-entry ADC lookup's source, always broadcast) and `codes` (4
     * codes per vector) in Hive bucket layout KEYED BY COARSE CELL —
     * each vector's nearest full codebook row (argmin over the summed
@@ -1177,40 +1033,19 @@ object Similarity {
     * are byte-identical to the recomputed ones. */
   private[graft] def pqIndexFixture(spark: SparkSession,
                                     sfDir: String): String =
-    indexLock.synchronized {
-      import org.apache.hadoop.fs.Path
-      val base = spark.conf.get("spark.sql.warehouse.dir") + "/_graft_fixtures"
-      val dir = s"$base/pq_index_" +
-        java.lang.Integer.toHexString(sfDir.hashCode)
-      val meta = new Path(dir, "_PQ_META")
-      val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fp = embSourceFingerprint(spark, sfDir)
-      val ok =
-        fs.exists(new Path(s"$dir/codes", "_BUCKETS_OK")) &&
-          fs.exists(meta) && {
-            val in = fs.open(meta)
-            val line = scala.io.Source.fromInputStream(in).mkString.trim
-            in.close()
-            line == s"pq1,$fp"
-          }
-      if (!ok) {
-        Tables.register(spark, sfDir)
-        spark.sql(s"WITH ${pqBaseCtes(spark = true)} SELECT s, cw, d, cv FROM cb")
-          .write.mode("overwrite").parquet(s"$dir/codebook")
-        val codes = spark.sql(s"""
-          WITH ${pqBaseCtes(spark = true)},
-          ${pqCellCtes}
-          SELECT cell.cell, code.vec_id, code.s, code.code
-          FROM code JOIN cell ON code.vec_id = cell.vec_id""")
-        graft.sources.HiveBucketedIO.writeBucketed(
-          codes, s"$dir/codes", PqCodeBuckets,
-          Seq(col("vec_id"), col("s")), col("cell").cast("long"))
-        val out = fs.create(meta, true)
-        out.write(s"pq1,$fp".getBytes("UTF-8"))
-        out.close()
-      }
-      dir
-    }
+    persistedIndex(spark, sfDir, "pq_index", meta = "_PQ_META",
+        committed = "codes/_BUCKETS_OK") { (dir, _, _) =>
+      spark.sql(s"WITH ${pqBaseCtes(spark = true)} SELECT s, cw, d, cv FROM cb")
+        .write.mode("overwrite").parquet(s"$dir/codebook")
+      val codes = spark.sql(s"""
+        WITH ${pqBaseCtes(spark = true)},
+        ${pqCellCtes}
+        SELECT cell.cell, code.vec_id, code.s, code.code
+        FROM code JOIN cell ON code.vec_id = cell.vec_id""")
+      graft.sources.HiveBucketedIO.writeBucketed(
+        codes, s"$dir/codes", PqCodeBuckets,
+        Seq(col("vec_id"), col("s")), col("cell").cast("long"))
+    }._1
 
   /** The probe-side ADC lookup table (s, cw, qdist — 40 rows at this
     * codebook size) from the ONE key-pruned query row and the
@@ -1497,7 +1332,9 @@ object Similarity {
       // plane count, so pe planes equal the first pe of any larger
       // family and pe=6 SFs (the driver fixtures) stay byte-stable vs
       // the old fixed-6 geometry.
-      val (tables, planes) = lshGeometry(spark, emb)
+      val n = emb.count()
+      val (tables, planes) = lshGeometry(n)
+      System.err.println(s"[graft-scale] ann_lsh pe=$planes n=$n")
       val bucketed = emb
         .withColumn("bs", GraftFunctions.lsh_buckets(col("embedding"), tables, planes))
         .select(col("vec_id"), posexplode(col("bs")).as(Seq("tbl", "bucket")))

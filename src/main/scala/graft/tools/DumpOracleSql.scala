@@ -4,10 +4,10 @@ import java.nio.file.{Files, Paths}
 
 /** Writes the CURRENT oracle_sql.json for a fixture dir without running
   * any query — the same bytes Verify writes at the END of its dump
-  * (same escaping, same __GRAFT_DOCUMENTS_PARQUET__ substitution), so a
-  * pipelined sweep (tools/sweepwaves.sh) can start DuckDB compares
-  * while the dump JVM is still working instead of stashing a
-  * prior-round copy that silently misses newly added queries.
+  * (`graft.Verify.oracleJson`), so a pipelined sweep
+  * (tools/sweepwaves.sh) can start DuckDB compares while the dump JVM
+  * is still working instead of stashing a prior-round copy that
+  * silently misses newly added queries.
   *
   * Usage: runMain graft.tools.DumpOracleSql <sfDir> <outDir>
   */
@@ -15,25 +15,9 @@ object DumpOracleSql {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val docsPath = {
-      val p = s"$sfDir/documents.parquet"
-      if (new java.io.File(p).isDirectory) s"$p/*.parquet" else p
-    }
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace("__GRAFT_DOCUMENTS_PARQUET__", docsPath))}" }
-      .mkString("{", ",", "}")
     Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      graft.Verify.oracleJson(sfDir))
     println(s"[dump-oracle] ${graft.SparkEntry.oracleSql.size} oracle texts -> $outDir/oracle_sql.json")
   }
 }

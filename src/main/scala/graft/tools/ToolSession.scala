@@ -7,10 +7,10 @@ import org.apache.spark.sql.SparkSession
   * their own builders: their configs are part of the driver contract. */
 object ToolSession {
   /** `cores` sizes both the local master and shuffle partitions —
-    * measurement tools whose subject is PARALLELISM itself (DiagMigrate:
-    * 64 independent per-file tasks) must run at the driver's core count
-    * or they serialize the very property they measure; the quick
-    * plan-audit tools keep the 4-core default. */
+    * measurement tools whose subject is PARALLELISM itself (DiagJobs)
+    * must run at the driver's core count or they serialize the very
+    * property they measure; the quick plan-audit tools keep the 4-core
+    * default. */
   def local(cores: Int = 4): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")

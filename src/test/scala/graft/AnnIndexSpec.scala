@@ -8,7 +8,8 @@ import graft.sources.HiveBucketedIO
 /** The persisted-LSH-index serving path (r17, verdict "What's missing
   * #2"): build/probe split contracts — answer equality with the batch
   * form, driver-side file pruning, within-file key sort (the row-group
-  * pruning precondition), and geometry reuse from the index meta. */
+  * pruning precondition), geometry reuse from the index meta, and a
+  * rebuild when the embeddings source changes. */
 class AnnIndexSpec extends AnyFunSuite {
   lazy val spark = LocalSpark.spark
 
@@ -54,12 +55,9 @@ class AnnIndexSpec extends AnyFunSuite {
     graft.Tables.register(spark, LocalSpark.sf)
     graft.functions.GraftFunctions.register(spark)
     // one query vector -> `tables` probe keys -> at most `tables` files
-    val keys = spark.table("embeddings").where(col("vec_id") === 0)
-      .select(graft.functions.GraftFunctions
-        .lsh_buckets(col("embedding"), tables, planes).as("bs"))
-      .select(posexplode(col("bs")).as(Seq("tbl", "bucket")))
-      .select((col("tbl").cast("long") * (1L << planes) + col("bucket")).as("key"))
-      .collect().map(_.getLong(0)).toSeq
+    val keys = Similarity.lshIndexRows(
+        spark.table("embeddings").where(col("vec_id") === 0), tables, planes)
+      .select("key").collect().map(_.getLong(0)).toSeq
     assert(keys.length == tables)
     val (scan, hit) = Similarity.prunedIndexScan(spark, dir, keys.distinct, planes)
     assert(hit.length <= tables && hit.length < 64,
@@ -160,26 +158,6 @@ class AnnIndexSpec extends AnyFunSuite {
       s"delta file $aGen1 not key-sorted")
   }
 
-  test("an index built under one knob is not reused by a session setting only the OTHER knob") {
-    // r17 ADVICE: the combined `knobbed` bit let a planes-knob-built
-    // index satisfy a tables-knob-only session (the unset planes knob
-    // agreed vacuously). Per-knob meta flags must force a rebuild.
-    val (_, tAdaptive, pAdaptive) = Similarity.lshIndexFixture(spark, LocalSpark.sf)
-    spark.conf.set("graft.ann.lshPlanes", (pAdaptive + 1).toString)
-    try Similarity.lshIndexFixture(spark, LocalSpark.sf) // planes-knob build
-    finally spark.conf.unset("graft.ann.lshPlanes")
-    spark.conf.set("graft.ann.lshTables", tAdaptive.toString) // matches meta tables
-    try {
-      val (_, t2, p2) = Similarity.lshIndexFixture(spark, LocalSpark.sf)
-      assert(t2 == tAdaptive && p2 == pAdaptive,
-        s"tables-knob session served knob-forced planes=$p2 from a " +
-          s"planes-knob build (expected adaptive $pAdaptive)")
-    } finally spark.conf.unset("graft.ann.lshTables")
-    // cleared: back to the fully-adaptive geometry
-    val (_, t3, p3) = Similarity.lshIndexFixture(spark, LocalSpark.sf)
-    assert(t3 == tAdaptive && p3 == pAdaptive)
-  }
-
   test("a crashed (unmarked) append generation is invisible to readers and renumbered over") {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions.lit
@@ -214,7 +192,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("tombstoned index serves as if the deleted vectors were never indexed") {
-    import org.apache.spark.sql.functions.{lit, posexplode, shiftright}
+    import org.apache.spark.sql.functions.{lit, shiftright}
     val served = SparkEntry.queries("ann_lsh_probe_deleted")(spark, LocalSpark.sf)
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("ann_lsh_bucketed")(spark, LocalSpark.sf)
@@ -228,13 +206,7 @@ class AnnIndexSpec extends AnyFunSuite {
     graft.functions.GraftFunctions.register(spark)
     val emb = spark.table("embeddings")
       .where(!(col("vec_id") >= 50 && col("vec_id") % 10 === 3))
-    val rows = emb
-      .withColumn("bs", graft.functions.GraftFunctions
-        .lsh_buckets(col("embedding"), tables, pe))
-      .select(col("vec_id"), col("embedding"),
-        posexplode(col("bs")).as(Seq("tbl", "bucket")))
-      .select((col("tbl").cast("long") * (1L << pe) + col("bucket")).as("key"),
-        col("vec_id"), col("embedding"))
+    val rows = Similarity.lshIndexRows(emb, tables, pe)
     val dirScratch = spark.conf.get("spark.sql.warehouse.dir") +
       "/_graft_fixtures/lsh_scratch_nodel"
     HiveBucketedIO.writeBucketed(rows, dirScratch, 64, Seq(col("key")),
@@ -325,18 +297,42 @@ class AnnIndexSpec extends AnyFunSuite {
       "a probed neighbor's ADC distance diverges from the exhaustive scan")
   }
 
-  test("a knob change invalidates the cached index instead of serving stale geometry") {
-    val (_, _, pAdaptive) = Similarity.lshIndexFixture(spark, LocalSpark.sf)
-    val knobP = pAdaptive + 1 // guaranteed to disagree with the meta
-    spark.conf.set("graft.ann.lshPlanes", knobP.toString)
-    try {
-      val (_, _, pKnob) = Similarity.lshIndexFixture(spark, LocalSpark.sf)
-      assert(pKnob == knobP,
-        s"fixture served stale planes=$pKnob under knob=$knobP")
-    } finally spark.conf.unset("graft.ann.lshPlanes")
-    // knob cleared: the next call must come back to the adaptive pe
-    // (rebuild — the meta now records the knob geometry)
-    val (_, _, pBack) = Similarity.lshIndexFixture(spark, LocalSpark.sf)
-    assert(pBack == pAdaptive)
+  test("a fixture is rebuilt when its embeddings source changes") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    // a private copy of the fixture whose corpus the test rewrites; a
+    // new session keeps the shared session's views untouched
+    val sfDir = Files.createTempDirectory("graft-ann-src")
+    graft.Tables.names.foreach { t =>
+      Files.copy(Paths.get(LocalSpark.sf, s"$t.parquet"), sfDir.resolve(s"$t.parquet"))
+    }
+    val s = spark.newSession()
+    def indexRows(dir: String) = s.read.parquet(
+      (0 until 64).flatMap(n => HiveBucketedIO.bucketGenFiles(s, dir, n)): _*).count()
+    val (dir, tables, _) = Similarity.lshIndexFixture(s, sfDir.toString)
+    val n0 = s.table("embeddings").count()
+    assert(indexRows(dir) == n0 * tables)
+
+    // the same file name, fewer vectors (the 50-query batch kept)
+    val staged = Files.createTempDirectory("graft-ann-staged")
+    s.table("embeddings").where(col("vec_id") < 300).coalesce(1)
+      .write.mode("overwrite").parquet(staged.toString)
+    val part = Files.list(staged).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get
+    Files.copy(part, sfDir.resolve("embeddings.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    graft.Tables.invalidate(s)
+    graft.Tables.register(s, sfDir.toString)
+    val n1 = s.table("embeddings").count()
+    assert(n1 < n0)
+
+    val (dir1, tables1, _) = Similarity.lshIndexFixture(s, sfDir.toString)
+    assert(dir1 == dir)
+    assert(indexRows(dir1) == n1 * tables1,
+      "the index over the old corpus was served after its source changed")
+    val probe = SparkEntry.queries("ann_lsh_probe_indexed")(s, sfDir.toString)
+      .collect().map(_.toSeq).toSeq
+    val batch = SparkEntry.queries("ann_lsh_bucketed")(s, sfDir.toString)
+      .collect().map(_.toSeq).toSeq
+    assert(probe.nonEmpty && probe == batch)
   }
 }

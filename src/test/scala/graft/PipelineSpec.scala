@@ -207,18 +207,16 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("ann_lsh_bucketed: adaptive plane default is byte-stable vs the pinned 6-plane geometry at driver SF") {
-    // n = 500 ≤ 64·2^6, so the adaptive minimum lands on pe=6 — results
-    // must be IDENTICAL to an explicit planes=6 override (the driver
-    // fixtures never see a geometry change from the r16 adaptive fix)
+  test("lshGeometry: 16 tables, pe = min p in [6, 18] with n <= 64*2^p") {
+    assert(Similarity.lshGeometry(64L << 6) == (16, 6))
+    assert(Similarity.lshGeometry((64L << 6) + 1) == (16, 7))
+    assert(Similarity.lshGeometry(64L << 18) == (16, 18))
+    assert(Similarity.lshGeometry((64L << 18) + 1) == (16, 18))
+    assert(Similarity.lshGeometry(Long.MaxValue) == (16, 18))
+    // the driver-scale corpus sits at the floor: its buckets are the
+    // fixed-6-plane buckets the oracles have always replicated
     Tables.register(spark, LocalSpark.sf)
-    graft.functions.GraftFunctions.register(spark)
-    val adaptive = Similarity.queries("ann_lsh_bucketed")(spark, LocalSpark.sf).collect()
-    spark.conf.set("graft.ann.lshPlanes", "6")
-    try {
-      val pinned = Similarity.queries("ann_lsh_bucketed")(spark, LocalSpark.sf).collect()
-      assert(adaptive.toSeq == pinned.toSeq)
-    } finally spark.conf.unset("graft.ann.lshPlanes")
+    assert(Similarity.lshGeometry(spark.table("embeddings").count()) == (16, 6))
   }
 
   test("dedup_ngram_jaccard prefix filter is exact: equals brute-force block pairs") {
