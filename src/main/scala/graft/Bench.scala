@@ -80,11 +80,10 @@ object Bench {
     val stealStart = stealTicks()
     val calStart = calibrate()
 
-    // Warm shared machinery: parquet reader + view registration, the
-    // Janino/codegen compiler, broadcast + shuffle join paths, window
-    // exec, and the custom expression kernels.
+    // Warm shared machinery: parquet reader + view and function
+    // registration, the Janino/codegen compiler, broadcast + shuffle
+    // join paths, window exec, and the custom expression kernels.
     Tables.register(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
     materialize(spark.sql("""
       SELECT o.o_orderstatus, COUNT(*) n,
              SUM(l.l_quantity) sq,

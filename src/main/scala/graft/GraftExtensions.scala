@@ -2,64 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
 /** The library's `SparkSessionExtensions` entry point: sessions built
   * with `.withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.GraftExtensions`) get every graft custom
-  * function and optimizer rule without manual registration — the
-  * standard way a Spark-native library ships engine extensions.
-  * (GraftFunctions.register remains for attaching to an existing
-  * session, as the harness queries do.)
+  * `spark.sql.extensions=graft.GraftExtensions`) get, without manual
+  * registration, every graft custom function (every entry of
+  * `GraftFunctions.builders`, the same list `Tables.register` installs
+  * into an existing session) and the `AnswerFromStats` optimizer rule —
+  * the standard way a Spark-native library ships engine extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def intArg(e: Expression): Int =
-    e.eval().asInstanceOf[Number].intValue()
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors"),
-      (es: Seq[Expression]) => CosineSim(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("damerau_levenshtein"),
-      info("damerau_levenshtein", "damerau_levenshtein(a, b) - true Damerau-Levenshtein edit distance"),
-      (es: Seq[Expression]) => DamerauLevenshtein(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("jaro_winkler"),
-      info("jaro_winkler", "jaro_winkler(a, b) - Jaro-Winkler similarity in [0,1]"),
-      (es: Seq[Expression]) => JaroWinkler(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit simhash fingerprint"),
-      (es: Seq[Expression]) => SimHash64(es.head)))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(tokens, n) - n seeded min-hashes"),
-      (es: Seq[Expression]) => MinHashSig(es(0), intArg(es(1)))))
-    e.injectFunction((FunctionIdentifier("winnow_fingerprint"),
-      info("winnow_fingerprint", "winnow_fingerprint(text, k, w) - winnowing fingerprint"),
-      (es: Seq[Expression]) => WinnowFingerprint(es(0),
-        intArg(es(1)), intArg(es(2)))))
-    e.injectFunction((FunctionIdentifier("tokenize"),
-      info("tokenize", "tokenize(text) - lowercase whitespace tokens"),
-      (es: Seq[Expression]) => Tokenize(es.head)))
-    e.injectFunction((FunctionIdentifier("shingle_set"),
-      info("shingle_set", "shingle_set(text, n) - distinct n-token shingles"),
-      (es: Seq[Expression]) => ShingleSet(es(0), intArg(es(1)))))
-    e.injectFunction((FunctionIdentifier("lsh_buckets"),
-      info("lsh_buckets", "lsh_buckets(vec, tables, planes) - LSH bucket per table"),
-      (es: Seq[Expression]) => LshBuckets(es(0),
-        intArg(es(1)), intArg(es(2)))))
-    e.injectFunction((FunctionIdentifier("field"),
-      info("field", "field(needle, s1, s2, ...) - 1-based index of needle"),
-      (es: Seq[Expression]) => FieldFn(es)))
-    e.injectFunction((FunctionIdentifier("stopword_ratio"),
-      info("stopword_ratio", "stopword_ratio(tokens, list) - fraction of tokens in list"),
-      (es: Seq[Expression]) => StopwordRatio(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("parse_url_tuple"),
-      info("parse_url_tuple", "parse_url_tuple(url, part, ...) - UDTF extracting url parts"),
-      (es: Seq[Expression]) => ParseUrlTuple(es)))
+    GraftFunctions.builders.foreach { case (name, b) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), b))
+    }
     // Optimizer rule: Hive StatsOptimizer analog — COUNT/MIN/MAX over an
     // ANALYZEd catalog table answered from stats, no scan (SURVEY.md
     // §4.1). Other Hive rewrites are Catalyst built-ins (SURVEY.md §4);

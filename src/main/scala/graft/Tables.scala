@@ -91,6 +91,10 @@ object Tables {
     }
   }
 
+  /** Set a session up for the harness queries: a temp view per fixture
+    * table in `sfDir` (events.ts normalized, below) and every graft SQL
+    * function (`GraftFunctions.register`). Memoized per session and
+    * dir, so every query calls it and a repeat costs one map lookup. */
   def register(spark: SparkSession, sfDir: String): Unit = {
     if (registered.get(spark) == sfDir) return
     // events.ts precision varies across testdata generations: TIMESTAMP
@@ -117,8 +121,10 @@ object Tables {
         } else raw
       df.createOrReplaceTempView(t)
     }
-    // memoize only after every view registered: a partial failure must
-    // re-throw on the next query, not cascade into missing-view errors
+    graft.functions.GraftFunctions.register(spark)
+    // memoize only after every view and function registered: a partial
+    // failure must re-throw on the next query, not cascade into
+    // missing-view errors
     registered.put(spark, sfDir)
   }
 
@@ -147,7 +153,8 @@ object Tables {
     q.replace("REPARTITION(32)",
       s"REPARTITION(${spark.sparkContext.defaultParallelism})")
 
-  /** Standard shape of a harness query: register views, run SQL. */
+  /** Standard shape of a harness query: register views and functions,
+    * run SQL. */
   def sql(q: String): (SparkSession, String) => DataFrame =
     (spark, sfDir) => { register(spark, sfDir); spark.sql(scaleHints(spark, q)) }
 }

@@ -125,18 +125,6 @@ case class NGramsTopKAgg(
     copy(child = newChildren.head)
 }
 
-object NGramsTopKAgg {
-  /** SQL registration with the Hive-style signature
-    * `ngrams_topk(tokens, n, k [, maxBuf])`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("ngrams_topk",
-      es => {
-        def lit(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
-        val maxBuf = if (es.length >= 4) lit(es(3)) else 20000
-        NGramsTopKAgg(es.head, lit(es(1)), lit(es(2)), maxBuf)
-      }, "built-in")
-}
-
 /** Hive's `context_ngrams(array<string>, array<string> context, k [, pf])`
   * (QL/udf/generic/GenericUDAFContextNGrams.java): the context array
   * fixes some positions to literal words and leaves nulls as wildcards;
@@ -245,20 +233,4 @@ case class ContextNGramsAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ContextNGramsAgg =
     copy(child = newChildren.head)
-}
-
-object ContextNGramsAgg {
-  /** `context_ngrams(tokens, array('data', NULL, ...), k [, maxBuf])` —
-    * the context argument must be a foldable array literal (as in Hive). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("context_ngrams",
-      es => {
-        def lit(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
-        val ctxData = es(1).eval().asInstanceOf[ArrayData]
-        val ctx = (0 until ctxData.numElements()).map { i =>
-          if (ctxData.isNullAt(i)) None else Some(ctxData.getUTF8String(i).toString)
-        }
-        val maxBuf = if (es.length >= 4) lit(es(3)) else 20000
-        ContextNGramsAgg(es.head, ctx, lit(es(2)), maxBuf)
-      }, "built-in")
 }

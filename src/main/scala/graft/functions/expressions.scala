@@ -1499,10 +1499,25 @@ object GraftFunctions {
     "ewah_bitmap_and" -> (es => EwahBitmapAnd(es(0), es(1))),
     "ewah_bitmap_or" -> (es => EwahBitmapOr(es(0), es(1))),
     "ewah_bitmap_empty" -> (es => EwahBitmapEmpty(es.head)),
-    "ewah_bitmap_count" -> (es => EwahBitmapCount(es.head))
+    "ewah_bitmap_count" -> (es => EwahBitmapCount(es.head)),
+    // Hive's ngrams / context_ngrams: `ngrams_topk(tokens, n, k [, maxBuf])`
+    // and `context_ngrams(tokens, array('data', NULL, ...), k [, maxBuf])`,
+    // whose context must be a foldable array literal (as in Hive)
+    "ngrams_topk" -> (es => NGramsTopKAgg(es.head, intArg(es(1)), intArg(es(2)),
+      if (es.length >= 4) intArg(es(3)) else 20000)),
+    "context_ngrams" -> { es =>
+      val ctxData = es(1).eval().asInstanceOf[ArrayData]
+      val ctx = (0 until ctxData.numElements()).map { i =>
+        if (ctxData.isNullAt(i)) None else Some(ctxData.getUTF8String(i).toString)
+      }
+      ContextNGramsAgg(es.head, ctx, intArg(es(2)),
+        if (es.length >= 4) intArg(es(3)) else 20000)
+    }
   ) ++ Hive2x.builders // [2.x] tail: mask_* family, sort_array_by, replicate_rows
 
-  /** Make the functions usable from spark.sql text too. */
+  /** Make the functions usable from spark.sql text too. `Tables.register`
+    * calls this once per session; call it directly only for a session
+    * that registers no fixture views. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>

@@ -536,9 +536,7 @@ object Aggregates {
     // bit-reversed/meaning-inverted integer; the oracle rebuilds the
     // same number from per-column GROUPING() bits, so the row-level
     // compare proves the shim agrees with the legacy definition.
-    "agg_hive_grouping_id" -> ((spark, sfDir) => {
-      graft.functions.GraftFunctions.register(spark)
-      Tables.sql("""
+    "agg_hive_grouping_id" -> Tables.sql("""
       SELECT COALESCE(o_orderstatus, '<all>') AS status,
              COALESCE(o_orderpriority, '<all>') AS priority,
              CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority)
@@ -548,8 +546,7 @@ object Aggregates {
              COUNT(*) AS n
       FROM orders
       GROUP BY CUBE(o_orderstatus, o_orderpriority)
-      ORDER BY status, priority""")(spark, sfDir)
-    }),
+      ORDER BY status, priority"""),
 
     // EWAH bitmap-index algebra (Hive ewah_bitmap/_and/_or/_empty —
     // previously skip-pinned, implemented round 9 with the real
@@ -558,9 +555,7 @@ object Aggregates {
     // straight off the compressed streams. The oracle recomputes the
     // same set algebra from DISTINCT value sets — bitmap vs relational
     // spellings of identical mathematics.
-    "agg_ewah_bitmap" -> ((spark, sfDir) => {
-      graft.functions.GraftFunctions.register(spark)
-      Tables.sql("""
+    "agg_ewah_bitmap" -> Tables.sql("""
         WITH bm AS (
           SELECT o_orderstatus AS status,
                  ewah_bitmap(CAST(o_custkey % 8192 AS INT)) AS b
@@ -571,8 +566,7 @@ object Aggregates {
                ewah_bitmap_count(ewah_bitmap_or(a.b, c.b)) AS n_union,
                ewah_bitmap_empty(ewah_bitmap_and(a.b, c.b)) AS disjoint
         FROM bm a JOIN bm c ON a.status < c.status
-        ORDER BY status_a, status_b""")(spark, sfDir)
-    }),
+        ORDER BY status_a, status_b"""),
 
     // Variance family + correlation (GenericUDAFVariance/Std/Corr/Covar).
     // Values are O(1)-O(100) so round(6) is safely inside double
@@ -716,16 +710,12 @@ object Aggregates {
     // buf=32 — the sketch's exactness boundary (counts are exact iff
     // distinct ≤ buf; PropertySpec pins the boundary and the n/(buf+1)
     // error bound beyond it, histogram_numeric-style).
-    "agg_approx_topk" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.register(spark)
-      spark.sql("""
+    "agg_approx_topk" -> Tables.sql("""
         SELECT o_orderstatus, item, cnt
         FROM (SELECT o_orderstatus, APPROX_TOPK(o_orderpriority, 3, 32) AS tops
               FROM orders GROUP BY o_orderstatus)
         LATERAL VIEW INLINE(tops) t AS item, cnt
-        ORDER BY o_orderstatus, cnt DESC, item""")
-    }),
+        ORDER BY o_orderstatus, cnt DESC, item"""),
 
     // Count-Min frequency estimation (graft.functions.CountMinAgg +
     // CmQuery): the sketch builds once, broadcasts as a single row,
@@ -786,15 +776,11 @@ object Aggregates {
     // refresh touches the batch plus k MV rows, not the corpus.
     "agg_mv_incremental" -> Tables.sql(MvIncrementalSql),
 
-    "agg_countmin" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.register(spark)
-      spark.sql("""
+    "agg_countmin" -> Tables.sql("""
         SELECT event_type, CM_QUERY(s, event_type) AS est
         FROM (SELECT DISTINCT event_type FROM events)
         CROSS JOIN (SELECT COUNTMIN(event_type, 4, 64) AS s FROM events)
-        ORDER BY event_type""")
-    }),
+        ORDER BY event_type"""),
 
     // collect_set/collect_list (GenericUDAFMkCollectionEvaluator) —
     // compared as a sorted joined string (set semantics, stable text).

@@ -151,7 +151,8 @@ object Clustering {
             s"($cap rows) — a degenerate k-means collapse would OOM this " +
             "executor at scale. Raise k (the trainer's TargetCluster " +
             "discipline), or graft.cluster.maxGroup if the skew is " +
-            "intended; measure the distribution with graft.tools.DiagClusterSkew.")
+            "intended; measure the skew as rows per cluster in the " +
+            "cluster_kmeans_assign query's output.")
       buf += it.next()
     }
     buf.toArray
@@ -197,71 +198,6 @@ object Clustering {
     q.withColumn("best", GraftFunctions.argmax_cosine_d(col("ve"), bc))
       .select(col("vec_id"), col("qe"), col("ve"),
         col("best.cluster").as("cluster"), col("best.cos").as("cos"))
-
-  /** Cache-blocked flat argmax (the r13-measured wall: at k=65536 the
-    * 33.5 MB centroid matrix streams through L3 once PER ROW in the
-    * per-row Expression kernel — zero cross-row reuse). Classic blocked
-    * GEMM shape instead: buffer `rowBlock` rows per partition, walk the
-    * matrix in `centTile`-centroid tiles (tile ≈ centTile·64·8 B — the
-    * default 1024 is 512 KB, L2-resident), rows inner — each tile is
-    * loaded once per BLOCK, an O(rowBlock)× cut in matrix traffic.
-    * Per-(row, centroid) dot fold order and the ascending-id
-    * first-strict-max tie rule are IDENTICAL to ArgMaxCosineD, so the
-    * output is bit-for-bit the flat assignment (pinned in
-    * ClusteringSpec). Measured via DiagIvfAssign mode `flatblk`
-    * (BASELINE.md r14); assignment stays on the Expression/IVF path
-    * for oracled runs — this kernel is the documented large-k flat
-    * fallback when exactness at k > IvfThreshold is required. */
-  private[graft] def assignFlatBlocked(df: DataFrame,
-      bc: org.apache.spark.broadcast.Broadcast[CentroidMatrix],
-      rowBlock: Int = 256, centTile: Int = 1024): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("vec_id"), col("ve")).as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val m = bc.value
-        val dim = m.dim
-        it.grouped(rowBlock).flatMap { block =>
-          val b = block.size
-          val bestCos = Array.fill(b)(Double.NegativeInfinity)
-          val bestId = new Array[Int](b)
-          val na = new Array[Double](b)
-          val sq = new Array[Double](b)
-          var i = 0
-          while (i < b) {
-            val v = block(i)._2
-            require(v.length == dim,
-              s"assign_flat_blocked: vector dim ${v.length} != centroid dim $dim")
-            var s = 0.0; var j = 0
-            while (j < dim) { s += v(j) * v(j); j += 1 }
-            na(i) = s; sq(i) = math.sqrt(s)
-            bestId(i) = m.ids(0)
-            i += 1
-          }
-          var t0 = 0
-          while (t0 < m.vecs.length) {
-            val t1 = math.min(t0 + centTile, m.vecs.length)
-            var bi = 0
-            while (bi < b) {
-              val v = block(bi)._2
-              var c = t0
-              while (c < t1) {
-                val cv = m.vecs(c)
-                var dot = 0.0; var j = 0
-                while (j < dim) { dot += v(j) * cv(j); j += 1 }
-                val cos = if (na(bi) * m.nb(c) == 0.0) -2.0
-                          else dot / (sq(bi) * m.sqrtNb(c))
-                if (cos > bestCos(bi)) { bestCos(bi) = cos; bestId(bi) = m.ids(c) }
-                c += 1
-              }
-              bi += 1
-            }
-            t0 = t1
-          }
-          block.indices.map(i => (block(i)._1, bestId(i), bestCos(i)))
-        }
-      }.toDF("vec_id", "cluster", "cos")
-  }
 
   /** Past this k the flat kernel's n·k per-assignment cost is the
     * measured scale killer (dedup_semantic exponent 1.22, _prune 1.36
@@ -363,7 +299,6 @@ object Clustering {
                           k: Int, iters: Int,
                           corpusPred: Column): Seq[(Int, Array[Double])] = {
     Tables.register(spark, sfDir)
-    GraftFunctions.register(spark)
     val q = quantized(spark.table("embeddings")).where(corpusPred).persist()
     try {
       // hold expected cluster size at TargetCluster as the corpus

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between raw ingestion and tokenization (beyond the Hive reference
@@ -38,12 +37,6 @@ import graft.functions.GraftFunctions
 object Curation {
 
   private type Q = (SparkSession, String) => DataFrame
-
-  private def gsql(q: String): Q = (spark, sfDir) => {
-    Tables.register(spark, sfDir)
-    GraftFunctions.register(spark)
-    spark.sql(Tables.scaleHints(spark, q))
-  }
 
   private val TempMixSql = """
       WITH s AS (
@@ -285,9 +278,9 @@ object Curation {
   }
 
   val queries: Map[String, Q] = Map(
-    "curation_quota_fill" -> gsql(quotaFillSql(spark = true)),
-    "curation_curriculum" -> gsql(CurriculumSql),
-    "text_drift_psi" -> gsql(DriftPsiSql),
+    "curation_quota_fill" -> Tables.sql(quotaFillSql(spark = true)),
+    "curation_curriculum" -> Tables.sql(CurriculumSql),
+    "text_drift_psi" -> Tables.sql(DriftPsiSql),
     // Fixed-size token chunking with overlap: 64-token chunks on a
     // 48-token stride (16-token overlap), the standard context-window
     // split for RAG indexing / training-sequence preparation. Pure
@@ -295,7 +288,7 @@ object Curation {
     // shuffle at all until the output sort, embarrassingly parallel at
     // 100 TB. A trailing chunk may be shorter than the overlap; start
     // positions are the deterministic arithmetic sequence 0,48,96,…<n.
-    "text_chunks" -> gsql("""
+    "text_chunks" -> Tables.sql("""
       WITH t AS (
         SELECT doc_id, TOKENIZE(text) AS toks
         FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)
@@ -332,10 +325,10 @@ object Curation {
     // integer BEFORE the normalizing sum (double Σ is order-
     // dependent; integer Σ is not), then each weight is one IEEE
     // division chain ROUNDed at the boundary.
-    "curation_temperature_mix" -> gsql(TempMixSql),
-    "pipeline_train_report" -> gsql(trainReportSql(spark = true)),
+    "curation_temperature_mix" -> Tables.sql(TempMixSql),
+    "pipeline_train_report" -> Tables.sql(trainReportSql(spark = true)),
 
-    "sample_weighted_mix" -> gsql("""
+    "sample_weighted_mix" -> Tables.sql("""
       WITH w AS (
         SELECT * FROM VALUES
           ('en', 4294967296L), ('de', 2147483648L), ('fr', 2147483648L),
@@ -361,7 +354,7 @@ object Curation {
     // recall PipelineSpec pins at exactly 1.0 on this testdata — so the
     // exact new×old pair set is a valid oracle, same argument as
     // dedup_minhash_lsh.
-    "dedup_incremental" -> gsql("""
+    "dedup_incremental" -> Tables.sql("""
       WITH base AS (
         SELECT doc_id, text, MD5(CAST(text AS BINARY)) AS digest,
                (doc_id % 5 = 4) AS is_new
@@ -409,7 +402,7 @@ object Curation {
     // Patterns avoid constructs where Java-regex and RE2 semantics could
     // diverge (no backrefs, no lookaround). Per-row scalar work inside
     // whole-stage codegen; embarrassingly parallel at 100 TB.
-    "text_pii_scrub" -> gsql("""
+    "text_pii_scrub" -> Tables.sql("""
       WITH aug AS (
         SELECT doc_id,
                CONCAT(SUBSTR(text, 1, 40), ' contact u', CAST(doc_id AS STRING),
@@ -466,7 +459,7 @@ object Curation {
     // the cells, then cell-scale Newton algebra — training cost is
     // independent of corpus size given the discrete feature, and
     // applying the scorer is a narrow map (b0 + b1·x per row).
-    "pipeline_quality_classifier" -> gsql(qualityClassifierSql(spark = true)),
+    "pipeline_quality_classifier" -> Tables.sql(qualityClassifierSql(spark = true)),
 
     // FUZZY decontamination — the near-duplicate upgrade of
     // text_decontaminate (verbatim 5-gram overlap misses lightly-edited
@@ -480,7 +473,7 @@ object Curation {
     // PlanQualitySpec). Oracle: the exact all-pairs inverted-index
     // formulation restricted to (corpus × eval), the dedup_minhash_lsh
     // precedent.
-    "text_decontaminate_fuzzy" -> gsql("""
+    "text_decontaminate_fuzzy" -> Tables.sql("""
       WITH sh AS (
         SELECT doc_id, SHINGLE_SET(text, 3) AS grams
         FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)
@@ -510,7 +503,7 @@ object Curation {
       GROUP BY corp_id
       ORDER BY doc_id"""),
 
-    "text_decontaminate" -> gsql("""
+    "text_decontaminate" -> Tables.sql("""
       WITH sh AS (
         SELECT doc_id, SHINGLE_SET(text, 5) AS grams
         FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)
@@ -546,7 +539,6 @@ object Curation {
     // 1-row total aggregate and the final groupBy on seq_id.
     "pack_sequences" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       import spark.implicits._
       val docs = spark.sql(Tables.scaleHints(spark, """
         SELECT doc_id, n_tok FROM (
@@ -575,7 +567,6 @@ object Curation {
     // perfect 1/8 share in exact micro units.
     "pack_shards" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       import spark.implicits._
       val docs = spark.sql(Tables.scaleHints(spark, """
         SELECT doc_id, n_tok FROM (

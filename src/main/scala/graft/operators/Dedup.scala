@@ -17,31 +17,6 @@ import graft.functions.GraftFunctions
   * is confined to same-bucket collisions. Exact-Jaccard verification
   * runs only on those candidates.
   */
-/** Best-effort JVM-exit cleanup of per-call checkpoint directories (the
-  * files must outlive the returned DataFrame's lazy execution, so the
-  * earliest safe deletion point is shutdown). */
-private[operators] object CheckpointJanitor {
-  private val registered = new java.util.concurrent.ConcurrentLinkedQueue[
-    (String, org.apache.hadoop.conf.Configuration)]()
-  private lazy val hook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread("graft-ckpt-janitor") {
-      override def run(): Unit = {
-        registered.forEach { case (dir, conf) =>
-          try {
-            val p = new org.apache.hadoop.fs.Path(dir)
-            p.getFileSystem(conf).delete(p, true)
-          } catch { case _: Throwable => () } // best-effort at exit
-        }
-      }
-    })
-  }
-  def deleteAtExit(dir: String,
-                   conf: org.apache.hadoop.conf.Configuration): Unit = {
-    hook
-    registered.add((dir, conf))
-  }
-}
-
 /** DuckDB spellings of the seeded-hash arithmetic used by oracle
   * replications of the custom kernels (FNV-1a/fmix64 on UBIGINT). */
 private[operators] object DuckHash {
@@ -75,12 +50,6 @@ private[operators] object DuckHash {
 object Dedup {
 
   private type Q = (SparkSession, String) => DataFrame
-
-  private def gsql(q: String): Q = (spark, sfDir) => {
-    Tables.register(spark, sfDir)
-    GraftFunctions.register(spark)
-    spark.sql(Tables.scaleHints(spark, q))
-  }
 
   /** The minhash+LSH near-duplicate pair SQL WITHOUT the final global
     * sort — shared by dedup_minhash_lsh (which adds ORDER BY for the
@@ -271,7 +240,7 @@ object Dedup {
     // pair-set equality (recall exactly 1.0) against brute force at both
     // sf0.001 and sf0.01, so a testdata change that breaks the oracle
     // assumption fails with a clear message.
-    "dedup_minhash_lsh" -> gsql(MinhashPairsSql + "\n      ORDER BY doc_a, doc_b"),
+    "dedup_minhash_lsh" -> Tables.sql(MinhashPairsSql + "\n      ORDER BY doc_a, doc_b"),
 
     // SimHash: 64-bit fingerprint; candidates share one of SEVEN bands
     // (six 9-bit + one 10-bit). Pigeonhole: a pair at hamming ≤ 6 flips
@@ -294,7 +263,7 @@ object Dedup {
     // band count/width is the scale knob, documented here. Exact hamming
     // on candidates via bit_count(xor); the only shuffle is the
     // (band, key) equi-join.
-    "dedup_simhash" -> gsql("""
+    "dedup_simhash" -> Tables.sql("""
       WITH sh AS (
         SELECT doc_id, SIMHASH64(toks) AS sim
         FROM (SELECT doc_id, TOKENIZE(text) AS toks
@@ -347,7 +316,6 @@ object Dedup {
     // replicates it verbatim.
     "dedup_substring" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       // persist the (doc_id, window-hash) table: it feeds the hot-window
       // aggregate AND both self-join sides — inlined (Spark CTEs don't
       // materialize), the tokenize+shingle+MD5 kernel would run 3× over
@@ -368,7 +336,7 @@ object Dedup {
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
-    "dedup_ngram_jaccard" -> gsql(s"""
+    "dedup_ngram_jaccard" -> Tables.sql(s"""
       WITH $NgramJpairsCtes
       SELECT doc_a, doc_b, jaccard FROM jpairs
       ORDER BY doc_a, doc_b"""),
@@ -383,7 +351,7 @@ object Dedup {
     // At 100 TB the quadratic-in-length DP runs only on the tiny
     // verified-candidate set, each pair independent (narrow map work
     // after one ids-only join back to the texts).
-    "dedup_edit_verify" -> gsql(s"""
+    "dedup_edit_verify" -> Tables.sql(s"""
       WITH $NgramJpairsCtes
       SELECT p.doc_a, p.doc_b, p.jaccard,
              LEVENSHTEIN(da.text, db.text) AS edit_dist,
@@ -403,7 +371,7 @@ object Dedup {
     // inverted index of potential containers — recall 1.0 for either
     // direction ≥ τ, never all-pairs. Same source blocking + df-ranked
     // prefix as dedup_ngram_jaccard.
-    "dedup_containment" -> gsql("""
+    "dedup_containment" -> Tables.sql("""
       WITH sh AS (
         SELECT doc_id, source, SHINGLE_SET(text, 3) AS grams
         FROM (SELECT /*+ REPARTITION(32) */ doc_id, source, text FROM documents)
@@ -465,7 +433,7 @@ object Dedup {
     // 2-row result is not a row-scale collect). Oracle chains the
     // independent DuckDB formulations end to end.
     "pipeline_dedup_report" -> ((spark, sfDir) => {
-      val pairsAll = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairsAll = Tables.sql(MinhashPairsSql)(spark, sfDir)
       val d = spark.sql(
         """SELECT doc_id, MD5(CAST(text AS BINARY)) AS h,
                   CAST(SIZE(TOKENIZE(text)) AS BIGINT) AS ntok
@@ -525,7 +493,7 @@ object Dedup {
     // keep rule u·csize < 2^32 — pure integer compare, exact in both
     // engines. Per-csize keep counts report the realized thinning.
     "curation_dedup_aware_sample" -> ((spark, sfDir) => {
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, _) = connectedComponents(spark, pairs)
       val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("csize"))
@@ -550,7 +518,7 @@ object Dedup {
     // all = corpus minus CC nodes — pair-graph components are always
     // size ≥ 2). Same CC machinery, one extra aggregate.
     "dedup_cluster_stats" -> ((spark, sfDir) => {
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, _) = connectedComponents(spark, pairs)
       val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("csize"))
@@ -576,7 +544,7 @@ object Dedup {
     "dedup_clusters" -> ((spark, sfDir) => {
       // the UNSORTED pair set — the symmetric-edge canonicalization would
       // discard dedup_minhash_lsh's final ORDER BY range exchange unused
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, _) = connectedComponents(spark, pairs)
       val sizes = labels.groupBy("comp").agg(count(lit(1)).as("csize"))
@@ -594,7 +562,7 @@ object Dedup {
     // One window over cluster-partitioned rows — no new shuffle class.
     "dedup_keep_best" -> ((spark, sfDir) => {
       import org.apache.spark.sql.expressions.Window
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, _) = connectedComponents(spark, pairs)
       val q = spark.sql("""
@@ -622,11 +590,10 @@ object Dedup {
     // end-to-end against an independent DuckDB formulation.
     "pipeline_curate" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       // components directly over the pair graph — dedup_clusters' final
       // cluster-size join and ORDER BY serve its own output contract and
       // would be dead weight under this anti-join consumer
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val nonRep = connectedComponents(spark, pairs)._1
         .where(col("node") =!= col("comp"))
@@ -670,8 +637,7 @@ object Dedup {
     // levels with the same integer-exact criterion.
     "pipeline_curate_ppl" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val nonRep = connectedComponents(spark, pairs)._1
         .where(col("node") =!= col("comp"))
@@ -738,7 +704,6 @@ object Dedup {
     // W, same cosine calls, oracle text unchanged.
     "dedup_embedding_cosine" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       val blocks = spark.table("embeddings")
         .groupBy(col("label")).agg(count(lit(1)).as("n"))
         .collect()
@@ -846,8 +811,8 @@ object Dedup {
     * (count + anti-join emptiness per step — a handful of cheap jobs for
     * O(log) rounds), never a probabilistic checksum, and unconverged
     * state throws rather than emitting wrong clusters. Round state goes
-    * through reliable `checkpoint()` on the session warehouse filesystem
-    * — on a cluster an executor loss replays from the checkpoint file,
+    * through reliable `checkpoint()` into the context's checkpoint dir
+    * (Loops.ensureCheckpointDir) — on a cluster an executor loss replays from the checkpoint file,
     * where round 2's `localCheckpoint` (executor-local blocks, truncated
     * lineage) would have failed the job.
     *
@@ -855,97 +820,9 @@ object Dedup {
     *              orientation; self-loops and duplicates are ignored
     * @return (labels (node, comp) for every edge endpoint, rounds run)
     */
-  /** Serializes checkpoint-dir mutation: setCheckpointDir is
-    * SparkContext-GLOBAL state, so two concurrent checkpointing callers
-    * on one session would otherwise race and leak each other's
-    * round files past their janitor registrations. */
-  private val ckptDirLock = new Object
-
-  /** Row budget per shuffle task for the iterative loops' per-round
-    * exchanges (edge rows are two longs, so ~1M rows ≈ tens of MB —
-    * guide §2.2's 100 MB-1 GB band with headroom for the join/distinct
-    * multiplication inside a round). */
-  private[operators] val LoopRowsPerTask = 1L << 20
-
-  /** Shuffle width for one iteration of a driver loop, derived from the
-    * round's OWN row count instead of the session constant (guide §2.5:
-    * partitions track data, not the core count). The r19 c8-vs-c32 A/B
-    * pinned the mechanism: CC-class rounds shuffle kilobytes, and at
-    * `local[32]` every round paid ~30 scheduling-floor tasks per job
-    * (dedup_semantic_prune 7.9 s at 32 cores vs 5.2 s at 8 on an idle
-    * host; 2999 vs 983 tasks for the same 111 jobs). Width shrinks to
-    * match the data and is CAPPED at the session's configured width, so
-    * a cluster-sized session still fans out fully once rows/task reaches
-    * the budget — never a hard-coded constant in either direction. */
-  private[operators] def loopShuffleWidth(spark: SparkSession, rows: Long): Int = {
-    val sessWidth = scala.util.Try(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    val byRows = (rows + LoopRowsPerTask - 1) / LoopRowsPerTask
-    math.max(1L, math.min(sessWidth.toLong, byRows)).toInt
-  }
-
-  /** Runs `f` with spark.sql.shuffle.partitions pinned to
-    * loopShuffleWidth(rows), restoring the caller's setting afterwards.
-    * Only safe around EAGER work (the iterative loops' per-round jobs):
-    * a lazily-consumed DataFrame built inside would plan under the
-    * restored width. */
-  private[operators] def withLoopShuffleWidth[T](spark: SparkSession, rows: Long)(
-      f: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopShuffleWidth(spark, rows))
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Runs `f` with a fresh per-call reliable-checkpoint directory on the
-    * warehouse filesystem (janitor-deleted at JVM exit; the session's
-    * prior dir is restored afterwards). The shared discipline for every
-    * iterative operator that truncates lineage between rounds — on a
-    * cluster an executor loss replays from the checkpoint FILE, where
-    * `localCheckpoint`'s executor-local blocks would kill the job with
-    * unrecomputable truncated lineage (the round-2→3 CC lesson, now
-    * also used by graph_mst_boruvka's label-merge jumps). */
-  private[operators] def withReliableCheckpointDir[T](spark: SparkSession, tag: String)(
-      f: => T): T = ckptDirLock.synchronized {
-    val sc = spark.sparkContext
-    val prevCkptDir = sc.getCheckpointDir
-    // unique per-call subdir on the warehouse FS: calls never collide,
-    // and the whole subtree is best-effort deleted at JVM exit (earlier
-    // deletion is unsafe — the returned labels' lineage reads the final
-    // checkpoint when the caller's action runs). Reliable checkpoints
-    // otherwise accumulate for the session, as Spark's own do with
-    // spark.cleaner.referenceTracking.cleanCheckpoints unset.
-    val ckptBase = spark.conf.get("spark.sql.warehouse.dir") + "/_graft_checkpoints"
-    val ckptDir = s"$ckptBase/$tag-${java.util.UUID.randomUUID()}"
-    sc.setCheckpointDir(ckptDir)
-    CheckpointJanitor.deleteAtExit(ckptDir, sc.hadoopConfiguration)
-    try {
-      f
-    } finally {
-      // a caller-configured checkpoint dir must survive this call; with
-      // none configured, park the session on a STABLE (never janitor-
-      // deleted) dir so a later non-graft checkpoint() doesn't write
-      // into a directory scheduled for deletion at JVM exit.
-      // getCheckpointDir returns the uuid-RESOLVED subdir (base/<uuid>),
-      // and setCheckpointDir(resolved) would nest one uuid level per
-      // call — strip the trailing uuid segment to restore the caller's
-      // bare base, and never re-park our own dirs verbatim.
-      val uuidTail = "/[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$".r
-      sc.setCheckpointDir(prevCkptDir
-        .filterNot(_.contains("/_graft_checkpoints/"))
-        .map(p => uuidTail.replaceFirstIn(p, ""))
-        .getOrElse(s"$ckptBase/session"))
-    }
-  }
-
   def connectedComponents(spark: SparkSession, edges: DataFrame,
-                          maxRounds: Int = 50): (DataFrame, Int) =
-    withReliableCheckpointDir(spark, "cc") {
-      connectedComponentsIn(spark, edges, maxRounds)
-    }
-
-  private def connectedComponentsIn(spark: SparkSession, edges: DataFrame,
-                                    maxRounds: Int): (DataFrame, Int) = {
+                          maxRounds: Int = 50): (DataFrame, Int) = {
+    Loops.ensureCheckpointDir(spark)
     // canonical orientation: src > dst, no self-loops, set semantics
     val canon = edges
       .select(greatest(col("src"), col("dst")).as("src"),
@@ -984,7 +861,7 @@ object Dedup {
         // CC rounds shrink geometrically, and a fixed session width
         // turned each late round into ~30 scheduling-floor tasks per
         // job at local[32] (the r19 8-core-beats-32 inversion)
-        withLoopShuffleWidth(spark, curCount) {
+        Loops.withLoopShuffleWidth(spark, curCount) {
         // e1 is consumed by two jobs (the e2 checkpoint and the
         // convergence check), so persist it for the round — cache loss
         // just recomputes from the CHECKPOINTED cur, preserving the

@@ -289,10 +289,7 @@ object Functions {
     // variants (all codegen'd concat/substring algebra — see
     // graft.functions.Hive2x). mask_hash is Hive 2.x's md5 hex. The
     // oracle re-derives each mask as a 3-pass regexp_replace.
-    "mask_fns" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.register(spark)
-      spark.sql("""
+    "mask_fns" -> Tables.sql("""
         SELECT c_custkey,
                mask(c_name) AS m_all,
                mask_first_n(c_name, 9) AS m_first9,
@@ -301,8 +298,7 @@ object Functions {
                mask_show_last_n(c_name, 3) AS m_show_last3,
                mask_hash(c_mktsegment) AS m_hash
         FROM customer WHERE c_custkey < 120
-        ORDER BY c_custkey""")
-    }),
+        ORDER BY c_custkey"""),
 
     // [2.x] sort_array_by (GenericUDFSortArrayByField) lowered onto
     // array_sort with a field comparator; the sort key embeds the
@@ -310,10 +306,7 @@ object Functions {
     // partition-nondeterministic at any scale) can then never leak into
     // the output. posexplode turns the sorted array back into rows the
     // oracle can re-derive with a rank window.
-    "sort_array_struct" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.register(spark)
-      spark.sql("""
+    "sort_array_struct" -> Tables.sql("""
         WITH s AS (
           SELECT c_nationkey,
                  sort_array_by(collect_list(named_struct(
@@ -323,25 +316,20 @@ object Functions {
           GROUP BY c_nationkey)
         SELECT c_nationkey, pos, e.c AS c_custkey
         FROM s LATERAL VIEW posexplode(arr) t AS pos, e
-        ORDER BY c_nationkey, pos""")
-    }),
+        ORDER BY c_nationkey, pos"""),
 
     // [2.x] replicate_rows (GenericUDTFReplicateRows) lowered onto
     // inline(array_repeat(struct, n)) — a real generator under LATERAL
     // VIEW; the group-by collapses the fan-out so the oracle can state
     // the expected multiplicity directly.
-    "replicate_rows_fns" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.register(spark)
-      spark.sql("""
+    "replicate_rows_fns" -> Tables.sql("""
         WITH src AS (
           SELECT CAST(o_orderkey AS BIGINT) AS okey,
                  CAST(o_orderkey % 3 + 1 AS INT) AS nrep
           FROM orders WHERE o_orderkey < 300)
         SELECT k AS o_orderkey, CAST(COUNT(*) AS BIGINT) AS n_rows
         FROM src LATERAL VIEW replicate_rows(nrep, okey) t AS k
-        GROUP BY k ORDER BY o_orderkey""")
-    }),
+        GROUP BY k ORDER BY o_orderkey"""),
 
     // [2.x] aes_encrypt/aes_decrypt round-trip under a fixed 128-bit
     // key in deterministic ECB mode: the oracled row asserts
@@ -362,10 +350,7 @@ object Functions {
     // NATIVE union type (union_value/union_tag/union_extract with
     // explicit member casts), so the encoding is value-checked against
     // a real union implementation rather than a mirror of itself.
-    "uniontype_encode" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.register(spark)
-      spark.sql("""
+    "uniontype_encode" -> Tables.sql("""
         WITH t AS (
           SELECT create_union(CASE WHEN o_totalprice > 150000 THEN 0 ELSE 1 END,
                               o_totalprice, o_orderstatus) AS u
@@ -376,15 +361,11 @@ object Functions {
                              THEN CAST(ROUND(extract_union(u, 0) * 100) AS BIGINT)
                              ELSE 0 END) AS BIGINT) AS price_cents,
                MAX(extract_union(u, 1)) AS max_status
-        FROM t GROUP BY union_tag(u) ORDER BY tag""")
-    }),
+        FROM t GROUP BY union_tag(u) ORDER BY tag"""),
 
     // parse_url_tuple as a true one-row UDTF (GenericUDTFParseUrlTuple):
     // one URL parse serving all requested parts, vs parse_url × n above.
-    "url_tuple" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.register(spark)
-      spark.sql("""
+    "url_tuple" -> Tables.sql("""
         SELECT p_partkey, t.host AS host, t.path AS path, t.brand AS brand
         FROM (
           SELECT p_partkey,
@@ -395,8 +376,7 @@ object Functions {
           FROM part WHERE p_partkey < 200
         )
         LATERAL VIEW PARSE_URL_TUPLE(url, 'HOST', 'PATH', 'QUERY:brand') t AS host, path, brand
-        ORDER BY p_partkey""")
-    }),
+        ORDER BY p_partkey"""),
 
     // TABLESAMPLE with seed: deterministic within Spark, but sampling
     // algorithms differ across engines — rows-only check + ScalaTest.

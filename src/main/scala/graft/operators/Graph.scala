@@ -596,8 +596,9 @@ object Graph {
     // not finish at sf0.01). Semantics mirror mstSql step for step —
     // same (cost, src, dst) argmin, same three bounded min-label
     // jumps — and the oracle compare proves the equivalence.
-    "graph_mst_boruvka" -> ((spark, sfDir) => Dedup.withReliableCheckpointDir(spark, "mst") {
+    "graph_mst_boruvka" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
+      Loops.ensureCheckpointDir(spark)
       // the shared weighted co-purchase edge table. persist() is
       // RE-MARKED per call: the memo survives across queries but a
       // cache clear between bench passes silently unpersists the DF,
@@ -613,9 +614,8 @@ object Graph {
       // cluster an executor loss mid-loop replays from the checkpoint
       // FILE, where executor-local blocks would kill the job with
       // unrecomputable truncated lineage — the same fault-tolerance
-      // contract as Dedup.connectedComponents, via the shared
-      // withReliableCheckpointDir wrapper (per-call dir, janitor-
-      // deleted at JVM exit).
+      // contract as Dedup.connectedComponents, in the same context-wide
+      // dir (Loops.ensureCheckpointDir, janitor-deleted at JVM exit).
       // materialize the persisted edge table once and take its count:
       // every round state below (labels, selected edges, jumps) is
       // bounded by |ew|, so the loop's checkpoints/aggregates run at a
@@ -623,13 +623,13 @@ object Graph {
       // discipline — label tables here are a few thousand rows at
       // sf0.1 and fixed-width rounds paid ~30 floor tasks per job)
       val ewCount = ew.count()
-      var lbl = Dedup.withLoopShuffleWidth(spark, 2L * ewCount) {
+      var lbl = Loops.withLoopShuffleWidth(spark, 2L * ewCount) {
         ew.select(col("src").as("node"))
           .union(ew.select(col("dst").as("node")))
           .distinct().withColumn("lbl", col("node")).checkpoint()
       }
       val sels = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      for (_ <- 1 to 2) Dedup.withLoopShuffleWidth(spark, 2L * ewCount) {
+      for (_ <- 1 to 2) Loops.withLoopShuffleWidth(spark, 2L * ewCount) {
         val lab = ew
           .join(lbl.select(col("node").as("src"), col("lbl").as("la")), Seq("src"))
           .join(lbl.select(col("node").as("dst"), col("lbl").as("lb")), Seq("dst"))
@@ -725,7 +725,7 @@ object Graph {
         // graph shrinks monotonically and fixed-width rounds paid ~30
         // scheduling-floor tasks per count at local[32] (the
         // dedup_semantic_prune c8-beats-c32 mechanism)
-        Dedup.withLoopShuffleWidth(spark, 2L * rows.last._3) {
+        Loops.withLoopShuffleWidth(spark, 2L * rows.last._3) {
           val keep = deg.where(col("degree") >= 3).select(col("node"))
           val symN = sym
             .join(keep.select(col("node").as("src")), Seq("src"))

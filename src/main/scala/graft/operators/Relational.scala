@@ -687,10 +687,7 @@ object Relational {
     // result equals the plain join — exactly what the oracle checks.
     // At 100 TB this is the difference between shuffling the full fact
     // table and shuffling ~the matching fraction of it.
-    "join_bloom_prefilter" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.register(spark)
-      spark.sql("""
+    "join_bloom_prefilter" -> Tables.sql("""
         SELECT l.l_returnflag, COUNT(*) AS n_items,
                CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
         FROM (
@@ -703,8 +700,7 @@ object Relational {
         JOIN (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT') o
           ON l.l_orderkey = o.o_orderkey
         GROUP BY l.l_returnflag
-        ORDER BY l.l_returnflag""")
-    }),
+        ORDER BY l.l_returnflag"""),
 
     // TPC-H Q1 shape — the flagship end-to-end slice (scan → filter →
     // partial/final hash agg → sort). Hive: GroupByOperator modes

@@ -23,12 +23,6 @@ object Similarity {
 
   private type Q = (SparkSession, String) => DataFrame
 
-  private def gsql(q: String): Q = (spark, sfDir) => {
-    Tables.register(spark, sfDir)
-    GraftFunctions.register(spark)
-    spark.sql(Tables.scaleHints(spark, q))
-  }
-
   /** The shared int8 quantize pipeline (vec_id, ed, sc_raw, q) —
     * ONE definition serves embed_quantize_int8 and ann_quantized_topk
     * so the latter's "same per-element steps" claim is structural, not
@@ -770,7 +764,6 @@ object Similarity {
       val n = cached.getOrElse {
         fs.delete(metaPath, false)
         Tables.register(spark, sfDir)
-        GraftFunctions.register(spark)
         val emb = spark.table("embeddings")
         val n = emb.count()
         build(dir, emb, n)
@@ -1084,16 +1077,15 @@ object Similarity {
   }
 
   val queries: Map[String, Q] = Map(
-    "link_blocking_metrics" -> gsql(blockingMetricsSql(spark = true)),
-    "embed_hard_negatives" -> gsql(hardNegSql(spark = true)),
-    "embed_quantile_norm" -> gsql(quantileNormSql(spark = true)),
-    "eval_retrieval" -> gsql(evalRetrievalSql(spark = true)),
-    "ann_pq_adc" -> gsql(pqAdcSql(spark = true)),
-    "pipeline_rag" -> gsql(ragSql(spark = true)),
-    "embed_pca_power" -> gsql(pcaSql(spark = true)),
+    "link_blocking_metrics" -> Tables.sql(blockingMetricsSql(spark = true)),
+    "embed_hard_negatives" -> Tables.sql(hardNegSql(spark = true)),
+    "embed_quantile_norm" -> Tables.sql(quantileNormSql(spark = true)),
+    "eval_retrieval" -> Tables.sql(evalRetrievalSql(spark = true)),
+    "ann_pq_adc" -> Tables.sql(pqAdcSql(spark = true)),
+    "pipeline_rag" -> Tables.sql(ragSql(spark = true)),
+    "embed_pca_power" -> Tables.sql(pcaSql(spark = true)),
     "ann_mmr_rerank" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       // row-scale work: the top-10 pool (TakeOrderedAndProject). The
       // greedy rerank runs on the COLLECTED pool — 10 rows of
       // (id, vec, rel), bounded like the k-means centroid state. The
@@ -1195,7 +1187,6 @@ object Similarity {
     // so the compare is exact, no tolerance.
     "ann_quantized_topk" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       // reconstruction over the SHARED quantize pipeline (quantized8)
       val rec = quantized8(spark.table("embeddings"))
         .select(col("vec_id"),
@@ -1225,7 +1216,7 @@ object Similarity {
     // join is 10×10. Determinism: ranks are ints, 1/(60+rank) is one
     // correctly-rounded IEEE division, and the two-term sum adds in
     // fixed order — bit-exact, no tolerance.
-    "search_hybrid_rrf" -> gsql(s"""
+    "search_hybrid_rrf" -> Tables.sql(s"""
       WITH ${TextAnalysis.bm25Ctes(spark = true)},
       lex10 AS (
         SELECT doc_id, ROUND(${TextAnalysis.bm25Sum()}, 6) AS score
@@ -1256,7 +1247,7 @@ object Similarity {
       ORDER BY rrf DESC, doc_id"""),
 
     // Exact cosine top-3 for 5 query vectors against the whole corpus.
-    "ann_cosine_topk" -> gsql("""
+    "ann_cosine_topk" -> Tables.sql("""
       WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
       scored AS (
         SELECT q.vec_id AS qid, e.vec_id AS nid,
@@ -1371,7 +1362,6 @@ object Similarity {
     // AnnIndexSpec's plan gates.
     "ann_lsh_probe_indexed" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       val (dir, tables, planes) = lshIndexFixture(spark, sfDir)
       probeIndexTopK(spark, dir, tables, planes)
     }),
@@ -1387,7 +1377,6 @@ object Similarity {
     // vector store actually relies on day to day.
     "ann_lsh_probe_incremental" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       val (dir, tables, planes) = lshIndexIncrFixture(spark, sfDir)
       probeIndexTopK(spark, dir, tables, planes)
     }),
@@ -1404,7 +1393,6 @@ object Similarity {
     // (this).
     "ann_lsh_probe_migrated" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       val (dir, tables, planes) = lshIndexMigratedFixture(spark, sfDir)
       probeIndexTopK(spark, dir, tables, planes)
     }),
@@ -1422,7 +1410,6 @@ object Similarity {
     // the same bytes with no anti-join — CompactorSpec pins that.
     "ann_lsh_probe_deleted" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       val (dir, tables, planes) = lshIndexDeletedFixture(spark, sfDir)
       probeIndexTopK(spark, dir, tables, planes)
     }),
@@ -1496,13 +1483,13 @@ object Similarity {
     // distances -> exact oracle against DuckDB's same-recurrence
     // builtin. self_hit separates true recoveries from exact-name
     // doppelgangers (TPC-H part names repeat), deterministically.
-    "link_fuzzy_match" -> gsql(linkFuzzySql),
+    "link_fuzzy_match" -> Tables.sql(linkFuzzySql),
 
     // Record linkage by Jaro-Winkler (dropped-char corruption): same
     // blocked shape with the length bucket shifted by one; ranking runs
     // on the ROUNDED score so tie-breaks are engine-independent even in
     // principle (the kernels are bit-identical anyway).
-    "link_jaro_winkler" -> gsql(linkJaroSql("jaro_winkler")),
+    "link_jaro_winkler" -> Tables.sql(linkJaroSql("jaro_winkler")),
 
     "embed_winsorize" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)

@@ -1564,16 +1564,8 @@ object Statistics {
     "stats_fleiss_kappa" -> Tables.sql(fleissSql(spark = true)),
     "stats_cohens_kappa" -> Tables.sql(kappaSql(spark = true)),
     "stats_mcnemar"      -> Tables.sql(mcnemarSql(spark = true)),
-    "stats_bootstrap_poisson" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.register(spark) // MIX64
-      spark.sql(Tables.scaleHints(spark, bootstrapSql(spark = true)))
-    }),
-    "stats_bootstrap_median" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.register(spark) // MIX64
-      spark.sql(Tables.scaleHints(spark, bootstrapMedianSql(spark = true)))
-    }),
+    "stats_bootstrap_poisson" -> Tables.sql(bootstrapSql(spark = true)),
+    "stats_bootstrap_median" -> Tables.sql(bootstrapMedianSql(spark = true)),
     "stats_delta_method" -> Tables.sql(DeltaMethodSql),
     "stats_proportion_ztest" -> Tables.sql(PropZSql),
     "stats_hill" -> Tables.sql(HillSql),

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{ContextNGramsAgg, GraftFunctions, NGramsTopKAgg}
 
 /** Text-analysis operators for the training-data pipeline: language ID
   * (stopword-ratio heuristic), quality scoring, repetition filtering
@@ -19,14 +18,6 @@ import graft.functions.{ContextNGramsAgg, GraftFunctions, NGramsTopKAgg}
 object TextAnalysis {
 
   private type Q = (SparkSession, String) => DataFrame
-
-  private def gsql(q: String): Q = (spark, sfDir) => {
-    Tables.register(spark, sfDir)
-    GraftFunctions.register(spark)
-    NGramsTopKAgg.register(spark)
-    ContextNGramsAgg.register(spark)
-    spark.sql(Tables.scaleHints(spark, q))
-  }
 
   // TOKENIZE is the one-pass custom expression — equivalent to
   // FILTER(SPLIT(LOWER(text),' '), w -> w <> '') which costs ~10× more
@@ -459,7 +450,7 @@ object TextAnalysis {
     // rows-only harness entry (the multimodal-codec class); its
     // contracts are pinned by invariants in ExpressionsSpec. Integer
     // arithmetic end to end; pure narrow map + per-source aggregate.
-    "text_compression_quality" -> gsql("""
+    "text_compression_quality" -> Tables.sql("""
       WITH r AS (
         SELECT source,
                (CAST(DEFLATE_LEN(text) AS BIGINT) * 1000000)
@@ -475,12 +466,12 @@ object TextAnalysis {
                AS BIGINT) AS n_noise
       FROM r GROUP BY source ORDER BY source"""),
 
-    "search_near_copies" -> gsql(nearCopiesSql(spark = true)),
-    "text_textrank" -> gsql(textrankSql(spark = true)),
-    "text_c4_filters" -> gsql(c4Sql(spark = true)),
-    "text_span_dedup" -> gsql(spanDedupSql(spark = true)),
-    "text_skipgram_cooc" -> gsql(skipgramSql(spark = true)),
-    "text_phrase_search" -> gsql(phraseSql(spark = true)),
+    "search_near_copies" -> Tables.sql(nearCopiesSql(spark = true)),
+    "text_textrank" -> Tables.sql(textrankSql(spark = true)),
+    "text_c4_filters" -> Tables.sql(c4Sql(spark = true)),
+    "text_span_dedup" -> Tables.sql(spanDedupSql(spark = true)),
+    "text_skipgram_cooc" -> Tables.sql(skipgramSql(spark = true)),
+    "text_phrase_search" -> Tables.sql(phraseSql(spark = true)),
     // Spark side of the BPE trainer: each generation persists (the
     // pure-CTE spelling re-tokenized the corpus exponentially under
     // Catalyst CTE inlining — 17 s vs ~3 s), the 1-row top pair
@@ -527,7 +518,7 @@ object TextAnalysis {
     // ARRAY_CONTAINS(...)) spelling interprets a lambda + linear list
     // scan per token, ×3 lists per row (round-1 bench: slowest scalar
     // query at ~4.3 s cold; value-identical to the oracle's formulation).
-    "text_langid" -> gsql(TokCte + """
+    "text_langid" -> Tables.sql(TokCte + """
       SELECT doc_id, s_en, s_de, s_fr,
              CASE WHEN s_en >= s_de AND s_en >= s_fr THEN 'en'
                   WHEN s_de >= s_fr THEN 'de'
@@ -554,7 +545,7 @@ object TextAnalysis {
     // (equivalence pinned in ExpressionsSpec) but ~6× cheaper, which
     // took this from the most expensive bench query (6.0 s at sf0.1)
     // to ~1 s. Pure narrow map work at 100 TB.
-    "text_langid_trigram" -> gsql("""
+    "text_langid_trigram" -> Tables.sql("""
       WITH s AS (
         SELECT doc_id, LANG_TRIGRAM_SCORES(text) AS sc FROM documents
       )
@@ -571,7 +562,7 @@ object TextAnalysis {
 
     // Quality metrics: length, token stats, type-token ratio, stopword
     // ratio, alphanumeric ratio, and a composite keep/drop flag.
-    "text_quality" -> gsql(TokCte + """
+    "text_quality" -> Tables.sql(TokCte + """
       SELECT doc_id,
              LENGTH(text) AS n_char,
              SIZE(toks) AS n_tok,
@@ -588,7 +579,7 @@ object TextAnalysis {
 
     // Token counting three ways: whitespace, BPE-ish regex pieces,
     // chars/4 approximation.
-    "text_tokens" -> gsql("""
+    "text_tokens" -> Tables.sql("""
       SELECT doc_id,
              SIZE(FILTER(SPLIT(text, ' '), w -> w <> '')) AS ws_tokens,
              SIZE(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]', 0)) AS re_tokens,
@@ -599,7 +590,7 @@ object TextAnalysis {
     // Corpus-level top-20 bigrams via the bounded-buffer ngrams
     // aggregator (Hive GenericUDAFnGrams shape); oracle recomputes the
     // exact counts relationally.
-    "text_ngrams_topk" -> gsql(TokCte + """
+    "text_ngrams_topk" -> Tables.sql(TokCte + """
       SELECT g.ngram AS ngram, g.freq AS freq
       FROM (
         SELECT EXPLODE(NGRAMS_TOPK(toks, 2, 20, 500000)) AS g
@@ -612,7 +603,7 @@ object TextAnalysis {
     // context_ngrams (GenericUDAFContextNGrams): top fillers of the
     // wildcard slots of a fixed word context — here, the 10 words most
     // often following 'data'.
-    "text_context_ngrams" -> gsql(TokCte + """
+    "text_context_ngrams" -> Tables.sql(TokCte + """
       SELECT g.ngram AS follower, g.freq AS freq
       FROM (
         SELECT EXPLODE(CONTEXT_NGRAMS(toks, ARRAY('data', CAST(NULL AS STRING)), 10, 100000)) AS g
@@ -630,7 +621,7 @@ object TextAnalysis {
     // keys are fine-grained, map-side partial agg applies, and nothing
     // is per-row quadratic (the ARRAY_MAX(TRANSFORM(FILTER...))
     // spelling of top-token count would be O(n²) per document).
-    "text_repetition" -> gsql(TokCte + """
+    "text_repetition" -> Tables.sql(TokCte + """
       , cnt AS (
         SELECT doc_id, tok, COUNT(*) AS c
         FROM t LATERAL VIEW EXPLODE(toks) x AS tok
@@ -660,7 +651,7 @@ object TextAnalysis {
     // Winnowing fingerprints (k=8 chars, window=4): per-doc fingerprint
     // set size + stable sample values. The seeded hashing is replicated
     // in the DuckDB oracle (see below), so this is value-checked.
-    "text_fingerprint" -> gsql("""
+    "text_fingerprint" -> Tables.sql("""
       SELECT doc_id,
              SIZE(fp) AS n_fp,
              fp[0] AS first_fp,
@@ -684,7 +675,7 @@ object TextAnalysis {
     // heuristic); the score formula runs once per doc on exact inputs
     // so both engines agree bit-for-bit. Single narrow scan, codegen'd
     // regex kernels, no shuffle at all.
-    "text_readability" -> gsql("""
+    "text_readability" -> Tables.sql("""
       SELECT doc_id, words, sentences, syllables,
              ROUND(206.835
                    - 1.015 * (CAST(words AS DOUBLE) / GREATEST(sentences, 1))
@@ -705,7 +696,7 @@ object TextAnalysis {
     // pair counts come from an inverted-index equi-join on the token
     // (the Bayardo shape, never all-pairs-of-docs); top-30 by
     // (jaccard DESC, pair) total order.
-    "text_source_similarity" -> gsql(sourceSimSql(spark = true)),
+    "text_source_similarity" -> Tables.sql(sourceSimSql(spark = true)),
 
     // RAKE phrase-keyword extraction (Rose et al. 2010) — the phrase
     // complement of text_tfidf_keywords' unigrams: candidate phrases
@@ -717,7 +708,7 @@ object TextAnalysis {
     // explodes + three hash aggregates — embarrassingly parallel.
     "text_rake" -> Tables.sql(rakeSql(spark = true)),
 
-    "text_entropy" -> gsql("""
+    "text_entropy" -> Tables.sql("""
       WITH t AS (
         SELECT doc_id, source, TOKENIZE(text) AS toks FROM documents
       ), wc AS (
@@ -749,7 +740,7 @@ object TextAnalysis {
     // both engines); the 4 terms add in fixed order; LN may differ from
     // DuckDB's by 1 ulp, so the score carries the same ROUND boundary
     // as cluster_*'s cosines, and ranking orders by the ROUNDED value.
-    "text_bm25_topk" -> gsql(s"""
+    "text_bm25_topk" -> Tables.sql(s"""
       WITH ${bm25Ctes(spark = true)}
       SELECT doc_id, len AS n_tokens,
              ROUND(${bm25Sum()}, 6) AS score
@@ -769,7 +760,7 @@ object TextAnalysis {
     // one fixed IEEE sequence absorbed at the 6-dp ROUND, and the
     // per-doc mean goes through an exact DECIMAL(18,6) sum so the
     // reduction order cannot leak (same discipline as cluster_*).
-    "text_perplexity" -> gsql(s"""
+    "text_perplexity" -> Tables.sql(s"""
       WITH ${pplCtes(spark = true)}
       SELECT doc_id,
              COUNT(*) AS n_bigrams,
@@ -795,7 +786,7 @@ object TextAnalysis {
     // by doc_id — no global sort). Determinism: tf/df/N are integers,
     // one LN per (doc, term) absorbed at the 6-dp ROUND, and
     // (tfidf DESC, term) is a total order within each doc.
-    "text_tfidf_keywords" -> gsql(tfidfSql(spark = true)),
+    "text_tfidf_keywords" -> Tables.sql(tfidfSql(spark = true)),
 
     // Zipf rank-frequency fit: OLS slope of ln(freq) on ln(rank) over
     // the corpus vocabulary — natural language sits near -1, so the
@@ -804,10 +795,9 @@ object TextAnalysis {
     // metric DISCRIMINATES). All OLS moments go through 9-dp-ROUNDed
     // logs and exact DECIMAL sums (reduction-order-free); the rank
     // window runs over the vocabulary table, not the corpus.
-    "text_zipf_slope" -> gsql(zipfSql(spark = true)),
+    "text_zipf_slope" -> Tables.sql(zipfSql(spark = true)),
     "text_heaps_law" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       // materialize the 10 checkpoint points ONCE and fit on a local
       // frame (the BPE rebuild pattern — 10 rows IS driver state): the
       // single-statement spelling re-derived the bigram explode under
@@ -832,7 +822,7 @@ object TextAnalysis {
     // is TakeOrderedAndProject. Determinism: all counts are integers,
     // one LN per surviving pair absorbed at the 6-dp ROUND, and
     // (pmi DESC, w1, w2) is a unique sort key.
-    "text_pmi_bigrams" -> gsql(pmiSql(spark = true)),
+    "text_pmi_bigrams" -> Tables.sql(pmiSql(spark = true)),
 
     // Multinomial naive-Bayes language ID — the SUPERVISED third leg of
     // the language-ID family (text_langid = stopword heuristic,
@@ -847,7 +837,7 @@ object TextAnalysis {
     // reduction order cannot matter and the (score DESC, class) argmax
     // is total. Zero-token docs drop (no evidence to score — the
     // tfidf convention).
-    "text_langid_nb" -> gsql(nbSql(spark = true)),
+    "text_langid_nb" -> Tables.sql(nbSql(spark = true)),
 
     // Hashing-trick featurization (Weinberger et al., "Feature Hashing
     // for Large Scale Multitask Learning", ICML'09): every token maps
@@ -858,7 +848,7 @@ object TextAnalysis {
     // map-side partials. Features stay signed integer counts (exact —
     // no normalization float). SF-proportional sample of docs keeps
     // the row count bounded.
-    "text_feature_hashing" -> gsql(featHashSql(spark = true)),
+    "text_feature_hashing" -> Tables.sql(featHashSql(spark = true)),
 
     // DSIR importance weighting (Xie et al., "Data Selection for
     // Language Models via Importance Resampling", NeurIPS'23): score
@@ -874,7 +864,7 @@ object TextAnalysis {
     // top-k (the reproducible variant). Per-bucket log-ratios quantize
     // to exact 1e-9 integers before the per-doc SUM (the geomean
     // discipline); add-1 smoothing keeps every bucket finite.
-    "curation_dsir" -> gsql(dsirSql(spark = true))
+    "curation_dsir" -> Tables.sql(dsirSql(spark = true))
   )
 
   /** Whole curation_dsir statement — parameterized on the tokenizer and

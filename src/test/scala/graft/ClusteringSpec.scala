@@ -295,26 +295,6 @@ class ClusteringSpec extends AnyFunSuite with Matchers {
     } finally spark.conf.unset("graft.cluster.maxGroup")
   }
 
-  test("cache-blocked flat assignment is bit-identical to the ArgMaxCosineD expression") {
-    // odd row/centroid counts so partial tiles and partial row blocks
-    // are exercised (rowBlock=7, centTile=5 against 23 centroids)
-    import graft.functions.{CentroidMatrix, GraftFunctions}
-    Tables.register(spark, sf)
-    val vecs = spark.table("embeddings").select(col("vec_id"),
-      expr("transform(embedding, x -> cast(x as double))").as("ve"))
-    val cents = (0 until 23).map { i =>
-      (i, Array.tabulate(64)(d => ((i * 64 + d) % 89 + 1) / 89.0))
-    }
-    val cm = new CentroidMatrix(cents.map(_._1).toArray, cents.map(_._2).toArray)
-    val bc = spark.sparkContext.broadcast(cm)
-    val flat = vecs.withColumn("best", GraftFunctions.argmax_cosine_d(col("ve"), bc))
-      .select(col("vec_id"), col("best.cluster"), col("best.cos"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)
-    val blocked = Clustering.assignFlatBlocked(vecs, bc, rowBlock = 7, centTile = 5)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)
-    blocked shouldBe flat
-  }
-
   test("salt-split fallback: over-cap cluster degrades to within-sub-group pairs instead of failing") {
     // same degenerate collapse as above, but with the degradation conf
     // on: nsplit = ceil(50/10) = 5 balanced sub-groups (row-number

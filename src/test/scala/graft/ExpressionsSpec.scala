@@ -234,7 +234,7 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("ngrams_topk matches exact counts on a small corpus") {
-    NGramsTopKAgg.register(spark)
+    GraftFunctions.register(spark)
     val docs = Seq(
       Seq("a", "b", "a", "b", "c"),
       Seq("a", "b", "c", "d"),
@@ -360,7 +360,7 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("context_ngrams: top fillers for a wildcard slot") {
-    ContextNGramsAgg.register(spark)
+    GraftFunctions.register(spark)
     Seq(
       Seq("big", "data", "rocks"),
       Seq("my", "data", "rocks"),

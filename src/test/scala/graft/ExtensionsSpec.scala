@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 
 /** GraftExtensions wiring: a session built with .withExtensions resolves
-  * every graft function from SQL with no manual registration. The
-  * existing SparkContext is reused (builder only applies extensions to a
-  * NEW SparkSession, so active/default must be cleared first). */
+  * every graft function (every GraftFunctions.builders entry) from SQL
+  * with no manual registration. The existing SparkContext is reused
+  * (builder only applies extensions to a NEW SparkSession, so
+  * active/default must be cleared first). */
 class ExtensionsSpec extends AnyFunSuite {
 
   test("withExtensions session resolves graft functions from SQL") {
@@ -20,6 +21,10 @@ class ExtensionsSpec extends AnyFunSuite {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(s ne base, "expected a fresh session carrying the extensions")
+      val missing = graft.functions.GraftFunctions.builders.keySet.filterNot(n =>
+        s.sessionState.functionRegistry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+      assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
       val r = s.sql("""
         SELECT COSINE_SIM(ARRAY(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
                           ARRAY(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c,
