@@ -525,14 +525,8 @@ object Dedup {
       val hist = sizes.groupBy(col("csize"))
         .agg(count(lit(1)).cast("bigint").as("n_components"),
           sum(col("csize")).cast("bigint").as("n_docs"))
-      // both corpus-level scalars in one fused action (tagged-union
-      // count — two .count() jobs paid the scheduling floor twice)
-      val ns = labels.select(lit(1L).as("isn"))
-        .union(spark.table("documents").select(lit(0L).as("isn")))
-        .agg(coalesce(sum(col("isn")), lit(0L)).as("nn"),
-             count(lit(1)).as("tot")).head()
-      val nNodes = ns.getLong(0)
-      val nDocs = ns.getLong(1) - nNodes
+      // both corpus-level scalars in one job
+      val Seq(nNodes, nDocs) = Loops.counts(labels, spark.table("documents"))
       import spark.implicits._
       val singletons = Seq((1L, nDocs - nNodes, nDocs - nNodes))
         .toDF("csize", "n_components", "n_docs")
@@ -810,11 +804,9 @@ object Dedup {
     * Convergence is detected by EXACT edge-set equality for both steps
     * (count + anti-join emptiness per step — a handful of cheap jobs for
     * O(log) rounds), never a probabilistic checksum, and unconverged
-    * state throws rather than emitting wrong clusters. Round state goes
-    * through reliable `checkpoint()` into the context's checkpoint dir
-    * (Loops.ensureCheckpointDir) — on a cluster an executor loss replays from the checkpoint file,
-    * where round 2's `localCheckpoint` (executor-local blocks, truncated
-    * lineage) would have failed the job.
+    * state throws rather than emitting wrong clusters. The rounds run on
+    * the `Loops` driver, which carries each round's star set through a
+    * reliable checkpoint and sizes its shuffles from its edge count.
     *
     * @param edges undirected edges in columns (src, dst), any
     *              orientation; self-loops and duplicates are ignored
@@ -822,96 +814,65 @@ object Dedup {
     */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
                           maxRounds: Int = 50): (DataFrame, Int) = {
-    Loops.ensureCheckpointDir(spark)
-    // canonical orientation: src > dst, no self-loops, set semantics
-    val canon = edges
-      .select(greatest(col("src"), col("dst")).as("src"),
-              least(col("src"), col("dst")).as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .checkpoint()
-    if (canon.isEmpty) {
-      // empty graph: no pairs ⇒ no clusters (round 2 NPE'd here via a
-      // null sum aggregate)
-      (canon.select(col("src").as("node"), col("dst").as("comp")), 0)
-    } else {
-      def largeStar(e: DataFrame): DataFrame = {
-        val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        val mins = sym.groupBy("src").agg(min("dst").as("mind"))
-          .select(col("src").as("u"), least(col("src"), col("mind")).as("m"))
-        sym.join(mins, sym("src") === col("u"))
-          .where(col("dst") > sym("src"))
-          .select(col("dst").as("src"), col("m").as("dst"))
-          .distinct()
-      }
-      def smallStar(e: DataFrame): DataFrame = {
-        val mins = e.groupBy("src").agg(min("dst").as("m")) // src > dst ⇒ m < src
-        val attachNbrs = e.join(mins, "src")
-          .where(col("dst") =!= col("m"))
-          .select(col("dst").as("src"), col("m").as("dst"))
-        val attachSelf = mins.select(col("src"), col("m").as("dst"))
-        attachNbrs.union(attachSelf).distinct()
-      }
-      var cur = canon
-      var curCount = canon.count()
-      var converged = false
-      var round = 0
-      while (!converged && round < maxRounds) {
-        // every job of the round (checkpoint, counts, exact check) runs
-        // under a shuffle width derived from THIS round's edge count —
-        // CC rounds shrink geometrically, and a fixed session width
-        // turned each late round into ~30 scheduling-floor tasks per
-        // job at local[32] (the r19 8-core-beats-32 inversion)
-        Loops.withLoopShuffleWidth(spark, curCount) {
-        // e1 is consumed by two jobs (the e2 checkpoint and the
-        // convergence check), so persist it for the round — cache loss
-        // just recomputes from the CHECKPOINTED cur, preserving the
-        // executor-loss story; only the round state e2 needs its own
-        // reliable checkpoint
-        val e1 = largeStar(cur).persist()
-        val e2 = smallStar(e1).checkpoint()
-        // fixpoint of BOTH steps individually (the SoCC'14 convergence
-        // condition), not just of the composition. Two tiers: equal
-        // cardinality is NECESSARY for set equality and costs only ONE
-        // fused count job over already-materialized data (e1 persisted,
-        // e2 checkpointed; cur's count carries over from last round —
-        // counting the union with a side tag returns both cardinalities
-        // in a single action, where two .count() calls paid the
-        // per-job scheduling floor twice every round), so the EXACT
-        // check — every input is a distinct edge set, so tagging
-        // members ±1 and summing per (step, edge) yields 0 for every
-        // key iff e1 == cur and e2 == e1 — runs in its single shuffle
-        // only in rounds where all three counts already agree, i.e.
-        // typically just the final round(s).
-        val cnts = e1.select(lit(1L).as("is1"))
-          .union(e2.select(lit(0L).as("is1")))
-          .agg(coalesce(sum(col("is1")), lit(0L)).as("n1"),
-               count(lit(1)).as("tot")).head()
-        val e1Count = cnts.getLong(0)
-        val e2Count = cnts.getLong(1) - e1Count
-        if (e1Count == curCount && e2Count == e1Count) {
-          def tag(df: DataFrame, step: Int, sign: Int): DataFrame =
-            df.select(lit(step).as("step"), col("src"), col("dst"),
-                      lit(sign.toLong).as("t"))
-          converged = tag(e1, 0, 1).union(tag(cur, 0, -1))
-            .union(tag(e2, 1, 1)).union(tag(e1, 1, -1))
-            .groupBy("step", "src", "dst").agg(sum("t").as("d"))
-            .where(col("d") =!= 0L)
-            .isEmpty
-        }
-        e1.unpersist(blocking = false)
-        cur = e2
-        curCount = e2Count
-        round += 1
-        }
-      }
-      if (!converged) throw new IllegalStateException(
-        s"connected components did not converge within $maxRounds rounds")
-      // stars: every edge is (leaf, center); centers get their own label
-      val labels = cur.select(col("src").as("node"), col("dst").as("comp"))
-        .union(cur.select(col("dst").as("node"), col("dst").as("comp")))
-        .groupBy("node").agg(min("comp").as("comp"))
-      (labels, round)
+    def largeStar(e: DataFrame): DataFrame = {
+      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      val mins = sym.groupBy("src").agg(min("dst").as("mind"))
+        .select(col("src").as("u"), least(col("src"), col("mind")).as("m"))
+      sym.join(mins, sym("src") === col("u"))
+        .where(col("dst") > sym("src"))
+        .select(col("dst").as("src"), col("m").as("dst"))
+        .distinct()
     }
+    def smallStar(e: DataFrame): DataFrame = {
+      val mins = e.groupBy("src").agg(min("dst").as("m")) // src > dst ⇒ m < src
+      val attachNbrs = e.join(mins, "src")
+        .where(col("dst") =!= col("m"))
+        .select(col("dst").as("src"), col("m").as("dst"))
+      val attachSelf = mins.select(col("src"), col("m").as("dst"))
+      attachNbrs.union(attachSelf).distinct()
+    }
+    val (stars, rounds) = Loops.fixpoint(spark, "connected components", maxRounds) { r =>
+      // canonical orientation: src > dst, no self-loops, set semantics
+      val canon = r.carry(edges
+        .select(greatest(col("src"), col("dst")).as("src"),
+                least(col("src"), col("dst")).as("dst"))
+        .where(col("src") =!= col("dst")).distinct())
+      // empty graph: no pairs ⇒ no clusters, in zero rounds
+      if (canon.isEmpty) Loops.Step(canon, 0L, done = true)
+      else Loops.Step(canon, canon.count())
+    } { (r, cur) =>
+      // e1 is consumed by two jobs (the e2 checkpoint and the
+      // convergence check), so it is kept for the round — cache loss
+      // just recomputes from the CHECKPOINTED cur; only the round state
+      // e2 needs its own reliable checkpoint
+      val e1 = r.keep(largeStar(cur.state))
+      val e2 = r.carry(smallStar(e1))
+      // fixpoint of BOTH steps individually (the SoCC'14 convergence
+      // condition), not just of the composition. Two tiers: equal
+      // cardinality is NECESSARY for set equality and costs only ONE
+      // fused count job over already-materialized data (cur's count
+      // carries over from last round), so the EXACT check — every input
+      // is a distinct edge set, so tagging members ±1 and summing per
+      // (step, edge) yields 0 for every key iff e1 == cur and e2 == e1 —
+      // runs in its single shuffle only in rounds where all three counts
+      // already agree, i.e. typically just the final round(s).
+      val Seq(e1Count, e2Count) = Loops.counts(e1, e2)
+      def tag(df: DataFrame, step: Int, sign: Int): DataFrame =
+        df.select(lit(step).as("step"), col("src"), col("dst"),
+                  lit(sign.toLong).as("t"))
+      val converged = e1Count == cur.rows && e2Count == e1Count &&
+        tag(e1, 0, 1).union(tag(cur.state, 0, -1))
+          .union(tag(e2, 1, 1)).union(tag(e1, 1, -1))
+          .groupBy("step", "src", "dst").agg(sum("t").as("d"))
+          .where(col("d") =!= 0L)
+          .isEmpty
+      Loops.Step(e2, e2Count, converged)
+    }
+    // stars: every edge is (leaf, center); centers get their own label
+    val labels = stars.select(col("src").as("node"), col("dst").as("comp"))
+      .union(stars.select(col("dst").as("node"), col("dst").as("comp")))
+      .groupBy("node").agg(min("comp").as("comp"))
+    (labels, rounds)
   }
 
   val oracle: Map[String, String] = Map(

@@ -590,7 +590,7 @@ object Graph {
       ORDER BY r.round"""
 
   val queries: Map[String, Q] = Map(
-    // Driver loop with persisted rounds (the kcore lesson, only more
+    // Driver loop with checkpointed rounds (the kcore lesson, only more
     // so: the single-statement spelling's scalar subqueries re-derive
     // TWO rounds of cand/sel/jump chains under CTE inlining and did
     // not finish at sf0.01). Semantics mirror mstSql step for step —
@@ -598,38 +598,23 @@ object Graph {
     // jumps — and the oracle compare proves the equivalence.
     "graph_mst_boruvka" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      Loops.ensureCheckpointDir(spark)
       // the shared weighted co-purchase edge table. persist() is
       // RE-MARKED per call: the memo survives across queries but a
       // cache clear between bench passes silently unpersists the DF,
       // and the MST loop touches ew once per round — unpersisted that
       // is a full lineitem self-join per action (measured +2.3 s).
       val ew = weightedEdges(spark, sfDir).persist()
-      // Reliable checkpoint() truncates the label lineage each jump:
-      // every jump references the previous labels THREE times, so the
-      // un-truncated logical plan grows 3^jumps copies per round (~729
-      // subtrees by round 2's last jump — analyzed to driver OOM, the
-      // same explosion that killed the single-statement spelling).
-      // Reliable (warehouse-FS) checkpoints, not localCheckpoint: on a
-      // cluster an executor loss mid-loop replays from the checkpoint
-      // FILE, where executor-local blocks would kill the job with
-      // unrecomputable truncated lineage — the same fault-tolerance
-      // contract as Dedup.connectedComponents, in the same context-wide
-      // dir (Loops.ensureCheckpointDir, janitor-deleted at JVM exit).
-      // materialize the persisted edge table once and take its count:
       // every round state below (labels, selected edges, jumps) is
-      // bounded by |ew|, so the loop's checkpoints/aggregates run at a
-      // data-derived width instead of the session constant (the CC
-      // discipline — label tables here are a few thousand rows at
-      // sf0.1 and fixed-width rounds paid ~30 floor tasks per job)
-      val ewCount = ew.count()
-      var lbl = Loops.withLoopShuffleWidth(spark, 2L * ewCount) {
-        ew.select(col("src").as("node"))
-          .union(ew.select(col("dst").as("node")))
-          .distinct().withColumn("lbl", col("node")).checkpoint()
-      }
+      // bounded by |ew|, so each round's width derives from this one
+      // count of the persisted edge table
+      val ewRows = 2L * ew.count()
       val sels = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      for (_ <- 1 to 2) Loops.withLoopShuffleWidth(spark, 2L * ewCount) {
+      val (last, _) = Loops.iterate(spark, maxRounds = 2) { r =>
+        Loops.Step(r.carry(ew.select(col("src").as("node"))
+          .union(ew.select(col("dst").as("node")))
+          .distinct().withColumn("lbl", col("node"))), ewRows)
+      } { (r, cur) =>
+        val lbl = cur.state
         val lab = ew
           .join(lbl.select(col("node").as("src"), col("lbl").as("la")), Seq("src"))
           .join(lbl.select(col("node").as("dst"), col("lbl").as("lb")), Seq("dst"))
@@ -638,7 +623,8 @@ object Graph {
           .union(lab.select(col("lb").as("comp"), col("src"), col("dst"), col("cost")))
         // per-component argmin via struct-min hash aggregate: struct
         // comparison is lexicographic on (cost, src, dst) — the same
-        // total order as the oracle's rank window, without the sort
+        // total order as the oracle's rank window, without the sort.
+        // Persisted, not round scratch: the summary below reads it.
         val sel = cand
           .groupBy(col("comp"))
           .agg(min(struct(col("cost"), col("src"), col("dst"))).as("m"))
@@ -647,22 +633,22 @@ object Graph {
         sels += sel
         var l = lbl
         for (_ <- 1 to 3) {
-          l = l.select(col("node"), col("lbl"))
+          // carry EVERY jump, not just every round: each jump
+          // references its predecessor 3×, so an un-truncated round
+          // tree holds 3^3 = 27 copies — and Spark's plan analysis
+          // over that tree, not the data, was the entire 14-16 s
+          // runtime (sf0.001 and sf0.1 cost the same). Per-jump
+          // truncation keeps every analyzed tree a handful of nodes.
+          l = r.carry(l.select(col("node"), col("lbl"))
             .union(sel.join(l.select(col("node").as("dst"), col("lbl")), Seq("dst"))
               .select(col("src").as("node"), col("lbl")))
             .union(sel.join(l.select(col("node").as("src"), col("lbl")), Seq("src"))
               .select(col("dst").as("node"), col("lbl")))
-            .groupBy(col("node")).agg(min(col("lbl")).as("lbl"))
-            // checkpoint EVERY jump, not just every round: each jump
-            // references its predecessor 3×, so an un-truncated round
-            // tree holds 3^3 = 27 copies — and Spark's plan analysis
-            // over that tree, not the data, was the entire 14-16 s
-            // runtime (sf0.001 and sf0.1 cost the same). Per-jump
-            // truncation keeps every analyzed tree a handful of nodes.
-            .checkpoint()
+            .groupBy(col("node")).agg(min(col("lbl")).as("lbl")))
         }
-        lbl = l
+        Loops.Step(l, ewRows)
       }
+      val lbl = last.state
       val allsel = sels(0).union(sels(1)).distinct()
       // one fused job for all three summary rows (separate actions per
       // row paid a full job-scheduling round-trip each)
@@ -690,53 +676,33 @@ object Graph {
     }),
     "recsys_user_cf" -> Tables.sql(UserCfSql),
     "recsys_als_step" -> Tables.sql(alsStepSql(spark = true)),
-    // Iterative driver loop over PERSISTED rounds: each peel is two
-    // semi-joins + one aggregate on the previous round's cached edges,
-    // and the 8 trajectory numbers are driver-side counts (the
-    // graph_triangles pattern — a 4-row result is not a row-scale
-    // collect). The single-statement spelling (8 scalar subqueries
-    // each re-deriving the full peel chain) planned ~50 joins and ran
-    // 16.5 s at sf0.1 — 10× this loop; the oracle keeps it (DuckDB
-    // materializes CTEs, so its chain evaluates once).
+    // Driver loop over checkpointed peels: each peel is two semi-joins
+    // on the previous round's edges, and the 8 trajectory numbers are
+    // driver-side counts (the graph_triangles pattern — a 4-row result
+    // is not a row-scale collect). The single-statement spelling (8
+    // scalar subqueries each re-deriving the full peel chain) planned
+    // ~50 joins and ran 16.5 s at sf0.1 — 10× this loop; the oracle
+    // keeps it (DuckDB materializes CTEs, so its chain evaluates once).
     "graph_kcore" -> ((spark, sfDir) => {
       val e = edges(spark, sfDir)
-      var sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      var deg = sym.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("degree")).persist()
-      // one fused action per round for BOTH trajectory numbers: counting
-      // the node/edge union with a side tag returns the pair in a single
-      // job, where separate .count() calls paid the per-job scheduling
-      // floor twice per peel (and the job also fills both persists)
-      def nodeEdgeCounts(degDf: DataFrame, symDf: DataFrame): (Long, Long) = {
-        val r = degDf.select(lit(1L).as("isn"))
-          .union(symDf.where(col("src") < col("dst")).select(lit(0L).as("isn")))
-          .agg(coalesce(sum(col("isn")), lit(0L)).as("nn"),
-               count(lit(1)).as("tot")).head()
-        (r.getLong(0), r.getLong(1) - r.getLong(0))
-      }
+      def degrees(sym: DataFrame): DataFrame =
+        sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
       val rows = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
-      val c0 = nodeEdgeCounts(deg, sym)
-      rows += ((0, c0._1, c0._2))
-      for (k <- 1 to 3) {
-        // each peel's joins/aggregate/counts run at a width derived
-        // from the PREVIOUS round's surviving edge count (already in
-        // `rows` — no extra job), not the session constant: the peeled
-        // graph shrinks monotonically and fixed-width rounds paid ~30
-        // scheduling-floor tasks per count at local[32] (the
-        // dedup_semantic_prune c8-beats-c32 mechanism)
-        Loops.withLoopShuffleWidth(spark, 2L * rows.last._3) {
-          val keep = deg.where(col("degree") >= 3).select(col("node"))
-          val symN = sym
-            .join(keep.select(col("node").as("src")), Seq("src"))
-            .join(keep.select(col("node").as("dst")), Seq("dst"))
-            .select(col("src"), col("dst")).persist()
-          val degN = symN.groupBy(col("src").as("node"))
-            .agg(count(lit(1)).as("degree")).persist()
-          val ck = nodeEdgeCounts(degN, symN)
-          rows += ((k, ck._1, ck._2))
-          sym = symN; deg = degN
-        }
+      // both trajectory numbers of a round in one job; the next peel's
+      // width derives from the surviving (symmetric) edge count
+      def record(sym: DataFrame): Loops.Step = {
+        val Seq(n, m) = Loops.counts(degrees(sym), sym.where(col("src") < col("dst")))
+        rows += ((rows.size, n, m))
+        Loops.Step(sym, 2L * m)
+      }
+      Loops.iterate(spark, maxRounds = 3) { r =>
+        record(r.carry(e.union(e.select(col("dst").as("src"), col("src").as("dst")))))
+      } { (r, cur) =>
+        val keep = degrees(cur.state).where(col("degree") >= 3).select(col("node"))
+        record(r.carry(cur.state
+          .join(keep.select(col("node").as("src")), Seq("src"))
+          .join(keep.select(col("node").as("dst")), Seq("dst"))
+          .select(col("src"), col("dst"))))
       }
       import spark.implicits._
       rows.toSeq.toDF("round", "n_nodes", "n_edges")
@@ -776,16 +742,9 @@ object Graph {
       val e2 = e.select(col("src").as("b"), col("dst").as("c"))
       val e3 = e.select(col("src").as("a"), col("dst").as("c"))
       val tri = e1.join(e2, Seq("b")).join(e3, Seq("a", "c"))
-      // all three census scalars in ONE tagged-union action (was three
-      // sequential .count() jobs, each paying the scheduling floor; the
-      // fused job also fills the edge persist once for all branches)
-      val r = nodes.select(lit(0).as("t")).union(e.select(lit(1).as("t")))
-        .union(tri.select(lit(2).as("t")))
-        .groupBy(col("t")).agg(count(lit(1)).as("n"))
-        .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
-      val nNodes = r.getOrElse(0, 0L)
-      val nEdges = r.getOrElse(1, 0L)
-      val nTri = r.getOrElse(2, 0L)
+      // all three census scalars in one job, which also fills the edge
+      // persist once for all branches
+      val Seq(nNodes, nEdges, nTri) = Loops.counts(nodes, e, tri)
       import spark.implicits._
       Seq((nNodes, nEdges, nTri)).toDF("n_nodes", "n_edges", "n_triangles")
     }),

@@ -28,4 +28,18 @@ class GraphEdgesSpec extends AnyFunSuite with Matchers {
     again.count() shouldBe e1.count()
     e1.unpersist()
   }
+
+  test("graph_kcore leaves nothing persisted beyond the shared edge list") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val s = spark.newSession()
+    // the shared edge list is persisted and filled first, so that what
+    // the context held before the query includes it
+    Graph.weightedEdges(s, sf).count()
+    val before = sc.getPersistentRDDs.keySet
+    val rows = SparkEntry.queries("graph_kcore")(s, sf).collect()
+    rows.length shouldBe 4
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"graph_kcore left ${left.size} RDDs persisted: $left")
+  }
 }

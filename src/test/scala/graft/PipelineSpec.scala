@@ -129,6 +129,15 @@ class PipelineSpec extends AnyFunSuite {
     assert(got == (0L until 64L).map(_ -> 0L).toMap)
   }
 
+  test("connectedComponents throws instead of returning labels when it runs out of rounds") {
+    // the same chain needs several rounds; one is not enough to converge
+    val edges = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(spark, edges, maxRounds = 1)
+    }
+    assert(e.getMessage.contains("within 1 rounds"), e.getMessage)
+  }
+
   test("connectedComponents: empty edge set yields empty labels, not an error") {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     val (labels, rounds) = Dedup.connectedComponents(spark, empty)

@@ -556,7 +556,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("graph_kcore trajectory is monotone and the result is driver-scale") {
     // like graph_triangles, kcore executes its counts eagerly over
-    // persisted rounds and returns a LocalRelation — so the plan string
+    // checkpointed rounds and returns a LocalRelation — so the plan string
     // carries no joins to gate; assert the SEMANTIC scale property
     // instead: 4 trajectory rows, nodes/edges nonincreasing per peel
     val rows = SparkEntry.queries("graph_kcore")(spark, LocalSpark.sf)

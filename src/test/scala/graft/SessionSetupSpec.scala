@@ -84,7 +84,12 @@ class SessionSetupSpec extends AnyFunSuite with Matchers {
       val s2 = spark.newSession()
       SparkEntry.queries("graph_mst_boruvka")(s2, sf).collect()
       assert(sc.getCheckpointDir.contains(dir))
-      assert(filesUnder(dir) > afterCc, s"MST wrote no checkpoint files in $dir")
+      val afterMst = filesUnder(dir)
+      assert(afterMst > afterCc, s"MST wrote no checkpoint files in $dir")
+      // and so does kcore, the third loop on the driver
+      SparkEntry.queries("graph_kcore")(spark.newSession(), sf).collect()
+      assert(sc.getCheckpointDir.contains(dir))
+      assert(filesUnder(dir) > afterMst, s"kcore wrote no checkpoint files in $dir")
     }
   }
 
@@ -109,7 +114,9 @@ class SessionSetupSpec extends AnyFunSuite with Matchers {
     val owners = Seq(
       "GraftFunctions.register(" -> Set("Tables.scala", "tools/GraftCli.scala"),
       "createOrReplaceTempFunction(" -> Set("functions/expressions.scala"),
-      "setCheckpointDir(" -> Set("operators/Loops.scala"))
+      "setCheckpointDir(" -> Set("operators/Loops.scala"),
+      ".checkpoint(" -> Set("operators/Loops.scala"),
+      "conf.set(\"spark.sql.shuffle.partitions\"" -> Set("operators/Loops.scala"))
     val root = Paths.get("src/main/scala/graft")
     val sources: Seq[(String, String)] = {
       val walk = Files.walk(root)
