@@ -135,6 +135,25 @@ object Tables {
     * bouncing through a sibling testdata dir that may not exist. */
   def invalidate(spark: SparkSession): Unit = registered.remove(spark)
 
+  /** Run `body` with the session conf `key` set to `value`, then put the
+    * key back as the caller had it: its old value restored, or unset if
+    * the session never set it (a key left at Spark's default stays
+    * absent, not pinned to the default), also when `body` throws. The
+    * one scoped conf write in `src/main`; use it only where Spark has
+    * no per-operation route for the setting, and only around eager
+    * work — a DataFrame built inside but run after would plan under the
+    * restored value. */
+  private[graft] def withConf[T](spark: SparkSession, key: String, value: String)
+                               (body: => T): T = {
+    val saved = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
+    try body
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** Scale the shared SQL texts' repartition hints to the session.
     *
     * The query texts spell `/*+ REPARTITION(32) */` because the SAME

@@ -118,11 +118,9 @@ object EwahBitmapAgg {
   /** Upper bound on accepted positions. The aggregation buffer is a
     * dense BitSet sized by the position DOMAIN, so one rogue value
     * near Int.MaxValue would allocate ~256 MB per group per task;
-    * bound it at 2^27 bits (16 MB dense) by default and fail with a
-    * descriptive error instead. Override via the JVM system property
-    * `graft.ewah.maxPosition` when a wider offset domain is real. */
-  val maxPosition: Int =
-    sys.props.get("graft.ewah.maxPosition").map(_.toInt).getOrElse(1 << 27)
+    * bound it at 2^27 bits (16 MB dense) and fail with a descriptive
+    * error that names the bound instead. */
+  val maxPosition: Int = 1 << 27
 }
 
 /** ewah_bitmap(int) → array<bigint>: EWAH bitmap with bit v set for
@@ -145,8 +143,7 @@ case class EwahBitmapAgg(
       val pos = v.asInstanceOf[Int]
       require(pos >= 0 && pos < EwahBitmapAgg.maxPosition,
         s"ewah_bitmap: position $pos outside [0, ${EwahBitmapAgg.maxPosition}) " +
-          "— positions are per-block row offsets; raise graft.ewah.maxPosition " +
-          "only if the domain is genuinely that large")
+          "— positions are per-block row offsets")
       buf.set(pos)
     }
     buf

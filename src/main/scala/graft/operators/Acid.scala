@@ -260,12 +260,11 @@ object Acid {
       // the staged read-back must not re-split the just-compacted files
       // into maxPartitionBytes-sized scan tasks (one output file per
       // task would undo the merge and the operation would never converge)
-      val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-      spark.conf.set("spark.sql.files.maxPartitionBytes", (targetFileBytes * 4).toString)
-      try overwrite(spark, table, compacted, dynamicPartitions = partitionScope.isDefined)
-      finally savedSplit match {
-        case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
-        case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      // (a session conf: Spark's FilePartition.maxSplitBytes reads no
+      // per-read option)
+      graft.Tables.withConf(spark, "spark.sql.files.maxPartitionBytes",
+          (targetFileBytes * 4).toString) {
+        overwrite(spark, table, compacted, dynamicPartitions = partitionScope.isDefined)
       }
       (files.length, minAchievable)
     } else (files.length, files.length)
@@ -327,9 +326,9 @@ object Acid {
     * Hive DbTxnManager deployment surface, adjudicated in SURVEY §2.3.
     *
     * A holder that crashes leaves the lock file behind: waiters break
-    * locks older than `graft.acid.lockTtlMs` (default 1h — the same
+    * locks older than `ttlMs` (default 1h — the same
     * class of TTL the compactor uses for crashed staging dirs) and
-    * otherwise fail loudly after `graft.acid.lockWaitMs` (default 60s)
+    * otherwise fail loudly after `waitMs` (default 60s)
     * naming the holder token, never queue forever. Breaking is done by
     * an atomic `fs.rename` of the lock file to a unique tombstone —
     * never delete-then-create, where two waiters that both observed
@@ -337,17 +336,15 @@ object Acid {
     * remove the fresh lock A just re-created. Rename is atomic on
     * HDFS/local FS: exactly one breaker wins; losers loop back and
     * contend on create like everyone else. */
-  private[graft] def withWriterLock[T](spark: SparkSession, table: String)
+  private[graft] def withWriterLock[T](spark: SparkSession, table: String,
+                                       waitMs: Long = 60000L,
+                                       ttlMs: Long = 3600000L)
                                       (body: => T): T = {
-    val waitMs = spark.conf.getOption("graft.acid.lockWaitMs")
-      .map(_.toLong).getOrElse(60000L)
-    val ttlMs = spark.conf.getOption("graft.acid.lockTtlMs")
-      .map(_.toLong).getOrElse(3600000L)
     // a non-positive TTL would declare EVERY live writer's lock stale
     // and break it — silent lost-update territory, so refuse it here by
     // name (and before any catalog/filesystem work)
-    require(waitMs >= 0, s"graft.acid.lockWaitMs must be >= 0 (got $waitMs)")
-    require(ttlMs > 0, s"graft.acid.lockTtlMs must be > 0 (got $ttlMs)")
+    require(waitMs >= 0, s"waitMs must be >= 0 (got $waitMs)")
+    require(ttlMs > 0, s"ttlMs must be > 0 (got $ttlMs)")
     val lock = lockPath(spark, table)
     val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val token = java.lang.management.ManagementFactory
@@ -410,7 +407,7 @@ object Acid {
             throw new IllegalStateException(
               s"writer lock on $table held by $holder (lock file $lock); " +
                 s"waited ${waitMs}ms — concurrent writer, or break a dead " +
-                "holder by deleting the lock file / lowering graft.acid.lockTtlMs")
+                "holder by deleting the lock file")
           } else Thread.sleep(200)
       }
     }
@@ -446,28 +443,25 @@ object Acid {
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new Path(tableDir.getParent,
       s"_graft_staging_${tableDir.getName}_${java.util.UUID.randomUUID().toString.take(8)}")
-    val saved = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+    data.write.mode("overwrite").parquet(staging.toString)
+    def insert(): Unit =
+      spark.read.parquet(staging.toString).write.mode("overwrite").insertInto(table)
+    // dynamic mode rewrites ONLY the partitions present in the staged
+    // data. A session conf: insertInto drops the writer's options before
+    // InsertIntoHadoopFsRelationCommand reads the mode
     try {
-      data.write.mode("overwrite").parquet(staging.toString)
-      if (dynamicPartitions) {
-        // rewrite ONLY the partitions present in the staged data
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      }
-      try spark.read.parquet(staging.toString).write.mode("overwrite").insertInto(table)
-      catch { case e: Throwable =>
-        // overwrite failed mid-commit: the staged copy is now the only
-        // complete version of the data — KEEP it (the header's recovery
-        // guarantee) and tell the operator where it is
-        throw new IllegalStateException(
-          s"overwrite of $table failed; complete staged copy kept at $staging", e)
-      }
-      // success: the staged copy is table-sized — never leak it
-      fs.delete(staging, true)
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      if (dynamicPartitions)
+        graft.Tables.withConf(spark,
+          "spark.sql.sources.partitionOverwriteMode", "dynamic")(insert())
+      else insert()
+    } catch { case e: Throwable =>
+      // overwrite failed mid-commit: the staged copy is now the only
+      // complete version of the data — KEEP it (the header's recovery
+      // guarantee) and tell the operator where it is
+      throw new IllegalStateException(
+        s"overwrite of $table failed; complete staged copy kept at $staging", e)
     }
+    // success: the staged copy is table-sized — never leak it
+    fs.delete(staging, true)
   }
 }

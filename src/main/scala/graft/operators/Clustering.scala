@@ -82,19 +82,12 @@ object Clustering {
     * collapse into one centroid and concentrate a super-sized cluster
     * on a single task, the silent-OOM class at 100 TB. MatchPath /
     * hot-posting discipline applied here: fail LOUDLY naming the
-    * cluster and its size instead. Session-overridable
-    * (graft.cluster.maxGroup) so the adversarial spec can shrink it;
-    * the driver never sets it, so oracled runs use the default. */
+    * cluster and its size instead. The kernels take the cap as a
+    * parameter so the adversarial spec can shrink it; every query but
+    * dedup_semantic_saltsplit runs this default. */
   private[graft] val MaxGroupDefault: Int = (16L * TargetCluster).toInt
 
-  private def maxGroup(spark: SparkSession): Int = {
-    val m = spark.conf.getOption("graft.cluster.maxGroup")
-      .map(_.toInt).getOrElse(MaxGroupDefault)
-    require(m >= 1, s"graft.cluster.maxGroup must be >= 1 (got $m)")
-    m
-  }
-
-  /** Salt-split fallback (`graft.cluster.saltSplit`, default OFF): the
+  /** Salt split (the kernels' `saltSplit` parameter, default OFF): the
     * DEGRADATION path for duplicate-heavy corpora where a degenerate
     * k-means collapse would otherwise trip the buffer cap and kill the
     * job. When on, a cluster whose size exceeds the cap is split into
@@ -106,17 +99,15 @@ object Clustering {
     *    1 − 1/nsplit of an over-cap cluster's pairs); clusters at or
     *    under the cap get nsplit=1 and are bit-identical to the
     *    default path.
-    *  - dedup_incremental_semantic: EXACT, no haircut — only the
+    *  - incrementalSemantic: EXACT, no haircut — only the
     *    buffered corpus side is salt-split; each batch row replicates
     *    to every sub-group and the per-vector verdicts re-aggregate
     *    (min dup_of / sum n_dups), so every batch row still sees the
     *    whole cluster.
-    * The driver never sets the conf, so every oracled run takes the
-    * default (fail-loud) path untouched. */
-  private def saltSplitOn(spark: SparkSession): Boolean =
-    spark.conf.getOption("graft.cluster.saltSplit").exists(_.toBoolean)
-
-  /** Per-cluster split count: ⌈size/cap⌉, min 1 — a ≤kEff-row
+    * Only dedup_semantic_saltsplit turns it on; every other query takes
+    * the default (fail-loud) path.
+    *
+    * Per-cluster split count: ⌈size/cap⌉, min 1 — a ≤kEff-row
     * aggregate meant to be broadcast back onto the rows. */
   private def clusterSplits(df: DataFrame, cap: Int): DataFrame =
     df.groupBy(col("cluster")).agg(
@@ -150,7 +141,7 @@ object Clustering {
           s"$kernel: cluster $cluster exceeds the per-group buffer cap " +
             s"($cap rows) — a degenerate k-means collapse would OOM this " +
             "executor at scale. Raise k (the trainer's TargetCluster " +
-            "discipline), or graft.cluster.maxGroup if the skew is " +
+            "discipline), or take the salt split if the skew is " +
             "intended; measure the skew as rows per cluster in the " +
             "cluster_kmeans_assign query's output.")
       buf += it.next()
@@ -420,132 +411,24 @@ object Clustering {
     // against corpus members of its cluster only. Every batch vector is
     // a row: its cluster, its lowest-id corpus duplicate (NULL if
     // none), how many corpus dups, and an is_new verdict.
-    "dedup_incremental_semantic" -> ((spark, sfDir) => {
-      // batch-vs-corpus matching as a per-cluster COGROUP kernel, same
-      // materialization argument as semanticPairsFrom: the cluster
-      // equi-join spelling built |batch|·|cluster| ~1 KB rows just to
-      // aggregate them away (48.8 s at sf10); the kernel holds one
-      // cluster's corpus arrays (bounded by the trainer's
-      // TargetCluster) and streams the batch through it, emitting ONE
-      // row per batch vector. Folds identical to cosD — bit-exact vs
-      // the DuckDB oracle. min-id/count accumulators are order-free.
-      import spark.implicits._
-      val corpusPred = col("vec_id") % 5 =!= 4
-      val cents = kmeansCentroids(spark, sfDir, K, Iters, corpusPred)
-      val all = assign(quantized(spark.table("embeddings")), cents)
-        .select(col("cluster"), col("vec_id"), col("ve"))
-      val tau = Tau
-      val cap = maxGroup(spark)
-      // the batch-vs-corpus matching kernel, shared by the default
-      // (group = cluster) and salt-split (group = corpus sub-group,
-      // batch replicated — EXACT, see saltSplitOn) paths
-      val kernel: (Int, Iterator[(Int, Long, Array[Double])],
-                        Iterator[(Int, Long, Array[Double])]) => Iterator[(Long, Int, Option[Long], Long)] =
-        (cluster, bIt, cIt) => {
-          // corpus side is the only buffered side (the batch streams);
-          // cap it — see MaxGroupDefault
-          val corp =
-            boundedClusterArray("dedup_incremental_semantic", cluster, cIt, cap)
-          val m = corp.length
-          val cids = new Array[Long](m)
-          val cvs = new Array[Array[Double]](m)
-          val cna = new Array[Double](m)
-          val csq = new Array[Double](m)
-          var i = 0
-          while (i < m) {
-            cids(i) = corp(i)._2
-            val v = corp(i)._3; cvs(i) = v
-            var s = 0.0; var j = 0
-            while (j < v.length) { s += v(j) * v(j); j += 1 }
-            cna(i) = s; csq(i) = math.sqrt(s)
-            i += 1
-          }
-          bIt.map { case (_, vid, vb) =>
-            var nb = 0.0; var j = 0
-            while (j < vb.length) { nb += vb(j) * vb(j); j += 1 }
-            val sqb = math.sqrt(nb)
-            var n = 0L; var dup = Long.MaxValue
-            var c = 0
-            while (c < m) {
-              val vc = cvs(c)
-              var dot = 0.0; var d = 0
-              while (d < vc.length) { dot += vb(d) * vc(d); d += 1 }
-              val cos = if (nb * cna(c) == 0.0) -2.0
-                        else dot / (sqb * csq(c))
-              if (cos >= tau) { n += 1; if (cids(c) < dup) dup = cids(c) }
-              c += 1
-            }
-            (vid, cluster, if (n > 0) Some(dup) else None, n)
-          }
-        }
-      val batch = all.where(!corpusPred)
-      val corpus = all.where(corpusPred)
-      val verdicts =
-        if (!saltSplitOn(spark)) {
-          def keyed(df: DataFrame) =
-            df.as[(Int, Long, Array[Double])].groupByKey(_._1)
-          keyed(batch).cogroup(keyed(corpus))(kernel)
-            .toDF("vec_id", "cluster", "dup_of", "n_dups")
-        } else {
-          // exact salt-split: only the BUFFERED corpus side is split;
-          // every batch row replicates to each sub-group and the
-          // per-vector verdicts re-aggregate, so each batch row still
-          // sees its whole cluster (no recall haircut here)
-          val splits = broadcast(clusterSplits(corpus, cap))
-          val corpusS = withClusterSalt(corpus, splits)
-            .select(col("cluster"), col("__salt"), col("vec_id"), col("ve"))
-          val batchS = batch.join(splits, Seq("cluster"), "left")
-            .withColumn("__salt", explode(sequence(lit(0),
-              (coalesce(col("__nsplit"), lit(1L)) - 1).cast("int"))))
-            .select(col("cluster"), col("__salt"), col("vec_id"), col("ve"))
-          def keyedS(df: DataFrame) =
-            df.as[(Int, Int, Long, Array[Double])].groupByKey(r => (r._1, r._2))
-          keyedS(batchS).cogroup(keyedS(corpusS)) {
-            (k: (Int, Int), bIt: Iterator[(Int, Int, Long, Array[Double])],
-             cIt: Iterator[(Int, Int, Long, Array[Double])]) =>
-              kernel(k._1, bIt.map(r => (r._1, r._3, r._4)),
-                           cIt.map(r => (r._1, r._3, r._4)))
-          }.toDF("vec_id", "cluster", "dup_of", "n_dups")
-            .groupBy(col("vec_id"), col("cluster"))
-            .agg(min(col("dup_of")).as("dup_of"),
-                 sum(col("n_dups")).as("n_dups"))
-        }
-      verdicts
-        .select(col("vec_id"), col("cluster"), col("dup_of"),
-          col("n_dups"), col("dup_of").isNull.cast("int").as("is_new"))
-        .orderBy(col("vec_id"))
-    }),
+    "dedup_incremental_semantic" -> ((spark, sfDir) => incrementalSemantic(spark, sfDir)),
 
-    // The salt-split degradation path, exercised END-TO-END (r14
-    // verdict #4: the path most likely to run in production —
-    // duplicate-heavy corpora collapsing k-means — must not live only
-    // in ScalaTest). Degenerate over-cap fixture built in-query: EVERY
-    // vector in one cluster with a 64-row cap, so nsplit = ⌈n/64⌉ ≫ 1
-    // and the kernel runs on row-number-salted sub-groups; the oracle
-    // replicates the salt EXACTLY (same row_number-by-vec_id
-    // arithmetic), making the documented recall haircut itself the
-    // pinned, oracled semantics. Confs are restored after plan
-    // construction (saltSplitOn/maxGroup read eagerly), so later
-    // queries in the same session still take the fail-loud default.
+    // The salt-split degradation path, exercised END-TO-END: the path
+    // most likely to run in production — duplicate-heavy corpora
+    // collapsing k-means — must not live only in ScalaTest. Degenerate
+    // over-cap fixture built in-query: EVERY vector in one cluster with
+    // a 64-row cap, so nsplit = ⌈n/64⌉ ≫ 1 and the kernel runs on
+    // row-number-salted sub-groups; the oracle replicates the salt
+    // EXACTLY (same row_number-by-vec_id arithmetic), making the
+    // documented recall haircut itself the pinned, oracled semantics.
     "dedup_semantic_saltsplit" -> ((spark, sfDir) => {
       graft.Tables.register(spark, sfDir)
-      val prevSplit = spark.conf.getOption("graft.cluster.saltSplit")
-      val prevCap = spark.conf.getOption("graft.cluster.maxGroup")
-      spark.conf.set("graft.cluster.saltSplit", "true")
-      spark.conf.set("graft.cluster.maxGroup", "64")
-      try {
-        val af = quantized(spark.table("embeddings"))
-          .withColumn("cluster", lit(0))
-        semanticPairsFrom(af)
-          .select(col("vec_a"), col("vec_b"), col("cluster"),
-            round(col("cos"), 6).as("cos"))
-          .orderBy(col("vec_a"), col("vec_b"))
-      } finally {
-        prevSplit.fold(spark.conf.unset("graft.cluster.saltSplit"))(
-          spark.conf.set("graft.cluster.saltSplit", _))
-        prevCap.fold(spark.conf.unset("graft.cluster.maxGroup"))(
-          spark.conf.set("graft.cluster.maxGroup", _))
-      }
+      val af = quantized(spark.table("embeddings"))
+        .withColumn("cluster", lit(0))
+      semanticPairsFrom(af, cap = 64, saltSplit = true)
+        .select(col("vec_a"), col("vec_b"), col("cluster"),
+          round(col("cos"), 6).as("cos"))
+        .orderBy(col("vec_a"), col("vec_b"))
     }),
 
     "dedup_semantic_prune" -> ((spark, sfDir) => {
@@ -565,13 +448,117 @@ object Clustering {
     })
   )
 
+  /** dedup_incremental_semantic's plan under an explicit per-group
+    * buffer `cap` and salt split (see clusterSplits); the query runs
+    * the defaults. */
+  private[graft] def incrementalSemantic(spark: SparkSession, sfDir: String,
+                                         cap: Int = MaxGroupDefault,
+                                         saltSplit: Boolean = false): DataFrame = {
+    require(cap >= 1, s"cap must be >= 1 (got $cap)")
+    // batch-vs-corpus matching as a per-cluster COGROUP kernel, same
+    // materialization argument as semanticPairsFrom: the cluster
+    // equi-join spelling built |batch|·|cluster| ~1 KB rows just to
+    // aggregate them away (48.8 s at sf10); the kernel holds one
+    // cluster's corpus arrays (bounded by the trainer's
+    // TargetCluster) and streams the batch through it, emitting ONE
+    // row per batch vector. Folds identical to cosD — bit-exact vs
+    // the DuckDB oracle. min-id/count accumulators are order-free.
+    import spark.implicits._
+    val corpusPred = col("vec_id") % 5 =!= 4
+    val cents = kmeansCentroids(spark, sfDir, K, Iters, corpusPred)
+    val all = assign(quantized(spark.table("embeddings")), cents)
+      .select(col("cluster"), col("vec_id"), col("ve"))
+    val tau = Tau
+    // the batch-vs-corpus matching kernel, shared by the default
+    // (group = cluster) and salt-split (group = corpus sub-group,
+    // batch replicated — EXACT, see clusterSplits) paths
+    val kernel: (Int, Iterator[(Int, Long, Array[Double])],
+                      Iterator[(Int, Long, Array[Double])]) => Iterator[(Long, Int, Option[Long], Long)] =
+      (cluster, bIt, cIt) => {
+        // corpus side is the only buffered side (the batch streams);
+        // cap it — see MaxGroupDefault
+        val corp =
+          boundedClusterArray("dedup_incremental_semantic", cluster, cIt, cap)
+        val m = corp.length
+        val cids = new Array[Long](m)
+        val cvs = new Array[Array[Double]](m)
+        val cna = new Array[Double](m)
+        val csq = new Array[Double](m)
+        var i = 0
+        while (i < m) {
+          cids(i) = corp(i)._2
+          val v = corp(i)._3; cvs(i) = v
+          var s = 0.0; var j = 0
+          while (j < v.length) { s += v(j) * v(j); j += 1 }
+          cna(i) = s; csq(i) = math.sqrt(s)
+          i += 1
+        }
+        bIt.map { case (_, vid, vb) =>
+          var nb = 0.0; var j = 0
+          while (j < vb.length) { nb += vb(j) * vb(j); j += 1 }
+          val sqb = math.sqrt(nb)
+          var n = 0L; var dup = Long.MaxValue
+          var c = 0
+          while (c < m) {
+            val vc = cvs(c)
+            var dot = 0.0; var d = 0
+            while (d < vc.length) { dot += vb(d) * vc(d); d += 1 }
+            val cos = if (nb * cna(c) == 0.0) -2.0
+                      else dot / (sqb * csq(c))
+            if (cos >= tau) { n += 1; if (cids(c) < dup) dup = cids(c) }
+            c += 1
+          }
+          (vid, cluster, if (n > 0) Some(dup) else None, n)
+        }
+      }
+    val batch = all.where(!corpusPred)
+    val corpus = all.where(corpusPred)
+    val verdicts =
+      if (!saltSplit) {
+        def keyed(df: DataFrame) =
+          df.as[(Int, Long, Array[Double])].groupByKey(_._1)
+        keyed(batch).cogroup(keyed(corpus))(kernel)
+          .toDF("vec_id", "cluster", "dup_of", "n_dups")
+      } else {
+        // exact salt-split: only the BUFFERED corpus side is split;
+        // every batch row replicates to each sub-group and the
+        // per-vector verdicts re-aggregate, so each batch row still
+        // sees its whole cluster (no recall haircut here)
+        val splits = broadcast(clusterSplits(corpus, cap))
+        val corpusS = withClusterSalt(corpus, splits)
+          .select(col("cluster"), col("__salt"), col("vec_id"), col("ve"))
+        val batchS = batch.join(splits, Seq("cluster"), "left")
+          .withColumn("__salt", explode(sequence(lit(0),
+            (coalesce(col("__nsplit"), lit(1L)) - 1).cast("int"))))
+          .select(col("cluster"), col("__salt"), col("vec_id"), col("ve"))
+        def keyedS(df: DataFrame) =
+          df.as[(Int, Int, Long, Array[Double])].groupByKey(r => (r._1, r._2))
+        keyedS(batchS).cogroup(keyedS(corpusS)) {
+          (k: (Int, Int), bIt: Iterator[(Int, Int, Long, Array[Double])],
+           cIt: Iterator[(Int, Int, Long, Array[Double])]) =>
+            kernel(k._1, bIt.map(r => (r._1, r._3, r._4)),
+                         cIt.map(r => (r._1, r._3, r._4)))
+        }.toDF("vec_id", "cluster", "dup_of", "n_dups")
+          .groupBy(col("vec_id"), col("cluster"))
+          .agg(min(col("dup_of")).as("dup_of"),
+               sum(col("n_dups")).as("n_dups"))
+      }
+    verdicts
+      .select(col("vec_id"), col("cluster"), col("dup_of"),
+        col("n_dups"), col("dup_of").isNull.cast("int").as("is_new"))
+      .orderBy(col("vec_id"))
+  }
+
   /** Within-cluster near-dup pairs (vec_a < vec_b, cosine ≥ Tau) under
     * the final k-means assignment — the shared core of dedup_semantic
     * and dedup_semantic_prune. */
   private def semanticPairs(spark: SparkSession, sfDir: String): DataFrame =
     semanticPairsFrom(kmeansAssign(spark, sfDir))
 
-  private[graft] def semanticPairsFrom(afIn: DataFrame): DataFrame = {
+  private[graft] def semanticPairsFrom(afIn: DataFrame,
+                                       cap: Int = MaxGroupDefault,
+                                       saltSplit: Boolean = false): DataFrame = {
+    require(cap >= 1, s"cap must be >= 1 (got $cap)")
     // Within-cluster scoring as a per-cluster kernel (flatMapGroups),
     // NOT a cluster self-join: the relational spelling materializes
     // O(Σ|c|²) joined rows each carrying TWO 64-double arrays (~1 KB a
@@ -593,7 +580,6 @@ object Clustering {
     val spark = afIn.sparkSession
     import spark.implicits._
     val tau = Tau
-    val cap = maxGroup(spark)
     // the per-group scoring kernel, shared by the default (group =
     // cluster) and salt-split (group = cluster sub-group) paths
     val kernel: (Int, Iterator[(Int, Long, Array[Double])]) => Iterator[(Long, Long, Int, Double)] =
@@ -635,12 +621,12 @@ object Clustering {
       }
     val base = afIn.select(col("cluster"), col("vec_id"), col("ve"))
     val pairs =
-      if (!saltSplitOn(spark))
+      if (!saltSplit)
         base.as[(Int, Long, Array[Double])]
           .groupByKey(_._1)
           .flatMapGroups(kernel)
       else
-        // salt-split degradation path (see saltSplitOn): over-cap
+        // salt-split degradation path (see clusterSplits): over-cap
         // clusters score pairs within row-number-salted sub-groups only
         // (balanced deterministic salt — see withClusterSalt; a hash
         // salt has variance and can land a sub-group back over the cap)

@@ -84,7 +84,9 @@ private[operators] object Loops {
     var n = 0
     while (!cur.done && n < maxRounds) {
       val prev = cur
-      cur = withLoopShuffleWidth(spark, prev.rows)(run(round(_, prev)))
+      // the round's jobs are eager, so they plan under this width
+      cur = graft.Tables.withConf(spark, "spark.sql.shuffle.partitions",
+        loopShuffleWidth(spark, prev.rows).toString)(run(round(_, prev)))
       n += 1
     }
     (cur, n)
@@ -153,15 +155,5 @@ private[operators] object Loops {
       .getOrElse(spark.sparkContext.defaultParallelism)
     val byRows = (rows + LoopRowsPerTask - 1) / LoopRowsPerTask
     math.max(1L, math.min(sessWidth.toLong, byRows)).toInt
-  }
-
-  /** Runs `f` with spark.sql.shuffle.partitions pinned to
-    * loopShuffleWidth(rows), restoring the caller's setting afterwards.
-    * Only safe around EAGER work (a round's jobs): a lazily-consumed
-    * DataFrame built inside would plan under the restored width. */
-  private def withLoopShuffleWidth[T](spark: SparkSession, rows: Long)(f: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopShuffleWidth(spark, rows))
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 }

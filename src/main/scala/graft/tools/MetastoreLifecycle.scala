@@ -38,6 +38,8 @@ object MetastoreLifecycle {
         s"jdbc:derby:;databaseName=$baseDir/metastore_db;create=true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.cbo.enabled", "true")
+      // opt into AnswerFromStats (Hive's hive.compute.query.using.stats)
+      .config("spark.graft.answerFromStats", "true")
       .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -103,7 +105,9 @@ object MetastoreLifecycle {
       .collect().map(_.getString(0)).toSet
     require(parts == Set("ds=2024-01-01", "ds=2024-01-02", "ds=2024-01-03"),
       s"partitions lost: $parts")
-    require(spark.table("graft_ms.sales").count() == 5, "rows lost")
+    // read the rows themselves: AnswerFromStats would answer a count()
+    // from the metastore's rowCount without touching the files
+    require(spark.table("graft_ms.sales").collect().length == 5, "rows lost")
     // view definition survived in the metastore
     val v = spark.table("graft_ms.sales_v").orderBy("ds").collect()
     require(v.length == 2 && v(0).getLong(1) == 3 && v(1).getLong(1) == 2,
@@ -133,7 +137,6 @@ object MetastoreLifecycle {
       s"serde properties lost across restart:\n$serdeInfo")
     // AnswerFromStats consumes the metastore stats: COUNT/MIN/MAX with
     // ZERO scan (optimized plan collapses to a LocalRelation)
-    spark.conf.set("spark.graft.answerFromStats", "true")
     val q = spark.sql(
       "SELECT COUNT(*) AS n, MIN(k) AS mn, MAX(k) AS mx FROM graft_ms.sales")
     val op = q.queryExecution.optimizedPlan.toString()

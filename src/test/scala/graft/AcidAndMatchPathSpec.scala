@@ -213,10 +213,12 @@ class AcidAndMatchPathSpec extends AnyFunSuite {
     // naming the holder, and leaves the table untouched
     val out = fs.create(lock, false)
     out.write("pid12345@otherhost".getBytes("UTF-8")); out.close()
-    spark.conf.set("graft.acid.lockWaitMs", "400")
     val before = spark.table("graft_db.acid_lk").count()
     val e = intercept[IllegalStateException] {
-      Acid.deleteFrom(spark, "graft_db.acid_lk", col("r_regionkey") === 0)
+      Acid.withWriterLock(spark, "graft_db.acid_lk", waitMs = 400) {
+        spark.sql("""INSERT OVERWRITE TABLE graft_db.acid_lk
+                     SELECT * FROM region WHERE r_regionkey <> 0""")
+      }
     }
     assert(e.getMessage.contains("writer lock") &&
       e.getMessage.contains("pid12345@otherhost"), e.getMessage)
@@ -224,13 +226,9 @@ class AcidAndMatchPathSpec extends AnyFunSuite {
 
     // a crashed holder's lock (mtime beyond TTL) is broken and the
     // write proceeds; the lock file is released afterwards
+    // (2 h old against the default 1 h TTL)
     fs.setTimes(lock, System.currentTimeMillis() - 7200000L, -1)
-    spark.conf.set("graft.acid.lockTtlMs", "3600000")
-    try Acid.deleteFrom(spark, "graft_db.acid_lk", col("r_regionkey") === 0)
-    finally {
-      spark.conf.unset("graft.acid.lockWaitMs")
-      spark.conf.unset("graft.acid.lockTtlMs")
-    }
+    Acid.deleteFrom(spark, "graft_db.acid_lk", col("r_regionkey") === 0)
     assert(spark.table("graft_db.acid_lk").count() == before - 1)
     assert(!fs.exists(lock), "lock must be released after the statement")
   }
@@ -246,7 +244,6 @@ class AcidAndMatchPathSpec extends AnyFunSuite {
     // writer A holds the statement lock
     val out = fs.create(lock, false)
     out.write("writerA".getBytes("UTF-8")); out.close()
-    spark.conf.set("graft.acid.lockWaitMs", "30000")
     val bErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val b = new Thread(() =>
       try Acid.deleteFrom(spark, "graft_db.acid_2w", col("r_regionkey") === 4)
@@ -264,7 +261,6 @@ class AcidAndMatchPathSpec extends AnyFunSuite {
     } finally {
       fs.delete(lock, false) // A releases
       b.join(60000)
-      spark.conf.unset("graft.acid.lockWaitMs")
     }
     assert(!b.isAlive, "writer B must have completed")
     assert(bErr.get() == null,
@@ -291,7 +287,6 @@ class AcidAndMatchPathSpec extends AnyFunSuite {
     // writer A holds the statement lock
     val out = fs.create(lock, false)
     out.write("writerA".getBytes("UTF-8")); out.close()
-    spark.conf.set("graft.acid.lockWaitMs", "30000")
     val bErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val b = new Thread(() =>
       try graft.sources.LoadData.loadData(spark, s"$stage/files", "graft_db.load_race")
@@ -310,7 +305,6 @@ class AcidAndMatchPathSpec extends AnyFunSuite {
     } finally {
       fs.delete(lock, false) // A releases
       b.join(60000)
-      spark.conf.unset("graft.acid.lockWaitMs")
     }
     assert(!b.isAlive, "LOAD DATA must have completed")
     assert(bErr.get() == null, s"LOAD must SUCCEED after A commits: ${bErr.get()}")
@@ -344,19 +338,13 @@ class AcidAndMatchPathSpec extends AnyFunSuite {
   }
 
   test("lock knobs are validated by name: a non-positive TTL would break live locks") {
-    spark.conf.set("graft.acid.lockTtlMs", "0")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Acid.withWriterLock(spark, "graft_db.knob_probe") { 1 }
-      }
-      assert(e.getMessage.contains("graft.acid.lockTtlMs"))
-    } finally spark.conf.unset("graft.acid.lockTtlMs")
-    spark.conf.set("graft.acid.lockWaitMs", "-5")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Acid.withWriterLock(spark, "graft_db.knob_probe") { 1 }
-      }
-      assert(e.getMessage.contains("graft.acid.lockWaitMs"))
-    } finally spark.conf.unset("graft.acid.lockWaitMs")
+    val ttl = intercept[IllegalArgumentException] {
+      Acid.withWriterLock(spark, "graft_db.knob_probe", ttlMs = 0) { 1 }
+    }
+    assert(ttl.getMessage.contains("ttlMs"), ttl.getMessage)
+    val wait = intercept[IllegalArgumentException] {
+      Acid.withWriterLock(spark, "graft_db.knob_probe", waitMs = -5) { 1 }
+    }
+    assert(wait.getMessage.contains("waitMs"), wait.getMessage)
   }
 }

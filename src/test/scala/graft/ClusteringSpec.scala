@@ -276,52 +276,43 @@ class ClusteringSpec extends AnyFunSuite with Matchers {
     import spark.implicits._
     val collapsed = (0 until 50).map(i => (0, i.toLong, Array.fill(4)(1.0)))
       .toDF("cluster", "vec_id", "ve")
-    spark.conf.set("graft.cluster.maxGroup", "10")
-    try {
-      val ex = intercept[Exception] {
-        Clustering.semanticPairsFrom(collapsed).collect()
-      }
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-      val chain = msgs(ex).mkString("\n")
-      chain should include ("semanticPairsFrom")
-      chain should include ("cluster 0")
-      chain should include ("10 rows")
-      // non-degenerate groups under the same cap pass through untouched
-      val ok = (0 until 9).map(i => (i % 3, i.toLong, Array.fill(4)(1.0)))
-        .toDF("cluster", "vec_id", "ve")
-      val pairs = Clustering.semanticPairsFrom(ok).collect()
-      pairs.length shouldBe 9                    // 3 clusters × C(3,2) pairs
-    } finally spark.conf.unset("graft.cluster.maxGroup")
+    val ex = intercept[Exception] {
+      Clustering.semanticPairsFrom(collapsed, cap = 10).collect()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    val chain = msgs(ex).mkString("\n")
+    chain should include ("semanticPairsFrom")
+    chain should include ("cluster 0")
+    chain should include ("10 rows")
+    // non-degenerate groups under the same cap pass through untouched
+    val ok = (0 until 9).map(i => (i % 3, i.toLong, Array.fill(4)(1.0)))
+      .toDF("cluster", "vec_id", "ve")
+    val pairs = Clustering.semanticPairsFrom(ok, cap = 10).collect()
+    pairs.length shouldBe 9                      // 3 clusters × C(3,2) pairs
   }
 
   test("salt-split fallback: over-cap cluster degrades to within-sub-group pairs instead of failing") {
-    // same degenerate collapse as above, but with the degradation conf
+    // same degenerate collapse as above, but with the salt split
     // on: nsplit = ceil(50/10) = 5 balanced sub-groups (row-number
     // salt: rank-1 % 5, here = vec_id % 5), pairs scored within a
     // sub-group only (the documented recall haircut) — and NO exception.
     import spark.implicits._
     val collapsed = (0 until 50).map(i => (0, i.toLong, Array.fill(4)(1.0)))
       .toDF("cluster", "vec_id", "ve")
-    spark.conf.set("graft.cluster.maxGroup", "10")
-    spark.conf.set("graft.cluster.saltSplit", "true")
-    try {
-      val got = Clustering.semanticPairsFrom(collapsed).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-        .toSet
-      val salts = (0L until 50L).map(id => id -> (id % 5).toInt).toMap
-      val expected = (for {
-        g <- salts.groupBy(_._2).values.map(_.keys.toSeq.sorted)
-        i <- g.indices; j <- (i + 1) until g.length
-      } yield (g(i), g(j), 0, 1.0)).toSet
-      expected.size should be > 0
-      got shouldBe expected
-      // balanced salt: every sub-group is exactly at the cap boundary
-      salts.groupBy(_._2).values.map(_.size).max should be <= 10
-    } finally {
-      spark.conf.unset("graft.cluster.maxGroup")
-      spark.conf.unset("graft.cluster.saltSplit")
-    }
+    val got = Clustering.semanticPairsFrom(collapsed, cap = 10, saltSplit = true)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
+      .toSet
+    val salts = (0L until 50L).map(id => id -> (id % 5).toInt).toMap
+    val expected = (for {
+      g <- salts.groupBy(_._2).values.map(_.keys.toSeq.sorted)
+      i <- g.indices; j <- (i + 1) until g.length
+    } yield (g(i), g(j), 0, 1.0)).toSet
+    expected.size should be > 0
+    got shouldBe expected
+    // balanced salt: every sub-group is exactly at the cap boundary
+    salts.groupBy(_._2).values.map(_.size).max should be <= 10
   }
 
   test("salt-split fallback: non-degenerate clusters (nsplit=1) are bit-identical to the default path") {
@@ -331,12 +322,9 @@ class ClusteringSpec extends AnyFunSuite with Matchers {
       .toDF("cluster", "vec_id", "ve")
     val off = Clustering.semanticPairsFrom(ok).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-    spark.conf.set("graft.cluster.saltSplit", "true")
-    try {
-      val on = Clustering.semanticPairsFrom(ok).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-      on shouldBe off                            // τ-survivor set preserved
-    } finally spark.conf.unset("graft.cluster.saltSplit")
+    val on = Clustering.semanticPairsFrom(ok, saltSplit = true).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+    on shouldBe off                              // τ-survivor set preserved
   }
 
   test("salt-split fallback: dedup_incremental_semantic is EXACT under a cap that splits every cluster") {
@@ -347,13 +335,6 @@ class ClusteringSpec extends AnyFunSuite with Matchers {
       .map(r => (r.getLong(0), r.getInt(1), Option(r.get(2)), r.getLong(3), r.getInt(4)))
       .toSeq
     val base = rows(q(spark, sf))
-    spark.conf.set("graft.cluster.maxGroup", "8")
-    spark.conf.set("graft.cluster.saltSplit", "true")
-    try {
-      rows(q(spark, sf)) shouldBe base
-    } finally {
-      spark.conf.unset("graft.cluster.maxGroup")
-      spark.conf.unset("graft.cluster.saltSplit")
-    }
+    rows(Clustering.incrementalSemantic(spark, sf, cap = 8, saltSplit = true)) shouldBe base
   }
 }

@@ -76,7 +76,7 @@ class EwahBitmapSpec extends AnyFunSuite {
     }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("graft.ewah.maxPosition")), e.toString)
+    assert(messages(e).exists(_.contains("[0, 134217728)")), e.toString)
   }
 
   test("foreign stream with an overrunning clean run fails loudly, no toInt truncation") {

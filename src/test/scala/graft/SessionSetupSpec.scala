@@ -109,14 +109,25 @@ class SessionSetupSpec extends AnyFunSuite with Matchers {
   }
 
   test("source guard: each kind of session state has one installer") {
-    // calls that install session or context state, and the one file
-    // (relative to src/main/scala/graft) allowed to make each
+    // calls that install session or context state, and the files
+    // (relative to src/main/scala/graft) allowed to make each; an empty
+    // set means none may
     val owners = Seq(
       "GraftFunctions.register(" -> Set("Tables.scala", "tools/GraftCli.scala"),
       "createOrReplaceTempFunction(" -> Set("functions/expressions.scala"),
       "setCheckpointDir(" -> Set("operators/Loops.scala"),
       ".checkpoint(" -> Set("operators/Loops.scala"),
-      "conf.set(\"spark.sql.shuffle.partitions\"" -> Set("operators/Loops.scala"))
+      // session conf writes: `Tables.register`'s set-up and the one
+      // scoped-write helper, `Tables.withConf`, which only the loops'
+      // per-round width and Acid's two swaps call
+      "conf.set(" -> Set("Tables.scala"),
+      "conf.unset(" -> Set("Tables.scala"),
+      "withConf(" -> Set("operators/Loops.scala", "operators/Acid.scala"),
+      "conf.set(\"spark.sql.shuffle.partitions\"" -> Set.empty[String],
+      "withConf(spark, \"spark.sql.shuffle.partitions\"" -> Set("operators/Loops.scala"),
+      // queries take policy as parameters, never as graft.* options
+      "getOption(\"graft." -> Set.empty[String],
+      "props.get(\"graft." -> Set.empty[String])
     val root = Paths.get("src/main/scala/graft")
     val sources: Seq[(String, String)] = {
       val walk = Files.walk(root)
