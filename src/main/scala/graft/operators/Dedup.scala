@@ -1,7 +1,10 @@
 package graft.operators
 
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.Tables
 import graft.functions.GraftFunctions
 
@@ -38,7 +41,7 @@ private[operators] object DuckHash {
     // times (mulmod splits its operand 3 ways), so DuckDB's inlining of
     // single-reference CTEs grows the expression ~72× PER CHAIN — two
     // chained chains (the bootstrap oracles) hit ~5000× and turned a
-    // 4.8M-row hash into CPU-hours at sf1 (r13 sweep). Materialization
+    // 4.8M-row hash into CPU-hours at sf1. Materialization
     // bounds each stage to one evaluation; values are unchanged.
     s"""${prefix}1 AS MATERIALIZED (SELECT $carry, xor($in, ($in) >> 33) AS fxa FROM $from
       ), ${prefix}2 AS MATERIALIZED (SELECT $carry, ${mulmod("fxa", "18397679294719823053")} AS fxb FROM ${prefix}1
@@ -146,17 +149,16 @@ object Dedup {
   /** DuckDB twin of `jpairs`: all-pairs-within-source exact jaccard at
     * the same τ=0.5 (recall 1.0 by construction vs the prefix filter) —
     * one constant shared by both oracles. */
-  // Exact same pair set and doubles as the r14 all-pairs spelling —
+  // Exact same pair set as the all-pairs spelling —
   // n_int counts shared DISTINCT grams through the inverted index and
   // |A∪B| = na+nb−n_int, the identical integers the per-pair
   // LIST_INTERSECT/LIST_DISTINCT(CONCAT) computed — but the join is
   // index-based: J ≥ 0.5 pairs share ≥1 gram BY DEFINITION (no prefix
   // theorem needed, so the oracle stays independent of the Spark
-  // side's Bayardo filter). The r15 sf10 sweep measured the all-pairs
-  // spelling at 24+ CPU-hours AND STILL RUNNING (500k docs ⇒ ~1e10
-  // within-source pairs each paying two list ops) while the gram df
-  // max is 8 — Σdf² ≈ 3.9e7 index join rows, i.e. minutes. Same
-  // oracle-tractability class as r14's per-row-cast materialization.
+  // side's Bayardo filter). At sf10 the all-pairs spelling ran 24+
+  // CPU-hours without finishing (500k docs ⇒ ~1e10 within-source
+  // pairs each paying two list ops) while the gram df max is 8 —
+  // Σdf² ≈ 3.9e7 index join rows, i.e. minutes.
   private val OracleJpairsCtes = """
       t AS (
         SELECT doc_id, source,
@@ -193,7 +195,7 @@ object Dedup {
                  i -> ARRAY_TO_STRING(toks[i + 1 : i + 3], ' '))) AS grams
         FROM t WHERE LEN(toks) >= 3
       ), inv AS MATERIALIZED (
-        -- MATERIALIZED (r16, the r13 kmeansCtes rule): inv is self-
+        -- MATERIALIZED: inv is self-
         -- joined (2 refs) and good is referenced twice by every edges
         -- CTE downstream (both UNION ALL directions) — without the
         -- hints DuckDB re-inlines the whole tokenize+shingle+pair
@@ -247,9 +249,8 @@ object Dedup {
     // bits in at most 6 of the 7 disjoint bands, so at least one band is
     // untouched and shared — recall is PROVABLY 1.0 for the hamming ≤ 6
     // filter, which both makes the exact all-pairs hamming join a valid
-    // oracle and fixes round 2's 4×16-bit banding, whose pigeonhole only
-    // covered hamming ≤ 3 (it silently missed 10 of 57 true pairs at
-    // sf0.01 in the 4–6 range).
+    // oracle; 4×16-bit bands would cover only hamming ≤ 3 (they miss
+    // 10 of 57 true pairs at sf0.01 in the 4–6 range).
     // The narrower bands shrink the keyspace to 512/1024 values, so one
     // hot (band, key) bucket of B docs yields O(B²) join pairs — bounded
     // by skipping buckets over 1000 members (same policy as
@@ -296,7 +297,7 @@ object Dedup {
     // (rarest first) and index only the first (n - ceil(t*n) + 1) grams —
     // any pair with jaccard >= t MUST share a prefix gram, so recall is
     // exactly 1.0 while hot grams (which sort last) never build postings.
-    // This bounds the round-1 scale-killer: without the cutoff, one
+    // This bounds the hot-gram blowup: without the cutoff, one
     // shingle shared by 10^5 docs in a block yields ~10^10 join pairs;
     // with it, a gram's posting only grows if the gram is globally rare.
     // Candidates then verify with exact jaccard on the full gram sets
@@ -608,21 +609,21 @@ object Dedup {
     // pipeline_curate + the CCNet perplexity gate (the curation stack a
     // modern LLM-data run actually ships): quality gate → exact-dedup
     // representative → near-dup cluster representative → perplexity
-    // head+middle cut. THE GATE IS A QUANTILE, NOT A CONSTANT (r16 —
-    // the r15 adaptive-LSH lesson repeated: the original fixed
-    // `ppl <= 30` kept 0 of 500k docs at sf10 because the
+    // head+middle cut. THE GATE IS A QUANTILE, NOT A CONSTANT: a fixed
+    // `ppl <= 30` keeps 0 of 500k docs at sf10, because the
     // corpus-trained bigram LM's perplexity floor drifts up with
-    // corpus scale, min ppl 33.2 at sf10 — the operator silently
-    // degraded to useless while the oracle agreed by construction).
+    // corpus scale (min ppl 33.2 at sf10), so the operator would
+    // silently degrade to useless while the oracle agreed by
+    // construction.
     // CCNet itself splits by corpus perplexity terciles; we keep
     // head+middle: t = the smallest ROUND(ppl,6) value with
     // count(ppl ≤ t) ≥ ⌈2n/3⌉ (integer-exact 3·cum ≥ 2n), gate
     // ppl ≤ t, value-ties inclusive so no per-doc tie-break is
     // needed. t comes from Quantiles.exactCutoff — the TWO-LEVEL
-    // value-domain cut (r17, closing r16 verdict #1: the previous
-    // single cumulative window over groupBy(ppl) ran one task over
-    // ~|docs| distinct 6-dp values; now the unpartitioned windows see
-    // only the FLOOR(ppl) integer grid, bounded by the value range,
+    // value-domain cut (a single cumulative window over groupBy(ppl)
+    // would run one task over ~|docs| distinct 6-dp values; the
+    // unpartitioned windows see only the FLOOR(ppl) integer grid,
+    // bounded by the value range,
     // and the ≤1e6-value inside of the one boundary bucket — bounded
     // single-task state at any corpus size, same t byte-for-byte).
     // Pins that the perplexity operator COMPOSES with the dedup stack;
@@ -647,8 +648,8 @@ object Dedup {
       // collecting one row) and the final join — without the cache the
       // whole bigram-LM chain evaluates 3× (measured +5 s at sf0.1).
       // The slot bounds the cache footprint at ONE live entry across
-      // repeated invocations in a long-lived bench/driver JVM (r16
-      // ADVICE: per-invocation persist() with no unpersist leaked an
+      // repeated invocations in a long-lived bench/driver JVM (a
+      // per-invocation persist() with no unpersist would leak an
       // entry per run; the final join consumes the cache lazily AFTER
       // this function returns, so the earliest safe release is the
       // NEXT invocation — unpersist on an already-cleared DF is a
@@ -675,19 +676,18 @@ object Dedup {
     // domain is FIXED (category-like), so blocks grow linearly with
     // the corpus and the within-block pair work is intentionally
     // quadratic — which makes join PARALLELISM the scale variable, not
-    // the pair count. r14 sf10 lesson: Spark broadcast the self-join
-    // side and ran the whole 2e9-pair expansion on the probe side's
-    // ONE input partition (25+ min, 1 core, 31 idle). The b side is
+    // the pair count. Left alone, Spark broadcasts the self-join side
+    // and runs the whole expansion on the probe side's ONE input
+    // partition (at sf10: 2e9 pairs, 25+ min on 1 of 32 cores). The b side is
     // salted into W deterministic sub-blocks (each unordered pair
     // lands in exactly one: b's salt — pair-preserving for ANY W), the
     // a side replicates ×W, and the SHUFFLE_MERGE pin forces the
-    // shuffle plan. W is ADAPTIVE (r14 verdict #6 — the fixed 8 was
-    // sized for sf10's ~2e9 pairs and under-splits at sf100):
+    // shuffle plan. W is ADAPTIVE (a fixed 8 fits sf10's ~2e9 pairs
+    // and under-splits at sf100):
     // max(parallelism term ⌈2·cores/|labels|⌉ — ≥2 task waves even on
     // tiny blocks; task-size term ⌈maxBlock²/2 / 2.5e8⌉ — caps a task
     // at ~2.5e8 cosine pairs ≈ 75-85 s at the MEASURED kernel
-    // throughput of ~3.3M pairs/s/core (r16 probe_w event log; the
-    // grain was first estimated at ~10 s, optimistic 8× — kept at
+    // throughput of ~3.3M pairs/s/core (from an event log; kept at
     // 2.5e8 deliberately: minute-scale tasks are normal batch grain,
     // and halving it doubles the ×W a-side shuffle replication),
     // clamped to 4096 (a-side shuffle replication is ×W, so
@@ -733,7 +733,7 @@ object Dedup {
     // scale) would go quadratic — buckets over 64 members are skipped,
     // standard LSH practice: members still pair through their other 15
     // tables, so only pairs whose EVERY shared bucket is hot are lost.
-    // PLANES ARE ADAPTIVE (r15 sf10 finding: with 6 fixed planes there
+    // PLANES ARE ADAPTIVE (with 6 fixed planes there
     // are only 64 buckets/table, so past ~sf0.2 EVERY bucket exceeds
     // the cap and the operator silently returns ZERO pairs — the exact
     // opposite of "the 100 TB answer"): `Similarity.lshGeometry`'s
@@ -788,91 +788,116 @@ object Dedup {
 
   /** Connected components over an undirected edge set via alternating
     * large-star / small-star rounds (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14 §3) — the scale-safe
-    * replacement for round 2's hash-min label propagation, which needed
-    * O(graph diameter) shuffle rounds (a 64-node near-dup chain = 63
-    * rounds; this converges in ~6 — pinned by PipelineSpec).
+    * Components in MapReduce and Beyond", SoCC'14 §3). Rounds grow as
+    * O(log n), not with the graph diameter as hash-min label
+    * propagation does: a 64-node chain takes 7 (pinned by
+    * PipelineSpec), where propagation needs 63.
     *
     * large-star(u): attach every neighbor v > u to m = min(Γ(u) ∪ {u});
     * small-star(u): attach u and all smaller neighbors to m = min(Γ<(u)).
-    * Both are a min-aggregate plus an equi-join on the node key — no
-    * per-node neighbor buffering, so a hot node (one doc near-duplicated
-    * a million times) never materializes its adjacency list in one task.
     * At the fixpoint every component is a star centered at its minimum
     * node, read off as (node → center) labels.
     *
-    * Convergence is detected by EXACT edge-set equality for both steps
-    * (count + anti-join emptiness per step — a handful of cheap jobs for
-    * O(log) rounds), never a probabilistic checksum, and unconverged
-    * state throws rather than emitting wrong clusters. The rounds run on
-    * the `Loops` driver, which carries each round's star set through a
-    * reliable checkpoint and sizes its shuffles from its edge count.
+    * The rounds are a fixed RDD program over (Long, Long) edges on the
+    * `Loops` driver, so no round is planned, optimized or compiled: see
+    * `starStep` for the shape of one step. Each round's star set is
+    * carried through a reliable checkpoint, and its shuffles are sized
+    * from the previous round's edge count.
     *
-    * @param edges undirected edges in columns (src, dst), any
-    *              orientation; self-loops and duplicates are ignored
-    * @return (labels (node, comp) for every edge endpoint, rounds run)
+    * Convergence is EXACT edge-set equality for both steps, never a
+    * probabilistic checksum, and unconverged state throws rather than
+    * emitting wrong clusters. Two tiers: equal cardinality is necessary
+    * for set equality and costs only counts the round takes anyway, so
+    * the exact check — every input is a distinct edge set, so tagging
+    * members ±1 and summing per (step, edge) yields 0 for every key iff
+    * large-star changed nothing and small-star changed nothing — runs
+    * its single shuffle only in rounds where all the counts agree.
+    *
+    * @param edges undirected edges in integral columns (src, dst), any
+    *              orientation; self-loops, duplicates and nulls are
+    *              ignored
+    * @return (labels (node, comp) for every edge endpoint, typed as
+    *         greatest(src, dst); rounds run)
     */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
                           maxRounds: Int = 50): (DataFrame, Int) = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      val mins = sym.groupBy("src").agg(min("dst").as("mind"))
-        .select(col("src").as("u"), least(col("src"), col("mind")).as("m"))
-      sym.join(mins, sym("src") === col("u"))
-        .where(col("dst") > sym("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy("src").agg(min("dst").as("m")) // src > dst ⇒ m < src
-      val attachNbrs = e.join(mins, "src")
-        .where(col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-      val attachSelf = mins.select(col("src"), col("m").as("dst"))
-      attachNbrs.union(attachSelf).distinct()
-    }
+    // canonical orientation: src > dst, no self-loops
+    val canon = edges.select(greatest(col("src"), col("dst")).as("src"),
+                             least(col("src"), col("dst")).as("dst"))
+      .where(col("src") =!= col("dst"))
+    val keyType = canon.schema.head.dataType
+    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(keyType),
+      s"connected components needs integral node ids, not $keyType")
     val (stars, rounds) = Loops.fixpoint(spark, "connected components", maxRounds) { r =>
-      // canonical orientation: src > dst, no self-loops, set semantics
-      val canon = r.carry(edges
-        .select(greatest(col("src"), col("dst")).as("src"),
-                least(col("src"), col("dst")).as("dst"))
-        .where(col("src") =!= col("dst")).distinct())
+      val (e, n) = r.carry(canon.select(col("src").cast(LongType), col("dst").cast(LongType))
+        .rdd.map(row => (row.getLong(0), row.getLong(1))).distinct(r.width))
       // empty graph: no pairs ⇒ no clusters, in zero rounds
-      if (canon.isEmpty) Loops.Step(canon, 0L, done = true)
-      else Loops.Step(canon, canon.count())
+      Loops.Step(e, n, done = n == 0L)
     } { (r, cur) =>
-      // e1 is consumed by two jobs (the e2 checkpoint and the
-      // convergence check), so it is kept for the round — cache loss
-      // just recomputes from the CHECKPOINTED cur; only the round state
-      // e2 needs its own reliable checkpoint
-      val e1 = r.keep(largeStar(cur.state))
-      val e2 = r.carry(smallStar(e1))
-      // fixpoint of BOTH steps individually (the SoCC'14 convergence
-      // condition), not just of the composition. Two tiers: equal
-      // cardinality is NECESSARY for set equality and costs only ONE
-      // fused count job over already-materialized data (cur's count
-      // carries over from last round), so the EXACT check — every input
-      // is a distinct edge set, so tagging members ±1 and summing per
-      // (step, edge) yields 0 for every key iff e1 == cur and e2 == e1 —
-      // runs in its single shuffle only in rounds where all three counts
-      // already agree, i.e. typically just the final round(s).
-      val Seq(e1Count, e2Count) = Loops.counts(e1, e2)
-      def tag(df: DataFrame, step: Int, sign: Int): DataFrame =
-        df.select(lit(step).as("step"), col("src"), col("dst"),
-                  lit(sign.toLong).as("t"))
+      // e1 is read by its count, by small-star and by the exact check,
+      // so it is kept for the round; only e2 is carried
+      val e1 = r.keep(largeStar(cur.state, r.width))
+      val e1Count = e1.count()
+      val (e2, e2Count) = r.carry(smallStar(e1, r.width))
+      def tag(e: RDD[(Long, Long)], step: Int, sign: Long) =
+        e.map { case (src, dst) => ((step, src, dst), sign) }
       val converged = e1Count == cur.rows && e2Count == e1Count &&
-        tag(e1, 0, 1).union(tag(cur.state, 0, -1))
-          .union(tag(e2, 1, 1)).union(tag(e1, 1, -1))
-          .groupBy("step", "src", "dst").agg(sum("t").as("d"))
-          .where(col("d") =!= 0L)
-          .isEmpty
+        spark.sparkContext
+          .union(tag(e1, 0, 1L), tag(cur.state, 0, -1L), tag(e2, 1, 1L), tag(e1, 1, -1L))
+          .reduceByKey(_ + _, r.width).filter(_._2 != 0L).count() == 0L
       Loops.Step(e2, e2Count, converged)
     }
     // stars: every edge is (leaf, center); centers get their own label
-    val labels = stars.select(col("src").as("node"), col("dst").as("comp"))
-      .union(stars.select(col("dst").as("node"), col("dst").as("comp")))
-      .groupBy("node").agg(min("comp").as("comp"))
-    (labels, rounds)
+    val labels = stars.flatMap { case (leaf, center) => Iterator((leaf, center), (center, center)) }
+      .reduceByKey(math.min(_, _), stars.getNumPartitions)
+    import spark.implicits._
+    (labels.toDF("node", "comp").select(
+      col("node").cast(keyType).as("node"), col("comp").cast(keyType).as("comp")), rounds)
+  }
+
+  /** large-star over edges in either orientation: every neighbor v > u
+    * of u is attached to min(Γ(u) ∪ {u}). */
+  private[graft] def largeStar(e: RDD[(Long, Long)], width: Int): RDD[(Long, Long)] =
+    starStep(e.flatMap { case (a, b) => Iterator((a, b), (b, a)) }, width) { (u, v, m, _) =>
+      if (v > u) Iterator((v, math.min(u, m))) else Iterator.empty
+    }
+
+  /** small-star over canonical edges (src > dst): u and every smaller
+    * neighbor other than m are attached to m = min(Γ<(u)). */
+  private[graft] def smallStar(e: RDD[(Long, Long)], width: Int): RDD[(Long, Long)] =
+    starStep(e, width) { (u, v, m, first) =>
+      (if (first) Iterator((u, m)) else Iterator.empty) ++
+        (if (v != m) Iterator((v, m)) else Iterator.empty)
+    }
+
+  /** One star step: the edges are partitioned by src and sorted by
+    * (src, dst) in one shuffle, so the first edge of each src's run
+    * carries the minimum dst m. `emit(src, dst, m, first)` is called
+    * once per edge in a single streaming pass, and the output is made a
+    * set. A task holds one edge at a time — no per-src map and no
+    * adjacency list, so neither many distinct srcs nor a hot node (one
+    * doc near-duplicated a million times) is buffered; the sort spills
+    * like any shuffle sort. */
+  private def starStep(edges: RDD[(Long, Long)], width: Int)
+                      (emit: (Long, Long, Long, Boolean) => Iterator[(Long, Long)])
+      : RDD[(Long, Long)] =
+    edges.map((_, ())).repartitionAndSortWithinPartitions(new BySrc(width))
+      .mapPartitions { sorted =>
+        var u, m = 0L
+        var started = false
+        sorted.flatMap { case ((src, dst), _) =>
+          val first = !started || src != u
+          if (first) { u = src; m = dst; started = true }
+          emit(src, dst, m, first)
+        }
+      }.distinct(width)
+
+  /** Partitions (src, dst) keys by src alone. */
+  private final class BySrc(width: Int) extends Partitioner {
+    private val bySrc = new HashPartitioner(width)
+    override def numPartitions: Int = width
+    override def getPartition(key: Any): Int =
+      bySrc.getPartition(key.asInstanceOf[(Long, Long)]._1)
   }
 
   val oracle: Map[String, String] = Map(
@@ -1064,15 +1089,15 @@ object Dedup {
 
     // pipeline_curate's oracle + the prefixed perplexity CTE chain and
     // the same head+middle quantile cut, replicated at BOTH levels of
-    // the two-level value-domain form (r17): pstar = first FLOOR(ppl)
+    // the two-level value-domain form: pstar = first FLOOR(ppl)
     // grid bucket with 3·cum ≥ 2n (carrying the doc count below it),
     // then t = min ppl inside that one bucket meeting the identical
     // global criterion. pdoc uses text_perplexity's integer-grid ppl
-    // spelling verbatim (r16 ADVICE: the old decimal-sum/COUNT form is
+    // spelling verbatim (a decimal-sum/COUNT form would be
     // value-equal only while per-doc Σ|lp·1e6| < 2^53 — textual
     // identity is the standing discipline and every doc's 6th decimal
     // is now load-bearing for the quantile). pdoc/pstar MATERIALIZED:
-    // multi-referenced (the r16 DuckDB re-inlining rule).
+    // multi-referenced, and DuckDB would re-inline them per reference.
     "pipeline_curate_ppl" -> s"""
       WITH RECURSIVE $OraclePairsCte, edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM good

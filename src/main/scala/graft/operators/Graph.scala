@@ -690,7 +690,7 @@ object Graph {
       val rows = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
       // both trajectory numbers of a round in one job; the next peel's
       // width derives from the surviving (symmetric) edge count
-      def record(sym: DataFrame): Loops.Step = {
+      def record(sym: DataFrame): Loops.Step[DataFrame] = {
         val Seq(n, m) = Loops.counts(degrees(sym), sym.where(col("src") < col("dst")))
         rows += ((rows.size, n, m))
         Loops.Step(sym, 2L * m)

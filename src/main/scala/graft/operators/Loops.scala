@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,15 +32,16 @@ private[operators] object CheckpointJanitor {
   }
 }
 
-/** The one round driver for the DataFrame loops whose round state lives
-  * in Spark: connected components (`Dedup.connectedComponents`),
-  * `graph_mst_boruvka` and `graph_kcore`. It owns their round policy —
-  * where reliable checkpoints go, how each round's state is carried,
-  * how wide each round's shuffles are, when round scratch is released,
-  * and when a loop that must converge gives up — so a caller writes only
-  * its algorithm. Lloyd k-means (`Clustering.trainKmeans`) is not a
-  * caller: its round state is k×dim centroids in driver memory, with
-  * nothing to checkpoint, width or release, so it stays a plain fold.
+/** The one round driver for the loops whose round state lives in
+  * Spark: connected components (`Dedup.connectedComponents`, RDD
+  * rounds), `graph_mst_boruvka` and `graph_kcore` (DataFrame rounds).
+  * It owns their round policy — where reliable checkpoints go, how each
+  * round's state is carried, how wide each round's shuffles are, when
+  * round scratch and carried state are released, and when a loop that
+  * must converge gives up — so a caller writes only its algorithm.
+  * Lloyd k-means (`Clustering.trainKmeans`) is not a caller: its round
+  * state is k×dim centroids in driver memory, with nothing to
+  * checkpoint, width or release, so it stays a plain fold.
   *
   * Round state is carried through reliable `checkpoint()`, never
   * `localCheckpoint`: on a cluster an executor loss replays from the
@@ -50,52 +52,98 @@ private[operators] object Loops {
   /** A round's outcome: the carried state, the row count the next
     * round's width derives from (one the round already counted), and
     * whether the loop has reached its fixpoint. */
-  final case class Step(state: DataFrame, rows: Long, done: Boolean = false)
+  final case class Step[S](state: S, rows: Long, done: Boolean = false)
+
+  /** How a state type takes its round's width. A DataFrame round plans
+    * its shuffles from the session's `spark.sql.shuffle.partitions`, so
+    * the driver pins that to the round's width while the round runs;
+    * an RDD round reads `Round.width` and leaves the session alone. */
+  final class State[S] private (private[Loops] val widthFromSession: Boolean)
+  object State {
+    implicit val frames: State[DataFrame] = new State(widthFromSession = true)
+    implicit def rdds[T]: State[RDD[T]] = new State(widthFromSession = false)
+  }
 
   /** One round's handle on the driver (the initial state is built in
-    * a round of its own). */
-  final class Round private[Loops] {
-    private[Loops] val scratch = ArrayBuffer.empty[DataFrame]
-    private[Loops] var carried: DataFrame = _
+    * a round of its own, at the session's width). */
+  final class Round private[Loops] (val width: Int) {
+    private val scratch = ArrayBuffer.empty[() => Unit]
+    private[Loops] var carried: AnyRef = _
+    private var dropCarried: () => Unit = () => ()
 
-    /** `df` persisted for this round only: released when it ends. */
-    def keep(df: DataFrame): DataFrame = { scratch += df.persist(); scratch.last }
+    /** `rdd` persisted for this round only: released when it ends. */
+    def keep[T](rdd: RDD[T]): RDD[T] = {
+      scratch += (() => rdd.unpersist(blocking = false)); rdd.persist()
+    }
 
     /** `df` materialized as carried state. A round may carry more than
       * once; the state it returns must be the last one it carried. */
-    def carry(df: DataFrame): DataFrame = { carried = df.checkpoint(); carried }
+    def carry(df: DataFrame): DataFrame = hold(df.checkpoint(), () => ())
+
+    /** `rdd` materialized as carried state, with its row count. The
+      * count is the job that computes it: its blocks are cached, and
+      * the checkpoint write that follows that job reads them. They stay
+      * cached until the next round has read them. */
+    def carry[T](rdd: RDD[T]): (RDD[T], Long) = {
+      hold(rdd, () => rdd.unpersist(blocking = false))
+      rdd.persist().checkpoint()
+      (rdd, rdd.count())
+    }
+
+    private def hold[S <: AnyRef](state: S, drop: () => Unit): S = {
+      release()
+      carried = state
+      dropCarried = drop
+      state
+    }
+
+    private[Loops] def end(): Unit = { scratch.foreach(_()); scratch.clear() }
+
+    /** Drops the cache behind the carried state; its checkpoint stays. */
+    private[Loops] def release(): Unit = { dropCarried(); dropCarried = () => () }
   }
 
   /** Builds the initial state with `init`, then runs `round` until it
     * reports `done` or `maxRounds` rounds have run. Round i runs with
     * its shuffle width derived from the rows round i-1 reported; the
     * initial state, with no count before it, runs at the session's
-    * width. Returns the last step and the number of rounds run. */
-  def iterate(spark: SparkSession, maxRounds: Int)(init: Round => Step)
-             (round: (Round, Step) => Step): (Step, Int) = {
+    * width. Returns the last step and the number of rounds run; by
+    * then every round's scratch and carried cache is released, so a
+    * plan over the last state reads its checkpoint. */
+  def iterate[S <: AnyRef](spark: SparkSession, maxRounds: Int)(init: Round => Step[S])
+             (round: (Round, Step[S]) => Step[S])(implicit st: State[S]): (Step[S], Int) = {
     ensureCheckpointDir(spark)
-    def run(body: Round => Step): Step = {
-      val r = new Round
-      val step = try body(r) finally r.scratch.foreach(_.unpersist(blocking = false))
+    val rounds = ArrayBuffer.empty[Round]
+    def run(width: Int)(body: Round => Step[S]): Step[S] = {
+      val r = new Round(width)
+      rounds += r
+      val step = try body(r) finally r.end()
       require(step.state eq r.carried, "a round must return the state it last carried")
       step
     }
-    var cur = run(init)
-    var n = 0
-    while (!cur.done && n < maxRounds) {
-      val prev = cur
-      // the round's jobs are eager, so they plan under this width
-      cur = graft.Tables.withConf(spark, "spark.sql.shuffle.partitions",
-        loopShuffleWidth(spark, prev.rows).toString)(run(round(_, prev)))
-      n += 1
-    }
-    (cur, n)
+    try {
+      var cur = run(sessionWidth(spark))(init)
+      var n = 0
+      while (!cur.done && n < maxRounds) {
+        val prev = cur
+        val width = loopShuffleWidth(spark, prev.rows)
+        // a DataFrame round's jobs are eager, so they plan under this width
+        cur = if (st.widthFromSession)
+          graft.Tables.withConf(spark, "spark.sql.shuffle.partitions", width.toString)(
+            run(width)(round(_, prev)))
+        else run(width)(round(_, prev))
+        rounds(rounds.size - 2).release()
+        n += 1
+      }
+      (cur, n)
+    } finally rounds.foreach(_.release())
   }
 
   /** `iterate` for a loop that must converge: throws rather than return
     * the state of a loop still unconverged after `maxRounds` rounds. */
-  def fixpoint(spark: SparkSession, what: String, maxRounds: Int)
-              (init: Round => Step)(round: (Round, Step) => Step): (DataFrame, Int) = {
+  def fixpoint[S <: AnyRef](spark: SparkSession, what: String, maxRounds: Int)
+              (init: Round => Step[S])(round: (Round, Step[S]) => Step[S])
+              (implicit st: State[S]): (S, Int) = {
     val (last, n) = iterate(spark, maxRounds)(init)(round)
     if (!last.done) throw new IllegalStateException(
       s"$what did not converge within $maxRounds rounds")
@@ -150,10 +198,11 @@ private[operators] object Loops {
     * cluster-sized session still fans out fully once rows/task reaches
     * the budget. */
   private def loopShuffleWidth(spark: SparkSession, rows: Long): Int = {
-    val sessWidth = scala.util.Try(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
     val byRows = (rows + LoopRowsPerTask - 1) / LoopRowsPerTask
-    math.max(1L, math.min(sessWidth.toLong, byRows)).toInt
+    math.max(1L, math.min(sessionWidth(spark).toLong, byRows)).toInt
   }
+
+  private def sessionWidth(spark: SparkSession): Int =
+    scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .getOrElse(spark.sparkContext.defaultParallelism)
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.operators._
 
 /** Recall/precision checks for the probabilistic pipeline operators
@@ -118,15 +119,45 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("connectedComponents converges in O(log n) rounds on a 64-node chain") {
-    // worst case for round 2's hash-min propagation: a path graph, where
-    // label propagation needs diameter-1 = 63 rounds. Large-star/small-
-    // star must collapse it in ~log2(64)=6 (allow 12 for the final
-    // verification round and odd/even effects).
+    // the worst case for hash-min label propagation, which needs
+    // diameter-1 = 63 rounds on a path graph. The round count is pinned
+    // exactly, so a change to the star steps or to the convergence test
+    // cannot pass unnoticed.
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
     val (labels, rounds) = Dedup.connectedComponents(spark, edges)
-    assert(rounds <= 12, s"took $rounds rounds — not O(log n)")
+    assert(rounds == 7, s"took $rounds rounds, not 7")
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == (0L until 64L).map(_ -> 0L).toMap)
+  }
+
+  test("connectedComponents keeps the caller's key type: an Int chain gets Int labels") {
+    val edges = (0 until 63).map(i => (i, i + 1)).toDF("src", "dst")
+    val (labels, rounds) = Dedup.connectedComponents(spark, edges)
+    assert(labels.schema.map(_.dataType) == Seq(IntegerType, IntegerType))
+    assert(rounds == 7, s"took $rounds rounds, not 7")
+    val got = labels.collect().map(r => (r.getInt(0), r.getInt(1))).toMap
+    assert(got == (0 until 64).map(_ -> 0).toMap)
+  }
+
+  test("connectedComponents labels a 5,000-leaf star whose hub is not its minimum") {
+    // one hot node: the hub is adjacent to every edge, so a step that
+    // buffered a node's adjacency would hold the whole graph in a task
+    val hub = 2500L
+    val edges = (0L to 5000L).filter(_ != hub).map(leaf => (hub, leaf)).toDF("src", "dst")
+    val (labels, _) = Dedup.connectedComponents(spark, edges)
+    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got == (0L to 5000L).map(_ -> 0L).toMap)
+  }
+
+  test("connectedComponents and dedup_clusters leave nothing persisted") {
+    val sc = spark.sparkContext
+    Tables.register(spark, LocalSpark.sf)
+    val before = sc.getPersistentRDDs.keySet
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
+    Dedup.connectedComponents(spark, chain)._1.collect()
+    Dedup.queries("dedup_clusters")(spark, LocalSpark.sf).collect()
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"left ${left.size} RDDs persisted: $left")
   }
 
   test("connectedComponents throws instead of returning labels when it runs out of rounds") {
@@ -146,28 +177,42 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("connectedComponents equals union-find on random graphs (seeded sweep)") {
-    val rnd = new scala.util.Random(42)
-    for (_ <- 1 to 5) {
-      val n = 5 + rnd.nextInt(60)
-      val m = 1 + rnd.nextInt(2 * n)
-      val raw = Seq.fill(m)((rnd.nextLong(n), rnd.nextLong(n)))
-      val real = raw.filter { case (a, b) => a != b }
-      // reference: union-find, component label = min member
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
+    // the same graphs in sessions of shuffle width 1 and 4: the answer
+    // may not depend on how the edges are partitioned
+    for (width <- Seq(1, 4)) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", width.toLong)
+      import s.implicits._
+      val rnd = new scala.util.Random(42)
+      for (_ <- 1 to 5) {
+        val n = 5 + rnd.nextInt(60)
+        val m = 1 + rnd.nextInt(2 * n)
+        val raw = Seq.fill(m)((rnd.nextLong(n), rnd.nextLong(n)))
+        val real = raw.filter { case (a, b) => a != b }
+        // reference: union-find, component label = min member
+        val parent = scala.collection.mutable.Map.empty[Long, Long]
+        def find(x: Long): Long = {
+          val p = parent.getOrElseUpdate(x, x)
+          if (p == x) x else { val r = find(p); parent(x) = r; r }
+        }
+        real.foreach { case (a, b) =>
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        val expect = parent.keys.map(k => k -> find(k)).toMap
+        val (labels, rounds) = Dedup.connectedComponents(s, raw.toDF("src", "dst"))
+        val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+        assert(got == expect, s"width=$width n=$n m=$m rounds=$rounds: " +
+          s"mismatch ${got.toSet.diff(expect.toSet).take(5)} / ${expect.toSet.diff(got.toSet).take(5)}")
+        assert(rounds <= 12, s"width=$width n=$n m=$m took $rounds rounds")
+        // a small graph's rounds run at width 1 (their width derives from
+        // the edge count), so each star step is also run at width 4 here
+        val canon = s.sparkContext.parallelize(
+          real.map { case (a, b) => (math.max(a, b), math.min(a, b)) }.distinct, 3)
+        for (step <- Seq(Dedup.largeStar _, Dedup.smallStar _))
+          assert(step(canon, 4).collect().toSet == step(canon, 1).collect().toSet,
+            s"n=$n m=$m: a star step depends on its width")
       }
-      real.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expect = parent.keys.map(k => k -> find(k)).toMap
-      val (labels, rounds) = Dedup.connectedComponents(spark, raw.toDF("src", "dst"))
-      val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got == expect, s"n=$n m=$m rounds=$rounds: " +
-        s"mismatch ${got.toSet.diff(expect.toSet).take(5)} / ${expect.toSet.diff(got.toSet).take(5)}")
-      assert(rounds <= 12, s"n=$n m=$m took $rounds rounds")
     }
   }
 

@@ -116,10 +116,14 @@ class SessionSetupSpec extends AnyFunSuite with Matchers {
       "GraftFunctions.register(" -> Set("Tables.scala", "tools/GraftCli.scala"),
       "createOrReplaceTempFunction(" -> Set("functions/expressions.scala"),
       "setCheckpointDir(" -> Set("operators/Loops.scala"),
+      // every loop carries its state, DataFrame or RDD, through the
+      // round driver's reliable checkpoint; none truncates lineage to
+      // executor-local blocks
       ".checkpoint(" -> Set("operators/Loops.scala"),
+      "localCheckpoint(" -> Set.empty[String],
       // session conf writes: `Tables.register`'s set-up and the one
-      // scoped-write helper, `Tables.withConf`, which only the loops'
-      // per-round width and Acid's two swaps call
+      // scoped-write helper, `Tables.withConf`, which only the DataFrame
+      // loops' per-round width and Acid's two swaps call
       "conf.set(" -> Set("Tables.scala"),
       "conf.unset(" -> Set("Tables.scala"),
       "withConf(" -> Set("operators/Loops.scala", "operators/Acid.scala"),
