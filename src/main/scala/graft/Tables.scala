@@ -142,7 +142,9 @@ object Tables {
     * one scoped conf write in `src/main`; use it only where Spark has
     * no per-operation route for the setting, and only around eager
     * work — a DataFrame built inside but run after would plan under the
-    * restored value. */
+    * restored value. Its only caller is `Acid`: the dynamic
+    * partition-overwrite mode of a partition-scoped rewrite, and the
+    * split size of a compaction's read-back. */
   private[graft] def withConf[T](spark: SparkSession, key: String, value: String)
                                (body: => T): T = {
     val saved = spark.conf.getAll.get(key)

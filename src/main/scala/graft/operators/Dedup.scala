@@ -829,8 +829,10 @@ object Dedup {
     require(Seq(LongType, IntegerType, ShortType, ByteType).contains(keyType),
       s"connected components needs integral node ids, not $keyType")
     val (stars, rounds) = Loops.fixpoint(spark, "connected components", maxRounds) { r =>
-      val (e, n) = r.carry(canon.select(col("src").cast(LongType), col("dst").cast(LongType))
-        .rdd.map(row => (row.getLong(0), row.getLong(1))).distinct(r.width))
+      val in = canon.select(col("src").cast(LongType), col("dst").cast(LongType))
+        .rdd.map(row => (row.getLong(0), row.getLong(1)))
+      // no count precedes the initial set, so it is no wider than its input
+      val (e, n) = r.carry(in.distinct(math.min(r.width, in.getNumPartitions)))
       // empty graph: no pairs ⇒ no clusters, in zero rounds
       Loops.Step(e, n, done = n == 0L)
     } { (r, cur) =>

@@ -1,8 +1,11 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Graph analytics over a co-occurrence graph — the link-analysis
   * counterpart of the Dedup module's connected components (Hive users
@@ -99,7 +102,7 @@ object Graph {
   // ORACLE-ONLY (DuckDB) — AS MATERIALIZED: the co-purchase self-join is
   // referenced 2-3x by most graph oracles and DuckDB's CTE inlining
   // re-evaluates it per reference; at sf1 the kcore peel chain compounded
-  // that into a 78 GB temp spill (r13 sweep). Values unchanged.
+  // that into a 78 GB temp spill. Values unchanged.
   private val EdgeCte = """
       WITH io AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
       e AS MATERIALIZED (
@@ -145,11 +148,11 @@ object Graph {
   // The directed pair counts come from the UNDIRECTED aggregate
   // (a.p < b.p) mirrored through a UNION ALL — cab is symmetric, so
   // the pair set is identical to the old `a.p <> b.p` spelling, at
-  // half the aggregate. Found at the r15 sf10 sweep: DuckDB 1.0 plans
+  // half the aggregate. At sf10, DuckDB 1.0 plans
   // the `<>` conjunct as a CROSS_PRODUCT over io×io (~3.6e15 pairs;
   // the compare ran 4+ h without finishing), while `<` hash-joins on
   // o; with the mirror + a MATERIALIZED pin on the aggregate (DuckDB
-  // inlines a twice-referenced CTE twice — the r13 lesson) the oracle
+  // inlines a twice-referenced CTE twice, see EdgeCte) the oracle
   // runs in 8.9 s at sf10. Spark plans BOTH spellings as a shuffle
   // hash join, so only the oracle needs the MATERIALIZED keyword
   // (Spark's parser rejects it — hence the twin spelling).
@@ -219,9 +222,9 @@ object Graph {
   // (d, node), fully deterministic; identical text runs in DuckDB.
   // The projection emits ONLY exact integers (dist_q is the micro-cost
   // distance itself): a d/1e6 double display column survived local
-  // DuckDB 1.0.0 bit-exactly yet failed the driver build's hash two
-  // rounds running (r06+r07) — float display columns are not
-  // engine-version-proof, so none are oracled here.
+  // DuckDB 1.0.0 bit-exactly yet failed the hash of another DuckDB
+  // build — float display columns are not engine-version-proof, so
+  // none are oracled here.
   private def ssspCtes(symSrc: String, mat: String = ""): String = s"""
       seeds AS (SELECT DISTINCT src AS seed FROM $symSrc ORDER BY seed LIMIT 3),
       d0 AS $mat(SELECT seed, seed AS node, CAST(0 AS BIGINT) AS d FROM seeds)""" +
@@ -236,13 +239,13 @@ object Graph {
   // Twin spelling (the assocSql discipline): the texts differ ONLY by
   // the DuckDB-side MATERIALIZED pins on every multiply-referenced CTE
   // (io 2× in the self-join, ew 2× in sym, sym 4×, d0-d2 2× each).
-  // DuckDB 1.0 re-inlines a non-recursive CTE per reference (the r16
-  // lesson), so the un-pinned oracle re-ran the quadratic io⋈io edge
+  // DuckDB 1.0 re-inlines a non-recursive CTE per reference, so the
+  // un-pinned oracle re-ran the quadratic io⋈io edge
   // build ~14× at sf10 and spilled 70+ GB of temp before dying; pinned,
   // it is one edge build plus the id-triple relaxations. Spark's parser
-  // rejects the keyword (and Catalyst's inlining of the same chain is
-  // the measured-and-kept spelling — the r18 persisted-view A/B), so
-  // the Spark side keeps mat = "".
+  // rejects the keyword (and Catalyst's inlining of the same chain
+  // measured faster than a persisted-view spelling, see graph_sssp),
+  // so the Spark side keeps mat = "".
   private def ssspSql(spark: Boolean): String = {
     val mat = if (spark) "" else "MATERIALIZED "
     s"""
@@ -589,13 +592,52 @@ object Graph {
       FROM (SELECT 1 AS round UNION ALL SELECT 2 UNION ALL SELECT 3) r
       ORDER BY r.round"""
 
+  /** One Borůvka selection (`boruvkaRound`'s cand/sel) under labels
+    * (node, lbl): each component picks its least outgoing edge by the
+    * (cost, src, dst) tuple order — the oracle's rank order, by a hash
+    * reduce instead of a sort — as a set of (cost, src, dst). */
+  private[graft] def boruvkaSelect(ew: RDD[(Long, Long, Long)], lbl: RDD[(Long, Long)],
+                                   width: Int): RDD[(Long, Long, Long)] = {
+    val byCost = Ordering[(Long, Long, Long)]
+    ew.map { case (s, d, c) => (s, (d, c)) }.join(lbl, width)
+      .map { case (s, ((d, c), la)) => (d, (s, c, la)) }.join(lbl, width)
+      .flatMap { case (d, ((s, c, la), lb)) =>
+        if (la == lb) Iterator.empty else Iterator((la, (c, s, d)), (lb, (c, s, d)))
+      }
+      .reduceByKey((a, b) => byCost.min(a, b), width).values.distinct(width)
+  }
+
+  /** One bounded min-label jump (a `jump` of `boruvkaRound`): every
+    * node takes the least of its own label and the labels of its
+    * neighbours over the selected edges (src, dst). */
+  private[graft] def labelJump(l: RDD[(Long, Long)], sel: RDD[(Long, Long)],
+                               width: Int): RDD[(Long, Long)] =
+    l.union(sel.map(_.swap).join(l, width).values)
+      .union(sel.join(l, width).values)
+      .reduceByKey(math.min(_, _), width)
+
+  /** One 3-core peel (`kcoreIter`) of a symmetric edge set: the edges
+    * whose endpoints both have degree >= 3 in it. The result is
+    * symmetric again. */
+  private[graft] def kcorePeel(sym: RDD[(Long, Long)], width: Int): RDD[(Long, Long)] = {
+    val keep = degrees(sym, width).filter(_._2 >= 3)
+    sym.join(keep, width).map { case (s, (d, _)) => (d, s) }
+      .join(keep, width).map { case (d, (s, _)) => (s, d) }
+  }
+
+  /** (node, degree) of a symmetric edge set. */
+  private def degrees(sym: RDD[(Long, Long)], width: Int): RDD[(Long, Long)] =
+    sym.map { case (s, _) => (s, 1L) }.reduceByKey(_ + _, width)
+
   val queries: Map[String, Q] = Map(
-    // Driver loop with checkpointed rounds (the kcore lesson, only more
-    // so: the single-statement spelling's scalar subqueries re-derive
-    // TWO rounds of cand/sel/jump chains under CTE inlining and did
-    // not finish at sf0.01). Semantics mirror mstSql step for step —
-    // same (cost, src, dst) argmin, same three bounded min-label
-    // jumps — and the oracle compare proves the equivalence.
+    // Driver loop over checkpointed rounds, each a fixed RDD program
+    // (the kcore lesson, only more so: the single-statement spelling's
+    // scalar subqueries re-derive TWO rounds of cand/sel/jump chains
+    // under CTE inlining and did not finish at sf0.01). Semantics
+    // mirror mstSql step for step — same (cost, src, dst) argmin, same
+    // three bounded min-label jumps — and the oracle compare proves the
+    // equivalence. The 3 summary rows are driver-side counts (a 3-row
+    // result is not a row-scale collect).
     "graph_mst_boruvka" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
       // the shared weighted co-purchase edge table. persist() is
@@ -608,59 +650,36 @@ object Graph {
       // bounded by |ew|, so each round's width derives from this one
       // count of the persisted edge table
       val ewRows = 2L * ew.count()
-      val sels = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      val (last, _) = Loops.iterate(spark, maxRounds = 2) { r =>
-        Loops.Step(r.carry(ew.select(col("src").as("node"))
-          .union(ew.select(col("dst").as("node")))
-          .distinct().withColumn("lbl", col("node"))), ewRows)
-      } { (r, cur) =>
-        val lbl = cur.state
-        val lab = ew
-          .join(lbl.select(col("node").as("src"), col("lbl").as("la")), Seq("src"))
-          .join(lbl.select(col("node").as("dst"), col("lbl").as("lb")), Seq("dst"))
-          .where(col("la") =!= col("lb"))
-        val cand = lab.select(col("la").as("comp"), col("src"), col("dst"), col("cost"))
-          .union(lab.select(col("lb").as("comp"), col("src"), col("dst"), col("cost")))
-        // per-component argmin via struct-min hash aggregate: struct
-        // comparison is lexicographic on (cost, src, dst) — the same
-        // total order as the oracle's rank window, without the sort.
-        // Persisted, not round scratch: the summary below reads it.
-        val sel = cand
-          .groupBy(col("comp"))
-          .agg(min(struct(col("cost"), col("src"), col("dst"))).as("m"))
-          .select(col("m.src").as("src"), col("m.dst").as("dst"),
-            col("m.cost").as("cost")).distinct().persist()
-        sels += sel
-        var l = lbl
-        for (_ <- 1 to 3) {
-          // carry EVERY jump, not just every round: each jump
-          // references its predecessor 3×, so an un-truncated round
-          // tree holds 3^3 = 27 copies — and Spark's plan analysis
-          // over that tree, not the data, was the entire 14-16 s
-          // runtime (sf0.001 and sf0.1 cost the same). Per-jump
-          // truncation keeps every analyzed tree a handful of nodes.
-          l = r.carry(l.select(col("node"), col("lbl"))
-            .union(sel.join(l.select(col("node").as("dst"), col("lbl")), Seq("dst"))
-              .select(col("src").as("node"), col("lbl")))
-            .union(sel.join(l.select(col("node").as("src"), col("lbl")), Seq("src"))
-              .select(col("dst").as("node"), col("lbl")))
-            .groupBy(col("node")).agg(min(col("lbl")).as("lbl")))
+      val weighted = ew.select(col("src").cast("long"), col("dst").cast("long"), col("cost"))
+        .rdd.map(row => (row.getLong(0), row.getLong(1), row.getLong(2)))
+      val sels = ArrayBuffer.empty[RDD[(Long, Long, Long)]]
+      val rows = ArrayBuffer.empty[(Int, Long, Long)]
+      try {
+        val (last, _) = Loops.iterate(spark, maxRounds = 2) { r =>
+          val nodes = weighted.flatMap { case (s, d, _) => Iterator(s, d) }
+          val (l0, _) = r.carry(
+            nodes.distinct(math.min(r.width, nodes.getNumPartitions)).map(v => (v, v)))
+          Loops.Step(l0, ewRows)
+        } { (r, cur) =>
+          // persisted, not round scratch: round 2's row reads round 1's
+          val sel = boruvkaSelect(weighted, cur.state, r.width).persist()
+          sels += sel
+          val selected = if (sels.size == 1) sel
+            else spark.sparkContext.union(sels.toSeq).distinct(r.width)
+          val (n, cost) = selected.aggregate((0L, 0L))(
+            (a, e) => (a._1 + 1, a._2 + e._1), (a, b) => (a._1 + b._1, a._2 + b._2))
+          rows += ((sels.size, n, cost))
+          // every jump is carried, so a lost block replays one jump
+          // from the previous jump's checkpoint, not the round's chain
+          val selEdges = sel.map { case (_, s, d) => (s, d) }
+          var l = cur.state
+          for (_ <- 1 to 3) l = r.carry(labelJump(l, selEdges, r.width))._1
+          Loops.Step(l, ewRows)
         }
-        Loops.Step(l, ewRows)
-      }
-      val lbl = last.state
-      val allsel = sels(0).union(sels(1)).distinct()
-      // one fused job for all three summary rows (separate actions per
-      // row paid a full job-scheduling round-trip each)
-      def summarize(df: DataFrame, r: Int): DataFrame =
-        df.agg(count(lit(1)).as("n"),
-            coalesce(sum(col("cost")), lit(0L)).as("total_cost_q"))
-          .select(lit(r).as("round"), col("n"), col("total_cost_q"))
-      summarize(sels(0), 1)
-        .union(summarize(allsel, 2))
-        .union(lbl.agg(countDistinct(col("lbl")).as("n"))
-          .select(lit(3).as("round"), col("n"), lit(0L).as("total_cost_q")))
-        .orderBy(col("round"))
+        rows += ((3, last.state.values.distinct(last.state.getNumPartitions).count(), 0L))
+      } finally sels.foreach(_.unpersist(blocking = false))
+      import spark.implicits._
+      rows.toSeq.toDF("round", "n", "total_cost_q")
     }),
     "graph_harmonic_centrality" -> ((spark, sfDir) => {
       val e = edges(spark, sfDir)
@@ -676,34 +695,27 @@ object Graph {
     }),
     "recsys_user_cf" -> Tables.sql(UserCfSql),
     "recsys_als_step" -> Tables.sql(alsStepSql(spark = true)),
-    // Driver loop over checkpointed peels: each peel is two semi-joins
-    // on the previous round's edges, and the 8 trajectory numbers are
-    // driver-side counts (the graph_triangles pattern — a 4-row result
-    // is not a row-scale collect). The single-statement spelling (8
-    // scalar subqueries each re-deriving the full peel chain) planned
-    // ~50 joins and ran 16.5 s at sf0.1 — 10× this loop; the oracle
-    // keeps it (DuckDB materializes CTEs, so its chain evaluates once).
+    // Driver loop over checkpointed peels, each a fixed RDD program
+    // (`kcorePeel`), and the 8 trajectory numbers are driver-side
+    // counts (the graph_triangles pattern — a 4-row result is not a
+    // row-scale collect). The single-statement spelling (8 scalar
+    // subqueries each re-deriving the full peel chain) planned ~50
+    // joins and ran 16.5 s at sf0.1 — 10× this loop; the oracle keeps
+    // it (DuckDB materializes CTEs, so its chain evaluates once).
     "graph_kcore" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir)
-      def degrees(sym: DataFrame): DataFrame =
-        sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
-      val rows = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
-      // both trajectory numbers of a round in one job; the next peel's
-      // width derives from the surviving (symmetric) edge count
-      def record(sym: DataFrame): Loops.Step[DataFrame] = {
-        val Seq(n, m) = Loops.counts(degrees(sym), sym.where(col("src") < col("dst")))
-        rows += ((rows.size, n, m))
-        Loops.Step(sym, 2L * m)
+      val e = edges(spark, sfDir).select(col("src").cast("long"), col("dst").cast("long"))
+        .rdd.map(row => (row.getLong(0), row.getLong(1)))
+      val rows = ArrayBuffer.empty[(Int, Long, Long)]
+      // the symmetric edge set holds each edge twice; its nodes are
+      // its degree table's keys
+      def record(r: Loops.Round, sym: RDD[(Long, Long)]): Loops.Step[(Long, Long)] = {
+        val (s, twice) = r.carry(sym)
+        rows += ((rows.size, degrees(s, r.width).count(), twice / 2))
+        Loops.Step(s, twice)
       }
       Loops.iterate(spark, maxRounds = 3) { r =>
-        record(r.carry(e.union(e.select(col("dst").as("src"), col("src").as("dst")))))
-      } { (r, cur) =>
-        val keep = degrees(cur.state).where(col("degree") >= 3).select(col("node"))
-        record(r.carry(cur.state
-          .join(keep.select(col("node").as("src")), Seq("src"))
-          .join(keep.select(col("node").as("dst")), Seq("dst"))
-          .select(col("src"), col("dst"))))
-      }
+        record(r, e.flatMap { case (s, d) => Iterator((s, d), (d, s)) })
+      } { (r, cur) => record(r, kcorePeel(cur.state, r.width)) }
       import spark.implicits._
       rows.toSeq.toDF("round", "n_nodes", "n_edges")
     }),
@@ -968,10 +980,10 @@ object Graph {
               floor(lit(17.0) * coalesce(col("s"), lit(0.0)) / lit(20.0))).as("q"))
       }
       // exact-integer projection only: pr_q IS the score on the 1e-6
-      // grid. The display-double ROUND twin was dropped in round 9 —
-      // the int-over-1e6 quotient class cost two earlier rounds
-      // (graph_sssp) to engine-divergent decimal/double division, and
-      // a consumer can always divide at presentation time.
+      // grid. There is no display-double ROUND twin: the int-over-1e6
+      // quotient class diverged across engines in decimal/double
+      // division (graph_sssp), and a consumer can always divide at
+      // presentation time.
       pr.select(col("node"), col("q").cast("bigint").as("pr_q"))
         .orderBy(col("pr_q").desc, col("node"))
         .limit(20)

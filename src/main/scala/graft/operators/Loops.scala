@@ -33,12 +33,15 @@ private[operators] object CheckpointJanitor {
 }
 
 /** The one round driver for the loops whose round state lives in
-  * Spark: connected components (`Dedup.connectedComponents`, RDD
-  * rounds), `graph_mst_boruvka` and `graph_kcore` (DataFrame rounds).
-  * It owns their round policy — where reliable checkpoints go, how each
+  * Spark: connected components (`Dedup.connectedComponents`),
+  * `graph_mst_boruvka` and `graph_kcore`. Their round state is one
+  * kind, an RDD of (Long, Long) pairs, and each round is a fixed RDD
+  * program, so no round is planned, optimized or compiled. The driver
+  * owns their round policy — where reliable checkpoints go, how each
   * round's state is carried, how wide each round's shuffles are, when
   * round scratch and carried state are released, and when a loop that
-  * must converge gives up — so a caller writes only its algorithm.
+  * must converge gives up — so a caller writes only its algorithm. It
+  * writes no session conf: a round reads its width as `Round.width`.
   * Lloyd k-means (`Clustering.trainKmeans`) is not a caller: its round
   * state is k×dim centroids in driver memory, with nothing to
   * checkpoint, width or release, so it stays a plain fold.
@@ -52,55 +55,37 @@ private[operators] object Loops {
   /** A round's outcome: the carried state, the row count the next
     * round's width derives from (one the round already counted), and
     * whether the loop has reached its fixpoint. */
-  final case class Step[S](state: S, rows: Long, done: Boolean = false)
-
-  /** How a state type takes its round's width. A DataFrame round plans
-    * its shuffles from the session's `spark.sql.shuffle.partitions`, so
-    * the driver pins that to the round's width while the round runs;
-    * an RDD round reads `Round.width` and leaves the session alone. */
-  final class State[S] private (private[Loops] val widthFromSession: Boolean)
-  object State {
-    implicit val frames: State[DataFrame] = new State(widthFromSession = true)
-    implicit def rdds[T]: State[RDD[T]] = new State(widthFromSession = false)
-  }
+  final case class Step[T](state: RDD[T], rows: Long, done: Boolean = false)
 
   /** One round's handle on the driver (the initial state is built in
     * a round of its own, at the session's width). */
   final class Round private[Loops] (val width: Int) {
-    private val scratch = ArrayBuffer.empty[() => Unit]
-    private[Loops] var carried: AnyRef = _
-    private var dropCarried: () => Unit = () => ()
+    private val scratch = ArrayBuffer.empty[RDD[_]]
+    private[Loops] var carried: RDD[_] = _
 
     /** `rdd` persisted for this round only: released when it ends. */
-    def keep[T](rdd: RDD[T]): RDD[T] = {
-      scratch += (() => rdd.unpersist(blocking = false)); rdd.persist()
-    }
-
-    /** `df` materialized as carried state. A round may carry more than
-      * once; the state it returns must be the last one it carried. */
-    def carry(df: DataFrame): DataFrame = hold(df.checkpoint(), () => ())
+    def keep[T](rdd: RDD[T]): RDD[T] = { scratch += rdd; rdd.persist() }
 
     /** `rdd` materialized as carried state, with its row count. The
       * count is the job that computes it: its blocks are cached, and
       * the checkpoint write that follows that job reads them. They stay
-      * cached until the next round has read them. */
+      * cached until the next round, or this round's next carry, has
+      * read them. A round may carry more than once; the state it
+      * returns must be the last one it carried. */
     def carry[T](rdd: RDD[T]): (RDD[T], Long) = {
-      hold(rdd, () => rdd.unpersist(blocking = false))
-      rdd.persist().checkpoint()
-      (rdd, rdd.count())
+      val prev = carried
+      carried = rdd.persist()
+      rdd.checkpoint()
+      try (rdd, rdd.count()) finally drop(prev)
     }
 
-    private def hold[S <: AnyRef](state: S, drop: () => Unit): S = {
-      release()
-      carried = state
-      dropCarried = drop
-      state
-    }
-
-    private[Loops] def end(): Unit = { scratch.foreach(_()); scratch.clear() }
+    private[Loops] def end(): Unit = { scratch.foreach(drop); scratch.clear() }
 
     /** Drops the cache behind the carried state; its checkpoint stays. */
-    private[Loops] def release(): Unit = { dropCarried(); dropCarried = () => () }
+    private[Loops] def release(): Unit = drop(carried)
+
+    private def drop(rdd: RDD[_]): Unit =
+      if (rdd != null && rdd.getStorageLevel.isValid) rdd.unpersist(blocking = false)
   }
 
   /** Builds the initial state with `init`, then runs `round` until it
@@ -110,11 +95,11 @@ private[operators] object Loops {
     * width. Returns the last step and the number of rounds run; by
     * then every round's scratch and carried cache is released, so a
     * plan over the last state reads its checkpoint. */
-  def iterate[S <: AnyRef](spark: SparkSession, maxRounds: Int)(init: Round => Step[S])
-             (round: (Round, Step[S]) => Step[S])(implicit st: State[S]): (Step[S], Int) = {
+  def iterate[T](spark: SparkSession, maxRounds: Int)(init: Round => Step[T])
+                (round: (Round, Step[T]) => Step[T]): (Step[T], Int) = {
     ensureCheckpointDir(spark)
     val rounds = ArrayBuffer.empty[Round]
-    def run(width: Int)(body: Round => Step[S]): Step[S] = {
+    def run(width: Int)(body: Round => Step[T]): Step[T] = {
       val r = new Round(width)
       rounds += r
       val step = try body(r) finally r.end()
@@ -126,12 +111,7 @@ private[operators] object Loops {
       var n = 0
       while (!cur.done && n < maxRounds) {
         val prev = cur
-        val width = loopShuffleWidth(spark, prev.rows)
-        // a DataFrame round's jobs are eager, so they plan under this width
-        cur = if (st.widthFromSession)
-          graft.Tables.withConf(spark, "spark.sql.shuffle.partitions", width.toString)(
-            run(width)(round(_, prev)))
-        else run(width)(round(_, prev))
+        cur = run(loopShuffleWidth(spark, prev.rows))(round(_, prev))
         rounds(rounds.size - 2).release()
         n += 1
       }
@@ -141,9 +121,8 @@ private[operators] object Loops {
 
   /** `iterate` for a loop that must converge: throws rather than return
     * the state of a loop still unconverged after `maxRounds` rounds. */
-  def fixpoint[S <: AnyRef](spark: SparkSession, what: String, maxRounds: Int)
-              (init: Round => Step[S])(round: (Round, Step[S]) => Step[S])
-              (implicit st: State[S]): (S, Int) = {
+  def fixpoint[T](spark: SparkSession, what: String, maxRounds: Int)
+                 (init: Round => Step[T])(round: (Round, Step[T]) => Step[T]): (RDD[T], Int) = {
     val (last, n) = iterate(spark, maxRounds)(init)(round)
     if (!last.done) throw new IllegalStateException(
       s"$what did not converge within $maxRounds rounds")

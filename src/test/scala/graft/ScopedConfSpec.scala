@@ -7,9 +7,9 @@ import org.scalatest.matchers.should.Matchers
 import graft.operators.Acid
 
 /** The scoped session-conf contract: `Tables.withConf` and the Acid
-  * writes built on it hand the session back exactly as they found it —
-  * a value the caller set comes back, and a key the caller never set
-  * stays unset rather than pinned to Spark's default. */
+  * writes built on it (its only caller) hand the session back exactly
+  * as they found it — a value the caller set comes back, and a key the
+  * caller never set stays unset rather than pinned to Spark's default. */
 class ScopedConfSpec extends AnyFunSuite with Matchers {
   lazy val spark = LocalSpark.spark
 

@@ -116,19 +116,21 @@ class SessionSetupSpec extends AnyFunSuite with Matchers {
       "GraftFunctions.register(" -> Set("Tables.scala", "tools/GraftCli.scala"),
       "createOrReplaceTempFunction(" -> Set("functions/expressions.scala"),
       "setCheckpointDir(" -> Set("operators/Loops.scala"),
-      // every loop carries its state, DataFrame or RDD, through the
-      // round driver's reliable checkpoint; none truncates lineage to
-      // executor-local blocks
+      // every loop carries its RDD state through the round driver's
+      // reliable checkpoint; none truncates lineage to executor-local
+      // blocks
       ".checkpoint(" -> Set("operators/Loops.scala"),
       "localCheckpoint(" -> Set.empty[String],
       // session conf writes: `Tables.register`'s set-up and the one
-      // scoped-write helper, `Tables.withConf`, which only the DataFrame
-      // loops' per-round width and Acid's two swaps call
+      // scoped-write helper, `Tables.withConf`, which only Acid's two
+      // swaps call
       "conf.set(" -> Set("Tables.scala"),
       "conf.unset(" -> Set("Tables.scala"),
-      "withConf(" -> Set("operators/Loops.scala", "operators/Acid.scala"),
+      "withConf(" -> Set("operators/Acid.scala"),
+      // no query sets the session's shuffle width: the loops take each
+      // round's width as a value
       "conf.set(\"spark.sql.shuffle.partitions\"" -> Set.empty[String],
-      "withConf(spark, \"spark.sql.shuffle.partitions\"" -> Set("operators/Loops.scala"),
+      "withConf(spark, \"spark.sql.shuffle.partitions\"" -> Set.empty[String],
       // queries take policy as parameters, never as graft.* options
       "getOption(\"graft." -> Set.empty[String],
       "props.get(\"graft." -> Set.empty[String])
