@@ -3,7 +3,7 @@ package graft
 import java.io.FileNotFoundException
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -65,15 +65,8 @@ object Tables {
     val p = new Path(path)
     val fs = p.getFileSystem(hadoopConf)
     val files =
-      try {
-        val it = fs.listFiles(p, true)
-        val b = Seq.newBuilder[(String, Long, Long)]
-        while (it.hasNext) {
-          val f = it.next()
-          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
-        }
-        b.result().sortBy(_._1)
-      } catch {
+      try fileIdentity(fs, p)
+      catch {
         // a missing path (or a glob, which only Spark expands) reads
         // unmemoized, so Spark raises or resolves it exactly as before
         case _: FileNotFoundException => return spark.read.parquet(path)
@@ -89,6 +82,21 @@ object Tables {
         schemas.put(key, (files, df.schema))
         df
     }
+  }
+
+  /** The identity of the files under `p`: every leaf file's qualified
+    * path, length and modification time, sorted by path. A metadata
+    * listing, no Spark job; a file rewritten in place changes it. The
+    * one staleness key of derived data: `parquet`'s schema memo and
+    * `Fixtures.buildOnce`'s warehouse fixtures. Throws
+    * `FileNotFoundException` for a missing path. Plain statuses, not
+    * `listFiles`, whose located statuses also load each local file's
+    * permissions (3.5 ms against 0.02 ms for a one-file table). */
+  private[graft] def fileIdentity(fs: FileSystem, p: Path): Seq[(String, Long, Long)] = {
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves) else Seq(st)
+    leaves(fs.getFileStatus(p))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
   }
 
   /** Set a session up for the harness queries: a temp view per fixture

@@ -59,37 +59,37 @@ object Aggregates {
       SELECT * FROM merged ORDER BY l_returnflag, l_linestatus"""
   }
 
-  /** Build + register the lineitem rollup MV once per (session, sfDir):
-    * materialize (l_returnflag, l_linestatus) partials to parquet
-    * (production MVs live on storage, not in a session cache — Hive's
-    * are tables), register the reader view + definition, and attach the
-    * rewrite rule to the session's experimental optimizations. */
-  private val mvBuilt = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-
+  /** Register the lineitem rollup MV for this session: its
+    * (l_returnflag, l_linestatus) partials are a warehouse fixture
+    * (`graft.Fixtures.buildOnce` over lineitem: production MVs live on
+    * storage, not in a session cache, and Hive's are tables), rebuilt
+    * only when lineitem's files change. Every call re-registers the
+    * reader view and the definition, and attaches the rewrite rule to
+    * the session's experimental optimizations once. */
   private def mvRegister(spark: SparkSession, sfDir: String): Unit = {
     import graft.plans.MvRewrite
     import graft.plans.MvRewrite.{AggSpec, MvDef}
-    if (mvBuilt.put(spark, sfDir) != sfDir) {
-      val dir = java.nio.file.Files.createTempDirectory("graft-mv").toString
+    val (dir, _) = graft.Fixtures.buildOnce(spark, sfDir, "mv_lineitem_rf_ls",
+        Seq("lineitem"), committed = "_SUCCESS") { dir =>
       spark.table("lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity").cast("decimal(18,4)")).as("sum_qty"),
           count(lit(1)).as("cnt"),
           min(col("l_extendedprice")).as("min_price"),
           max(col("l_extendedprice")).as("max_price"))
-        .write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir).createOrReplaceTempView("mv_lineitem_rf_ls")
-      MvRewrite.register(spark, MvDef(
-        mvName = "mv_lineitem_rf_ls",
-        basePaths = MvRewrite.scanPathsOf(spark.table("lineitem")),
-        groupCols = Set("l_returnflag", "l_linestatus"),
-        sums = Seq(AggSpec("l_quantity",
-          Some(org.apache.spark.sql.types.DecimalType(18, 4)), "sum_qty")),
-        mins = Seq(AggSpec("l_extendedprice", None, "min_price")),
-        maxs = Seq(AggSpec("l_extendedprice", None, "max_price")),
-        countStarCol = Some("cnt")))
+        .write.parquet(dir)
+      0L
     }
+    Tables.parquet(spark, dir).createOrReplaceTempView("mv_lineitem_rf_ls")
+    MvRewrite.register(spark, MvDef(
+      mvName = "mv_lineitem_rf_ls",
+      baseFiles = MvRewrite.scanFilesOf(spark.table("lineitem")),
+      groupCols = Set("l_returnflag", "l_linestatus"),
+      sums = Seq(AggSpec("l_quantity",
+        Some(org.apache.spark.sql.types.DecimalType(18, 4)), "sum_qty")),
+      mins = Seq(AggSpec("l_extendedprice", None, "min_price")),
+      maxs = Seq(AggSpec("l_extendedprice", None, "max_price")),
+      countStarCol = Some("cnt")))
     if (!spark.experimental.extraOptimizations.contains(MvRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ MvRewrite
@@ -442,13 +442,13 @@ object Aggregates {
     "agg_mode" -> Tables.sql(ModeSql),
     "agg_bool" -> Tables.sql(BoolAggSql),
     // Exact quartile cutoffs via the bounded two-level value-domain
-    // quantile (r18 verdict #5): the monolithic PERCENTILE aggregate
-    // buffered every l_extendedprice in ONE final OpenHashMap task —
-    // an executor-OOM shape at 100 TB. Quantiles.exactPercentiles
-    // replicates PERCENTILE's interpolation byte-for-byte (its scaladoc
-    // has the bytecode-verified chain), so the ROUND(·, 6) + CASE
-    // bucketing below is fed the identical three doubles; the DuckDB
-    // oracle keeps the QUANTILE_CONT spelling unchanged.
+    // quantile: the monolithic PERCENTILE aggregate buffers every
+    // l_extendedprice in ONE final OpenHashMap task — an executor-OOM
+    // shape at 100 TB. Quantiles.exactPercentiles replicates
+    // PERCENTILE's interpolation byte-for-byte (its scaladoc has the
+    // bytecode-verified chain), so the ROUND(·, 6) + CASE bucketing
+    // below is fed the identical three doubles; the DuckDB oracle keeps
+    // the QUANTILE_CONT spelling unchanged.
     "agg_equidepth_hist" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
       import org.apache.spark.sql.functions._
@@ -549,12 +549,12 @@ object Aggregates {
       ORDER BY status, priority"""),
 
     // EWAH bitmap-index algebra (Hive ewah_bitmap/_and/_or/_empty —
-    // previously skip-pinned, implemented round 9 with the real
-    // Lemire word-aligned-hybrid codec): per-status customer bitmaps,
-    // then pairwise intersection/union cardinalities + disjointness
-    // straight off the compressed streams. The oracle recomputes the
-    // same set algebra from DISTINCT value sets — bitmap vs relational
-    // spellings of identical mathematics.
+    // implemented with the real Lemire word-aligned-hybrid codec):
+    // per-status customer bitmaps, then pairwise intersection/union
+    // cardinalities + disjointness straight off the compressed
+    // streams. The oracle recomputes the same set algebra from DISTINCT
+    // value sets — bitmap vs relational spellings of identical
+    // mathematics.
     "agg_ewah_bitmap" -> Tables.sql("""
         WITH bm AS (
           SELECT o_orderstatus AS status,
@@ -729,11 +729,11 @@ object Aggregates {
     // Materialized-view rewrite (graft.plans.MvRewrite — Hive 2.3/3.0
     // materialized view rollup rewriting, SURVEY §2.3 [2.x]): the MV
     // materializes lineitem partials at (l_returnflag, l_linestatus)
-    // granularity to parquet ONCE per session+sfDir; the query below is
-    // written against the BASE table at coarser (l_returnflag)
-    // granularity, and the injected optimizer rule rewrites it to
-    // re-aggregate the MV — ExtensionsSpec pins that the executed plan
-    // scans the MV parquet and never the lineitem fact. DECIMAL sum
+    // granularity to parquet ONCE per warehouse and lineitem files; the
+    // query below is written against the BASE table at coarser
+    // (l_returnflag) granularity, and the injected optimizer rule
+    // rewrites it to re-aggregate the MV — ExtensionsSpec pins that the
+    // executed plan scans the MV parquet and never the lineitem fact. DECIMAL sum
     // partials make the regrouping bit-exact, so the oracle (the same
     // query over the base in DuckDB) matches exactly.
     "agg_mv_rewrite" -> ((spark, sfDir) => {

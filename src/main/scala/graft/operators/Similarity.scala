@@ -67,11 +67,11 @@ object Similarity {
   // discipline): part scans as ONE split at test scale and the
   // blocked join streams THIS side, so every damerau_levenshtein /
   // jaro_winkler call — 3.16M candidate pairs at sf0.1 — ran on a
-  // single core (r18 plan audit: BroadcastHashJoin, BuildRight, probe
-  // = the one-partition dirty scan; measured 6.7 s idle → the kernel
-  // grind serialized). The hint is a Spark comment-hint; DuckDB parses
-  // it as a plain block comment, so the shared oracle text is
-  // unaffected.
+  // single core (the plan is a BroadcastHashJoin, BuildRight, whose
+  // probe is the one-partition dirty scan, so the kernel grind
+  // serializes; 6.7 s at sf0.1 on an idle host). The hint is a Spark
+  // comment-hint; DuckDB parses it as a plain block comment, so the
+  // shared oracle text is unaffected.
   private val DirtyCte = """dirty AS (
         SELECT p_partkey AS did,
                CONCAT(SUBSTR(p_name, 1, 3), SUBSTR(p_name, 5, 1),
@@ -665,22 +665,21 @@ object Similarity {
   /** The LSH bucket geometry shared by the batch, dedup and
     * indexed-serving paths, a pure function of the corpus size n:
     * 16 tables and ADAPTIVE planes — pe = smallest p in [6, 18] with
-    * n ≤ 64·2^p, i.e. average bucket occupancy ≤ 64 (the r15 finding:
-    * a fixed plane count lets per-bucket occupancy, and so probe cost,
-    * grow linearly with the corpus). Integer-exact (no float log2 —
-    * ceil(log/log) is an ulp landmine at exact powers of two); the
-    * oracles spell the same arithmetic in SQL. */
+    * n ≤ 64·2^p, i.e. average bucket occupancy ≤ 64 (a fixed plane
+    * count lets per-bucket occupancy, and so probe cost, grow linearly
+    * with the corpus). Integer-exact (no float log2 — ceil(log/log) is
+    * an ulp landmine at exact powers of two); the oracles spell the
+    * same arithmetic in SQL. */
   private[graft] def lshGeometry(n: Long): (Int, Int) =
     (16, (6 to 18).find(p => n <= 64L * (1L << p)).getOrElse(18))
 
   // ------------------------------------------------------------------
-  // ANN serving path (r16 verdict "What's missing #2"): the batch LSH
-  // query recomputes bucketing every run (~2.5e9 sign multiplies at
-  // sf10/pe=12 — the r16 probe-cost record shows it dominating batch
-  // wall-time ~1000×), so the 64× candidate shrink only pays when the
-  // buckets are a PERSISTED index and probes are online. This is that
-  // split: build once into a Hive-bucketed, key-sorted file layout;
-  // serve a probe batch as a driver-pruned, broadcast-joined lookup.
+  // ANN serving path: the batch LSH query recomputes bucketing every
+  // run (~2.5e9 sign multiplies at sf10/pe=12, ~1000× the probe's
+  // cost), so the 64× candidate shrink only pays when the buckets are
+  // a PERSISTED index and probes are online. This is that split: build
+  // once into a Hive-bucketed, key-sorted file layout; serve a probe
+  // batch as a driver-pruned, broadcast-joined lookup.
   // ------------------------------------------------------------------
 
   /** Hive bucket-file count of the persisted LSH index. Fixed at the
@@ -689,7 +688,6 @@ object Similarity {
     * path only ever opens the files its keys hash to, so the count
     * changes cost, not semantics). */
   private val IndexBuckets = 64
-  private val indexLock = new Object
 
   /** pe-INVARIANT file-routing key of an index row: tbl·32 + the low 5
     * BUCKET bits. The plane-prefix invariant (bucket at pe = low pe
@@ -709,81 +707,20 @@ object Similarity {
   private[graft] def invRouteKeyOf(k: Long, planes: Int): Long =
     (k >> planes) * 32L + (k & 31L)
 
-  /** Metadata-only fingerprint of the embeddings source (file names,
-    * sizes, mtimes — an FS listing, no job): the index-staleness
-    * signal. A regenerated corpus changes it; the fixture rebuilds. */
-  private def embSourceFingerprint(spark: SparkSession,
-                                   sfDir: String): String = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$sfDir/embeddings.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(_.isFile).sortBy(_.getPath.getName)
-      else Array(fs.getFileStatus(p))
-    val sig = stats.map(s =>
-      s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}").mkString("|")
-    Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sig))
-  }
-
-  /** Tag of the persisted-index meta line; a meta in any other format
-    * is stale and rebuilds. */
-  private val IndexMetaFormat = "ann1"
-
-  /** The one build-once path of every persisted ANN index. The index
-    * lives in `_graft_fixtures/<name>_<hash(sfDir)>` under the
-    * warehouse and is reused while its layout's commit marker
-    * (`committed`) exists and its meta carries `IndexMetaFormat` and
-    * the current source fingerprint (a metadata-only FS listing, no
-    * job: a regenerated corpus rebuilds). A (re)build deletes the old
-    * meta, registers the fixture's views, runs `build(dir, embeddings,
-    * n)` and writes the meta LAST, so a crash anywhere in a multi-step
-    * build can never be served from cache. The meta records the corpus
-    * size n the index was built over, so a reuse never recounts.
-    * Returns (dir, n). */
-  private def persistedIndex(spark: SparkSession, sfDir: String,
-                             name: String, meta: String = "_LSH_META",
-                             committed: String = "_BUCKETS_OK")(
-      build: (String, DataFrame, Long) => Unit): (String, Long) =
-    indexLock.synchronized {
-      import org.apache.hadoop.fs.Path
-      val dir = spark.conf.get("spark.sql.warehouse.dir") +
-        s"/_graft_fixtures/${name}_" + Integer.toHexString(sfDir.hashCode)
-      val metaPath = new Path(dir, meta)
-      val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fp = embSourceFingerprint(spark, sfDir)
-      val cached =
-        if (!fs.exists(new Path(dir, committed)) || !fs.exists(metaPath)) None
-        else {
-          val in = fs.open(metaPath)
-          try scala.io.Source.fromInputStream(in).mkString.trim.split(",") match {
-            case Array(IndexMetaFormat, `fp`, n) => Some(n.toLong)
-            case _ => None // stale fingerprint or an older meta format
-          } finally in.close()
-        }
-      val n = cached.getOrElse {
-        fs.delete(metaPath, false)
-        Tables.register(spark, sfDir)
-        val emb = spark.table("embeddings")
-        val n = emb.count()
-        build(dir, emb, n)
-        val out = fs.create(metaPath, true)
-        try out.write(s"$IndexMetaFormat,$fp,$n".getBytes("UTF-8"))
-        finally out.close()
-        n
-      }
-      (dir, n)
-    }
-
-  /** An LSH index through `persistedIndex`: `build(dir, embeddings,
-    * tables, planes)` writes the layout at the corpus's geometry, which
-    * a reuse derives again from the n the meta recorded. Returns
-    * (dir, tables, planes). */
+  /** An LSH index fixture (`graft.Fixtures.buildOnce` over the
+    * embeddings): `build(dir, embeddings, tables, planes)` writes the
+    * layout at the corpus's geometry. The fixture records the corpus
+    * size n it counted, so a reuse derives the geometry again without
+    * recounting. Returns (dir, tables, planes). */
   private def lshIndex(spark: SparkSession, sfDir: String, name: String)(
       build: (String, DataFrame, Int, Int) => Unit): (String, Int, Int) = {
-    val (dir, n) = persistedIndex(spark, sfDir, name) { (dir, emb, n) =>
+    val (dir, n) = graft.Fixtures.buildOnce(spark, sfDir, name,
+        Seq("embeddings"), committed = "_BUCKETS_OK") { dir =>
+      val emb = spark.table("embeddings")
+      val n = emb.count()
       val (tables, planes) = lshGeometry(n)
       build(dir, emb, tables, planes)
+      n
     }
     val (tables, planes) = lshGeometry(n)
     (dir, tables, planes)
@@ -896,7 +833,7 @@ object Similarity {
       .orderBy(col("qid"), col("rn"))
   }
 
-  /** Base+append variant of the index fixture (r17, the maintenance
+  /** Base+append variant of the index fixture (the maintenance
     * path): the corpus splits deterministically into a 3/4 base
     * (vec_id % 4 != 0) built as generation 0 and a 1/4 delta
     * (vec_id % 4 == 0) APPENDED as generation 1 — one shuffle of the
@@ -1012,8 +949,8 @@ object Similarity {
     * deployment just like IndexBuckets). */
   private val PqCodeBuckets = 16
 
-  /** The persisted PQ index (through `persistedIndex`, like the LSH
-    * index): `codebook` (640 (s, cw, d, cv) rows — the
+  /** The persisted PQ index (a `graft.Fixtures.buildOnce` fixture, like
+    * the LSH indexes): `codebook` (640 (s, cw, d, cv) rows — the
     * 40-entry ADC lookup's source, always broadcast) and `codes` (4
     * codes per vector) in Hive bucket layout KEYED BY COARSE CELL —
     * each vector's nearest full codebook row (argmin over the summed
@@ -1026,8 +963,8 @@ object Similarity {
     * are byte-identical to the recomputed ones. */
   private[graft] def pqIndexFixture(spark: SparkSession,
                                     sfDir: String): String =
-    persistedIndex(spark, sfDir, "pq_index", meta = "_PQ_META",
-        committed = "codes/_BUCKETS_OK") { (dir, _, _) =>
+    graft.Fixtures.buildOnce(spark, sfDir, "pq_index", Seq("embeddings"),
+        committed = "codes/_BUCKETS_OK") { dir =>
       spark.sql(s"WITH ${pqBaseCtes(spark = true)} SELECT s, cw, d, cv FROM cb")
         .write.mode("overwrite").parquet(s"$dir/codebook")
       val codes = spark.sql(s"""
@@ -1038,6 +975,7 @@ object Similarity {
       graft.sources.HiveBucketedIO.writeBucketed(
         codes, s"$dir/codes", PqCodeBuckets,
         Seq(col("vec_id"), col("s")), col("cell").cast("long"))
+      0L
     }._1
 
   /** The probe-side ADC lookup table (s, cw, qdist — 40 rows at this
@@ -1310,8 +1248,8 @@ object Similarity {
     // 100 TB discipline: candidate generation (bucket equi-join +
     // DISTINCT) shuffles ONLY (tbl, bucket, qid, nid) ints — the wide
     // 64-float embeddings re-join AFTER the pair set is deduped, query
-    // side broadcast. (Round-1 carried both vectors through the DISTINCT
-    // shuffle — the per-round plan audit flagged it as a scale-killer.)
+    // side broadcast. Carrying both vectors through the DISTINCT
+    // shuffle would move 128 floats per candidate pair at any scale.
     "ann_lsh_bucketed" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
       val emb = spark.table("embeddings")

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.DataType
 
 /** Materialized-view rewrite — the aggregate-rollup half of Hive's
@@ -33,9 +34,12 @@ import org.apache.spark.sql.types.DataType
   *
   * Staleness contract (same opt-in honesty as AnswerFromStats):
   * registering an MV for a session IS the opt-in — the registrant
-  * asserts the MV reflects the base until `invalidate`. Base matching
-  * is by the parquet root paths of the scan, so a different sfDir never
-  * matches a stale registration.
+  * asserts the MV was built from the base files it names. Base
+  * matching is by file identity: every file the scan reads, with its
+  * length and modification time, as listed when the scan was resolved.
+  * A different sfDir, or a base rewritten in place, never matches a
+  * stale registration (and the MV's own rebuild over the new files is
+  * not rewritten to read the old MV).
   *
   * At 100 TB this is the canonical reporting accelerator: a 10⁹-row
   * fact rolls up once into a 10⁵-row MV, and every dashboard query at
@@ -49,16 +53,17 @@ object MvRewrite extends Rule[LogicalPlan] {
   final case class AggSpec(baseCol: String, cast: Option[DataType], mvCol: String)
 
   /** An MV definition: `mvName` is a registered view over the
-    * materialized parquet; `basePaths` are the base scan's root paths. */
+    * materialized parquet; `baseFiles` are the files of the base scan
+    * it was built from (`scanFilesOf`). */
   final case class MvDef(
       mvName: String,
-      basePaths: Set[String],
+      baseFiles: Set[(String, Long, Long)],
       groupCols: Set[String],
       sums: Seq[AggSpec] = Nil,
       mins: Seq[AggSpec] = Nil,
       maxs: Seq[AggSpec] = Nil,
       countStarCol: Option[String] = None) {
-    require(groupCols.nonEmpty && basePaths.nonEmpty)
+    require(groupCols.nonEmpty && baseFiles.nonEmpty)
   }
 
   private val registry =
@@ -79,18 +84,25 @@ object MvRewrite extends Rule[LogicalPlan] {
       _ => scala.collection.concurrent.TrieMap.empty).put(d.mvName, d)
   }
 
-  def invalidate(spark: SparkSession): Unit = registry.remove(spark)
-
-  /** The parquet root paths a DataFrame's (single) file scan reads —
-    * how registrants name the base table, so the registered paths match
-    * the rule's `baseOf` extraction by construction. */
-  def scanPathsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
+  /** The files a DataFrame's (single) file scan reads — how registrants
+    * name the base table, so the registered files match the rule's
+    * `baseOf` extraction by construction. */
+  def scanFilesOf(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Long)] =
     df.queryExecution.analyzed.collect {
       case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString).toSet
-        case _ => Set.empty[String]
+        case fs: HadoopFsRelation => filesOf(fs)
+        case _ => Set.empty[(String, Long, Long)]
       }
     }.flatten.toSet
+
+  /** (path, length, modification time) of every file a relation reads,
+    * from the listing its file index took when the scan was resolved. */
+  private def filesOf(r: HadoopFsRelation): Set[(String, Long, Long)] =
+    r.location match {
+      case idx: PartitioningAwareFileIndex => idx.allFiles()
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+      case _ => Set.empty
+    }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val session = SparkSession.getActiveSession.orNull
@@ -100,8 +112,8 @@ object MvRewrite extends Rule[LogicalPlan] {
     plan.transform {
       case agg @ Aggregate(groupExprs, aggExprs, child, _) =>
         baseOf(child) match {
-          case Some((paths, filter)) =>
-            defs.values.find(d => d.basePaths == paths).flatMap(
+          case Some((files, filter)) =>
+            defs.values.find(d => d.baseFiles == files).flatMap(
               rewrite(session, agg, groupExprs, aggExprs, filter, _))
               .getOrElse(agg)
           case None => agg
@@ -109,14 +121,13 @@ object MvRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** The base scan's parquet root paths under the aggregate, plus any
-    * residual filter on the way, provided nothing else intervenes. */
-  private def baseOf(p: LogicalPlan,
-      filter: Option[Expression] = None): Option[(Set[String], Option[Expression])] =
+  /** The base scan's files under the aggregate, plus any residual
+    * filter on the way, provided nothing else intervenes. */
+  private def baseOf(p: LogicalPlan, filter: Option[Expression] = None)
+      : Option[(Set[(String, Long, Long)], Option[Expression])] =
     p match {
       case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation =>
-          Some((fs.location.rootPaths.map(_.toString).toSet, filter))
+        case fs: HadoopFsRelation => Some((filesOf(fs), filter))
         case _ => None
       }
       case Project(pl, child) if pl.forall(_.isInstanceOf[AttributeReference]) =>

@@ -403,11 +403,7 @@ object ExportImport {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "source_export_import" -> ((spark, sfDir) => {
       graft.Tables.register(spark, sfDir)
-      val base = spark.conf.get("spark.sql.warehouse.dir") +
-        s"/_graft_fixtures/exim_${java.lang.Integer.toHexString(sfDir.hashCode)}"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = graft.Fixtures.dir(spark, sfDir, "exim")
       // supplier partitioned by nation: 25 recovered partitions (the
       // densest partition-recovery shape in the fixtures) at 1/15th of
       // orders' bytes — the bundle mechanics are identical
@@ -435,11 +431,7 @@ object ExportImport {
     // the restricted partition recovery.
     "source_export_partition" -> ((spark, sfDir) => {
       graft.Tables.register(spark, sfDir)
-      val base = spark.conf.get("spark.sql.warehouse.dir") +
-        s"/_graft_fixtures/exim_part_${java.lang.Integer.toHexString(sfDir.hashCode)}"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = graft.Fixtures.dir(spark, sfDir, "exim_part")
       spark.sql("CREATE DATABASE IF NOT EXISTS graft_exim")
       spark.sql("DROP TABLE IF EXISTS graft_exim.supplier_psrc")
       spark.table("supplier").write.partitionBy("s_nationkey")

@@ -6,8 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{HiveHash, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.Tables
-
 /** Hive-compatible bucketed-table layout: read path with bucket pruning
   * (SURVEY.md §7.3#3 — the `BucketMapJoinOptimizer`-era contract;
   * Hive `serde2/objectinspector/ObjectInspectorUtils.getBucketNumber`:
@@ -55,7 +53,7 @@ object HiveBucketedIO {
     * content, Hive file naming/routing). Fixture-scale: one filtered
     * pass: see below.
     *
-    * `sortWithin` (r17, the ANN index path): secondary sort columns
+    * `sortWithin` (the ANN index path): secondary sort columns
     * applied INSIDE each bucket's task after the bucket routing — rows
     * land in the bucket file in that order, so parquet row-group
     * min/max statistics on those columns become selective and a
@@ -84,7 +82,7 @@ object HiveBucketedIO {
     * rewritten, only buckets that actually receive delta rows gain a
     * file, and the delta is routed/sorted by the SAME hash and sort
     * contract, so per-bucket reads stay pruned and row-group stats
-    * stay selective. This is the index MAINTENANCE path (r17): one
+    * stay selective. This is the index MAINTENANCE path: one
     * shuffle of the delta, O(delta) work at any corpus size — a full
     * rebuild is only needed when the layout itself must change (more
     * buckets, new geometry). Readers that must see appended data use
@@ -97,7 +95,7 @@ object HiveBucketedIO {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(new Path(dir, "_BUCKETS_OK")),
       s"append target $dir is not a complete bucketed layout")
-    // Committed-generation discipline (r18, mirrors _BUCKETS_OK): a
+    // Committed-generation discipline (mirrors _BUCKETS_OK): a
     // generation exists for readers only once its _GEN_<g>_OK marker
     // does, and the marker is written LAST. A crash mid-append leaves
     // unmarked files that (a) readers ignore (`bucketGenFiles` serves
@@ -428,8 +426,7 @@ object HiveBucketedIO {
       .map(_.toString).sorted
   }
 
-  /** Unsorted-file form (the pre-r17 signature, kept for plain
-    * bucket-routing callers). */
+  /** Unsorted-file form, for plain bucket-routing callers. */
   def writeBucketed(df: DataFrame, dir: String, numBuckets: Int,
                     keys: Column*): Unit =
     writeBucketed(df, dir, numBuckets, Nil, keys: _*)
@@ -507,26 +504,17 @@ object HiveBucketedIO {
   // ------------------------------------------------------------------
 
   private val NumBuckets = 8
-  private val fixtureLock = new Object
 
   /** Hive-bucket-layout copy of `table` bucketed on `key` for `sfDir`,
-    * built once per warehouse (marker-gated; rebuilt only if
-    * absent/incomplete). */
+    * a `graft.Fixtures.buildOnce` fixture: built once per warehouse and
+    * rebuilt when the table's files change. */
   def tableFixture(spark: SparkSession, sfDir: String,
                    table: String, key: String): String =
-    fixtureLock.synchronized {
-      val base = spark.conf.get("spark.sql.warehouse.dir") + "/_graft_fixtures"
-      val dir = s"$base/hive_bucketed_${table}${NumBuckets}_" +
-        java.lang.Integer.toHexString(sfDir.hashCode)
-      val fs = new Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new Path(dir, "_BUCKETS_OK"))) {
-        Tables.register(spark, sfDir)
-        writeBucketed(spark.table(table), dir, NumBuckets,
-          col(key).cast("bigint"))
-      }
-      dir
-    }
+    graft.Fixtures.buildOnce(spark, sfDir, s"hive_bucketed_$table$NumBuckets",
+        Seq(table), committed = "_BUCKETS_OK") { dir =>
+      writeBucketed(spark.table(table), dir, NumBuckets, col(key).cast("bigint"))
+      0L
+    }._1
 
   def customerFixture(spark: SparkSession, sfDir: String): String =
     tableFixture(spark, sfDir, "customer", "c_custkey")

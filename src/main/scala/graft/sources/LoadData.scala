@@ -199,11 +199,7 @@ object LoadData {
       graft.Tables.register(spark, sfDir)
       import org.apache.spark.sql.functions.col
       val nations = 0 to 4
-      val base = spark.conf.get("spark.sql.warehouse.dir") +
-        s"/_graft_fixtures/load_${java.lang.Integer.toHexString(sfDir.hashCode)}"
-      val fs = new Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(base), true)
+      val base = graft.Fixtures.dir(spark, sfDir, "load")
       val supplier = spark.table("supplier")
       // staged files EXCLUDE the partition column (Hive partition data
       // layout), one directory per target partition

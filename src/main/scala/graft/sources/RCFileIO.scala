@@ -149,21 +149,12 @@ object RCFileIO {
   // with a 2-of-7 column projection, aggregated
   // ------------------------------------------------------------------
 
-  private val fixtureLock = new Object
-
   private def supplierFixture(spark: SparkSession, sfDir: String): String =
-    fixtureLock.synchronized {
-      val base = spark.conf.get("spark.sql.warehouse.dir") + "/_graft_fixtures"
-      val dir = s"$base/rcfile_supplier_" +
-        java.lang.Integer.toHexString(sfDir.hashCode)
-      val fs = new Path(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new Path(dir, "_SUCCESS"))) {
-        graft.Tables.register(spark, sfDir)
-        write(spark.table("supplier"), dir)
-      }
-      dir
-    }
+    graft.Fixtures.buildOnce(spark, sfDir, "rcfile_supplier", Seq("supplier"),
+        committed = "_SUCCESS") { dir =>
+      write(spark.table("supplier"), dir)
+      0L
+    }._1
 
   private type Q = (SparkSession, String) => DataFrame
 

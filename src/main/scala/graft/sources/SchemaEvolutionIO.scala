@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,10 +32,7 @@ object SchemaEvolutionIO {
     * are the "old" files, odd the post-ALTER ones. */
   def writeFixture(spark: SparkSession, sfDir: String): (String, String) = {
     Tables.register(spark, sfDir)
-    val base = spark.conf.get("spark.sql.warehouse.dir") +
-      s"/_graft_fixtures/schevo_${java.lang.Integer.toHexString(sfDir.hashCode)}"
-    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(base), true)
+    val base = graft.Fixtures.dir(spark, sfDir, "schevo")
     val orders = spark.table("orders")
     val (g1, g2) = (s"$base/data/gen1", s"$base/data/gen2")
     orders.where(col("o_orderkey") % 2 === 0)

@@ -8,11 +8,11 @@ import org.apache.spark.sql.types._
 import graft.Tables
 
 /** Hive `SymlinkTextInputFormat` analog (ql/io/SymlinkTextInputFormat
-  * .java, SURVEY.md §2.2 — the last "skip"-verdict format with a real
-  * migration story): a table's storage directory holds small "symlink"
-  * TEXT files whose LINES are paths (or globs) to the actual data files
-  * living elsewhere. Hive resolves the links in `getSplits` on the
-  * client and plans splits over the TARGETS; the format exists so a
+  * .java, SURVEY.md §2.2 — a format with a real migration story): a
+  * table's storage directory holds small "symlink" TEXT files whose
+  * LINES are paths (or globs) to the actual data files living
+  * elsewhere. Hive resolves the links in `getSplits` on the client and
+  * plans splits over the TARGETS; the format exists so a
   * warehouse can expose externally-produced files (logs dropped by
   * other teams, S3 drops, etc.) as a table without copying them.
   *
@@ -105,10 +105,8 @@ object SymlinkTextIO {
   val queries: Map[String, Q] = Map(
     "source_symlink_scan" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      val base = spark.conf.get("spark.sql.warehouse.dir") +
-        s"/_graft_fixtures/symlink_${java.lang.Integer.toHexString(sfDir.hashCode)}"
+      val base = graft.Fixtures.dir(spark, sfDir, "symlink")
       val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(base), true)
       // external "drops": one directory of CSV part files per source
       Sources.foreach { s =>
         spark.table("documents").where(col("source") === s)

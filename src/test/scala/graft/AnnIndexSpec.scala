@@ -5,8 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 import graft.sources.HiveBucketedIO
 
-/** The persisted-LSH-index serving path (r17, verdict "What's missing
-  * #2"): build/probe split contracts — answer equality with the batch
+/** The persisted-LSH-index serving path: build/probe split contracts — answer equality with the batch
   * form, driver-side file pruning, within-file key sort (the row-group
   * pruning precondition), geometry reuse from the index meta, and a
   * rebuild when the embeddings source changes. */
@@ -240,7 +239,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // driver query relies on — force a rebuild for later tests/queries
     import org.apache.hadoop.fs.Path
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(dir, "_LSH_META"), false)
+    fs.delete(new Path(dir, Fixtures.Meta), false)
   }
 
   test("pq probe serves from persisted codes: batch-identical answer, no corpus re-encode") {

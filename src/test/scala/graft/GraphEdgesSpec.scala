@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.operators.Graph
 
-/** The graph family's shared edge list is persisted once per session
-  * and served from the cache after that, but every DataFrame it hands
-  * out belongs to the session that asked for it. The MST and kcore
-  * loops over it leave nothing cached, and their rounds give the same
-  * sets at any shuffle width. */
+/** Every DataFrame of the graph family's shared edge list belongs to
+  * the session that asked for it. The MST and kcore loops over it leave
+  * nothing cached, their rounds give the same sets at any shuffle
+  * width, and kcore runs no peel after a fixed point. */
 class GraphEdgesSpec extends AnyFunSuite with Matchers {
   lazy val spark = LocalSpark.spark
   private val sf = LocalSpark.sf
@@ -22,13 +21,10 @@ class GraphEdgesSpec extends AnyFunSuite with Matchers {
     e2.sparkSession should be theSameInstanceAs s2
     e1.count() shouldBe e2.count()
 
-    // a later call rebuilds in the same session and reads the persisted data
+    // a later call builds again in the same session
     val again = Graph.weightedEdges(s1, sf)
     again.sparkSession should be theSameInstanceAs s1
-    again.queryExecution.withCachedData
-      .collectFirst { case r: InMemoryRelation => r } should not be empty
     again.count() shouldBe e1.count()
-    e1.unpersist()
   }
 
   for ((q, nRows) <- Seq("graph_kcore" -> 4, "graph_mst_boruvka" -> 3))
@@ -45,6 +41,29 @@ class GraphEdgesSpec extends AnyFunSuite with Matchers {
       val left = sc.getPersistentRDDs.keySet -- before
       assert(left.isEmpty, s"$q left ${left.size} RDDs persisted: $left")
     }
+
+  test("graph_kcore runs no peel after a fixed point") {
+    val sc = spark.sparkContext
+    val s = spark.newSession()
+    // a first run sets the context's checkpoint dir
+    SparkEntry.queries("graph_kcore")(s, sf).collect()
+    val ckpt = new Path(sc.getCheckpointDir.get)
+    val fs = ckpt.getFileSystem(sc.hadoopConfiguration)
+    def checkpointed = fs.listStatus(ckpt).map(_.getPath.getName).toSet
+    val before = checkpointed
+    val rows = SparkEntry.queries("graph_kcore")(s, sf).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+    rows.map(_._1) shouldBe (0 to 3)
+    // a peel only removes edges, so one that removed none or left none
+    // returns its input: the first such round is the fixed point
+    val fixed = rows.indices.find(i =>
+      rows(i)._3 == 0 || (i > 0 && rows(i)._3 == rows(i - 1)._3)).getOrElse(3)
+    assert(fixed < 3, s"the fixture's trajectory reaches no early fixed point: $rows")
+    assert(rows.drop(fixed).map(r => (r._2, r._3)).distinct.size == 1, rows)
+    // every round run carries its state through one reliable
+    // checkpoint: the initial edge set and each peel up to the fixed point
+    (checkpointed -- before).size shouldBe fixed + 1
+  }
 
   test("an MST round step and a kcore peel match a reference at widths 1 and 4") {
     val sc = spark.sparkContext
