@@ -3,11 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Each module under graft.operators contributes a map of named queries
   * (one per capability row of SURVEY.md §2) plus, where ANSI-SQL
   * expressible, a DuckDB oracle query producing identical columns/values.
+  *
+  * Cache contract: the intermediates a query persists for the DataFrame
+  * it returns to read lazily (pipeline_curate_ppl's scores, the graph
+  * queries' edges) live until the runner's `clearCache()`, which Bench,
+  * Verify, DiagJobs and the benchmark harness call after every query.
   */
 object SparkEntry {
 

@@ -2,6 +2,8 @@ package graft
 
 import java.io.FileNotFoundException
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,27 +16,36 @@ import org.apache.spark.sql.types.StructType
   * Views are cheap catalog entries over parquet scans: Catalyst still gets
   * full predicate pushdown / column pruning / partition pruning through
   * them, so at 100 TB the scan only reads what each query touches.
+  *
+  * A session has one registration: `register` makes it, and it owns
+  * everything the session derives from those tables (`derived`: the
+  * k-means models, the MV definitions). It stands while the sfDir and
+  * the file identity of its tables are unchanged; a changed file makes
+  * the next `register` replace it, and `invalidate` drops it, in both
+  * cases with everything derived from it. The same file identity keys
+  * the JVM's schema memo (`parquet`) and the warehouse fixtures
+  * (`Fixtures.buildOnce`).
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // skip re-registration while the session's views already point at this
-  // sfDir: re-registering costs 10 view definitions per query, and 10
-  // Spark schema-inference jobs whenever `schemas` misses. Temp views
-  // are PER SparkSession, so key by the session itself (weakly —
-  // sessions must stay collectable), remembering only the LAST dir:
-  // switching sfDir must re-register.
+  private final case class Registration(sfDir: String,
+      files: Seq[Seq[(String, Long, Long)]],
+      derived: TrieMap[Any, Any] = TrieMap.empty)
+
+  // temp views are per SparkSession: keyed by the session, weakly, so
+  // sessions stay collectable
   private val registered =
     java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, String]())
+      new java.util.WeakHashMap[SparkSession, Registration]())
 
   // (qualified path, session's parquet-inference confs) -> (identity of
   // every leaf file under the path, the schema inference returned).
-  // JVM-wide, unlike `registered`: the schema is a function of the files
+  // JVM-wide, unlike a registration: the schema is a function of the files
   // and those confs alone, so a new session reuses it.
-  private val schemas = new scala.collection.concurrent.TrieMap[
+  private val schemas = new TrieMap[
     (String, Seq[(String, String)]), (Seq[(String, Long, Long)], StructType)]()
 
   // every session setting Spark's parquet schema inference reads
@@ -87,8 +98,9 @@ object Tables {
   /** The identity of the files under `p`: every leaf file's qualified
     * path, length and modification time, sorted by path. A metadata
     * listing, no Spark job; a file rewritten in place changes it. The
-    * one staleness key of derived data: `parquet`'s schema memo and
-    * `Fixtures.buildOnce`'s warehouse fixtures. Throws
+    * one staleness key of derived data: `parquet`'s schema memo (per
+    * JVM), `register`'s registration (per session) and
+    * `Fixtures.buildOnce`'s warehouse fixtures (on disk). Throws
     * `FileNotFoundException` for a missing path. Plain statuses, not
     * `listFiles`, whose located statuses also load each local file's
     * permissions (3.5 ms against 0.02 ms for a one-file table). */
@@ -101,10 +113,19 @@ object Tables {
 
   /** Set a session up for the harness queries: a temp view per fixture
     * table in `sfDir` (events.ts normalized, below) and every graft SQL
-    * function (`GraftFunctions.register`). Memoized per session and
-    * dir, so every query calls it and a repeat costs one map lookup. */
+    * function (`GraftFunctions.register`). A hit while the sfDir and
+    * the `fileIdentity` of its tables are unchanged costs a listing and
+    * no Spark job; otherwise the views are registered again and the
+    * registration is replaced, with everything derived from it. */
   def register(spark: SparkSession, sfDir: String): Unit = {
-    if (registered.get(spark) == sfDir) return
+    val fs = new Path(sfDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = names.map { t =>
+      // a missing table is a miss; its read then raises as before
+      try fileIdentity(fs, new Path(s"$sfDir/$t.parquet"))
+      catch { case _: FileNotFoundException => Nil }
+    }
+    val cur = registered.get(spark)
+    if (cur != null && cur.sfDir == sfDir && cur.files == files) return
     // events.ts precision varies across testdata generations: TIMESTAMP
     // (NANOS) (read as a nanos long under the legacy flag, floor-divided
     // to µs — integer div, double division would lose precision above
@@ -130,17 +151,28 @@ object Tables {
       df.createOrReplaceTempView(t)
     }
     graft.functions.GraftFunctions.register(spark)
-    // memoize only after every view and function registered: a partial
+    // record only after every view and function registered: a partial
     // failure must re-throw on the next query, not cascade into
     // missing-view errors
-    registered.put(spark, sfDir)
+    registered.put(spark, Registration(sfDir, files))
   }
 
-  /** Drop the memoized sfDir for this session so the NEXT register()
-    * call re-reads the parquet views even for the same dir. Test hook:
-    * specs that temporarily replace a view (e.g. planting a document)
-    * restore the pristine views with invalidate+register instead of
-    * bouncing through a sibling testdata dir that may not exist. */
+  /** The value this session derived under `key` from its registered
+    * tables, built once per registration. The caller registers first. */
+  private[graft] def derived[T](spark: SparkSession, key: Any)(build: => T): T = {
+    val r = registered.get(spark)
+    require(r != null, s"derived $key: the session registered no tables")
+    r.derived.getOrElseUpdate(key, build).asInstanceOf[T]
+  }
+
+  /** Every value derived so far in this session's registration. */
+  private[graft] def derivedValues(spark: SparkSession): Iterable[Any] =
+    Option(registered.get(spark)).fold(Iterable.empty[Any])(_.derived.values)
+
+  /** Drop this session's registration and everything derived from it,
+    * so the next `register` registers the views again even for the same
+    * files. Test hook: a spec that replaced a view (e.g. planting a
+    * document) restores the pristine views with invalidate+register. */
   def invalidate(spark: SparkSession): Unit = registered.remove(spark)
 
   /** Run `body` with the session conf `key` set to `value`, then put the

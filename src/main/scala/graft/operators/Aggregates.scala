@@ -64,8 +64,8 @@ object Aggregates {
     * (`graft.Fixtures.buildOnce` over lineitem: production MVs live on
     * storage, not in a session cache, and Hive's are tables), rebuilt
     * only when lineitem's files change. Every call re-registers the
-    * reader view and the definition, and attaches the rewrite rule to
-    * the session's experimental optimizations once. */
+    * reader view and the definition (`MvRewrite.register`, which also
+    * attaches the rewrite rule). */
   private def mvRegister(spark: SparkSession, sfDir: String): Unit = {
     import graft.plans.MvRewrite
     import graft.plans.MvRewrite.{AggSpec, MvDef}
@@ -90,9 +90,6 @@ object Aggregates {
       mins = Seq(AggSpec("l_extendedprice", None, "min_price")),
       maxs = Seq(AggSpec("l_extendedprice", None, "max_price")),
       countStarCol = Some("cnt")))
-    if (!spark.experimental.extraOptimizations.contains(MvRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite
   }
 
   // z-score + min-max feature scaling: the whole-corpus moments reduce
@@ -621,8 +618,8 @@ object Aggregates {
     // partition-parallel regime a 100 TB user runs stays covered by
     // ScalaTest bounds (SemanticTrapsSpec).
     // Bins are posexploded to scalar (bin, bin_x, bin_y) columns: the
-    // driver's pandas compare cannot hash an array<struct> column
-    // (round-1 `err`), and scalars also make the row count meaningful.
+    // pandas-based result compare cannot hash an array<struct> column
+    // (it reports `err`), and scalars also make the row count meaningful.
     "agg_histogram_numeric" -> Tables.sql("""
       SELECT l_returnflag, pos AS bin,
              ROUND(CAST(b.x AS DOUBLE), 6) AS bin_x,

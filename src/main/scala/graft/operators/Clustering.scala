@@ -168,7 +168,7 @@ object Clustering {
     * keeps the value total (a zero vector sorts below every real
     * cosine). Kernel, not aggregate/zip_with folds: those are
     * CodegenFallback, and the SemDeDup pair join scores O(|cluster|²)
-    * pairs — the interpreted form was 9× slower in the round-5 bench. */
+    * pairs — the interpreted form benched 9× slower. */
   private[operators] def cosD(a: Column, b: Column): Column =
     GraftFunctions.cosine_sim_d(a, b)
 
@@ -252,44 +252,25 @@ object Clustering {
         (r.getInt(0), r.getSeq[Double](1).map(v => v / n / Scale).toArray)
       }.sortBy(_._1).toSeq
 
-  /** Train-once memo: a production pipeline trains a model ONCE and
-    * reuses it; four harness queries (cluster_kmeans_assign,
-    * dedup_semantic, sample_coreset, dedup_incremental_semantic) need
-    * the same converged centroids, and before this memo each repeated
-    * the full Lloyd driver loop. Keyed per SparkSession (weakly, the
-    * Tables.register pattern — sessions stay collectable) by the full
-    * training configuration; any change of sfDir/k/iters/predicate
-    * retrains. Centroids are O(k·dim) driver state — tiny. */
-  private val models =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        scala.collection.concurrent.TrieMap[(String, Int, Int, String),
-          Seq[(Int, Array[Double])]]]())
-
-  /** Test hook: drop this session's trained models (e.g. after a spec
-    * swaps the embeddings view) so the next call retrains. */
-  def invalidateModels(spark: SparkSession): Unit = models.remove(spark)
-
   /** Run Lloyd's for `iters` updates over the rows satisfying
     * `corpusPred` (seeds = the k lowest qualifying vec_ids — on the
     * full table identical to `vec_id < k`); returns the final
-    * centroids, memoized per (session, sfDir, k, iters, predicate).
-    * A non-trivial predicate is the incremental scenario: the model is
-    * learned on the EXISTING corpus only, so a new batch can be
-    * assigned under frozen centroids. */
+    * centroids. A non-trivial predicate is the incremental scenario:
+    * the model is learned on the EXISTING corpus only, so a new batch
+    * can be assigned under frozen centroids. Trained once per (k,
+    * iters, predicate) and table registration (`Tables.derived`): four
+    * harness queries (cluster_kmeans_assign, dedup_semantic,
+    * sample_coreset, dedup_incremental_semantic) reuse one model. */
   def kmeansCentroids(spark: SparkSession, sfDir: String,
                       k: Int = K, iters: Int = Iters,
                       corpusPred: Column = lit(true)): Seq[(Int, Array[Double])] = {
-    val cache = models.computeIfAbsent(spark,
-      _ => scala.collection.concurrent.TrieMap.empty)
-    cache.getOrElseUpdate((sfDir, k, iters, corpusPred.toString),
-      trainKmeans(spark, sfDir, k, iters, corpusPred))
+    Tables.register(spark, sfDir)
+    Tables.derived(spark, ("kmeans", k, iters, corpusPred.toString))(
+      trainKmeans(spark, k, iters, corpusPred))
   }
 
-  private def trainKmeans(spark: SparkSession, sfDir: String,
-                          k: Int, iters: Int,
+  private def trainKmeans(spark: SparkSession, k: Int, iters: Int,
                           corpusPred: Column): Seq[(Int, Array[Double])] = {
-    Tables.register(spark, sfDir)
     val q = quantized(spark.table("embeddings")).where(corpusPred).persist()
     try {
       // hold expected cluster size at TargetCluster as the corpus
@@ -700,7 +681,7 @@ object Clustering {
         -- CC references the af-derived edge list once per iteration) —
         -- without the hint DuckDB may re-inline the WHOLE kmeans chain
         -- per reference, which turned the sf1 prune oracle from
-        -- minutes into CPU-hours (r13 sweep). Values are unchanged:
+        -- minutes into CPU-hours. Values are unchanged:
         -- materialization fixes evaluation count, not arithmetic.
         SELECT vec_id, qe, list_transform(qe, x -> x / 1000000.0) AS ve FROM q0
       ), qc AS MATERIALIZED (
@@ -708,8 +689,8 @@ object Clustering {
       ), c0 AS (
         -- seed count mirrors the trainer's kEff = max(k, ceil(n/TargetCluster))
         -- with the SAME integer arithmetic ((n + T-1) // T), so the oracle
-        -- tracks the corpus-size-dependent k at ANY scale factor (the r13
-        -- sf1 sweep caught the hardcoded LIMIT k diverging once n > k*T)
+        -- tracks the corpus-size-dependent k at ANY scale factor (a
+        -- hardcoded LIMIT k diverges once n > k*T, as at sf1)
         SELECT vec_id AS cid, ve AS ce FROM (
           SELECT vec_id, ve,
                  ROW_NUMBER() OVER (ORDER BY vec_id) AS graft_rn,

@@ -215,12 +215,6 @@ object Dedup {
         FROM prs WHERE n_int / (na + nb - n_int) >= 0.8
       )"""
 
-  /** pipeline_curate_ppl's persisted scored table, released on the
-    * NEXT invocation (see the query's comment — bounds the cache
-    * ledger at one live entry per JVM instead of one per run). */
-  private val curatePplCacheSlot =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   val queries: Map[String, Q] = Map(
     // Exact dedup: content digest → keep lowest doc_id per digest.
     "dedup_exact" -> Tables.sql("""
@@ -494,9 +488,7 @@ object Dedup {
     // keep rule u·csize < 2^32 — pure integer compare, exact in both
     // engines. Per-csize keep counts report the realized thinning.
     "curation_dedup_aware_sample" -> ((spark, sfDir) => {
-      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val (labels, _) = connectedComponents(spark, pairs)
+      val labels = nearDupLabels(spark, sfDir)
       val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("csize"))
       val docCsize = spark.table("documents").select(col("doc_id"))
         .join(labels.join(sizes, "comp")
@@ -519,9 +511,7 @@ object Dedup {
     // all = corpus minus CC nodes — pair-graph components are always
     // size ≥ 2). Same CC machinery, one extra aggregate.
     "dedup_cluster_stats" -> ((spark, sfDir) => {
-      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val (labels, _) = connectedComponents(spark, pairs)
+      val labels = nearDupLabels(spark, sfDir)
       val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("csize"))
       val hist = sizes.groupBy(col("csize"))
         .agg(count(lit(1)).cast("bigint").as("n_components"),
@@ -537,11 +527,7 @@ object Dedup {
     }),
 
     "dedup_clusters" -> ((spark, sfDir) => {
-      // the UNSORTED pair set — the symmetric-edge canonicalization would
-      // discard dedup_minhash_lsh's final ORDER BY range exchange unused
-      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val (labels, _) = connectedComponents(spark, pairs)
+      val labels = nearDupLabels(spark, sfDir)
       val sizes = labels.groupBy("comp").agg(count(lit(1)).as("csize"))
       labels.join(sizes, "comp")
         .select(col("node").as("doc_id"), col("comp").as("cluster"), col("csize"))
@@ -557,9 +543,7 @@ object Dedup {
     // One window over cluster-partitioned rows — no new shuffle class.
     "dedup_keep_best" -> ((spark, sfDir) => {
       import org.apache.spark.sql.expressions.Window
-      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val (labels, _) = connectedComponents(spark, pairs)
+      val labels = nearDupLabels(spark, sfDir)
       val q = spark.sql("""
         SELECT doc_id,
                SIZE(ARRAY_DISTINCT(FILTER(SPLIT(LOWER(text), ' '), w -> w <> ''))) AS n_uniq
@@ -583,28 +567,10 @@ object Dedup {
     // doc_id) is dropped. Each stage is one of the operators above; this
     // query pins that they compose, with the whole pipeline verified
     // end-to-end against an independent DuckDB formulation.
-    "pipeline_curate" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      // components directly over the pair graph — dedup_clusters' final
-      // cluster-size join and ORDER BY serve its own output contract and
-      // would be dead weight under this anti-join consumer
-      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val nonRep = connectedComponents(spark, pairs)._1
-        .where(col("node") =!= col("comp"))
-        .select(col("node").as("drop_id"))
-      val base = spark.sql(Tables.scaleHints(spark, """
-        SELECT doc_id, lang, TOKENIZE(text) AS toks,
-               MD5(CAST(text AS BINARY)) AS digest
-        FROM (SELECT /*+ REPARTITION(32) */ * FROM documents)"""))
-        .where(size(col("toks")) >= 10 &&
-          size(array_distinct(col("toks"))).cast("double") / size(col("toks")) >= 0.2)
-      val reps = base.groupBy(col("digest")).agg(min(col("doc_id")).as("keep_id"))
-      base.join(reps, base("doc_id") === reps("keep_id"))
-        .join(nonRep, base("doc_id") === nonRep("drop_id"), "left_anti")
-        .select(base("doc_id"), col("lang"), size(col("toks")).as("n_tok"))
-        .orderBy(col("doc_id"))
-    }),
+    "pipeline_curate" -> ((spark, sfDir) =>
+      curatedSurvivors(spark, sfDir)
+        .select(col("doc_id"), col("lang"), size(col("toks")).as("n_tok"))
+        .orderBy(col("doc_id"))),
 
     // pipeline_curate + the CCNet perplexity gate (the curation stack a
     // modern LLM-data run actually ships): quality gate → exact-dedup
@@ -631,40 +597,20 @@ object Dedup {
     // four stages into one statement, replicating both quantile
     // levels with the same integer-exact criterion.
     "pipeline_curate_ppl" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
-      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val nonRep = connectedComponents(spark, pairs)._1
-        .where(col("node") =!= col("comp"))
-        .select(col("node").as("drop_id"))
-      val base = spark.sql(Tables.scaleHints(spark, """
-        SELECT doc_id, lang, TOKENIZE(text) AS toks,
-               MD5(CAST(text AS BINARY)) AS digest
-        FROM (SELECT /*+ REPARTITION(32) */ * FROM documents)"""))
-        .where(size(col("toks")) >= 10 &&
-          size(array_distinct(col("toks"))).cast("double") / size(col("toks")) >= 0.2)
-      val reps = base.groupBy(col("digest")).agg(min(col("doc_id")).as("keep_id"))
+      val survivors = curatedSurvivors(spark, sfDir)
       // persist: the scored table feeds the two quantile passes (each
       // collecting one row) and the final join — without the cache the
       // whole bigram-LM chain evaluates 3× (measured +5 s at sf0.1).
-      // The slot bounds the cache footprint at ONE live entry across
-      // repeated invocations in a long-lived bench/driver JVM (a
-      // per-invocation persist() with no unpersist would leak an
-      // entry per run; the final join consumes the cache lazily AFTER
-      // this function returns, so the earliest safe release is the
-      // NEXT invocation — unpersist on an already-cleared DF is a
-      // no-op, so harness-side clearCache() composes fine).
+      // The final join reads it after this function returns, so the
+      // runner's clearCache() after the query releases it.
       val ppl = TextAnalysis.queries("text_perplexity")(spark, sfDir)
         .select(col("doc_id"), col("ppl")).persist()
-      Option(curatePplCacheSlot.getAndSet(ppl)).foreach(_.unpersist())
       // head+middle cut: t = min value covering ⌈2n/3⌉ docs, computed
       // by the two-level bounded-state quantile primitive (empty
       // corpus → -Infinity → empty funnel, not an NPE)
       val t = Quantiles.exactCutoff(ppl, "ppl", 2L, 3L,
         Quantiles.Domains.Perplexity6dp)
-      base.join(reps, base("doc_id") === reps("keep_id"))
-        .join(nonRep, base("doc_id") === nonRep("drop_id"), "left_anti")
-        .join(ppl, "doc_id")
+      survivors.join(ppl, "doc_id")
         .where(col("ppl") <= t)
         .select(col("doc_id"), col("lang"), size(col("toks")).as("n_tok"), col("ppl"))
         .orderBy(col("doc_id"))
@@ -784,6 +730,38 @@ object Dedup {
       .join(capped.withColumnRenamed("vec_id", "vec_b"), Seq("tbl", "bucket"))
       .where(col("vec_a") < col("vec_b"))
       .select("vec_a", "vec_b").distinct()
+  }
+
+  /** The near-dup clusters of the corpus: `connectedComponents`'
+    * (node, comp) labels over the MinHash-LSH pair graph. The pairs are
+    * dedup_minhash_lsh's without its final ORDER BY, whose range
+    * exchange the edge canonicalization would discard unused. */
+  private def nearDupLabels(spark: SparkSession, sfDir: String): DataFrame =
+    connectedComponents(spark, Tables.sql(MinhashPairsSql)(spark, sfDir)
+      .select(col("doc_a").as("src"), col("doc_b").as("dst")))._1
+
+  /** pipeline_curate's three stages: the (doc_id, lang, toks, ...) rows
+    * of the documents that pass the quality gate (>= 10 tokens,
+    * type-token ratio >= 0.2), are the lowest doc_id of their content
+    * digest among those, and represent their near-dup cluster (its
+    * min doc_id; clusters are over the full corpus). */
+  private def curatedSurvivors(spark: SparkSession, sfDir: String): DataFrame = {
+    Tables.register(spark, sfDir)
+    // components directly over the pair graph — dedup_clusters' final
+    // cluster-size join and ORDER BY serve its own output contract and
+    // would be dead weight under this anti-join consumer
+    val nonRep = nearDupLabels(spark, sfDir)
+      .where(col("node") =!= col("comp"))
+      .select(col("node").as("drop_id"))
+    val base = spark.sql(Tables.scaleHints(spark, """
+      SELECT doc_id, lang, TOKENIZE(text) AS toks,
+             MD5(CAST(text AS BINARY)) AS digest
+      FROM (SELECT /*+ REPARTITION(32) */ * FROM documents)"""))
+      .where(size(col("toks")) >= 10 &&
+        size(array_distinct(col("toks"))).cast("double") / size(col("toks")) >= 0.2)
+    val reps = base.groupBy(col("digest")).agg(min(col("doc_id")).as("keep_id"))
+    base.join(reps, base("doc_id") === reps("keep_id"))
+      .join(nonRep, base("doc_id") === nonRep("drop_id"), "left_anti")
   }
 
   /** Connected components over an undirected edge set via alternating

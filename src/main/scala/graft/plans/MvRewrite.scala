@@ -66,11 +66,9 @@ object MvRewrite extends Rule[LogicalPlan] {
     require(groupCols.nonEmpty && baseFiles.nonEmpty)
   }
 
-  private val registry =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        scala.collection.concurrent.TrieMap[String, MvDef]]())
-
+  /** Register `d` on the session's table registration (`Tables.derived`),
+    * which drops it when the base changes or on `Tables.invalidate`,
+    * and attach the rule to the session's optimizer once. */
   def register(spark: SparkSession, d: MvDef): Unit = {
     d.sums.foreach { s =>
       val t = s.cast.getOrElse(
@@ -80,8 +78,11 @@ object MvRewrite extends Rule[LogicalPlan] {
         s"MV ${d.mvName}: SUM partial over floating type $t is not " +
           "re-aggregation-exact; store the partial as DECIMAL")
     }
-    registry.computeIfAbsent(spark,
-      _ => scala.collection.concurrent.TrieMap.empty).put(d.mvName, d)
+    // keyed by itself: registering the same definition again is a no-op
+    graft.Tables.derived(spark, d)(d)
+    if (!spark.experimental.extraOptimizations.contains(this))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ this
   }
 
   /** The files a DataFrame's (single) file scan reads — how registrants
@@ -107,13 +108,13 @@ object MvRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val session = SparkSession.getActiveSession.orNull
     if (session == null) return plan
-    val defs = registry.get(session)
-    if (defs == null || defs.isEmpty) return plan
+    val defs = graft.Tables.derivedValues(session).collect { case d: MvDef => d }
+    if (defs.isEmpty) return plan
     plan.transform {
       case agg @ Aggregate(groupExprs, aggExprs, child, _) =>
         baseOf(child) match {
           case Some((files, filter)) =>
-            defs.values.find(d => d.baseFiles == files).flatMap(
+            defs.find(d => d.baseFiles == files).flatMap(
               rewrite(session, agg, groupExprs, aggExprs, filter, _))
               .getOrElse(agg)
           case None => agg

@@ -319,7 +319,6 @@ class AnnIndexSpec extends AnyFunSuite {
       .findFirst().get
     Files.copy(part, sfDir.resolve("embeddings.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
-    graft.Tables.invalidate(s)
     graft.Tables.register(s, sfDir.toString)
     val n1 = s.table("embeddings").count()
     assert(n1 < n0)

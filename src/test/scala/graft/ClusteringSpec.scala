@@ -159,10 +159,27 @@ class ClusteringSpec extends AnyFunSuite with Matchers {
     a1.map(_.getInt(1)).distinct.length should be <= 16
     // drop the train-once memo so the second call actually retrains —
     // otherwise this determinism check would compare a cached Seq to itself
-    Clustering.invalidateModels(spark)
+    graft.Tables.invalidate(spark)
     val cents2 = Clustering.kmeansCentroids(spark, sf, k = 16, iters = 1)
     cents.map { case (c, v) => (c, v.toSeq) } shouldBe
       cents2.map { case (c, v) => (c, v.toSeq) }   // bit-deterministic re-run
+  }
+
+  test("kmeansCentroids trains once per table registration") {
+    val s = spark.newSession()
+    val c1 = Clustering.kmeansCentroids(s, sf, k = 4, iters = 1)
+    Clustering.kmeansCentroids(s, sf, k = 4, iters = 1).eq(c1) shouldBe true
+    Clustering.kmeansCentroids(s, sf, k = 4, iters = 0).eq(c1) shouldBe false
+  }
+
+  test("kmeansCentroids retrains after Tables.invalidate") {
+    val s = spark.newSession()
+    val c1 = Clustering.kmeansCentroids(s, sf, k = 4, iters = 1)
+    graft.Tables.invalidate(s)
+    graft.Tables.register(s, sf)
+    val c2 = Clustering.kmeansCentroids(s, sf, k = 4, iters = 1)
+    withClue("the model outlived its registration: ") { c2.eq(c1) shouldBe false }
+    c2.map { case (c, v) => (c, v.toSeq) } shouldBe c1.map { case (c, v) => (c, v.toSeq) }
   }
 
   test("argmax kernel at k=256 equals brute-force per-centroid cosines") {

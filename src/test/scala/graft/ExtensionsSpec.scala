@@ -152,4 +152,19 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(np.contains("lineitem.parquet"), s"expected base scan:\n$q\n$np")
     }
   }
+
+  test("Tables.invalidate drops the MV definition until agg_mv_rewrite runs again") {
+    val s = LocalSpark.spark.newSession()
+    val mvDir = "/mv_lineitem_rf_ls_" + Integer.toHexString(LocalSpark.sf.hashCode) + "/"
+    def rewritten = s.sql("""
+      SELECT l_returnflag, COUNT(*) AS n FROM lineitem GROUP BY l_returnflag""")
+      .inputFiles.exists(_.contains(mvDir))
+    SparkEntry.queries("agg_mv_rewrite")(s, LocalSpark.sf)
+    assert(rewritten, "a derivable rollup was not rewritten to the MV")
+    Tables.invalidate(s)
+    Tables.register(s, LocalSpark.sf)
+    assert(!rewritten, "the MV definition outlived its registration")
+    SparkEntry.queries("agg_mv_rewrite")(s, LocalSpark.sf)
+    assert(rewritten, "agg_mv_rewrite did not register the MV again")
+  }
 }

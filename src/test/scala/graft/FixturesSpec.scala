@@ -48,7 +48,6 @@ class FixturesSpec extends AnyFunSuite {
       val part = Files.list(out).filter(_.toString.endsWith(".parquet")).findFirst().get
       Files.copy(part, sfDir.resolve(s"$t.parquet"), StandardCopyOption.REPLACE_EXISTING)
     }
-    Tables.invalidate(s)
     Tables.register(s, sf)
 
     for ((q, old) <- queries.zip(before)) {

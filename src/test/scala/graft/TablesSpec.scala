@@ -19,8 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** The JVM-wide parquet schema memo behind `Tables.register` and
-  * `Tables.parquet`: a hit must be exactly what Spark's inference would
-  * return in that session, and a changed file or conf must infer again.
+  * `Tables.parquet`, and the session registration: a hit must be exactly
+  * what Spark's inference would return in that session, and a changed
+  * file or conf must infer (and register) again.
   * Every spec works in its own `newSession()`, so the shared session's
   * views are never touched. */
 class TablesSpec extends AnyFunSuite with Matchers {
@@ -81,27 +82,54 @@ class TablesSpec extends AnyFunSuite with Matchers {
     jobsIn(s.read.parquet(s"$sf/lineitem.parquet").schema) should be > 0
   }
 
-  test("a file rewritten at the same path is inferred again") {
+  /** A copy of the testdata tables in a new temp dir. */
+  private def testdataCopy(): java.nio.file.Path = {
     val dir = Files.createTempDirectory("graft-tables")
     Tables.names.foreach { t =>
       Files.copy(java.nio.file.Paths.get(sf, s"$t.parquet"), dir.resolve(s"$t.parquet"))
     }
+    dir
+  }
+
+  /** Rewrite `table` in `dir` in place, at the same path, with one more
+    * column (`extra`, an `expr AS name` select item). */
+  private def addColumnInPlace(s: SparkSession, dir: java.nio.file.Path,
+                               table: String, extra: String): Unit = {
+    val staged = Files.createTempDirectory("graft-tables-staged")
+    s.table(table).selectExpr("*", extra)
+      .coalesce(1).write.mode("overwrite").parquet(staged.toString)
+    val part = Files.list(staged).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get
+    Files.copy(part, dir.resolve(s"$table.parquet"), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("a file rewritten at the same path is inferred again") {
+    val dir = testdataCopy()
     val s = spark.newSession()
     Tables.register(s, dir.toString)
     s.table("region").columns should not contain "r_extra"
 
-    val staged = Files.createTempDirectory("graft-tables-staged")
-    s.table("region").selectExpr("*", "r_regionkey * 10 AS r_extra")
-      .coalesce(1).write.mode("overwrite").parquet(staged.toString)
-    val part = Files.list(staged).filter(_.toString.endsWith(".parquet"))
-      .findFirst().get
-    Files.copy(part, dir.resolve("region.parquet"), StandardCopyOption.REPLACE_EXISTING)
-
+    addColumnInPlace(s, dir, "region", "r_regionkey * 10 AS r_extra")
     Tables.invalidate(s)
     Tables.register(s, dir.toString)
     s.table("region").columns should contain("r_extra")
     s.table("region").where("r_extra = r_regionkey * 10").count() shouldBe
       s.table("region").count()
+  }
+
+  test("a table rewritten in place is seen by the next register, without invalidate") {
+    val dir = testdataCopy()
+    val s = spark.newSession()
+    Tables.register(s, dir.toString)
+    // an unchanged registration is a hit: no job, and the views stay
+    jobsIn(Tables.register(s, dir.toString)) shouldBe 0
+    s.table("nation").columns should not contain "n_extra"
+
+    addColumnInPlace(s, dir, "nation", "n_nationkey + 1 AS n_extra")
+    Tables.register(s, dir.toString)
+    s.table("nation").columns should contain("n_extra")
+    s.table("nation").where("n_extra = n_nationkey + 1").count() shouldBe
+      s.table("nation").count()
   }
 
   test("flipping nanosAsLong is a miss, not a stale hit") {

@@ -142,8 +142,8 @@ class ThresholdInventorySpec extends AnyFunSuite {
     ("Dedup.scala", "support-floor", "HAVING COUNT(*) >= 3") ->
       (1, "invariant: oracle twin of the n_shared >= 3 evidence floor"),
     ("Dedup.scala", "tau-cut", ">= 0.2") ->
-      (4, "invariant: per-doc distinct-token ratio (curate quality gate), " +
-          "2 spark + 2 oracle"),
+      (3, "invariant: per-doc distinct-token ratio (curate quality gate), " +
+          "1 spark (curatedSurvivors) + 2 oracle"),
     ("Dedup.scala", "tau-cut", ">= 0.35") ->
       (4, "invariant: embedding cosine tau on bounded [-1,1], " +
           "cosine+lsh variants, spark+oracle"),
