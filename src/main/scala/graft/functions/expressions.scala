@@ -57,7 +57,7 @@ object Hashing {
     * dense key range it is EQUIDISTRIBUTED (discrepancy O(1)), which is
     * exactly wrong where pseudo-independent per-(key, replica) draws
     * are needed (Poisson bootstrap: lattice draws collapse resampling
-    * variance from √n to O(1), found empirically in round 8). */
+    * variance from √n to O(1), as measured on the bootstrap queries). */
   @inline def mix64(a: Long, b: Long): Long =
     fmix64(fmix64(a * 0x9e3779b97f4a7c15L) ^ ((b + 1) * 0x9e3779b97f4a7c15L))
 }
@@ -154,7 +154,7 @@ case class CosineSim(left: Expression, right: Expression)
   * total for argmax assignment. Codegen'd: the SemDeDup pair join
   * evaluates this over O(|cluster|²) candidate pairs per cluster —
   * interpreted higher-order folds (aggregate/zip_with are
-  * CodegenFallback) cost 9× more wall-clock there in the round-5 bench. */
+  * CodegenFallback) cost 9× more wall-clock there in the bench. */
 case class CosineSimD(left: Expression, right: Expression)
     extends BinaryExpression with Bridge.GraftExpectsInputTypes {
   override def dataType: DataType = DoubleType
@@ -980,8 +980,8 @@ object LangTrigramScores {
   * fraction of tokens found in the (foldable) stopword list; null for an
   * empty token array. One hashed-set pass — replaces the
   * SIZE(FILTER(toks, w -> ARRAY_CONTAINS(list, w)))/SIZE(toks) idiom,
-  * which interprets a lambda + linear list scan per token (the round-1
-  * bench flagged text_langid, which evaluates three of those per row). */
+  * which interprets a lambda + linear list scan per token (the bench
+  * flagged text_langid, which evaluates three of those per row). */
 case class StopwordRatio(left: Expression, right: Expression)
     extends BinaryExpression with Bridge.GraftExpectsInputTypes {
   override def dataType: DataType = DoubleType
@@ -1420,6 +1420,7 @@ case class JaroWinkler(left: Expression, right: Expression)
 /** Column-side API + SQL registration for the custom expressions. */
 object GraftFunctions {
   import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
 
   def cosine_sim(a: Column, b: Column): Column =
     Bridge.column(CosineSim(Bridge.expression(a), Bridge.expression(b)))
@@ -1467,7 +1468,7 @@ object GraftFunctions {
     * generator function — the single source of truth: register() walks
     * it, and FunctionParitySpec's exercise guard walks it too, so a
     * function added here without a passing smoke query fails the build
-    * (round-4 lesson: vec_sum shipped registered but unverified). */
+    * (vec_sum once shipped registered but unverified). */
   val builders: Map[String, Seq[Expression] => Expression] = Map[String, Seq[Expression] => Expression](
     "cosine_sim" -> (es => CosineSim(es(0), es(1))),
     "cosine_sim_d" -> (es => CosineSimD(es(0), es(1))),
@@ -1515,13 +1516,16 @@ object GraftFunctions {
     }
   ) ++ Hive2x.builders // [2.x] tail: mask_* family, sort_array_by, replicate_rows
 
-  /** Make the functions usable from spark.sql text too. `Tables.register`
-    * calls this once per session; call it directly only for a session
+  /** Make the functions usable from spark.sql text too: install each one
+    * the session lacks, so a second call (or a call on a session built
+    * with `GraftExtensions`) replaces nothing. `Tables.register` calls
+    * this on every registration; call it directly only for a session
     * that registers no fixture views. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.lookupFunctionBuilder(FunctionIdentifier(name)).contains(b))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -18,13 +18,17 @@ import scala.collection.mutable.ArrayBuffer
   * a clique and no triangle algorithm survives that at any scale).
   * Edges are stored once in (src < dst) orientation.
   *
-  * The Spark side builds the edge list once per query and persists it
-  * where the query reads it more than once — a SQL-CTE spelling re-runs
-  * the (incidence self-join + aggregate) edge build at every reference
-  * because Catalyst inlines CTEs (triangles reference e three times;
-  * three unrolled PageRank iterations reference it transitively ~7×).
-  * The DuckDB oracle keeps the pure-CTE spelling (DuckDB materializes
-  * CTEs) — same values.
+  * The rule for a graph query: its edge relations come from persisted
+  * views, and its body is the oracle's text. `edgeViews` is the one
+  * owner of the family's shared relations — `graph_e` (the edge list),
+  * `graph_sym` (its symmetric closure) and `graph_deg` (the symmetric
+  * degree table) — and `overEdges` runs one body in Spark over those
+  * views and in DuckDB after the CTEs that derive them. A CTE-spelled
+  * edge build would re-run the incidence self-join at every reference
+  * on Spark, because Catalyst inlines CTEs (three unrolled PageRank
+  * iterations reference it ~7×); DuckDB materializes its CTEs. The
+  * MST and kcore loops, the triangle census and sssp have their own
+  * programs (see each).
   *
   * 100 TB design:
   *  - Edge build: one DISTINCT + one self-equi-join on the order key +
@@ -48,12 +52,10 @@ object Graph {
   private type Q = (SparkSession, String) => DataFrame
 
   /** The support-filtered co-occurrence edge list in (src < dst)
-    * orientation, as a lazy DataFrame in the calling session. The
-    * co-purchase edge list is the shared input of the whole graph
-    * family; a query that reads it more than once persists it itself
-    * (the harness clears the cache after every query). Oracles keep
-    * the inline derivation (DuckDB's one-statement protocol), so
-    * correctness still checks the full pipeline per query. */
+    * orientation, with each edge's integer cost floor(1e6/w), as a lazy
+    * DataFrame in the calling session. Oracles keep the inline
+    * derivation (DuckDB's one-statement protocol), so correctness still
+    * checks the full pipeline per query. */
   private[graft] def weightedEdges(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
     val io = spark.table("lineitem")
@@ -72,46 +74,49 @@ object Graph {
   private def edges(spark: SparkSession, sfDir: String): DataFrame =
     weightedEdges(spark, sfDir).select(col("src"), col("dst"))
 
-  // ---- shared DuckDB-oracle CTE text ----
+  // ---- the shared edge relations ----
 
-  // ORACLE-ONLY (DuckDB) — AS MATERIALIZED: the co-purchase self-join is
-  // referenced 2-3x by most graph oracles and DuckDB's CTE inlining
-  // re-evaluates it per reference; at sf1 the kcore peel chain compounded
-  // that into a 78 GB temp spill. Values unchanged.
+  // The oracle's derivation of graph_e. ORACLE-ONLY (DuckDB) — AS
+  // MATERIALIZED: the co-purchase self-join is referenced 2-3x by most
+  // graph oracles and DuckDB's CTE inlining re-evaluates it per
+  // reference; at sf1 the kcore peel chain compounded that into a 78 GB
+  // temp spill. Values unchanged.
   private val EdgeCte = """
-      WITH io AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-      e AS MATERIALIZED (
+      io AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+      graph_e AS MATERIALIZED (
         SELECT a.p AS src, b.p AS dst
         FROM io a JOIN io b ON a.o = b.o AND a.p < b.p
         GROUP BY a.p, b.p
         HAVING COUNT(*) >= 2
       )"""
 
-  // one quantized PageRank iteration: contribution = floor(q/deg) in
-  // 1e-6 units (exact integer-valued double), damping 0.85 = 17/20
-  // applied as floor(17*sum/20) — 17*sum stays < 2^53 so the double
-  // arithmetic is exact; dangling-safe via LEFT JOIN (a node with no
-  // in-edges keeps the 0.15 teleport mass)
-  /** PPR twin of prIter: restart mass returns to the seed only. */
-  private def pprIter(k: Int): String = s"""
-      , ppr$k AS (
-        SELECT d2.node AS node,
-               CASE WHEN d2.node = sd.s THEN 150000.0 ELSE 0.0 END
-                 + FLOOR(17.0 * COALESCE(c.sm, 0.0) / 20.0) AS q
-        FROM deg d2 CROSS JOIN seed sd LEFT JOIN (
-          SELECT s.dst AS node,
-                 CAST(SUM(FLOOR(CAST(p.q AS DOUBLE) / CAST(d.degree AS DOUBLE))) AS DOUBLE) AS sm
-          FROM sym s JOIN ppr${k - 1} p ON s.src = p.node JOIN deg d ON s.src = d.node
-          GROUP BY s.dst) c ON d2.node = c.node)"""
+  // graph_sym and graph_deg over graph_e: the text of both the Spark
+  // views and the oracle's CTEs
+  private val SymSql =
+    "SELECT src, dst FROM graph_e UNION ALL SELECT dst AS src, src AS dst FROM graph_e"
+  private val DegSql = "SELECT src AS node, COUNT(*) AS degree FROM graph_sym GROUP BY src"
 
-  private def prIter(k: Int): String = s"""
-      , pr$k AS (
-        SELECT d2.node AS node, 150000.0 + FLOOR(17.0 * COALESCE(c.s, 0.0) / 20.0) AS q
-        FROM deg d2 LEFT JOIN (
-          SELECT s.dst AS node,
-                 CAST(SUM(FLOOR(CAST(p.q AS DOUBLE) / CAST(d.degree AS DOUBLE))) AS DOUBLE) AS s
-          FROM sym s JOIN pr${k - 1} p ON s.src = p.node JOIN deg d ON s.src = d.node
-          GROUP BY s.dst) c ON d2.node = c.node)"""
+  /** Persist `graph_e`, `graph_sym` and `graph_deg` in the calling
+    * session and register them as its temp views: the only place the
+    * graph family persists them. Lazy, so it runs no Spark job; every
+    * call builds them over the session's registered tables again (a
+    * plan still cached is found by the cache manager, not recomputed),
+    * and the runner's `clearCache()` after a query releases them. */
+  private def edgeViews(spark: SparkSession, sfDir: String): Unit = {
+    edges(spark, sfDir).persist().createOrReplaceTempView("graph_e")
+    for ((view, sql) <- Seq("graph_sym" -> SymSql, "graph_deg" -> DegSql))
+      spark.sql(sql).persist().createOrReplaceTempView(view)
+  }
+
+  /** A query over the shared edge relations and its oracle: the same
+    * `body` (its own CTEs, then its SELECT) after `w`. Spark reads the
+    * relations from `edgeViews`; DuckDB derives them in CTEs of the same
+    * names before the body. */
+  private def overEdges(body: String, w: String = "WITH"): (Q, String) = (
+    (spark, sfDir) => { edgeViews(spark, sfDir); spark.sql(s"$w $body") },
+    s"""$w $EdgeCte,
+      graph_sym AS MATERIALIZED ($SymSql),
+      graph_deg AS MATERIALIZED ($DegSql),$body""")
 
   // Directed association rules (support / confidence / lift — the
   // market-basket complement of text_pmi_bigrams' symmetric score):
@@ -250,23 +255,18 @@ object Graph {
   // the unrolled khop/sssp spellings hand-build, now driven by the
   // engine's own loop operator. The support floor keeps the walk count
   // bounded (measured: ≤258 walks at sf0.01, ≤20 at sf0.1 —
-  // co-occurrence sparsifies as the catalog grows).
-  //
-  // The recursion text is shared verbatim; only the edge source
-  // differs: Spark reads a PERSISTED temp view (UnionLoopExec re-plans
-  // its step every iteration, and Catalyst inlines CTEs — with the
-  // edge build as a CTE each of the 3 iterations re-ran the full
-  // lineitem self-join, 24 s at sf0.1; against the cached view it's
-  // the one edge build plus id-pair joins), while DuckDB keeps the
-  // pure-CTE spelling it materializes anyway.
-  private def reachRecursiveSql(symSrc: String) = s"""
-      WITH RECURSIVE
-      seeds AS (SELECT DISTINCT src AS seed FROM $symSrc ORDER BY seed LIMIT 3),
+  // co-occurrence sparsifies as the catalog grows). UnionLoopExec
+  // re-plans its step every iteration: with the edge build as a CTE
+  // each of the 3 iterations re-ran the full lineitem self-join (24 s
+  // at sf0.1), against the persisted graph_sym it is the one edge build
+  // plus id-pair joins.
+  private val ReachSql = """
+      seeds AS (SELECT DISTINCT src AS seed FROM graph_sym ORDER BY seed LIMIT 3),
       walk(seed, node, depth) AS (
         SELECT seed, seed AS node, 0 AS depth FROM seeds
         UNION ALL
         SELECT w.seed, s.dst AS node, w.depth + 1 AS depth
-        FROM walk w JOIN $symSrc s ON w.node = s.src
+        FROM walk w JOIN graph_sym s ON w.node = s.src
         WHERE w.depth < 3
       )
       SELECT seed, node, CAST(MIN(depth) AS INT) AS dist, COUNT(*) AS n_walks
@@ -405,23 +405,19 @@ object Graph {
   /** Per-node local clustering coefficient: each (src<dst)-oriented
     * triangle from the wedge join credits its three corners once, then
     * coeff = 2·tri / (deg·(deg−1)) over the SYMMETRIC degree. Counts
-    * are exact; the coefficient is one ROUNDed division. `eSrc`/`symSrc`
-    * name the edge relations (Spark: persisted views — the triangle
-    * CTE references the edge list three times; DuckDB: the e/sym CTEs). */
-  private def localClusteringSql(eSrc: String, symSrc: String): String = s"""
-      , t AS (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-              FROM $eSrc e1 JOIN $eSrc e2 ON e1.dst = e2.src
-              JOIN $eSrc e3 ON e3.src = e1.src AND e3.dst = e2.dst)
+    * are exact; the coefficient is one ROUNDed division. */
+  private val LocalClusteringSql = """
+      t AS (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
+            FROM graph_e e1 JOIN graph_e e2 ON e1.dst = e2.src
+            JOIN graph_e e3 ON e3.src = e1.src AND e3.dst = e2.dst)
       , tv AS (SELECT a AS node FROM t
                UNION ALL SELECT b FROM t
                UNION ALL SELECT c FROM t)
       , tc AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS n_tri FROM tv GROUP BY node)
-      , degl AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree
-                 FROM $symSrc GROUP BY src)
       SELECT d.node, d.degree, COALESCE(tc.n_tri, 0) AS n_triangles,
              ROUND(2.0E0 * CAST(COALESCE(tc.n_tri, 0) AS DOUBLE)
                    / CAST(d.degree * (d.degree - 1) AS DOUBLE), 6) AS clustering_coeff
-      FROM degl d LEFT JOIN tc ON tc.node = d.node
+      FROM graph_deg d LEFT JOIN tc ON tc.node = d.node
       WHERE d.degree >= 2
       ORDER BY n_triangles DESC, clustering_coeff DESC, d.node
       LIMIT 20"""
@@ -433,16 +429,13 @@ object Graph {
     * only — the khop plan); 1/d is encoded as exact SIXTHS
     * (6/1, 6/2, 6/3 → 6,3,2 via CASE — no division at all), so the
     * centrality sum is an exact integer and the float display twin is
-    * one raw IEEE division (q6/6.0 is off-grid, no ROUND trap).
-    * `symSrc` names the symmetric edge relation: Spark passes a
-    * PERSISTED view (the three hops + dedup reference it five times;
-    * CTE inlining would re-run the edge build each time). */
-  private def harmonicSql(symSrc: String): String = s"""
-      , h1 AS (SELECT DISTINCT src AS u, dst AS v FROM $symSrc)
+    * one raw IEEE division (q6/6.0 is off-grid, no ROUND trap). */
+  private val HarmonicSql = """
+      h1 AS (SELECT DISTINCT src AS u, dst AS v FROM graph_sym)
       , h2 AS (SELECT DISTINCT a.u, s.dst AS v
-               FROM h1 a JOIN $symSrc s ON s.src = a.v WHERE s.dst <> a.u)
+               FROM h1 a JOIN graph_sym s ON s.src = a.v WHERE s.dst <> a.u)
       , h3 AS (SELECT DISTINCT b.u, s.dst AS v
-               FROM h2 b JOIN $symSrc s ON s.src = b.v WHERE s.dst <> b.u)
+               FROM h2 b JOIN graph_sym s ON s.src = b.v WHERE s.dst <> b.u)
       , dist AS (
           SELECT u, v, MIN(d) AS d FROM (
             SELECT u, v, 1 AS d FROM h1
@@ -463,12 +456,10 @@ object Graph {
     * routes through DECIMAL, the coefficient is one ROUNDed IEEE chain
     * (generic quotient, off-grid). Two id-keyed joins + one aggregate
     * at any scale. */
-  private def assortativitySql(symSrc: String): String = s"""
-      , adeg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS k
-                 FROM $symSrc GROUP BY src)
-      , ep AS (SELECT da.k AS ka, db.k AS kb
-               FROM $symSrc s JOIN adeg da ON s.src = da.node
-               JOIN adeg db ON s.dst = db.node)
+  private val AssortativitySql = """
+      ep AS (SELECT da.degree AS ka, db.degree AS kb
+             FROM graph_sym s JOIN graph_deg da ON s.src = da.node
+             JOIN graph_deg db ON s.dst = db.node)
       , mo AS (
           SELECT CAST(COUNT(*) AS DOUBLE) AS n,
                  CAST(SUM(CAST(ka AS DECIMAL(18, 0))) AS DOUBLE) AS sa,
@@ -604,7 +595,191 @@ object Graph {
   private def degrees(sym: RDD[(Long, Long)], width: Int): RDD[(Long, Long)] =
     sym.map { case (s, _) => (s, 1L) }.reduceByKey(_ + _, width)
 
-  val queries: Map[String, Q] = Map(
+  // ---- queries over the shared edge relations (`overEdges`) ----
+
+  // degree histogram — the shape-of-the-graph diagnostic run before
+  // any join-heavy graph op (skew detection for the salting decision)
+  private val DegreeStatsSql = """
+      hist AS (SELECT degree, COUNT(*) AS n_nodes FROM graph_deg GROUP BY degree)
+      SELECT degree, n_nodes FROM hist ORDER BY degree"""
+
+  // Bounded-depth BFS (friend-of-friend counts): 1-hop and ≤2-hop
+  // neighborhood sizes for the 10 lowest-id nodes, via two hash joins
+  // over the symmetric edge list. The seed set broadcasts, the frontier
+  // shuffles are (seed, node) id pairs only, and depth is fixed — the
+  // plan holds at any graph size (iterated-join BFS, the same shape
+  // each extra hop adds one join to).
+  private val KhopSql = """
+      seeds AS (SELECT node AS seed FROM graph_deg ORDER BY seed LIMIT 10)
+      , h1 AS (SELECT DISTINCT s.seed, y.dst AS nb FROM seeds s JOIN graph_sym y ON y.src = s.seed)
+      , h2 AS (SELECT h1.seed, y.dst AS nb FROM h1 JOIN graph_sym y ON y.src = h1.nb)
+      , reach AS (SELECT DISTINCT seed, nb
+                  FROM (SELECT seed, nb FROM h1 UNION ALL SELECT seed, nb FROM h2) u
+                  WHERE nb <> seed)
+      SELECT d1.seed, d1.n_1hop, d2.n_2hop
+      FROM (SELECT seed, COUNT(*) AS n_1hop FROM h1 GROUP BY seed) d1
+      JOIN (SELECT seed, COUNT(*) AS n_2hop FROM reach GROUP BY seed) d2
+        ON d1.seed = d2.seed
+      ORDER BY d1.seed"""
+
+  // one synchronous LPA iteration (vote = count DESC, label ASC)
+  private def lpIter(k: Int): String = s"""
+      , nl$k AS (
+        SELECT s.dst AS node, p.lbl AS lbl, COUNT(*) AS c
+        FROM graph_sym s JOIN lp${k - 1} p ON s.src = p.node
+        GROUP BY s.dst, p.lbl
+      ), lp$k AS (
+        SELECT node, lbl FROM (
+          SELECT node, lbl,
+                 ROW_NUMBER() OVER (PARTITION BY node
+                                    ORDER BY c DESC, lbl) AS rn
+          FROM nl$k) x
+        WHERE rn = 1
+      )"""
+
+  // Synchronous label propagation (Raghavan et al. 2007), 3 unrolled
+  // iterations from one label per node with the deterministic
+  // (count DESC, label ASC) vote — community detection as pure
+  // joins+aggregates. Each iteration is one edge⋈label join
+  // (node-keyed shuffle of id pairs) plus a per-node argmax window.
+  private val LpaCtes = """
+      lp0 AS (SELECT node, node AS lbl FROM graph_deg)""" +
+    lpIter(1) + lpIter(2) + lpIter(3)
+
+  // the top-20 LPA communities
+  private val LabelPropSql = LpaCtes + """
+      SELECT lbl AS community, COUNT(*) AS size
+      FROM lp3 GROUP BY lbl
+      ORDER BY size DESC, community LIMIT 20"""
+
+  // Modularity of the 3-round LPA communities (Newman–Girvan Q): per
+  // community c, contribution = e_c/m − (d_c/2m)² over intra-edge count
+  // e_c, degree mass d_c and edge total m — the community-detection
+  // story's quality score. All three counts come from one aggregate
+  // over the symmetric edges labelled at both ends (two id-pair
+  // equi-joins): every node has an edge, so a community's members are
+  // its edges' distinct sources, d_c is its edge ends, and e_c counts
+  // each intra-community edge once (src < dst). Each contribution is
+  // one IEEE chain on exact counts (squared via multiply, not POW — no
+  // libm), ROUNDed before the (size DESC, community) total order. + 0.0
+  // normalizes a rounded −0.0 (a tiny negative contribution rounding to
+  // zero keeps its sign bit, and the engines disagree on which zero to
+  // print — surfaced at sf0.1). m is a one-row CTE, so building the
+  // query runs no job.
+  private val ModularitySql = LpaCtes + """
+      , m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS m FROM graph_e)
+      , dc AS (SELECT a.lbl, CAST(COUNT(DISTINCT s.src) AS BIGINT) AS size,
+                      CAST(COUNT(*) AS BIGINT) AS d_c,
+                      CAST(SUM(CASE WHEN a.lbl = b.lbl AND s.src < s.dst THEN 1 ELSE 0 END)
+                           AS BIGINT) AS e_c
+               FROM graph_sym s JOIN lp3 a ON s.src = a.node JOIN lp3 b ON s.dst = b.node
+               GROUP BY a.lbl)
+      SELECT dc.lbl AS community, dc.size, dc.d_c, dc.e_c,
+             ROUND(CAST(dc.e_c AS DOUBLE) / m.m
+                   - (CAST(dc.d_c AS DOUBLE) / (2.0 * m.m))
+                     * (CAST(dc.d_c AS DOUBLE) / (2.0 * m.m)), 6) + 0.0 AS contribution
+      FROM dc CROSS JOIN m
+      ORDER BY dc.size DESC, community LIMIT 20"""
+
+  // Link prediction (Liben-Nowell & Kleinberg 2003): for node pairs at
+  // distance 2 (NOT already linked), common-neighbor count, Adamic–Adar
+  // Σ_z 1/ln(deg z), and neighborhood Jaccard — the "which products will
+  // co-occur next" primitive. The wedge join is the triangles plan
+  // (bounded by the support floor, never all-pairs); each Adamic–Adar
+  // term quantizes to an exact 1e-6 integer BEFORE the sum (the geomean
+  // discipline — both engines' ln agree far inside the quantum), so the
+  // SUM is order-independent and the (aa_q DESC, a, b) top-20 cut is
+  // total. A common neighbor has >= 2 neighbors by construction; the
+  // degree >= 2 guard keeps ln(1) = 0 out of the division anyway.
+  // Existing edges drop by an anti-join against the (src < dst) store.
+  private val AdamicAdarSql = """
+      zw AS (SELECT node AS z,
+                    CAST(ROUND(1000000.0 / LN(CAST(degree AS DOUBLE))) AS BIGINT) AS wq
+             FROM graph_deg WHERE degree >= 2)
+      , cand AS (
+          SELECT za.dst AS a, zb.dst AS b,
+                 COUNT(*) AS common_nbrs, CAST(SUM(w.wq) AS BIGINT) AS aa_q
+          FROM graph_sym za JOIN graph_sym zb ON za.src = zb.src AND za.dst < zb.dst
+          JOIN zw w ON w.z = za.src
+          GROUP BY za.dst, zb.dst)
+      , ne AS (
+          SELECT c.a, c.b, c.common_nbrs, c.aa_q
+          FROM cand c
+          WHERE NOT EXISTS (SELECT 1 FROM graph_e e WHERE e.src = c.a AND e.dst = c.b))
+      SELECT ne.a AS node_a, ne.b AS node_b, ne.common_nbrs, ne.aa_q,
+             ROUND(CAST(ne.aa_q AS DOUBLE) / 1000000.0, 6) AS adamic_adar,
+             ROUND(CAST(ne.common_nbrs AS DOUBLE)
+                   / CAST(da.degree + db.degree - ne.common_nbrs AS DOUBLE), 6) AS jaccard
+      FROM ne JOIN graph_deg da ON da.node = ne.a JOIN graph_deg db ON db.node = ne.b
+      ORDER BY ne.aa_q DESC, node_a, node_b
+      LIMIT 20"""
+
+  // Three quantized (personalized) PageRank iterations r1..r3 from r0
+  // over graph_sym. Ranks live in 1e-6 units: each node sends
+  // floor(q/deg) (an exact integer-valued double), and keeps `restart`
+  // plus the damped in-mass
+  // floor(17*sum/20) (damping 0.85 = 17/20; 17*sum stays < 2^53, so the
+  // double arithmetic is exact, every SUM is order-independent and both
+  // engines replay the iteration bit-for-bit). Dangling-safe via LEFT
+  // JOIN: a node with no in-edges keeps its restart mass. Only the
+  // frontier (q > 0) sends: a zero-mass node would send floor(0/deg) =
+  // 0, which COALESCE supplies for an absent one, so the filter changes
+  // no value and only shrinks the join.
+  private def rankIters(r: String, restart: String): String = (1 to 3).map(k => s"""
+      , $r$k AS (
+        SELECT d2.node AS node, $restart + FLOOR(17.0 * COALESCE(c.s, 0.0) / 20.0) AS q
+        FROM graph_deg d2 LEFT JOIN (
+          SELECT s.dst AS node,
+                 CAST(SUM(FLOOR(CAST(p.q AS DOUBLE) / CAST(d.degree AS DOUBLE))) AS DOUBLE) AS s
+          FROM graph_sym s JOIN $r${k - 1} p ON s.src = p.node JOIN graph_deg d ON s.src = d.node
+          WHERE p.q > 0
+          GROUP BY s.dst) c ON d2.node = c.node)""").mkString
+
+  // 3 quantized PageRank iterations from the uniform start, top-20
+  // nodes. Exact-integer projection only: pr_q IS the score on the 1e-6
+  // grid. There is no display-double ROUND twin: the int-over-1e6
+  // quotient class diverged across engines in decimal/double division
+  // (graph_sssp), and a consumer can always divide at presentation time.
+  private val PageRankSql = """
+      pr0 AS (SELECT node, CAST(1000000 AS DOUBLE) AS q FROM graph_deg)""" +
+    rankIters("pr", "150000.0") + """
+      SELECT node, CAST(q AS BIGINT) AS pr_q
+      FROM pr3 ORDER BY pr_q DESC, node LIMIT 20"""
+
+  // Personalized PageRank (Jeh & Widom WWW'03; the recommendation /
+  // local-ranking variant): the restart mass returns to the SEED node
+  // instead of spreading uniformly, so scores measure proximity to the
+  // seed. The seed is the max-degree hub (tie-break min id): a one-hot
+  // start from a degree-1 leaf reaches 2 nodes in 3 rounds, and the hub
+  // neighborhood is what a PPR recommendation query looks like. It is a
+  // one-row CTE, so building the query runs no job. Sparsity IS the
+  // plan: mass starts one-hot and stays concentrated near the seed, and
+  // each round joins only the frontier, so round-1 cost is O(deg(seed)),
+  // not O(E).
+  private val PprSql = """
+      seed AS (SELECT node AS s FROM graph_deg ORDER BY degree DESC, node LIMIT 1)
+      , ppr0 AS (SELECT node, CASE WHEN node = (SELECT s FROM seed) THEN CAST(1000000 AS DOUBLE)
+                                   ELSE CAST(0 AS DOUBLE) END AS q
+                 FROM graph_deg)""" +
+    rankIters("ppr", "CASE WHEN d2.node = (SELECT s FROM seed) THEN 150000.0 ELSE 0.0 END") + """
+      SELECT node, CAST(q AS BIGINT) AS ppr_q
+      FROM ppr3 WHERE CAST(q AS BIGINT) > 0
+      ORDER BY ppr_q DESC, node LIMIT 20"""
+
+  private val shared: Map[String, (Q, String)] = Map(
+    "graph_degree_stats" -> overEdges(DegreeStatsSql),
+    "graph_khop" -> overEdges(KhopSql),
+    "graph_label_prop" -> overEdges(LabelPropSql),
+    "graph_modularity" -> overEdges(ModularitySql),
+    "graph_adamic_adar" -> overEdges(AdamicAdarSql),
+    "graph_pagerank" -> overEdges(PageRankSql),
+    "graph_ppr" -> overEdges(PprSql),
+    "graph_harmonic_centrality" -> overEdges(HarmonicSql),
+    "graph_assortativity" -> overEdges(AssortativitySql),
+    "graph_local_clustering" -> overEdges(LocalClusteringSql),
+    "graph_reach_recursive" -> overEdges(ReachSql, "WITH RECURSIVE"))
+
+  val queries: Map[String, Q] = shared.map { case (name, (q, _)) => name -> q } ++ Map(
     // Driver loop over checkpointed rounds, each a fixed RDD program
     // (as for kcore, and more so: the single-statement spelling's
     // scalar subqueries re-derive TWO rounds of cand/sel/jump chains
@@ -659,18 +834,6 @@ object Graph {
       import spark.implicits._
       rows.toSeq.toDF("round", "n", "total_cost_q")
     }),
-    "graph_harmonic_centrality" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir)
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .persist().createOrReplaceTempView("harm_sym")
-      spark.sql("WITH z AS (SELECT 1)" + harmonicSql("harm_sym"))
-    }),
-    "graph_assortativity" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir)
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .persist().createOrReplaceTempView("asso_sym")
-      spark.sql("WITH z AS (SELECT 1)" + assortativitySql("asso_sym"))
-    }),
     "recsys_user_cf" -> Tables.sql(UserCfSql),
     "recsys_als_step" -> Tables.sql(alsStepSql(spark = true)),
     // Driver loop over checkpointed peels, each a fixed RDD program
@@ -703,14 +866,6 @@ object Graph {
       import spark.implicits._
       rows.toSeq.toDF("round", "n_nodes", "n_edges")
     }),
-    "graph_local_clustering" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir).persist()
-      e.createOrReplaceTempView("lcc_e")
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .createOrReplaceTempView("lcc_sym")
-      spark.sql("WITH x AS (SELECT 1)" +
-        localClusteringSql("lcc_e", "lcc_sym"))
-    }),
     "graph_assoc_rules" -> Tables.sql(assocSql(spark = true)),
     "recsys_item_sim" -> Tables.sql(ItemSimSql),
     // sssp keeps the single-statement spelling on BOTH sides: unlike
@@ -720,280 +875,27 @@ object Graph {
     // spelling measured SLOWER (7.2 s vs 3.3 s at sf0.1: cache-write
     // overhead for no reuse the optimizer wasn't already getting).
     "graph_sssp" -> Tables.sql(ssspSql(spark = true)),
-    "graph_reach_recursive" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir)
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .persist().createOrReplaceTempView("reach_sym")
-      spark.sql(reachRecursiveSql("reach_sym"))
-    }),
     // global triangle census (+ node/edge counts): two-hash-join wedge
     // closure on the once-stored (src < dst) orientation. The three
-    // counts are driver-side scalars over the persisted edge list
-    // (1-row result — not a row-scale collect).
+    // counts are driver-side scalars from one job, which also fills
+    // the graph_e persist once for all branches (1-row result — not a
+    // row-scale collect).
     "graph_triangles" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir).persist()
+      edgeViews(spark, sfDir)
+      val e = spark.table("graph_e")
       val nodes = e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct()
       val e1 = e.select(col("src").as("a"), col("dst").as("b"))
       val e2 = e.select(col("src").as("b"), col("dst").as("c"))
       val e3 = e.select(col("src").as("a"), col("dst").as("c"))
       val tri = e1.join(e2, Seq("b")).join(e3, Seq("a", "c"))
-      // all three census scalars in one job, which also fills the edge
-      // persist once for all branches
       val Seq(nNodes, nEdges, nTri) = Loops.counts(nodes, e, tri)
       import spark.implicits._
       Seq((nNodes, nEdges, nTri)).toDF("n_nodes", "n_edges", "n_triangles")
-    }),
-
-    // degree histogram — the shape-of-the-graph diagnostic run before
-    // any join-heavy graph op (skew detection for the salting decision)
-    "graph_degree_stats" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir).persist()
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-        .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
-        .orderBy(col("degree"))
-    }),
-
-    // Bounded-depth BFS (friend-of-friend counts): 1-hop and ≤2-hop
-    // neighborhood sizes for the 10 lowest-id nodes, via two hash
-    // joins over the symmetric edge list. The seed set broadcasts, the
-    // frontier shuffles are (seed, node) id pairs only, and depth is
-    // fixed — the plan holds at any graph size (iterated-join BFS, the
-    // same shape each extra hop adds one join to).
-    "graph_khop" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir).persist()
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      val seeds = sym.select(col("src").as("seed")).distinct()
-        .orderBy(col("seed")).limit(10)
-      val h1 = seeds.join(sym, col("seed") === col("src"))
-        .select(col("seed"), col("dst").as("nb")).distinct().persist()
-      val h2 = h1.select(col("seed"), col("nb").as("mid"))
-        .join(sym.select(col("src").as("mid"), col("dst")), Seq("mid"))
-        .select(col("seed"), col("dst").as("nb"))
-      val reach = h1.union(h2).where(col("nb") =!= col("seed")).distinct()
-      val d1 = h1.groupBy(col("seed")).agg(count(lit(1)).as("n_1hop"))
-      val d2 = reach.groupBy(col("seed")).agg(count(lit(1)).as("n_2hop"))
-      d1.join(d2, Seq("seed")).orderBy(col("seed"))
-    }),
-
-    // Synchronous label propagation (Raghavan et al. 2007), 3 unrolled
-    // iterations with the deterministic (count DESC, label ASC) vote —
-    // community detection as pure joins+aggregates. Each iteration is
-    // one edge⋈label join (node-keyed shuffle of id pairs) plus a
-    // per-node argmax window; the oracle replays the identical
-    // iteration so communities match exactly. Top-20 communities.
-    "graph_label_prop" -> ((spark, sfDir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = edges(spark, sfDir).persist()
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      var lp = sym.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node"))
-      for (_ <- 1 to 3) {
-        val nl = sym.join(lp.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("node"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-        val w = Window.partitionBy("node").orderBy(col("c").desc, col("lbl"))
-        lp = nl.withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1).select("node", "lbl")
-      }
-      lp.groupBy(col("lbl").as("community")).agg(count(lit(1)).as("size"))
-        .orderBy(col("size").desc, col("community")).limit(20)
-    }),
-
-    // Link prediction (Liben-Nowell & Kleinberg 2003): for node pairs
-    // at distance 2 (NOT already linked), common-neighbor count,
-    // Adamic–Adar Σ_z 1/ln(deg z), and neighborhood Jaccard — the
-    // "which products will co-occur next" primitive. The wedge join is
-    // the triangles plan (bounded by the support floor, never
-    // all-pairs); each Adamic–Adar term quantizes to an exact 1e-6
-    // integer BEFORE the sum (the geomean discipline — both engines'
-    // ln agree far inside the quantum), so the SUM is order-independent
-    // and the (aa_q DESC, a, b) top-20 cut is total. Existing edges
-    // drop via LEFT ANTI against the (src < dst) store.
-    "graph_adamic_adar" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir).persist()
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      val deg = sym.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("degree")).persist()
-      // a common neighbor has >= 2 neighbors by construction; the
-      // degree>=2 guard keeps ln(1)=0 out of the division anyway
-      val zw = deg.where(col("degree") >= 2)
-        .select(col("node").as("z"),
-          round(lit(1000000.0) / log(col("degree").cast("double")))
-            .cast("bigint").as("wq"))
-      val za = sym.select(col("src").as("z"), col("dst").as("a"))
-      val zb = sym.select(col("src").as("z"), col("dst").as("b"))
-      val cand = za.join(zb, Seq("z")).where(col("a") < col("b"))
-        .join(zw, Seq("z"))
-        .groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("common_nbrs"), sum(col("wq")).as("aa_q"))
-      cand
-        .join(e.select(col("src").as("a"), col("dst").as("b")),
-          Seq("a", "b"), "left_anti")
-        .join(deg.select(col("node").as("a"), col("degree").as("da")), Seq("a"))
-        .join(deg.select(col("node").as("b"), col("degree").as("db")), Seq("b"))
-        .select(col("a").as("node_a"), col("b").as("node_b"),
-          col("common_nbrs"), col("aa_q"),
-          round(col("aa_q").cast("double") / lit(1000000.0), 6).as("adamic_adar"),
-          round(col("common_nbrs").cast("double")
-            / (col("da") + col("db") - col("common_nbrs")).cast("double"), 6)
-            .as("jaccard"))
-        .orderBy(col("aa_q").desc, col("node_a"), col("node_b"))
-        .limit(20)
-    }),
-
-    // Modularity of the 3-round LPA communities (Newman–Girvan Q):
-    // per community c, contribution = e_c/m − (d_c/2m)² over intra-edge
-    // count e_c, degree mass d_c, edge total m. Completes the
-    // community-detection story with its quality score. Counts are all
-    // exact integers off two label equi-joins (the membership join on
-    // each edge endpoint — id-pair shuffles only); each contribution is
-    // one IEEE chain on exact counts (squared via multiply, not POW —
-    // no libm), ROUNDed before the (size DESC, community) total order.
-    // m is a driver-side scalar (one count over the persisted edges).
-    "graph_modularity" -> ((spark, sfDir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = edges(spark, sfDir).persist()
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      var lp = sym.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node"))
-      for (_ <- 1 to 3) {
-        val nl = sym.join(lp.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("node"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-        val w = Window.partitionBy("node").orderBy(col("c").desc, col("lbl"))
-        lp = nl.withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1).select("node", "lbl")
-      }
-      lp = lp.persist()
-      val m = e.count().toDouble
-      val deg = sym.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("degree"))
-      val dc = deg.join(lp, Seq("node"))
-        .groupBy(col("lbl"))
-        .agg(sum(col("degree")).as("d_c"), count(lit(1)).as("size"))
-      val ein = e
-        .join(lp.select(col("node").as("src"), col("lbl").as("la")), Seq("src"))
-        .join(lp.select(col("node").as("dst"), col("lbl").as("lb")), Seq("dst"))
-        .where(col("la") === col("lb"))
-        .groupBy(col("la").as("lbl")).agg(count(lit(1)).as("e_c"))
-      val r = col("d_c").cast("double") / lit(2.0 * m)
-      dc.join(ein, Seq("lbl"), "left")
-        .select(col("lbl").as("community"), col("size"), col("d_c"),
-          coalesce(col("e_c"), lit(0L)).as("e_c"),
-          // + 0.0 normalizes a rounded −0.0 (a tiny negative contribution
-          // rounding to zero keeps its sign bit, and the engines disagree
-          // on which zero to print — surfaced at sf0.1)
-          (round(coalesce(col("e_c"), lit(0L)).cast("double") / lit(m) - r * r, 6)
-            + lit(0.0)).as("contribution"))
-        .orderBy(col("size").desc, col("community"))
-        .limit(20)
-    }),
-
-    // 3 unrolled quantized-PageRank iterations, top-20 nodes; the
-    // oracle replays the identical iteration, so values match exactly
-    // Personalized PageRank (Jeh & Widom WWW'03; the recommendation /
-    // local-ranking variant): the restart mass returns to the SEED
-    // node instead of spreading uniformly, so scores measure proximity
-    // to the seed. Same exact integer-grid iteration discipline as
-    // graph_pagerank (quantized contributions, FLOOR'd 17/20 damping —
-    // both engines replay bit-for-bit); the seed (MIN node id) is one
-    // collected scalar — driver state, as in any PPR service. Sparsity
-    // IS the plan: mass starts one-hot and stays concentrated near the
-    // seed, so each round joins only the FRONTIER (q > 0 rows) against
-    // the edge list — round-1 cost is O(deg(seed)), not O(E). The
-    // filter is result-invariant: a zero-mass node contributes
-    // floor(0/degree) = 0, exactly what the coalesce(s, 0) on the
-    // receive side already supplies for absent rows.
-    "graph_ppr" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir).persist()
-      val sym = e.select(col("src"), col("dst"))
-        .union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      val deg = sym.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("degree")).persist()
-      // seed at the max-degree hub (tie-break min id): a one-hot start
-      // from a degree-1 leaf reaches 2 nodes in 3 rounds — the hub
-      // neighborhood is what a PPR recommendation query looks like
-      val seed = deg.orderBy(col("degree").desc, col("node")).first().getLong(0)
-      var pr = deg.select(col("node"),
-        when(col("node") === seed, lit(1000000.0)).otherwise(lit(0.0)).as("q"))
-      for (_ <- 1 to 3) {
-        val contrib = sym
-          .join(pr.where(col("q") > 0).withColumnRenamed("node", "src"),
-            Seq("src"))
-          .join(deg.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("cnode"))
-          .agg(sum(floor(col("q") / col("degree"))).cast("double").as("s"))
-        pr = deg.select(col("node"))
-          .join(contrib, col("node") === col("cnode"), "left")
-          .select(col("node"),
-            (when(col("node") === seed, lit(150000.0)).otherwise(lit(0.0)) +
-              floor(lit(17.0) * coalesce(col("s"), lit(0.0)) / lit(20.0))).as("q"))
-      }
-      pr.select(col("node"), col("q").cast("bigint").as("ppr_q"))
-        .where(col("ppr_q") > 0)
-        .orderBy(col("ppr_q").desc, col("node"))
-        .limit(20)
-    }),
-
-    "graph_pagerank" -> ((spark, sfDir) => {
-      val e = edges(spark, sfDir).persist()
-      val sym = e.select(col("src"), col("dst"))
-        .union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      val deg = sym.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("degree")).persist()
-      var pr = deg.select(col("node"), lit(1000000.0).as("q"))
-      for (_ <- 1 to 3) {
-        val contrib = sym
-          .join(pr.withColumnRenamed("node", "src"), Seq("src"))
-          .join(deg.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("cnode"))
-          .agg(sum(floor(col("q") / col("degree"))).cast("double").as("s"))
-        pr = deg.select(col("node"))
-          .join(contrib, col("node") === col("cnode"), "left")
-          .select(col("node"),
-            (lit(150000.0) +
-              floor(lit(17.0) * coalesce(col("s"), lit(0.0)) / lit(20.0))).as("q"))
-      }
-      // exact-integer projection only: pr_q IS the score on the 1e-6
-      // grid. There is no display-double ROUND twin: the int-over-1e6
-      // quotient class diverged across engines in decimal/double
-      // division (graph_sssp), and a consumer can always divide at
-      // presentation time.
-      pr.select(col("node"), col("q").cast("bigint").as("pr_q"))
-        .orderBy(col("pr_q").desc, col("node"))
-        .limit(20)
     })
   )
 
-  // one synchronous LPA iteration (vote = count DESC, label ASC)
-  private def lpIter(k: Int): String = s"""
-      , nl$k AS (
-        SELECT s.dst AS node, p.lbl AS lbl, COUNT(*) AS c
-        FROM sym s JOIN lp${k - 1} p ON s.src = p.node
-        GROUP BY s.dst, p.lbl
-      ), lp$k AS (
-        SELECT node, lbl FROM (
-          SELECT node, lbl,
-                 ROW_NUMBER() OVER (PARTITION BY node
-                                    ORDER BY c DESC, lbl) AS rn
-          FROM nl$k) x
-        WHERE rn = 1
-      )"""
-
-  private val SymCte = """
-      , sym AS MATERIALIZED (SELECT src, dst FROM e
-                UNION ALL SELECT dst AS src, src AS dst FROM e)"""
-
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = shared.map { case (name, (_, sql)) => name -> sql } ++ Map(
     "graph_mst_boruvka" -> mstSql("""
       WITH io AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
       ew AS MATERIALIZED (
@@ -1001,119 +903,16 @@ object Graph {
                CAST(FLOOR(1000000.0 / COUNT(*)) AS BIGINT) AS cost
         FROM io a JOIN io b ON a.o = b.o AND a.p < b.p
         GROUP BY a.p, b.p HAVING COUNT(*) >= 2)""", "ew"),
-    "graph_harmonic_centrality" -> (EdgeCte + SymCte + harmonicSql("sym")),
-    "graph_assortativity" -> (EdgeCte + SymCte + assortativitySql("sym")),
     "recsys_user_cf" -> UserCfSql,
     "recsys_als_step" -> alsStepSql(spark = false),
-    "graph_kcore" -> kcoreSql(EdgeCte + """
-      , sym0 AS MATERIALIZED (SELECT src, dst FROM e
-                 UNION ALL SELECT dst AS src, src AS dst FROM e)"""),
-    "graph_local_clustering" -> (EdgeCte + """
-      , sym AS (SELECT src, dst FROM e
-                UNION ALL SELECT dst AS src, src AS dst FROM e)""" +
-      localClusteringSql("e", "sym")),
+    "graph_kcore" -> kcoreSql(s"WITH $EdgeCte, sym0 AS MATERIALIZED ($SymSql)"),
     "graph_assoc_rules" -> assocSql(spark = false),
     "recsys_item_sim" -> ItemSimSql,
     "graph_sssp" -> ssspSql(spark = false),
-    "graph_reach_recursive" -> ("WITH RECURSIVE" +
-      EdgeCte.replaceFirst("\\s*WITH", "") + """
-      , sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e),
-      """ + reachRecursiveSql("sym").replaceFirst("\\s*WITH RECURSIVE\\s*", "")),
-    "graph_label_prop" -> (EdgeCte + """
-      , sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e)
-      , lp0 AS (SELECT DISTINCT src AS node, src AS lbl FROM sym)""" +
-      lpIter(1) + lpIter(2) + lpIter(3) + """
-      SELECT lbl AS community, COUNT(*) AS size
-      FROM lp3 GROUP BY lbl
-      ORDER BY size DESC, community LIMIT 20"""),
-
-    "graph_modularity" -> (EdgeCte + """
-      , sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e)
-      , lp0 AS (SELECT DISTINCT src AS node, src AS lbl FROM sym)""" +
-      lpIter(1) + lpIter(2) + lpIter(3) + """
-      , m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS m FROM e)
-      , deg AS (SELECT src AS node, COUNT(*) AS degree FROM sym GROUP BY src)
-      , dc AS (SELECT p.lbl, CAST(SUM(d.degree) AS BIGINT) AS d_c,
-                      CAST(COUNT(*) AS BIGINT) AS size
-               FROM deg d JOIN lp3 p ON d.node = p.node GROUP BY p.lbl)
-      , ein AS (SELECT a.lbl, CAST(COUNT(*) AS BIGINT) AS e_c
-                FROM e JOIN lp3 a ON e.src = a.node JOIN lp3 b ON e.dst = b.node
-                WHERE a.lbl = b.lbl GROUP BY a.lbl)
-      SELECT dc.lbl AS community, dc.size, dc.d_c,
-             COALESCE(ein.e_c, 0) AS e_c,
-             ROUND(CAST(COALESCE(ein.e_c, 0) AS DOUBLE) / m.m
-                   - (CAST(dc.d_c AS DOUBLE) / (2.0 * m.m))
-                     * (CAST(dc.d_c AS DOUBLE) / (2.0 * m.m)), 6) + 0.0 AS contribution
-      FROM dc LEFT JOIN ein ON dc.lbl = ein.lbl CROSS JOIN m
-      ORDER BY dc.size DESC, community LIMIT 20"""),
-    "graph_triangles" -> (EdgeCte + """
-      SELECT (SELECT COUNT(*) FROM (SELECT src AS node FROM e UNION SELECT dst AS node FROM e) n) AS n_nodes,
-             (SELECT COUNT(*) FROM e) AS n_edges,
-             (SELECT COUNT(*) FROM e e1 JOIN e e2 ON e1.dst = e2.src
-                               JOIN e e3 ON e1.src = e3.src AND e2.dst = e3.dst) AS n_triangles"""),
-
-    "graph_degree_stats" -> (EdgeCte + """
-      , d AS (SELECT node, COUNT(*) AS degree
-              FROM (SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e) n
-              GROUP BY node)
-      SELECT degree, COUNT(*) AS n_nodes FROM d GROUP BY degree ORDER BY degree"""),
-
-    "graph_khop" -> (EdgeCte + """
-      , sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e)
-      , seeds AS (SELECT DISTINCT src AS seed FROM sym ORDER BY seed LIMIT 10)
-      , h1 AS (SELECT DISTINCT s.seed, y.dst AS nb FROM seeds s JOIN sym y ON y.src = s.seed)
-      , h2 AS (SELECT h1.seed, y.dst AS nb FROM h1 JOIN sym y ON y.src = h1.nb)
-      , reach AS (SELECT DISTINCT seed, nb
-                  FROM (SELECT seed, nb FROM h1 UNION ALL SELECT seed, nb FROM h2) u
-                  WHERE nb <> seed)
-      SELECT d1.seed, d1.n_1hop, d2.n_2hop
-      FROM (SELECT seed, COUNT(*) AS n_1hop FROM h1 GROUP BY seed) d1
-      JOIN (SELECT seed, COUNT(*) AS n_2hop FROM reach GROUP BY seed) d2
-        ON d1.seed = d2.seed
-      ORDER BY d1.seed"""),
-
-    "graph_adamic_adar" -> (EdgeCte + """
-      , sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e)
-      , deg AS (SELECT src AS node, COUNT(*) AS degree FROM sym GROUP BY src)
-      , zw AS (SELECT node AS z,
-                      CAST(ROUND(1000000.0 / LN(CAST(degree AS DOUBLE))) AS BIGINT) AS wq
-               FROM deg WHERE degree >= 2)
-      , cand AS (
-          SELECT za.dst AS a, zb.dst AS b,
-                 COUNT(*) AS common_nbrs, CAST(SUM(w.wq) AS BIGINT) AS aa_q
-          FROM sym za JOIN sym zb ON za.src = zb.src AND za.dst < zb.dst
-          JOIN zw w ON w.z = za.src
-          GROUP BY za.dst, zb.dst)
-      , ne AS (
-          SELECT c.a, c.b, c.common_nbrs, c.aa_q
-          FROM cand c LEFT JOIN e ON e.src = c.a AND e.dst = c.b
-          WHERE e.src IS NULL)
-      SELECT ne.a AS node_a, ne.b AS node_b, ne.common_nbrs, ne.aa_q,
-             ROUND(CAST(ne.aa_q AS DOUBLE) / 1000000.0, 6) AS adamic_adar,
-             ROUND(CAST(ne.common_nbrs AS DOUBLE)
-                   / CAST(da.degree + db.degree - ne.common_nbrs AS DOUBLE), 6) AS jaccard
-      FROM ne JOIN deg da ON da.node = ne.a JOIN deg db ON db.node = ne.b
-      ORDER BY ne.aa_q DESC, node_a, node_b
-      LIMIT 20"""),
-
-    "graph_ppr" -> (EdgeCte + """
-      , sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e)
-      , deg AS (SELECT src AS node, COUNT(*) AS degree FROM sym GROUP BY src)
-      , seed AS (SELECT node AS s FROM deg ORDER BY degree DESC, node LIMIT 1)
-      , ppr0 AS (SELECT d.node, CASE WHEN d.node = sd.s THEN CAST(1000000 AS DOUBLE)
-                                     ELSE CAST(0 AS DOUBLE) END AS q
-                 FROM deg d CROSS JOIN seed sd)""" +
-      pprIter(1) + pprIter(2) + pprIter(3) + """
-      SELECT node, CAST(q AS BIGINT) AS ppr_q
-      FROM ppr3 WHERE CAST(q AS BIGINT) > 0
-      ORDER BY ppr_q DESC, node LIMIT 20"""),
-
-    "graph_pagerank" -> (EdgeCte + """
-      , sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e)
-      , deg AS (SELECT src AS node, COUNT(*) AS degree FROM sym GROUP BY src)
-      , pr0 AS (SELECT node, CAST(1000000 AS DOUBLE) AS q FROM deg)""" +
-      prIter(1) + prIter(2) + prIter(3) + """
-      SELECT node, CAST(q AS BIGINT) AS pr_q
-      FROM pr3 ORDER BY pr_q DESC, node LIMIT 20""")
+    "graph_triangles" -> (s"WITH $EdgeCte" + """
+      SELECT (SELECT COUNT(*) FROM (SELECT src AS node FROM graph_e UNION SELECT dst AS node FROM graph_e) n) AS n_nodes,
+             (SELECT COUNT(*) FROM graph_e) AS n_edges,
+             (SELECT COUNT(*) FROM graph_e e1 JOIN graph_e e2 ON e1.dst = e2.src
+                               JOIN graph_e e3 ON e1.src = e3.src AND e2.dst = e3.dst) AS n_triangles""")
   )
 }

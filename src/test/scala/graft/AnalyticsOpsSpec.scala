@@ -313,6 +313,10 @@ class AnalyticsOpsSpec extends AnyFunSuite {
       .map { case (c, s) => (c, s) }
       .sortBy { case (c, s) => (-s, c) }.take(20)
     assert(out.toSeq == sizes, s"\n$out\nvs\n$sizes")
+    // graph_modularity scores the same communities
+    val modularity = Graph.queries("graph_modularity")(spark, LocalSpark.sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(modularity.toSeq == sizes, s"\n${modularity.toSeq}\nvs\n$sizes")
   }
 
   test("events_active_users: DAU <= WAU <= MAU and windows match recounts") {
@@ -640,10 +644,6 @@ class AnalyticsOpsSpec extends AnyFunSuite {
   }
 
   test("graph_ppr: bit-exact driver replay of the personalized iteration") {
-    val out = graft.operators.Graph
-      .queries("graph_ppr")(spark, LocalSpark.sf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-    assert(out.nonEmpty)
     Tables.register(spark, LocalSpark.sf)
     val io = spark.table("lineitem")
       .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
@@ -654,17 +654,27 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     val sym = e ++ e.map(_.swap)
     val deg = sym.groupBy(_._1).view.mapValues(_.length.toLong).toMap
     val seed = deg.toSeq.map { case (n, dd) => (-dd, n) }.min._2
-    var pr = deg.keys.map(n => n -> (if (n == seed) 1000000.0 else 0.0)).toMap
-    for (_ <- 1 to 3) {
-      val contrib = sym.map { case (s, d) => d -> math.floor(pr(s) / deg(s)) }
-        .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-      pr = deg.keys.map(n => n ->
-        ((if (n == seed) 150000.0 else 0.0) +
-          math.floor(17.0 * contrib.getOrElse(n, 0.0) / 20.0))).toMap
+    // graph_pagerank is the same iteration, starting and restarting
+    // uniformly instead of at the seed
+    for ((q, restartsAt) <- Seq[(String, Long => Boolean)](
+           "graph_ppr" -> (_ == seed), "graph_pagerank" -> (_ => true))) {
+      val out = graft.operators.Graph
+        .queries(q)(spark, LocalSpark.sf).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      assert(out.nonEmpty)
+      var pr = deg.keys.map(n => n -> (if (restartsAt(n)) 1000000.0 else 0.0)).toMap
+      for (_ <- 1 to 3) {
+        val contrib = sym.map { case (s, d) => d -> math.floor(pr(s) / deg(s)) }
+          .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
+        pr = deg.keys.map(n => n ->
+          ((if (restartsAt(n)) 150000.0 else 0.0) +
+            math.floor(17.0 * contrib.getOrElse(n, 0.0) / 20.0))).toMap
+      }
+      // PPR drops zero-mass nodes; every PageRank node keeps its restart
+      val expect = pr.toSeq.map { case (n, q) => (n, q.toLong) }
+        .filter(_._2 > 0).sortBy { case (n, q) => (-q, n) }.take(20)
+      assert(out.toSeq == expect, s"$q:\n${out.toSeq}\nvs\n$expect")
     }
-    val expect = pr.toSeq.map { case (n, q) => (n, q.toLong) }
-      .filter(_._2 > 0).sortBy { case (n, q) => (-q, n) }.take(20)
-    assert(out.toSeq == expect, s"\n${out.toSeq}\nvs\n$expect")
   }
 
   test("stats_mann_kendall: S and tie-corrected variance replay driver-side") {

@@ -6,9 +6,10 @@ import org.scalatest.matchers.should.Matchers
 import graft.operators.Graph
 
 /** Every DataFrame of the graph family's shared edge list belongs to
-  * the session that asked for it. The MST and kcore loops over it leave
-  * nothing cached, their rounds give the same sets at any shuffle
-  * width, and kcore runs no peel after a fixed point. */
+  * the session that asked for it, and a query over the shared edge views
+  * runs no job while its DataFrame is built. The MST and kcore loops
+  * over it leave nothing cached, their rounds give the same sets at any
+  * shuffle width, and kcore runs no peel after a fixed point. */
 class GraphEdgesSpec extends AnyFunSuite with Matchers {
   lazy val spark = LocalSpark.spark
   private val sf = LocalSpark.sf
@@ -25,6 +26,19 @@ class GraphEdgesSpec extends AnyFunSuite with Matchers {
     val again = Graph.weightedEdges(s1, sf)
     again.sparkSession should be theSameInstanceAs s1
     again.count() shouldBe e1.count()
+  }
+
+  test("building a shared-text graph query's DataFrame runs no Spark job") {
+    val s = spark.newSession()
+    Tables.register(s, sf)
+    val eager = Seq("graph_degree_stats", "graph_khop", "graph_label_prop",
+      "graph_modularity", "graph_adamic_adar", "graph_pagerank", "graph_ppr",
+      "graph_harmonic_centrality", "graph_assortativity", "graph_local_clustering",
+      "graph_reach_recursive").map { q =>
+      q -> LocalSpark.jobsIn(SparkEntry.queries(q)(s, sf))
+    }.filter(_._2 > 0)
+    spark.catalog.clearCache()
+    eager shouldBe empty
   }
 
   for ((q, nRows) <- Seq("graph_kcore" -> 4, "graph_mst_boruvka" -> 3))

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.CountDownLatch
+import java.util.concurrent.TimeUnit.SECONDS
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all specs (forked test JVM). */
@@ -18,4 +23,31 @@ object LocalSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` starts on this thread. Jobs carry their job group;
+    * a sentinel job in a second group, seen by the listener, proves every
+    * earlier job event was delivered (the listener bus is in order). */
+  def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val sentinel = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-sentinel" => sentinel.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinel.await(60, SECONDS), "sentinel job never reached the listener")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -522,11 +522,13 @@ class PlanQualitySpec extends AnyFunSuite {
     // O(deg(seed)), not O(E). Catalyst rewrites the three source-level
     // frontier filters into (a) round 1: the one-hot CASE folds to a
     // seed-EQUALITY predicate pushed onto the edge-scan side (src =
-    // seed — an even tighter plan than the filter as written), and
-    // (b) rounds 2-3: the composed-expression filter (... ELSE 0.0 END
-    // + floor(17·s/20)) > 0.0 sitting under each contrib join.
+    // the seed CTE's scalar subquery — an even tighter plan than the
+    // filter as written), and (b) rounds 2-3: the composed-expression
+    // filter (... ELSE 0.0 END + floor(17·s/20)) > 0.0 sitting under
+    // each contrib join.
     val seedEquality =
-      "Filter \\(\\(\\(src#\\d+L? = \\d+\\) <=> true\\)".r.findAllIn(p).length
+      "Filter \\(+src#\\d+L? = scalar-subquery#\\d+ \\[\\]\\) <=> true\\)".r
+        .findAllIn(p).length
     val frontierFilters =
       "ELSE 0\\.0 END \\+ cast\\(FLOOR[^\\n]* > 0\\.0\\)".r.findAllIn(p).length
     assert(seedEquality >= 1 && frontierFilters >= 2,

@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.CountDownLatch
-import java.util.concurrent.TimeUnit.SECONDS
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
@@ -12,8 +9,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -27,37 +24,11 @@ import org.scalatest.matchers.should.Matchers
 class TablesSpec extends AnyFunSuite with Matchers {
   lazy val spark = LocalSpark.spark
   private val sf = LocalSpark.sf
+  import LocalSpark.jobsIn
 
   private def nanosAsLong(s: SparkSession, on: Boolean): SparkSession = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", on.toString)
     s
-  }
-
-  /** Spark jobs `body` starts on this thread. Jobs carry their job group;
-    * a sentinel job in a second group, seen by the listener, proves every
-    * earlier job event was delivered (the listener bus is in order). */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime}"
-    val jobs = new AtomicInteger
-    val sentinel = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-sentinel" => sentinel.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-sentinel", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinel.await(60, SECONDS), "sentinel job never reached the listener")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("memoized schema equals inference for every fixture table") {
@@ -115,6 +86,23 @@ class TablesSpec extends AnyFunSuite with Matchers {
     s.table("region").columns should contain("r_extra")
     s.table("region").where("r_extra = r_regionkey * 10").count() shouldBe
       s.table("region").count()
+  }
+
+  test("a registration miss re-registers the views but replaces no function") {
+    val s = spark.newSession()
+    Tables.register(s, sf)
+    val reg = s.sessionState.functionRegistry
+    def entries = graft.functions.GraftFunctions.builders.keys.toSeq.sorted
+      .map(n => n -> reg.lookupFunction(FunctionIdentifier(n)).get)
+    val before = entries
+    def nation = s.sessionState.catalog.getTempView("nation").get
+    val view = nation
+    Tables.invalidate(s)
+    Tables.register(s, sf)
+    nation should not be theSameInstanceAs(view)
+    // a function installed again gets a new registry entry
+    val replaced = before.zip(entries).collect { case ((n, a), (_, b)) if !(a eq b) => n }
+    replaced shouldBe empty
   }
 
   test("a table rewritten in place is seen by the next register, without invalidate") {

@@ -173,10 +173,6 @@ class ThresholdInventorySpec extends AnyFunSuite {
           "zero-output direction"),
     ("Graph.scala", "support-floor", "HAVING COUNT(*) >= 3") ->
       (3, "invariant: same evidence-floor class (assoc rules / user CF)"),
-    ("Graph.scala", "topk-limit", ".limit(10)") ->
-      (1, "invariant: fixed-size top-k report contract"),
-    ("Graph.scala", "topk-limit", ".limit(20)") ->
-      (5, "invariant: fixed-size top-k report contracts"),
     ("Multimodal.scala", "hamming-radius", "bit_count(ha ^ hb)\") <= 10") ->
       (1, "invariant: 64-bit phash distance radius, spark-side spelling"),
     ("Multimodal.scala", "hamming-radius", "bit_count(xor(ha.g, hb.g)) <= 10") ->
