@@ -354,7 +354,7 @@ object Curation {
     // recall PipelineSpec pins at exactly 1.0 on this testdata — so the
     // exact new×old pair set is a valid oracle, same argument as
     // dedup_minhash_lsh.
-    "dedup_incremental" -> Tables.sql("""
+    "dedup_incremental" -> Tables.sql(s"""
       WITH base AS (
         SELECT doc_id, text, MD5(CAST(text AS BINARY)) AS digest,
                (doc_id % 5 = 4) AS is_new
@@ -363,16 +363,7 @@ object Curation {
         SELECT DISTINCT n.doc_id
         FROM base n JOIN base o ON n.digest = o.digest
         WHERE n.is_new AND NOT o.is_new
-      ), sh AS (
-        SELECT doc_id, is_new, SHINGLE_SET(text, 3) AS grams FROM base
-        WHERE SIZE(SHINGLE_SET(text, 3)) > 0
-      ), sigs AS (
-        SELECT doc_id, is_new, MINHASH_SIG(grams, 64) AS sig FROM sh
-      ), bands AS (
-        SELECT doc_id, is_new, band,
-               HASH(SLICE(sig, band * 4 + 1, 4)) AS bandhash
-        FROM sigs LATERAL VIEW EXPLODE(SEQUENCE(0, 15)) b AS band
-      ), cand AS (
+      ), ${Dedup.minhashBandCtes(carry = "is_new", from = "base")}, cand AS (
         SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS old_id
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bandhash = b.bandhash
@@ -473,18 +464,8 @@ object Curation {
     // PlanQualitySpec). Oracle: the exact all-pairs inverted-index
     // formulation restricted to (corpus × eval), the dedup_minhash_lsh
     // precedent.
-    "text_decontaminate_fuzzy" -> Tables.sql("""
-      WITH sh AS (
-        SELECT doc_id, SHINGLE_SET(text, 3) AS grams
-        FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)
-        WHERE SIZE(SHINGLE_SET(text, 3)) > 0
-      ), sigs AS (
-        SELECT doc_id, MINHASH_SIG(grams, 64) AS sig FROM sh
-      ), bands AS (
-        SELECT doc_id, band,
-               HASH(SLICE(sig, band * 4 + 1, 4)) AS bandhash
-        FROM sigs LATERAL VIEW EXPLODE(SEQUENCE(0, 15)) b AS band
-      ), cand AS (
+    "text_decontaminate_fuzzy" -> Tables.sql(s"""
+      WITH ${Dedup.minhashBandCtes()}, cand AS (
         SELECT /*+ BROADCAST(e) */ DISTINCT
                c.doc_id AS corp_id, e.doc_id AS eval_id
         FROM bands c JOIN bands e

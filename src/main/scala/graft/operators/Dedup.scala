@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.Tables
@@ -54,29 +55,43 @@ object Dedup {
 
   private type Q = (SparkSession, String) => DataFrame
 
-  /** The minhash+LSH near-duplicate pair SQL WITHOUT the final global
-    * sort — shared by dedup_minhash_lsh (which adds ORDER BY for the
-    * oracle compare) and dedup_clusters (whose symmetric-edge union
-    * would immediately discard a sort, so it must not pay the range
-    * exchange). */
-  private val MinhashPairsSql = """
-      WITH sh AS (
-        -- repartition BEFORE the heavy shingle/minhash projection: the
-        -- documents file scans as one partition at test scale, which
-        -- would serialize the per-row work
-        SELECT doc_id, SHINGLE_SET(text, 3) AS grams
-        FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)
-        WHERE SIZE(SHINGLE_SET(text, 3)) > 0
+  /** The shingle → MinHash → LSH-band front end of every MinHash query,
+    * as the CTEs `sh(doc_id, <carry>, grams)` (3-token shingles) and
+    * `bands(doc_id, <carry>, band, bandhash)` (64 min-hashes in 16 bands
+    * of 4 rows) over `from`, a relation with `doc_id`, `text` and the
+    * `carry` columns. The default `from` repartitions BEFORE the heavy
+    * shingle/minhash projection: the documents file scans as one
+    * partition at test scale, which would serialize the per-row work.
+    *
+    * An empty gram set gets no band rows, so its document is never a
+    * candidate. The guard sits in the band explode, not in a filter on
+    * `sh`: Spark pushes a filter through the REPARTITION hint into the
+    * one-task scan stage, which would shingle every document serially. */
+  private[operators] def minhashBandCtes(
+      carry: String = "",
+      from: String = "(SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)"): String = {
+    val c = if (carry.isEmpty) "" else s"$carry, "
+    s"""sh AS (
+        SELECT doc_id, ${c}SHINGLE_SET(text, 3) AS grams FROM $from
       ), sigs AS (
-        SELECT doc_id, MINHASH_SIG(grams, 64) AS sig FROM sh
+        SELECT doc_id, ${c}grams, MINHASH_SIG(grams, 64) AS sig FROM sh
       ), bands AS (
         -- ids + band hash only: the wide gram arrays must NOT ride
         -- through the candidate join/DISTINCT shuffle
-        SELECT doc_id, band,
+        SELECT doc_id, ${c}band,
                HASH(SLICE(sig, band * 4 + 1, 4)) AS bandhash
         FROM sigs
-        LATERAL VIEW EXPLODE(SEQUENCE(0, 15)) b AS band
-      ), cand AS (
+        LATERAL VIEW EXPLODE(IF(SIZE(grams) > 0, SEQUENCE(0, 15), ARRAY())) b AS band
+      )"""
+  }
+
+  /** The minhash+LSH near-duplicate pair SQL WITHOUT the final global
+    * sort — shared by dedup_minhash_lsh (which adds ORDER BY for the
+    * oracle compare) and the components queries (whose symmetric-edge
+    * union would immediately discard a sort, so it must not pay the
+    * range exchange). */
+  private val MinhashPairsSql = s"""
+      WITH ${minhashBandCtes()}, cand AS (
         -- SHUFFLE_MERGE: both sides are corpus-scale. Catalyst's size
         -- estimate for an explode/wide-array subtree is width-ratio
         -- based (it never sees the row multiplication or the real gram
@@ -99,23 +114,29 @@ object Dedup {
       )
       WHERE j >= 0.8"""
 
-  /** Prefix-filtered n-gram candidate chain + exact-jaccard scoring at
-    * τ=0.5, ending in CTE `jpairs(doc_a, doc_b, jaccard)` — ONE
-    * definition consumed by dedup_ngram_jaccard and dedup_edit_verify
-    * so the Bayardo prefix bound and threshold cannot drift between
-    * them (the DuckHash.fmix64Ctes single-spelling rule). */
-  private val NgramJpairsCtes = """
+  /** The source-blocked n-gram prefix filter at threshold `tau` (Bayardo
+    * et al., see dedup_ngram_jaccard), as the CTEs
+    * `sh(doc_id, source, grams)`, the inverted index
+    * `inv(doc_id, source, n, gram)`, the per-block document frequencies
+    * `df(source, gram, df)` and `prefix(doc_id, source, gram)`: each
+    * document's n - ceil(tau·n) + 1 rarest grams. ONE spelling for
+    * dedup_ngram_jaccard/dedup_edit_verify (tau 0.5) and
+    * dedup_containment (tau 0.8). An empty gram set explodes to no
+    * posting, so its document is never a candidate. As in
+    * `minhashBandCtes`, the guard sits in the explode: from an explode
+    * of the bare `grams` column Spark infers `SIZE(grams) > 0` and
+    * pushes it, SHINGLE_SET and all, into the one-task scan stage. */
+  private def prefixCtes(tau: Double): String = s"""
       sh AS (
         SELECT doc_id, source, SHINGLE_SET(text, 3) AS grams
         FROM (SELECT /*+ REPARTITION(32) */ doc_id, source, text FROM documents)
-        WHERE SIZE(SHINGLE_SET(text, 3)) > 0
       ), inv AS (
         SELECT doc_id, source, SIZE(grams) AS n, gram
-        FROM sh LATERAL VIEW EXPLODE(grams) g AS gram
+        FROM sh LATERAL VIEW EXPLODE(IF(SIZE(grams) > 0, grams, ARRAY())) g AS gram
       ), df AS (
         SELECT source, gram, COUNT(*) AS df FROM inv GROUP BY source, gram
       ), prefix AS (
-        -- SHUFFLE_MERGE on every corpus×corpus join in this chain: the
+        -- SHUFFLE_MERGE on every corpus×corpus join in these chains: the
         -- inverted index, the df table, the prefix set, and the gram-set
         -- re-joins all sit above an explode, whose Catalyst size
         -- estimate is width-ratio only — left alone the planner
@@ -128,8 +149,14 @@ object Dedup {
                                     ORDER BY d.df, i.gram) AS rk
           FROM inv i
           JOIN df d ON i.gram = d.gram AND i.source = d.source
-        ) WHERE rk <= n - CEIL(0.5 * n) + 1
-      ), cand AS (
+        ) WHERE rk <= n - CEIL($tau * n) + 1
+      )"""
+
+  /** The prefix-filtered candidate chain + exact-jaccard scoring at
+    * τ=0.5, ending in CTE `jpairs(doc_a, doc_b, jaccard)` — ONE
+    * definition consumed by dedup_ngram_jaccard and dedup_edit_verify
+    * so the threshold cannot drift between them. */
+  private val NgramJpairsCtes = s"""${prefixCtes(0.5)}, cand AS (
         SELECT /*+ SHUFFLE_MERGE(a, b) */
                DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM prefix a JOIN prefix b
@@ -260,15 +287,19 @@ object Dedup {
     // (band, key) equi-join.
     "dedup_simhash" -> Tables.sql("""
       WITH sh AS (
-        SELECT doc_id, SIMHASH64(toks) AS sim
+        -- sim is declared non-null: from the hamming filter on a nullable
+        -- sim Spark infers `sim IS NOT NULL` and pushes it, SIMHASH64 and
+        -- all, through the hint into the one-task scan stage
+        SELECT doc_id, toks, COALESCE(SIMHASH64(toks), 0) AS sim
         FROM (SELECT doc_id, TOKENIZE(text) AS toks
               FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents))
-        WHERE SIZE(toks) > 0
       ), bands AS (
+        -- a document without tokens gets no band rows: the guard sits in
+        -- the explode, not in a filter Spark would push into the scan
         SELECT doc_id, sim, band,
                CASE WHEN band < 6 THEN (sim >> (band * 9)) & 511
                     ELSE (sim >> 54) & 1023 END AS bandkey
-        FROM sh LATERAL VIEW EXPLODE(SEQUENCE(0, 6)) b AS band
+        FROM sh LATERAL VIEW EXPLODE(IF(SIZE(toks) > 0, SEQUENCE(0, 6), ARRAY())) b AS band
       ), cool AS (
         SELECT band, bandkey FROM bands
         GROUP BY band, bandkey HAVING COUNT(*) <= 1000
@@ -366,29 +397,8 @@ object Dedup {
     // inverted index of potential containers — recall 1.0 for either
     // direction ≥ τ, never all-pairs. Same source blocking + df-ranked
     // prefix as dedup_ngram_jaccard.
-    "dedup_containment" -> Tables.sql("""
-      WITH sh AS (
-        SELECT doc_id, source, SHINGLE_SET(text, 3) AS grams
-        FROM (SELECT /*+ REPARTITION(32) */ doc_id, source, text FROM documents)
-        WHERE SIZE(SHINGLE_SET(text, 3)) > 0
-      ), inv AS (
-        SELECT doc_id, source, SIZE(grams) AS n, gram
-        FROM sh LATERAL VIEW EXPLODE(grams) g AS gram
-      ), df AS (
-        SELECT source, gram, COUNT(*) AS df FROM inv GROUP BY source, gram
-      ), prefix AS (
-        -- SHUFFLE_MERGE: same explode-underestimation rationale as
-        -- NgramJpairsCtes — pin the corpus-scale joins to the shape
-        -- that survives 100 TB instead of a misestimated broadcast.
-        SELECT doc_id, source, gram FROM (
-          SELECT /*+ SHUFFLE_MERGE(i, d) */
-                 i.doc_id, i.source, i.gram, i.n,
-                 ROW_NUMBER() OVER (PARTITION BY i.doc_id
-                                    ORDER BY d.df, i.gram) AS rk
-          FROM inv i
-          JOIN df d ON i.gram = d.gram AND i.source = d.source
-        ) WHERE rk <= n - CEIL(0.8 * n) + 1
-      ), cand AS (
+    "dedup_containment" -> Tables.sql(s"""
+      WITH ${prefixCtes(0.8)}, cand AS (
         SELECT /*+ SHUFFLE_MERGE(p, i) */
                DISTINCT LEAST(p.doc_id, i.doc_id) AS doc_a,
                         GREATEST(p.doc_id, i.doc_id) AS doc_b
@@ -458,10 +468,9 @@ object Dedup {
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .join(reps.withColumnRenamed("doc_id", "src"), Seq("src"))
         .join(reps.withColumnRenamed("doc_id", "dst"), Seq("dst"))
-      val (labels, _) = connectedComponents(spark, pr.select("src", "dst"))
-      val keep = labels.groupBy(col("comp")).agg(min(col("node")).as("keep"))
-      val nearRemoved = labels
-        .join(keep, labels("node") === keep("keep"), "left_anti")
+      // comp is its component's minimum node, the one the stage keeps
+      val nearRemoved = connectedComponents(spark, pr.select("src", "dst"))._1
+        .where(col("node") =!= col("comp"))
       // same fusion for the near stage: count + token sum in one job
       // (the d join is 1:1 — every CC node is a distinct doc_id)
       val nearRow = nearRemoved
@@ -488,11 +497,9 @@ object Dedup {
     // keep rule u·csize < 2^32 — pure integer compare, exact in both
     // engines. Per-csize keep counts report the realized thinning.
     "curation_dedup_aware_sample" -> ((spark, sfDir) => {
-      val labels = nearDupLabels(spark, sfDir)
-      val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("csize"))
       val docCsize = spark.table("documents").select(col("doc_id"))
-        .join(labels.join(sizes, "comp")
-          .select(col("node").as("doc_id"), col("csize")), Seq("doc_id"), "left")
+        .join(nearDupLabels(spark, sfDir)
+          .select(col("node").as("doc_id"), clusterSize), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("csize"), lit(1L)).as("csize"))
       docCsize
         .withColumn("u",
@@ -527,10 +534,8 @@ object Dedup {
     }),
 
     "dedup_clusters" -> ((spark, sfDir) => {
-      val labels = nearDupLabels(spark, sfDir)
-      val sizes = labels.groupBy("comp").agg(count(lit(1)).as("csize"))
-      labels.join(sizes, "comp")
-        .select(col("node").as("doc_id"), col("comp").as("cluster"), col("csize"))
+      nearDupLabels(spark, sfDir)
+        .select(col("node").as("doc_id"), col("comp").as("cluster"), clusterSize)
         .orderBy(col("cluster"), col("doc_id"))
     }),
 
@@ -542,7 +547,6 @@ object Dedup {
     // with doc_id as the total tie-break; singletons keep themselves.
     // One window over cluster-partitioned rows — no new shuffle class.
     "dedup_keep_best" -> ((spark, sfDir) => {
-      import org.apache.spark.sql.expressions.Window
       val labels = nearDupLabels(spark, sfDir)
       val q = spark.sql("""
         SELECT doc_id,
@@ -740,6 +744,11 @@ object Dedup {
     connectedComponents(spark, Tables.sql(MinhashPairsSql)(spark, sfDir)
       .select(col("doc_a").as("src"), col("doc_b").as("dst")))._1
 
+  /** `csize`: the size of a label row's component, counted over its
+    * comp partition (no aggregate joined back). */
+  private def clusterSize: Column =
+    count(lit(1)).over(Window.partitionBy(col("comp"))).as("csize")
+
   /** pipeline_curate's three stages: the (doc_id, lang, toks, ...) rows
     * of the documents that pass the quality gate (>= 10 tokens,
     * type-token ratio >= 0.2), are the lowest doc_id of their content
@@ -784,12 +793,17 @@ object Dedup {
     *
     * Convergence is EXACT edge-set equality for both steps, never a
     * probabilistic checksum, and unconverged state throws rather than
-    * emitting wrong clusters. Two tiers: equal cardinality is necessary
-    * for set equality and costs only counts the round takes anyway, so
-    * the exact check — every input is a distinct edge set, so tagging
-    * members ±1 and summing per (step, edge) yields 0 for every key iff
-    * large-star changed nothing and small-star changed nothing — runs
-    * its single shuffle only in rounds where all the counts agree.
+    * emitting wrong clusters. Two tiers: |e2| = |cur| is necessary for
+    * large-star changing nothing (e1 = cur) and small-star changing
+    * nothing (e2 = e1), and both counts are ones the carries take
+    * anyway, so the exact check — every input is a distinct edge set,
+    * so tagging members ±1 and summing per (step, edge) yields 0 for
+    * every key iff e1 = cur and e2 = e1 — runs its single shuffle only
+    * in rounds where the two counts agree. A round counts only what it
+    * carries: e1 is computed and cached by e2's count job.
+    *
+    * Consumers may read that a label's comp is the minimum node of its
+    * component.
     *
     * @param edges undirected edges in integral columns (src, dst), any
     *              orientation; self-loops, duplicates and nulls are
@@ -814,14 +828,13 @@ object Dedup {
       // empty graph: no pairs ⇒ no clusters, in zero rounds
       Loops.Step(e, n, done = n == 0L)
     } { (r, cur) =>
-      // e1 is read by its count, by small-star and by the exact check,
-      // so it is kept for the round; only e2 is carried
+      // e1 is read by small-star and by the exact check, so it is kept
+      // for the round; only e2 is carried
       val e1 = r.keep(largeStar(cur.state, r.width))
-      val e1Count = e1.count()
       val (e2, e2Count) = r.carry(smallStar(e1, r.width))
       def tag(e: RDD[(Long, Long)], step: Int, sign: Long) =
         e.map { case (src, dst) => ((step, src, dst), sign) }
-      val converged = e1Count == cur.rows && e2Count == e1Count &&
+      val converged = e2Count == cur.rows &&
         spark.sparkContext
           .union(tag(e1, 0, 1L), tag(cur.state, 0, -1L), tag(e2, 1, 1L), tag(e1, 1, -1L))
           .reduceByKey(_ + _, r.width).filter(_._2 != 0L).count() == 0L

@@ -516,8 +516,9 @@ object TextAnalysis {
     // contract — lang column is an independent label). STOPWORD_RATIO is
     // the one-pass hashed-set kernel: the FILTER(toks, w ->
     // ARRAY_CONTAINS(...)) spelling interprets a lambda + linear list
-    // scan per token, ×3 lists per row (round-1 bench: slowest scalar
-    // query at ~4.3 s cold; value-identical to the oracle's formulation).
+    // scan per token, ×3 lists per row (it made this the slowest scalar
+    // query in the bench, ~4.3 s cold; value-identical to the oracle's
+    // formulation).
     "text_langid" -> Tables.sql(TokCte + """
       SELECT doc_id, s_en, s_de, s_fr,
              CASE WHEN s_en >= s_de AND s_en >= s_fr THEN 'en'
@@ -596,7 +597,6 @@ object TextAnalysis {
         SELECT EXPLODE(NGRAMS_TOPK(toks, 2, 20, 500000)) AS g
         FROM (SELECT TOKENIZE(text) AS toks
               FROM (SELECT /*+ REPARTITION(32) */ text FROM documents))
-        WHERE SIZE(toks) >= 2
       )
       ORDER BY freq DESC, ngram"""),
 
@@ -609,7 +609,6 @@ object TextAnalysis {
         SELECT EXPLODE(CONTEXT_NGRAMS(toks, ARRAY('data', CAST(NULL AS STRING)), 10, 100000)) AS g
         FROM (SELECT TOKENIZE(text) AS toks
               FROM (SELECT /*+ REPARTITION(32) */ text FROM documents))
-        WHERE SIZE(toks) >= 2
       )
       ORDER BY freq DESC, follower"""),
 
@@ -767,8 +766,8 @@ object TextAnalysis {
              -- exact micro-unit grid, round in the INTEGER domain: the
              -- decimal-sum/COUNT spelling put doc 854's average exactly on
              -- the 6th-decimal half boundary, where Spark's exact-BigDecimal
-             -- ROUND and DuckDB's scaled-multiply ROUND disagree (r13 sf1
-             -- sweep, 1e-6 drift on 10 replicas of the doc). Here the
+             -- ROUND and DuckDB's scaled-multiply ROUND disagree (an sf1
+             -- sweep saw 1e-6 drift on 10 replicas of the doc). Here the
              -- divided double is correctly rounded from an exact rational in
              -- both engines, and a .5 tie is exactly representable, which
              -- both engines round away from zero.
@@ -1232,10 +1231,9 @@ object TextAnalysis {
   /** `px` prefixes every CTE name so the chain can nest inside a host
     * query that already uses the bare names (pipeline_curate_ppl).
     *
-    * The two dialects spell the SAME counts differently on purpose
-    * (r18 "not yet optimized" item, verdict #4): Catalyst inlines every
-    * CTE reference, so each b-reference re-runs the tokenize+explode
-    * corpus pass — the old spelling (cw from b, vv from b UNION b, sc
+    * The two dialects spell the SAME counts differently on purpose:
+    * Catalyst inlines every CTE reference, so each b-reference re-runs
+    * the tokenize+explode corpus pass — the old spelling (cw from b, vv from b UNION b, sc
     * joining b⋈cb⋈cw) derived b FIVE times. Spark now derives c1 as a
     * window over cb (SUM of the (w1,w2) counts per w1 — the identical
     * BIGINT), vv from cb's key pairs (distinct w1/w2 of cb = distinct
@@ -1674,8 +1672,8 @@ object TextAnalysis {
              -- exact micro-unit grid, round in the INTEGER domain: the
              -- decimal-sum/COUNT spelling put doc 854's average exactly on
              -- the 6th-decimal half boundary, where Spark's exact-BigDecimal
-             -- ROUND and DuckDB's scaled-multiply ROUND disagree (r13 sf1
-             -- sweep, 1e-6 drift on 10 replicas of the doc). Here the
+             -- ROUND and DuckDB's scaled-multiply ROUND disagree (an sf1
+             -- sweep saw 1e-6 drift on 10 replicas of the doc). Here the
              -- divided double is correctly rounded from an exact rational in
              -- both engines, and a .5 tie is exactly representable, which
              -- both engines round away from zero.

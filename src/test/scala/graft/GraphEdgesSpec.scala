@@ -46,9 +46,7 @@ class GraphEdgesSpec extends AnyFunSuite with Matchers {
       val sc = spark.sparkContext
       spark.catalog.clearCache()
       val s = spark.newSession()
-      // the shared edge list is persisted and filled first, so that what
-      // the context held before the query includes it
-      Graph.weightedEdges(s, sf).count()
+      // the snapshot is taken before the query runs
       val before = sc.getPersistentRDDs.keySet
       val rows = SparkEntry.queries(q)(s, sf).collect()
       rows.length shouldBe nRows

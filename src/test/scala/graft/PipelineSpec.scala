@@ -124,8 +124,13 @@ class PipelineSpec extends AnyFunSuite {
     // exactly, so a change to the star steps or to the convergence test
     // cannot pass unnoticed.
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
-    val (labels, rounds) = Dedup.connectedComponents(spark, edges)
+    var built: (org.apache.spark.sql.DataFrame, Int) = null
+    val jobs = LocalSpark.jobsIn { built = Dedup.connectedComponents(spark, edges) }
+    val (labels, rounds) = built
     assert(rounds == 7, s"took $rounds rounds, not 7")
+    // the jobs are pinned too: a round runs its carry's count and
+    // checkpoint, plus the exact check once the counts agree
+    assert(jobs == 23, s"the build ran $jobs Spark jobs")
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == (0L until 64L).map(_ -> 0L).toMap)
   }

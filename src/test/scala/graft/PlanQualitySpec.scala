@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 
@@ -15,6 +20,19 @@ class PlanQualitySpec extends AnyFunSuite {
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, LocalSpark.sf)
     df.queryExecution.executedPlan.toString()
+  }
+
+  /** The round-robin exchanges (the shape a REPARTITION hint plans) of
+    * an executed plan, AQE stages included, each as the conditions of
+    * the filters below it that call a graft kernel. */
+  private def hintExchanges(p: SparkPlan): Seq[Seq[String]] = {
+    val walk = new AdaptiveSparkPlanHelper {}
+    val isKernel = (e: Expression) => e.getClass.getName.startsWith("graft.")
+    walk.collect(p) {
+      case x: ShuffleExchangeExec if x.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => x
+    }.map(x => walk.collect(x.child) {
+      case f: FilterExec if f.condition.find(isKernel).isDefined => f.condition.sql
+    })
   }
 
   test("scan_filter_project pushes filters and prunes columns at the parquet scan") {
@@ -277,6 +295,22 @@ class PlanQualitySpec extends AnyFunSuite {
         s"$q: hint width must be the session's $dp:\n$p")
       assert(!p.contains("RoundRobinPartitioning(32)"),
         s"$q: literal 32-wide repartition survived the rewrite:\n$p")
+    }
+  }
+
+  test("no graft kernel runs below a REPARTITION hint's exchange") {
+    // the hint's round-robin exchange exists to spread per-row kernel
+    // work over the session's cores; a kernel filter below it runs in
+    // the scan stage, one task at test scale, so every document is
+    // shingled or tokenized serially before the parallel stage starts
+    for (q <- Seq("dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_edit_verify",
+                  "dedup_containment", "dedup_simhash", "dedup_incremental",
+                  "text_decontaminate_fuzzy", "text_context_ngrams", "text_ngrams_topk")) {
+      val df = SparkEntry.queries(q)(spark, LocalSpark.sf)
+      df.collect()
+      val hints = hintExchanges(df.queryExecution.executedPlan)
+      assert(hints.nonEmpty, s"$q plans no round-robin exchange")
+      assert(hints.flatten.isEmpty, s"$q filters on a graft kernel in its scan stage: ${hints.flatten}")
     }
   }
 
