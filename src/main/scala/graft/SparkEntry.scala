@@ -55,16 +55,36 @@ object SparkEntry {
     Relational.queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.iterator.flatMap(_.queries).toMap
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    unique(modules.flatMap(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    modules.iterator.flatMap(_.oracle).toMap
+  val oracleSql: Map[String, String] = unique(modules.flatMap(_.oracle))
+
+  // a name two modules define would keep only one of them
+  private[graft] def unique[V](entries: Seq[(String, V)]): Map[String, V] = {
+    val twice = entries.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+    require(twice.isEmpty, s"defined by two modules: ${twice.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
 }
 
 /** A bundle of harness queries + their DuckDB oracles. */
 final case class QueryModule(
     queries: Map[String, (SparkSession, String) => DataFrame],
     oracle: Map[String, String])
+
+object QueryModule {
+  /** The queries Spark and the DuckDB oracle run as the same statement,
+    * each declared once as name -> statement. Spark runs it with `run`
+    * (by default the standard `Tables.sql`); its oracle is the statement
+    * itself, or `oracleOf` it where DuckDB first derives, in CTEs, the
+    * relations that `run` registers as views. Only comments may tell the
+    * two texts apart: a Spark hint is a block comment to DuckDB. */
+  def shared(statements: Map[String, String],
+             run: String => (SparkSession, String) => DataFrame = Tables.sql,
+             oracleOf: String => String = identity): QueryModule =
+    QueryModule(statements.map { case (n, s) => n -> run(s) },
+      statements.map { case (n, s) => n -> oracleOf(s) })
+}

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Aggregation surface (SURVEY.md §2.5) — Hive `GroupByOperator`
   * (QL/exec/GroupByOperator.java, partial/final modes in
@@ -429,15 +429,119 @@ object Aggregates {
       FROM b
       ORDER BY rf"""
 
-  val queries: Map[String, Q] = Map(
-    "agg_winsorized_mean" -> Tables.sql(WinsorizedMeanSql),
-    "agg_skew_kurtosis" -> Tables.sql(SkewKurtSql),
-    "agg_trimmed_mean" -> Tables.sql(TrimmedMeanSql),
-    "agg_geomean" -> Tables.sql(GeoHarmonicSql),
-    "agg_weighted_percentile" -> Tables.sql(WeightedPctSql),
-    "feature_scale" -> Tables.sql(FeatureScaleSql),
-    "agg_mode" -> Tables.sql(ModeSql),
-    "agg_bool" -> Tables.sql(BoolAggSql),
+  // the queries Spark and DuckDB run as one statement (QueryModule.shared)
+  private val shared = QueryModule.shared(Map(
+    "agg_winsorized_mean" -> WinsorizedMeanSql,
+    "agg_skew_kurtosis" -> SkewKurtSql,
+    "agg_trimmed_mean" -> TrimmedMeanSql,
+    "agg_geomean" -> GeoHarmonicSql,
+    "agg_weighted_percentile" -> WeightedPctSql,
+    "feature_scale" -> FeatureScaleSql,
+    "agg_mode" -> ModeSql,
+    "agg_bool" -> BoolAggSql,
+    "agg_minmax_by" -> MinMaxBySql,
+
+    "agg_basic" -> """
+      SELECT o_orderstatus,
+             COUNT(*) AS n,
+             CAST(MIN(o_totalprice) AS DOUBLE) AS min_price,
+             CAST(MAX(o_totalprice) AS DOUBLE) AS max_price,
+             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
+             CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS DOUBLE) AS avg_price
+      FROM orders
+      GROUP BY o_orderstatus
+      ORDER BY o_orderstatus""",
+
+    // Multi-distinct + plain agg in one GROUP BY (Hive compiler rewrite;
+    // Catalyst RewriteDistinctAggregates).
+    "agg_distinct_multi" -> """
+      SELECT l_returnflag,
+             COUNT(DISTINCT l_suppkey) AS n_supp,
+             COUNT(DISTINCT l_partkey) AS n_part,
+             COUNT(*) AS n_rows,
+             CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
+      FROM lineitem
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag""",
+
+    // GROUPING SETS + grouping() marker (Hive GROUPING__ID is
+    // bit-reversed vs Spark — compare per-column grouping() instead,
+    // SURVEY.md §7.3 trap #1).
+    "agg_grouping_sets" -> """
+      SELECT COALESCE(l_returnflag, '<all>') AS rflag,
+             COALESCE(l_linestatus, '<all>') AS lstatus,
+             CAST(GROUPING(l_returnflag) AS INT) AS g_rflag,
+             CAST(GROUPING(l_linestatus) AS INT) AS g_lstatus,
+             COUNT(*) AS n,
+             CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
+      FROM lineitem
+      GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
+      ORDER BY rflag, lstatus""",
+
+    "agg_rollup" -> """
+      SELECT COALESCE(o_orderstatus, '<all>') AS status,
+             COALESCE(o_orderpriority, '<all>') AS priority,
+             COUNT(*) AS n,
+             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+      FROM orders
+      GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
+      ORDER BY status, priority""",
+
+    "agg_cube" -> """
+      SELECT COALESCE(o_orderstatus, '<all>') AS status,
+             COALESCE(o_orderpriority, '<all>') AS priority,
+             COUNT(*) AS n
+      FROM orders
+      GROUP BY CUBE(o_orderstatus, o_orderpriority)
+      ORDER BY status, priority""",
+
+    // Variance family + correlation (GenericUDAFVariance/Std/Corr/Covar).
+    // Values are O(1)-O(100) so round(6) is safely inside double
+    // precision; both engines use numerically-stable merge formulas.
+    "agg_stats" -> """
+      SELECT l_returnflag,
+             ROUND(VAR_POP(l_quantity), 6)    AS vpop_qty,
+             ROUND(VAR_SAMP(l_quantity), 6)   AS vsamp_qty,
+             ROUND(STDDEV_POP(l_quantity), 6) AS sdpop_qty,
+             ROUND(STDDEV_SAMP(l_discount), 6) AS sdsamp_disc,
+             ROUND(CORR(l_quantity, l_extendedprice), 6) AS corr_qty_price,
+             ROUND(COVAR_POP(l_quantity, l_discount), 6) AS covp_qty_disc,
+             ROUND(COVAR_SAMP(l_quantity, l_tax), 6) AS covs_qty_tax
+      FROM lineitem
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag""",
+
+    // ANSI ordered-set aggregates — PERCENTILE_CONT / PERCENTILE_DISC
+    // WITHIN GROUP (SQL:2008; Hive 1.2 has only its own percentile
+    // UDAF, the ANSI spelling is the modern surface users expect).
+    // Quantiles are EXACT binary fractions (1/4, 1/2, 3/4) over
+    // integer-valued quantities, so the interpolated value
+    // a + f·(b−a) is an exact dyadic rational — every intermediate is
+    // exact, which makes the result bit-identical no matter which
+    // algebraic spelling of the interpolation each engine uses (the
+    // two common forms differ in IEEE rounding for non-dyadic f).
+    // PERCENTILE_DISC adds the ANSI smallest-cume_dist≥q selection.
+    "agg_percentile_cont" -> PercentileContSql,
+
+    // FILTER-clause / conditional aggregation.
+    "agg_filtered" -> """
+      SELECT o_orderpriority,
+             COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
+             COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
+             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) FILTER (WHERE o_totalprice > 250000) AS DOUBLE) AS sum_big
+      FROM orders
+      GROUP BY o_orderpriority
+      ORDER BY o_orderpriority""",
+
+    "agg_having" -> """
+      SELECT l_suppkey, COUNT(*) AS n_items
+      FROM lineitem
+      GROUP BY l_suppkey
+      HAVING COUNT(*) > 620
+      ORDER BY l_suppkey"""
+  ))
+
+  val queries: Map[String, Q] = shared.queries ++ Map(
     // Exact quartile cutoffs via the bounded two-level value-domain
     // quantile: the monolithic PERCENTILE aggregate buffers every
     // l_extendedprice in ONE final OpenHashMap task — an executor-OOM
@@ -472,61 +576,6 @@ object Aggregates {
     }),
     "agg_listagg" -> Tables.sql(listaggSql(spark = true)),
     "agg_unpivot" -> Tables.sql(UnpivotSparkSql),
-    "agg_minmax_by" -> Tables.sql(MinMaxBySql),
-
-    "agg_basic" -> Tables.sql("""
-      SELECT o_orderstatus,
-             COUNT(*) AS n,
-             CAST(MIN(o_totalprice) AS DOUBLE) AS min_price,
-             CAST(MAX(o_totalprice) AS DOUBLE) AS max_price,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
-             CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS DOUBLE) AS avg_price
-      FROM orders
-      GROUP BY o_orderstatus
-      ORDER BY o_orderstatus"""),
-
-    // Multi-distinct + plain agg in one GROUP BY (Hive compiler rewrite;
-    // Catalyst RewriteDistinctAggregates).
-    "agg_distinct_multi" -> Tables.sql("""
-      SELECT l_returnflag,
-             COUNT(DISTINCT l_suppkey) AS n_supp,
-             COUNT(DISTINCT l_partkey) AS n_part,
-             COUNT(*) AS n_rows,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag"""),
-
-    // GROUPING SETS + grouping() marker (Hive GROUPING__ID is
-    // bit-reversed vs Spark — compare per-column grouping() instead,
-    // SURVEY.md §7.3 trap #1).
-    "agg_grouping_sets" -> Tables.sql("""
-      SELECT COALESCE(l_returnflag, '<all>') AS rflag,
-             COALESCE(l_linestatus, '<all>') AS lstatus,
-             CAST(GROUPING(l_returnflag) AS INT) AS g_rflag,
-             CAST(GROUPING(l_linestatus) AS INT) AS g_lstatus,
-             COUNT(*) AS n,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-      FROM lineitem
-      GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-      ORDER BY rflag, lstatus"""),
-
-    "agg_rollup" -> Tables.sql("""
-      SELECT COALESCE(o_orderstatus, '<all>') AS status,
-             COALESCE(o_orderpriority, '<all>') AS priority,
-             COUNT(*) AS n,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-      FROM orders
-      GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-      ORDER BY status, priority"""),
-
-    "agg_cube" -> Tables.sql("""
-      SELECT COALESCE(o_orderstatus, '<all>') AS status,
-             COALESCE(o_orderpriority, '<all>') AS priority,
-             COUNT(*) AS n
-      FROM orders
-      GROUP BY CUBE(o_orderstatus, o_orderpriority)
-      ORDER BY status, priority"""),
 
     // Hive ≤2.2 GROUPING__ID compatibility (SURVEY §7.3#1, HIVE-16102):
     // hive_grouping_id(grouping_id(), n) re-derives the legacy
@@ -564,22 +613,6 @@ object Aggregates {
                ewah_bitmap_empty(ewah_bitmap_and(a.b, c.b)) AS disjoint
         FROM bm a JOIN bm c ON a.status < c.status
         ORDER BY status_a, status_b"""),
-
-    // Variance family + correlation (GenericUDAFVariance/Std/Corr/Covar).
-    // Values are O(1)-O(100) so round(6) is safely inside double
-    // precision; both engines use numerically-stable merge formulas.
-    "agg_stats" -> Tables.sql("""
-      SELECT l_returnflag,
-             ROUND(VAR_POP(l_quantity), 6)    AS vpop_qty,
-             ROUND(VAR_SAMP(l_quantity), 6)   AS vsamp_qty,
-             ROUND(STDDEV_POP(l_quantity), 6) AS sdpop_qty,
-             ROUND(STDDEV_SAMP(l_discount), 6) AS sdsamp_disc,
-             ROUND(CORR(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-             ROUND(COVAR_POP(l_quantity, l_discount), 6) AS covp_qty_disc,
-             ROUND(COVAR_SAMP(l_quantity, l_tax), 6) AS covs_qty_tax
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag"""),
 
     // Exact percentile (Hive UDAFPercentile / GenericUDAFPercentileApprox
     // cousin) — linear interpolation in both engines.
@@ -748,18 +781,6 @@ object Aggregates {
         ORDER BY l_returnflag""")
     }),
 
-    // ANSI ordered-set aggregates — PERCENTILE_CONT / PERCENTILE_DISC
-    // WITHIN GROUP (SQL:2008; Hive 1.2 has only its own percentile
-    // UDAF, the ANSI spelling is the modern surface users expect).
-    // Quantiles are EXACT binary fractions (1/4, 1/2, 3/4) over
-    // integer-valued quantities, so the interpolated value
-    // a + f·(b−a) is an exact dyadic rational — every intermediate is
-    // exact, which makes the result bit-identical no matter which
-    // algebraic spelling of the interpolation each engine uses (the
-    // two common forms differ in IEEE rounding for non-dyadic f).
-    // PERCENTILE_DISC adds the ANSI smallest-cume_dist≥q selection.
-    "agg_percentile_cont" -> Tables.sql(PercentileContSql),
-
     // Incremental view maintenance — the refresh half of the MV story
     // (Hive 3's ALTER MATERIALIZED VIEW ... REBUILD incremental path;
     // Griffin & Libkin, SIGMOD'95): when a batch arrives, the MV is
@@ -789,23 +810,6 @@ object Aggregates {
       GROUP BY c_nationkey
       ORDER BY c_nationkey"""),
 
-    // FILTER-clause / conditional aggregation.
-    "agg_filtered" -> Tables.sql("""
-      SELECT o_orderpriority,
-             COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
-             COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) FILTER (WHERE o_totalprice > 250000) AS DOUBLE) AS sum_big
-      FROM orders
-      GROUP BY o_orderpriority
-      ORDER BY o_orderpriority"""),
-
-    "agg_having" -> Tables.sql("""
-      SELECT l_suppkey, COUNT(*) AS n_items
-      FROM lineitem
-      GROUP BY l_suppkey
-      HAVING COUNT(*) > 620
-      ORDER BY l_suppkey"""),
-
     // Two-stage salted aggregate — the 100 TB skew pattern (Hive
     // hive.groupby.skewindata, genGroupByPlanMapAggr2MR:6446): stage 1
     // aggregates (key, salt) so one hot key spreads over 16 reducers;
@@ -826,68 +830,10 @@ object Aggregates {
     })
   )
 
-  val oracle: Map[String, String] = Map(
-    "agg_winsorized_mean" -> WinsorizedMeanSql,
-    "agg_skew_kurtosis" -> SkewKurtSql,
-    "agg_trimmed_mean" -> TrimmedMeanSql,
-    "agg_geomean" -> GeoHarmonicSql,
-    "agg_weighted_percentile" -> WeightedPctSql,
-    "feature_scale" -> FeatureScaleSql,
-    "agg_mode" -> ModeSql,
-    "agg_bool" -> BoolAggSql,
+  val oracle: Map[String, String] = shared.oracle ++ Map(
     "agg_equidepth_hist" -> equidepthSql(spark = false),
     "agg_listagg" -> listaggSql(spark = false),
     "agg_unpivot" -> UnpivotOracleSql,
-    "agg_minmax_by" -> MinMaxBySql,
-
-    "agg_basic" -> """
-      SELECT o_orderstatus,
-             COUNT(*) AS n,
-             CAST(MIN(o_totalprice) AS DOUBLE) AS min_price,
-             CAST(MAX(o_totalprice) AS DOUBLE) AS max_price,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
-             CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS DOUBLE) AS avg_price
-      FROM orders
-      GROUP BY o_orderstatus
-      ORDER BY o_orderstatus""",
-
-    "agg_distinct_multi" -> """
-      SELECT l_returnflag,
-             COUNT(DISTINCT l_suppkey) AS n_supp,
-             COUNT(DISTINCT l_partkey) AS n_part,
-             COUNT(*) AS n_rows,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    "agg_grouping_sets" -> """
-      SELECT COALESCE(l_returnflag, '<all>') AS rflag,
-             COALESCE(l_linestatus, '<all>') AS lstatus,
-             CAST(GROUPING(l_returnflag) AS INT) AS g_rflag,
-             CAST(GROUPING(l_linestatus) AS INT) AS g_lstatus,
-             COUNT(*) AS n,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-      FROM lineitem
-      GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-      ORDER BY rflag, lstatus""",
-
-    "agg_rollup" -> """
-      SELECT COALESCE(o_orderstatus, '<all>') AS status,
-             COALESCE(o_orderpriority, '<all>') AS priority,
-             COUNT(*) AS n,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-      FROM orders
-      GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-      ORDER BY status, priority""",
-
-    "agg_cube" -> """
-      SELECT COALESCE(o_orderstatus, '<all>') AS status,
-             COALESCE(o_orderpriority, '<all>') AS priority,
-             COUNT(*) AS n
-      FROM orders
-      GROUP BY CUBE(o_orderstatus, o_orderpriority)
-      ORDER BY status, priority""",
 
     // legacy GROUPING__ID: bit i (first col = least significant) = 1
     // when col_i IS grouped — the inverse of the standard bit
@@ -921,19 +867,6 @@ object Aggregates {
       FROM card ca JOIN card cb ON ca.status < cb.status
       LEFT JOIN inter i ON i.sa = ca.status AND i.sb = cb.status
       ORDER BY status_a, status_b""",
-
-    "agg_stats" -> """
-      SELECT l_returnflag,
-             ROUND(VAR_POP(l_quantity), 6)    AS vpop_qty,
-             ROUND(VAR_SAMP(l_quantity), 6)   AS vsamp_qty,
-             ROUND(STDDEV_POP(l_quantity), 6) AS sdpop_qty,
-             ROUND(STDDEV_SAMP(l_discount), 6) AS sdsamp_disc,
-             ROUND(CORR(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-             ROUND(COVAR_POP(l_quantity, l_discount), 6) AS covp_qty_disc,
-             ROUND(COVAR_SAMP(l_quantity, l_tax), 6) AS covs_qty_tax
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
 
     // the classic Hive manual pivot: conditional aggregation
     "agg_pivot" -> """
@@ -994,9 +927,6 @@ object Aggregates {
       GROUP BY l_returnflag, l_linenumber
       ORDER BY l_returnflag, bin""",
 
-    // exact regime: every event_type has a collision-free sketch row
-    "agg_percentile_cont" -> PercentileContSql,
-
     // the full-table recompute — merge-refresh must equal it exactly
     "agg_mv_incremental" -> """
       SELECT l_returnflag, l_linestatus,
@@ -1021,6 +951,7 @@ object Aggregates {
       GROUP BY l_returnflag
       ORDER BY l_returnflag""",
 
+    // exact regime: every event_type has a collision-free sketch row
     "agg_countmin" -> """
       SELECT event_type, COUNT(*) AS est
       FROM events GROUP BY event_type
@@ -1047,22 +978,6 @@ object Aggregates {
       FROM customer
       GROUP BY c_nationkey
       ORDER BY c_nationkey""",
-
-    "agg_filtered" -> """
-      SELECT o_orderpriority,
-             COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
-             COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) FILTER (WHERE o_totalprice > 250000) AS DOUBLE) AS sum_big
-      FROM orders
-      GROUP BY o_orderpriority
-      ORDER BY o_orderpriority""",
-
-    "agg_having" -> """
-      SELECT l_suppkey, COUNT(*) AS n_items
-      FROM lineitem
-      GROUP BY l_suppkey
-      HAVING COUNT(*) > 620
-      ORDER BY l_suppkey""",
 
     "agg_skew_salted" -> """
       SELECT l_returnflag,

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between raw ingestion and tokenization (beyond the Hive reference
@@ -277,10 +277,27 @@ object Curation {
       ORDER BY q.source"""
   }
 
-  val queries: Map[String, Q] = Map(
+  // the queries Spark and DuckDB run as one statement (QueryModule.shared)
+  private val shared = QueryModule.shared(Map(
+    "curation_curriculum" -> CurriculumSql,
+    "text_drift_psi" -> DriftPsiSql,
+
+    // Temperature-scaled mixture weights (α=0.5) — the multi-corpus
+    // sampling recipe (Pile/XLM-R style): source s gets weight
+    // n_s^α / Σ n_t^α, flattening the natural size distribution so
+    // small sources are upsampled; `epochs` is the repeat factor the
+    // sampler applies to each source. One aggregate to a 20-row
+    // dimension — at 100 TB this query prices the mix from table
+    // stats; the weights feed sample_weighted_mix's thresholds.
+    // Determinism: per-source √chars quantizes to an exact 1e-3
+    // integer BEFORE the normalizing sum (double Σ is order-
+    // dependent; integer Σ is not), then each weight is one IEEE
+    // division chain ROUNDed at the boundary.
+    "curation_temperature_mix" -> TempMixSql
+  ))
+
+  val queries: Map[String, Q] = shared.queries ++ Map(
     "curation_quota_fill" -> Tables.sql(quotaFillSql(spark = true)),
-    "curation_curriculum" -> Tables.sql(CurriculumSql),
-    "text_drift_psi" -> Tables.sql(DriftPsiSql),
     // Fixed-size token chunking with overlap: 64-token chunks on a
     // 48-token stride (16-token overlap), the standard context-window
     // split for RAG indexing / training-sequence preparation. Pure
@@ -304,6 +321,7 @@ object Curation {
              ARRAY_JOIN(SLICE(toks, s + 1, LEAST(64, SIZE(toks) - s)), ' ') AS chunk_text
       FROM c
       ORDER BY doc_id, chunk_start"""),
+    "pipeline_train_report" -> Tables.sql(trainReportSql(spark = true)),
 
     // Deterministic domain-mixture sampling: each language stratum keeps
     // a configured fraction of its documents, selected by the same
@@ -314,20 +332,6 @@ object Curation {
     // canonical tiny dimension — Spark broadcasts it, so at 100 TB this
     // is a map-side filter with zero shuffle; reweighting a 100 TB mix
     // is a metadata change, not a data move.
-    // Temperature-scaled mixture weights (α=0.5) — the multi-corpus
-    // sampling recipe (Pile/XLM-R style): source s gets weight
-    // n_s^α / Σ n_t^α, flattening the natural size distribution so
-    // small sources are upsampled; `epochs` is the repeat factor the
-    // sampler applies to each source. One aggregate to a 20-row
-    // dimension — at 100 TB this query prices the mix from table
-    // stats; the weights feed sample_weighted_mix's thresholds.
-    // Determinism: per-source √chars quantizes to an exact 1e-3
-    // integer BEFORE the normalizing sum (double Σ is order-
-    // dependent; integer Σ is not), then each weight is one IEEE
-    // division chain ROUNDed at the boundary.
-    "curation_temperature_mix" -> Tables.sql(TempMixSql),
-    "pipeline_train_report" -> Tables.sql(trainReportSql(spark = true)),
-
     "sample_weighted_mix" -> Tables.sql("""
       WITH w AS (
         SELECT * FROM VALUES
@@ -571,7 +575,7 @@ object Curation {
     })
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = shared.oracle ++ Map(
     "pack_shards" -> """
       WITH t AS (
         SELECT doc_id,
@@ -593,10 +597,7 @@ object Curation {
       FROM s CROSS JOIN tot
       ORDER BY shard""",
     "curation_quota_fill" -> quotaFillSql(spark = false),
-    "curation_curriculum" -> CurriculumSql,
-    "curation_temperature_mix" -> TempMixSql,
     "pipeline_train_report" -> trainReportSql(spark = false),
-    "text_drift_psi" -> DriftPsiSql,
     "text_chunks" -> """
       WITH t AS (
         SELECT doc_id, LIST_FILTER(STRING_SPLIT(LOWER(text), ' '), w -> w <> '') AS toks

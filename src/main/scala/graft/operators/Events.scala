@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Time-window aggregation and sessionization over the `events` table.
   *
@@ -117,7 +117,74 @@ object Events {
       ORDER BY t"""
   }
 
-  val queries: Map[String, Q] = Map(
+  // the queries Spark and DuckDB run as one statement (QueryModule.shared)
+  private val shared = QueryModule.shared(Map(
+    "events_longest_streak" -> LongestStreakSql,
+
+    // Ordered conversion funnel (view → click → purchase): each stage
+    // keeps users whose first stage-k event precedes a later stage-k+1
+    // event. Three per-user MIN aggregates chained by semi-ish joins —
+    // at scale each stage is one shuffle on user_id and the stage
+    // tables shrink monotonically; conversion ratios are exact-integer
+    // divisions at the double boundary. All counts integers → one SQL
+    // text serves both engines.
+    "events_funnel" -> FunnelSql,
+
+    // Path mining: top event-type trigrams across user sequences (two
+    // LEADs per row — pattern DISCOVERY, where matchpath is pattern
+    // MATCHING against a given regex). Key-partitioned window + one
+    // hash aggregate; counts integer-exact.
+    "events_top_paths" -> TopPathsSql,
+
+    // First-order Markov transition matrix over each user's event
+    // stream: P(next | current) from LEAD pairs — the sequence
+    // statistic behind funnel design and matchpath pattern choice.
+    // One window pass per user (key-partitioned), two hash aggregates;
+    // counts are integers and each probability is one exact integer
+    // division at the double boundary. One SQL text serves both
+    // engines.
+    "events_markov_transitions" -> MarkovSql,
+
+    // Exponential-decay feature over each user's event stream: a fixed
+    // 4-term LAG chain (1, 1/2, 1/4, 1/8) — the window-function
+    // spelling of an EWMA tap. Arithmetic is one fixed IEEE sequence
+    // per row (deterministic), the frame never re-scans (4 LAGs, O(1)
+    // per row — the ADVICE.md lesson from asofForward's quadratic
+    // frame), and the user_id predicate pushes below the window
+    // because it is the partition key.
+    "events_decay_feature" -> DecaySql,
+
+    // Cohort lifetime-value curve: customers cohorted by first-order
+    // month, cumulative whole-dollar revenue per cohort age divided by
+    // cohort size — the LTV complement of events_cohort_retention's
+    // count matrix. Cohorting is one aggregate + one fact join on the
+    // customer key; the cumulative window runs over the tiny
+    // (cohort, age) matrix, never the fact.
+    "events_cohort_ltv" -> CohortLtvSql,
+
+    // Seasonality-adjusted anomaly detection: each (type, day, hour)
+    // count is z-scored against the type's OWN hour-of-day profile
+    // (mean/std over observed days for that wall-clock hour), so a
+    // nightly lull is never flagged just for being below the daily
+    // mean — the diurnal-profile upgrade of events_rate_anomaly's
+    // global baseline. Profile moments are exact integer sums cast to
+    // double (≪ 2^53); the z formula is one shared IEEE expression,
+    // filtered UNROUNDED at |z| > 2 and rounded only for display. Two
+    // hash aggregates + one (type, hour)-keyed broadcast-size join.
+    "events_seasonal_anomaly" -> SeasonalAnomalySql,
+
+    // Linear multi-touch attribution: each purchase's value splits
+    // evenly across the user's click/view touches in the prior 7
+    // days (the positional counterpart of events_asof_prior_view's
+    // last-touch). One user-keyed equi-join with a time-band filter,
+    // then per-purchase shares quantize to exact cents before the
+    // channel rollup — the quantized-sum discipline keeps the final
+    // SUM order-independent. Scales: the join shuffles on user_id
+    // only and the 7-day band bounds per-user pair counts.
+    "events_attribution" -> AttributionSql
+  ))
+
+  val queries: Map[String, Q] = shared.queries ++ Map(
     // Streaming-ingest reconciliation (Hive hcatalog/streaming
     // TransactionBatch twin, SURVEY §1.1/§2.9): the events slice is
     // ingested into an ACID table in three micro-batches via
@@ -148,7 +215,6 @@ object Events {
         GROUP BY event_type ORDER BY event_type""")
     }),
     "events_survival_km" -> Tables.sql(kmSql(spark = true)),
-    "events_longest_streak" -> Tables.sql(LongestStreakSql),
     "events_tumbling_window" -> Tables.sql("""
       SELECT window.start AS w_start, event_type,
              COUNT(*) AS n,
@@ -211,27 +277,12 @@ object Events {
       GROUP BY SESSION_WINDOW(ts, '30 minutes'), user_id
       ORDER BY user_id, sess_start"""),
 
-    // Ordered conversion funnel (view → click → purchase): each stage
-    // keeps users whose first stage-k event precedes a later stage-k+1
-    // event. Three per-user MIN aggregates chained by semi-ish joins —
-    // at scale each stage is one shuffle on user_id and the stage
-    // tables shrink monotonically; conversion ratios are exact-integer
-    // divisions at the double boundary. All counts integers → one SQL
-    // text serves both engines.
-    "events_funnel" -> Tables.sql(FunnelSql),
-
     // Weekly cohort retention: users bucketed by first-activity week,
     // counted in each later week they return. The µs-epoch week bucket
     // is exact integer arithmetic (engine-specific epoch spelling,
     // otherwise identical SQL); the DISTINCT activity set and both
     // aggregates shuffle on user_id / (cohort, offset) keys only.
     "events_cohort_retention" -> Tables.sql(cohortSql(spark = true)),
-
-    // Path mining: top event-type trigrams across user sequences (two
-    // LEADs per row — pattern DISCOVERY, where matchpath is pattern
-    // MATCHING against a given regex). Key-partitioned window + one
-    // hash aggregate; counts integer-exact.
-    "events_top_paths" -> Tables.sql(TopPathsSql),
 
     // Time-series gap filling: hourly per-user grid between each
     // user's first and last active hour, missing hours forward-filled
@@ -242,15 +293,6 @@ object Events {
     // fill window key-partitioned — linear at scale.
     "events_gap_fill" -> Tables.sql(gapFillSql(spark = true)),
 
-    // First-order Markov transition matrix over each user's event
-    // stream: P(next | current) from LEAD pairs — the sequence
-    // statistic behind funnel design and matchpath pattern choice.
-    // One window pass per user (key-partitioned), two hash aggregates;
-    // counts are integers and each probability is one exact integer
-    // division at the double boundary. One SQL text serves both
-    // engines.
-    "events_markov_transitions" -> Tables.sql(MarkovSql),
-
     // Per-user event-rate anomaly detection: hourly activity counts
     // z-scored against the user's own baseline, flagging hours >= 3σ.
     // The hour bucket is exact µs-epoch integer arithmetic; per-user
@@ -260,15 +302,6 @@ object Events {
     // (user, hour)/user keys + one co-partitioned join — linear at
     // 100 TB.
     "events_rate_anomaly" -> Tables.sql(anomalySql(spark = true)),
-
-    // Exponential-decay feature over each user's event stream: a fixed
-    // 4-term LAG chain (1, 1/2, 1/4, 1/8) — the window-function
-    // spelling of an EWMA tap. Arithmetic is one fixed IEEE sequence
-    // per row (deterministic), the frame never re-scans (4 LAGs, O(1)
-    // per row — the ADVICE.md lesson from asofForward's quadratic
-    // frame), and the user_id predicate pushes below the window
-    // because it is the partition key.
-    "events_decay_feature" -> Tables.sql(DecaySql),
 
     // Forecast backtest — the EVALUATION layer the forecasting ops
     // (ses_forecast/des_brown/decay_feature) feed: one-step-ahead
@@ -297,16 +330,6 @@ object Events {
     // raw scan collapses to O(days) rows first; everything after is
     // days-scale (a 7×days lag join is trivial).
     "events_autocorr" -> Tables.sql(autocorrSql(spark = true)),
-
-    // Linear multi-touch attribution: each purchase's value splits
-    // evenly across the user's click/view touches in the prior 7
-    // days (the positional counterpart of events_asof_prior_view's
-    // last-touch). One user-keyed equi-join with a time-band filter,
-    // then per-purchase shares quantize to exact cents before the
-    // channel rollup — the quantized-sum discipline keeps the final
-    // SUM order-independent. Scales: the join shuffles on user_id
-    // only and the 7-day band bounds per-user pair counts.
-    "events_attribution" -> Tables.sql(attributionSql(spark = true)),
 
     // CUSUM mean-shift changepoint over the daily count series: the
     // cumulative deviation S_t = Σ(xᵢ − μ) in n-scaled integer units
@@ -349,25 +372,6 @@ object Events {
     // interval-weighted mean of the value stream read as a step
     // function — exact integer arithmetic end to end (see twapSql).
     "events_twap" -> Tables.sql(twapSql(spark = true)),
-
-    // Cohort lifetime-value curve: customers cohorted by first-order
-    // month, cumulative whole-dollar revenue per cohort age divided by
-    // cohort size — the LTV complement of events_cohort_retention's
-    // count matrix. Cohorting is one aggregate + one fact join on the
-    // customer key; the cumulative window runs over the tiny
-    // (cohort, age) matrix, never the fact.
-    "events_cohort_ltv" -> Tables.sql(CohortLtvSql),
-
-    // Seasonality-adjusted anomaly detection: each (type, day, hour)
-    // count is z-scored against the type's OWN hour-of-day profile
-    // (mean/std over observed days for that wall-clock hour), so a
-    // nightly lull is never flagged just for being below the daily
-    // mean — the diurnal-profile upgrade of events_rate_anomaly's
-    // global baseline. Profile moments are exact integer sums cast to
-    // double (≪ 2^53); the z formula is one shared IEEE expression,
-    // filtered UNROUNDED at |z| > 2 and rounded only for display. Two
-    // hash aggregates + one (type, hour)-keyed broadcast-size join.
-    "events_seasonal_anomaly" -> Tables.sql(SeasonalAnomalySql),
 
     // Single exponential smoothing forecast per event_type (Brown,
     // 1956 — the one-parameter baseline every monitoring stack runs):
@@ -629,7 +633,7 @@ object Events {
     * DuckDB's HUGEINT alike; the closing quotient is exact BIGINT
     * division (Spark `DIV` / DuckDB `//`) so every projected column is
     * an integer — a ROUND(num/(1000.0*den),6) double here passed local
-    * DuckDB 1.0.0 bit-exactly yet failed the driver build's hash (r07):
+    * DuckDB 1.0.0 bit-exactly yet failed another build's hash compare:
     * float display columns are not engine-version-proof. twap_micro is
     * the time-weighted mean in micro-units (vq is milli, ×1000), num
     * and den ride along so any consumer can form the real-valued mean.
@@ -943,10 +947,8 @@ object Events {
       ORDER BY k"""
   }
 
-  /** Dialect-split linear-attribution text (interval literal only). */
-  private def attributionSql(spark: Boolean): String = {
-    val win = if (spark) "INTERVAL 7 DAYS" else "INTERVAL 7 DAY"
-    s"""
+  // linear attribution; DuckDB reads INTERVAL 7 DAYS as 7 DAY
+  private lazy val AttributionSql = """
       WITH purch AS (
         SELECT event_id, user_id, ts,
                CAST(ROUND(value * 100) AS BIGINT) AS v_cents
@@ -960,7 +962,7 @@ object Events {
         SELECT p.event_id, p.v_cents, t.channel
         FROM purch p JOIN touch t
           ON p.user_id = t.user_id
-         AND t.ts < p.ts AND t.ts >= p.ts - $win
+         AND t.ts < p.ts AND t.ts >= p.ts - INTERVAL 7 DAYS
       ),
       per AS (
         SELECT event_id, v_cents, channel, COUNT(*) AS c,
@@ -971,7 +973,6 @@ object Events {
              ROUND(CAST(SUM(CAST(ROUND(CAST(v_cents AS DOUBLE) * c / n)
                                  AS BIGINT)) AS DOUBLE) / 100, 2) AS credit
       FROM per GROUP BY channel ORDER BY channel"""
-  }
 
   // one SQL text, both engines
   private lazy val FunnelSql = """
@@ -1184,7 +1185,7 @@ object Events {
       WHERE user_id <= 30
       ORDER BY user_id, event_id"""
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = shared.oracle ++ Map(
     // the reconciliation oracle never sees the ACID table: direct
     // aggregate over the same source slice — equal iff ingest was
     // exactly-once (the replayed batch would inflate n_events/v_milli)
@@ -1195,7 +1196,6 @@ object Events {
       GROUP BY event_type ORDER BY event_type""",
 
     "events_survival_km" -> kmSql(spark = false),
-    "events_longest_streak" -> LongestStreakSql,
     "events_tumbling_window" -> """
       SELECT TIME_BUCKET(INTERVAL 1 HOUR, ts) AS w_start, event_type,
              COUNT(*) AS n,
@@ -1265,18 +1265,12 @@ object Events {
       FROM numbered
       GROUP BY user_id, sess_id
       ORDER BY user_id, sess_start""",
-
-    "events_funnel" -> FunnelSql,
     "events_cohort_retention" -> cohortSql(spark = false),
-    "events_decay_feature" -> DecaySql,
     "events_forecast_backtest" -> backtestSql(spark = false),
     "events_peaks" -> peaksSql(spark = false),
     "events_rate_anomaly" -> anomalySql(spark = false),
-    "events_markov_transitions" -> MarkovSql,
-    "events_top_paths" -> TopPathsSql,
     "events_gap_fill" -> gapFillSql(spark = false),
     "events_autocorr" -> autocorrSql(spark = false),
-    "events_attribution" -> attributionSql(spark = false),
     "events_changepoint" -> cusumSql(spark = false),
     "events_outliers_mad" -> madSql(spark = false),
     "events_session_overlap" -> overlapSql(spark = false),
@@ -1286,8 +1280,6 @@ object Events {
     "events_ses_forecast" -> sesSql(spark = false),
     "events_des_brown" -> holtSql(spark = false),
     "events_holt_winters" -> holtWintersSql(spark = false),
-    "events_seasonal_anomaly" -> SeasonalAnomalySql,
-    "events_cohort_ltv" -> CohortLtvSql,
     "events_bursts" -> burstSql(spark = false),
     "events_active_users" -> activeUsersSql(spark = false)
   )

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Scalar function surface + table-generating functions (SURVEY.md §2.7,
   * §2.1 #14-15) — the ~230-name Hive FunctionRegistry
@@ -52,7 +52,113 @@ object Functions {
       WHERE r.rk <= a.n_alloc
       ORDER BY segment, c_custkey"""
 
-  val queries: Map[String, Q] = Map(
+  // the queries Spark and DuckDB run as one statement (QueryModule.shared)
+  private val shared = QueryModule.shared(Map(
+    // Null-semantics pinning in one oracled row: aggregate null
+    // skipping (COUNT(expr)/SUM with NULL branches), MAX over a
+    // null-bearing column, an all-null group collapsing to NULL then
+    // COALESCE'd, and a predicate that can never be NULL — the 3VL
+    // corners a Hive-1.2 user depends on, value-compared cross-engine
+    // (SURVEY §7.3 trap family; the NOT IN null trap has its own row).
+    "semantics_nulls" -> """
+      SELECT o_orderstatus,
+             COUNT(*) AS n,
+             COUNT(NULLIF(o_orderpriority, '5-LOW')) AS cnt_skips_null,
+             CAST(SUM(CASE WHEN o_orderpriority = '5-LOW' THEN NULL ELSE 1 END) AS BIGINT) AS sum_skips_null,
+             MAX(NULLIF(o_orderpriority, '5-LOW')) AS max_skips_null,
+             COALESCE(MIN(NULLIF(o_orderpriority, o_orderpriority)), 'all-null') AS min_of_allnull,
+             CAST(COUNT(CASE WHEN (o_totalprice > 200000) IS NULL THEN 1 END) AS BIGINT) AS never_null_pred
+      FROM orders
+      GROUP BY o_orderstatus
+      ORDER BY o_orderstatus""",
+
+    // Hive's OTHER sampling form, TABLESAMPLE(BUCKET x OUT OF y ON col)
+    // (FilterDesc$SampleDesc, SURVEY §2.1#2): rows where hash(col) mod y
+    // lands in bucket x — DETERMINISTIC on the column, so unlike the
+    // seeded Bernoulli row sample it is exactly value-checkable. Spelled
+    // with the engine-independent multiplicative hash (as
+    // sample_stratified) instead of Hive's ObjectInspector hash (which
+    // no other engine computes); the key pre-reduces mod 2^31 so the
+    // product caps at (2^31-1)·2654435761 ≈ 5.7e18 < 2^63-1 ≈ 9.2e18
+    // and NEVER overflows BIGINT — keys beyond
+    // 2^31 alias into the same hash domain, which a bucket sampler
+    // tolerates by construction (DuckDB would raise on the unreduced
+    // product; Spark non-ANSI would silently wrap negative). Pure
+    // map-side predicate: no shuffle, no state — at 100 TB this samples
+    // inside the scan.
+    "sample_bucket_on" -> """
+      SELECT o_orderkey, o_custkey, o_totalprice
+      FROM orders
+      WHERE (o_orderkey % 2147483648) * 2654435761 % 4294967296 % 8 = 0
+      ORDER BY o_orderkey""",
+
+    // Systematic (every k-th) sampling by key stride — the zero-shuffle
+    // sampling form: the predicate evaluates at the scan, pushes into
+    // parquet row-group filtering where stats allow, and needs no
+    // window or ordering at any scale. TABLESAMPLE's deterministic
+    // cousin for evenly-spaced key spaces. Integer arithmetic: the
+    // bucket predicate is engine-independent.
+    "sample_systematic" -> """
+      SELECT o_orderkey, o_custkey, o_totalprice
+      FROM orders
+      WHERE o_orderkey % 25 = 0
+      ORDER BY o_orderkey""",
+
+    // Stratified exact-count sampling — the training-data form of
+    // sampling (k docs per language/source/quality stratum, reproducible
+    // across runs): rank rows inside each stratum by a deterministic
+    // multiplicative hash (Knuth: (id * 2654435761) mod 2^32 — plain
+    // integer arithmetic both engines compute identically; the
+    // (id % 2^31) pre-reduction keeps the product under 2^63 for ANY
+    // key domain — keys >= ~3.5e9 would otherwise overflow BIGINT,
+    // an error in DuckDB / ANSI Spark) and keep the first k. One shuffle on the stratum key, map-side nothing wasted —
+    // at 100 TB this is the per-stratum top-k pattern (window + filter),
+    // which AQE handles under stratum skew.
+    "sample_stratified" -> """
+      SELECT lang, doc_id, sample_rank FROM (
+        SELECT lang, doc_id,
+               ROW_NUMBER() OVER (PARTITION BY lang
+                 ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296, doc_id) AS sample_rank
+        FROM documents)
+      WHERE sample_rank <= 30
+      ORDER BY lang, doc_id""",
+
+    // Class-balanced downsampling — the imbalanced-learning primitive:
+    // every language class is downsampled to the MINORITY class's
+    // count (computed from the data, not configured), rows picked by
+    // the reproducible Knuth hash rank. One aggregate for the class
+    // counts (broadcast — it's a tiny dimension), one window rank per
+    // class: at 100 TB the majority classes never shuffle more than
+    // their rank window needs, and re-runs pick identical rows.
+    "sample_balanced" -> """
+      WITH cc AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
+                  FROM documents GROUP BY lang),
+      tgt AS (SELECT CAST(MIN(n) AS BIGINT) AS k FROM cc),
+      r AS (SELECT lang, doc_id,
+                   ROW_NUMBER() OVER (PARTITION BY lang
+                     ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296, doc_id) AS rk
+            FROM documents)
+      SELECT r.lang, r.doc_id, CAST(r.rk AS BIGINT) AS sample_rank, t.k AS class_size
+      FROM r CROSS JOIN tgt t
+      WHERE r.rk <= t.k
+      ORDER BY r.lang, r.doc_id""",
+
+    // Neyman-allocation stratified sampling — the survey-statistics
+    // upgrade of sample_stratified: the 500-row budget is allocated
+    // n_h ∝ N_h·S_h (stratum size × stratum std-dev), so volatile
+    // strata get proportionally more rows — the minimum-variance
+    // allocation for estimating the population mean. Two passes, both
+    // scale-shaped: (1) per-stratum moments as ONE map-side-combined
+    // hash aggregate (cents-quantized, DECIMAL product sums — exact at
+    // any scale), N_h·S_h quantized to an exact integer BEFORE the
+    // tiny normalizing sum; (2) the per-stratum top-n_h pick by the
+    // same Knuth multiplicative hash as sample_stratified (window rank
+    // + filter, one stratum-key shuffle — reproducible across runs),
+    // so the statement is engine-independent end to end.
+    "sample_neyman" -> NeymanSql
+  ))
+
+  val queries: Map[String, Q] = shared.queries ++ Map(
     "string_fns" -> Tables.sql("""
       SELECT c_custkey,
              CONCAT_WS('|', c_name, c_mktsegment) AS joined,
@@ -130,8 +236,7 @@ object Functions {
       WHERE o_orderkey < 300
       ORDER BY o_orderkey"""),
 
-    // dtype discipline (round-1 driver lesson): the driver's hash compare is
-    // dtype-strict, and FLOOR/CEIL/SIGN/FACTORIAL return different types in
+    // dtype discipline: the result hash compare is dtype-strict, and FLOOR/CEIL/SIGN/FACTORIAL return different types in
     // Spark vs DuckDB — CAST to one agreed type on BOTH sides.
     "math_fns" -> Tables.sql("""
       SELECT p_partkey,
@@ -153,24 +258,6 @@ object Functions {
       FROM part
       WHERE p_partkey < 300
       ORDER BY p_partkey"""),
-
-    // Null-semantics pinning in one oracled row: aggregate null
-    // skipping (COUNT(expr)/SUM with NULL branches), MAX over a
-    // null-bearing column, an all-null group collapsing to NULL then
-    // COALESCE'd, and a predicate that can never be NULL — the 3VL
-    // corners a Hive-1.2 user depends on, value-compared cross-engine
-    // (SURVEY §7.3 trap family; the NOT IN null trap has its own row).
-    "semantics_nulls" -> Tables.sql("""
-      SELECT o_orderstatus,
-             COUNT(*) AS n,
-             COUNT(NULLIF(o_orderpriority, '5-LOW')) AS cnt_skips_null,
-             CAST(SUM(CASE WHEN o_orderpriority = '5-LOW' THEN NULL ELSE 1 END) AS BIGINT) AS sum_skips_null,
-             MAX(NULLIF(o_orderpriority, '5-LOW')) AS max_skips_null,
-             COALESCE(MIN(NULLIF(o_orderpriority, o_orderpriority)), 'all-null') AS min_of_allnull,
-             CAST(COUNT(CASE WHEN (o_totalprice > 200000) IS NULL THEN 1 END) AS BIGINT) AS never_null_pred
-      FROM orders
-      GROUP BY o_orderstatus
-      ORDER BY o_orderstatus"""),
 
     "conditional_fns" -> Tables.sql("""
       SELECT s_suppkey,
@@ -384,89 +471,6 @@ object Functions {
       SELECT o_orderkey FROM orders TABLESAMPLE (10 PERCENT) REPEATABLE (42)
       ORDER BY o_orderkey"""),
 
-    // Hive's OTHER sampling form, TABLESAMPLE(BUCKET x OUT OF y ON col)
-    // (FilterDesc$SampleDesc, SURVEY §2.1#2): rows where hash(col) mod y
-    // lands in bucket x — DETERMINISTIC on the column, so unlike the
-    // seeded Bernoulli row sample it is exactly value-checkable. Spelled
-    // with the engine-independent multiplicative hash (as
-    // sample_stratified) instead of Hive's ObjectInspector hash (which
-    // no other engine computes); the key pre-reduces mod 2^31 so the
-    // product caps at (2^31-1)·2654435761 ≈ 5.7e18 < 2^63-1 ≈ 9.2e18
-    // and NEVER overflows BIGINT — keys beyond
-    // 2^31 alias into the same hash domain, which a bucket sampler
-    // tolerates by construction (DuckDB would raise on the unreduced
-    // product; Spark non-ANSI would silently wrap negative). Pure
-    // map-side predicate: no shuffle, no state — at 100 TB this samples
-    // inside the scan.
-    "sample_bucket_on" -> Tables.sql("""
-      SELECT o_orderkey, o_custkey, o_totalprice
-      FROM orders
-      WHERE (o_orderkey % 2147483648) * 2654435761 % 4294967296 % 8 = 0
-      ORDER BY o_orderkey"""),
-
-    // Systematic (every k-th) sampling by key stride — the zero-shuffle
-    // sampling form: the predicate evaluates at the scan, pushes into
-    // parquet row-group filtering where stats allow, and needs no
-    // window or ordering at any scale. TABLESAMPLE's deterministic
-    // cousin for evenly-spaced key spaces.
-    "sample_systematic" -> Tables.sql("""
-      SELECT o_orderkey, o_custkey, o_totalprice
-      FROM orders
-      WHERE o_orderkey % 25 = 0
-      ORDER BY o_orderkey"""),
-
-    // Stratified exact-count sampling — the training-data form of
-    // sampling (k docs per language/source/quality stratum, reproducible
-    // across runs): rank rows inside each stratum by a deterministic
-    // multiplicative hash (Knuth: (id * 2654435761) mod 2^32 — plain
-    // integer arithmetic both engines compute identically; the
-    // (id % 2^31) pre-reduction keeps the product under 2^63 for ANY
-    // key domain — keys >= ~3.5e9 would otherwise overflow BIGINT,
-    // an error in DuckDB / ANSI Spark) and keep the first k. One shuffle on the stratum key, map-side nothing wasted —
-    // at 100 TB this is the per-stratum top-k pattern (window + filter),
-    // which AQE handles under stratum skew.
-    "sample_stratified" -> Tables.sql("""
-      SELECT lang, doc_id, sample_rank FROM (
-        SELECT lang, doc_id,
-               ROW_NUMBER() OVER (PARTITION BY lang
-                 ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296, doc_id) AS sample_rank
-        FROM documents)
-      WHERE sample_rank <= 30
-      ORDER BY lang, doc_id"""),
-
-    // Class-balanced downsampling — the imbalanced-learning primitive:
-    // every language class is downsampled to the MINORITY class's
-    // count (computed from the data, not configured), rows picked by
-    // the reproducible Knuth hash rank. One aggregate for the class
-    // counts (broadcast — it's a tiny dimension), one window rank per
-    // class: at 100 TB the majority classes never shuffle more than
-    // their rank window needs, and re-runs pick identical rows.
-    "sample_balanced" -> Tables.sql("""
-      WITH cc AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
-                  FROM documents GROUP BY lang),
-      tgt AS (SELECT CAST(MIN(n) AS BIGINT) AS k FROM cc),
-      r AS (SELECT lang, doc_id,
-                   ROW_NUMBER() OVER (PARTITION BY lang
-                     ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296, doc_id) AS rk
-            FROM documents)
-      SELECT r.lang, r.doc_id, CAST(r.rk AS BIGINT) AS sample_rank, t.k AS class_size
-      FROM r CROSS JOIN tgt t
-      WHERE r.rk <= t.k
-      ORDER BY r.lang, r.doc_id"""),
-
-    // Neyman-allocation stratified sampling — the survey-statistics
-    // upgrade of sample_stratified: the 500-row budget is allocated
-    // n_h ∝ N_h·S_h (stratum size × stratum std-dev), so volatile
-    // strata get proportionally more rows — the minimum-variance
-    // allocation for estimating the population mean. Two passes, both
-    // scale-shaped: (1) per-stratum moments as ONE map-side-combined
-    // hash aggregate (cents-quantized, DECIMAL product sums — exact at
-    // any scale), N_h·S_h quantized to an exact integer BEFORE the
-    // tiny normalizing sum; (2) the per-stratum top-n_h pick by the
-    // same Knuth multiplicative hash as sample_stratified (window rank
-    // + filter, one stratum-key shuffle — reproducible across runs).
-    "sample_neyman" -> Tables.sql(NeymanSql),
-
     // Deterministic train/val/test split — the reproducibility
     // primitive every training pipeline needs: assignment is a pure
     // function of the KEY (first md5 byte-pair against hex thresholds:
@@ -486,8 +490,7 @@ object Functions {
                   WHEN SUBSTR(MD5(CAST(source AS BINARY)), 1, 2) < 'e6' THEN 'val'
                   ELSE 'test' END AS group_split
       FROM documents
-      ORDER BY doc_id""")
-  ,
+      ORDER BY doc_id"""),
     // Weighted sampling without replacement (Efraimidis–Spirakis, IPL
     // 2006 A-ES): priority = ln(u)/w with u a deterministic
     // md5-derived uniform in (0,1) — the top-k by priority IS a
@@ -530,7 +533,7 @@ object Functions {
     s"regexp_replace(regexp_replace(regexp_replace($e, " +
       s"'[A-Z]', 'X', 'g'), '[a-z]', 'x', 'g'), '[0-9]', 'n', 'g')"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = shared.oracle ++ Map(
     "mask_fns" -> s"""
       SELECT c_custkey,
              ${duckMask("c_name")} AS m_all,
@@ -581,45 +584,6 @@ object Functions {
       FROM t GROUP BY 1 ORDER BY tag""",
 
     "sample_weighted_aes" -> aesSql(spark = false),
-    // identical integer arithmetic — the bucket predicate is engine-independent
-    "sample_systematic" -> """
-      SELECT o_orderkey, o_custkey, o_totalprice
-      FROM orders
-      WHERE o_orderkey % 25 = 0
-      ORDER BY o_orderkey""",
-
-    "sample_bucket_on" -> """
-      SELECT o_orderkey, o_custkey, o_totalprice
-      FROM orders
-      WHERE (o_orderkey % 2147483648) * 2654435761 % 4294967296 % 8 = 0
-      ORDER BY o_orderkey""",
-
-    // identical text: exact decimal moments, quantized N_h·S_h, same
-    // Knuth-hash rank — engine-independent end to end
-    "sample_neyman" -> NeymanSql,
-
-    "sample_balanced" -> """
-      WITH cc AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
-                  FROM documents GROUP BY lang),
-      tgt AS (SELECT CAST(MIN(n) AS BIGINT) AS k FROM cc),
-      r AS (SELECT lang, doc_id,
-                   ROW_NUMBER() OVER (PARTITION BY lang
-                     ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296, doc_id) AS rk
-            FROM documents)
-      SELECT r.lang, r.doc_id, CAST(r.rk AS BIGINT) AS sample_rank, t.k AS class_size
-      FROM r CROSS JOIN tgt t
-      WHERE r.rk <= t.k
-      ORDER BY r.lang, r.doc_id""",
-
-    // identical integer arithmetic — the hash rank is engine-independent
-    "sample_stratified" -> """
-      SELECT lang, doc_id, sample_rank FROM (
-        SELECT lang, doc_id,
-               ROW_NUMBER() OVER (PARTITION BY lang
-                 ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296, doc_id) AS sample_rank
-        FROM documents)
-      WHERE sample_rank <= 30
-      ORDER BY lang, doc_id""",
 
     // identical md5-hex thresholding (DuckDB md5 takes VARCHAR directly)
     "sample_split_hash" -> """
@@ -722,18 +686,6 @@ object Functions {
       FROM part
       WHERE p_partkey < 300
       ORDER BY p_partkey""",
-
-    "semantics_nulls" -> """
-      SELECT o_orderstatus,
-             COUNT(*) AS n,
-             COUNT(NULLIF(o_orderpriority, '5-LOW')) AS cnt_skips_null,
-             CAST(SUM(CASE WHEN o_orderpriority = '5-LOW' THEN NULL ELSE 1 END) AS BIGINT) AS sum_skips_null,
-             MAX(NULLIF(o_orderpriority, '5-LOW')) AS max_skips_null,
-             COALESCE(MIN(NULLIF(o_orderpriority, o_orderpriority)), 'all-null') AS min_of_allnull,
-             CAST(COUNT(CASE WHEN (o_totalprice > 200000) IS NULL THEN 1 END) AS BIGINT) AS never_null_pred
-      FROM orders
-      GROUP BY o_orderstatus
-      ORDER BY o_orderstatus""",
 
     "conditional_fns" -> """
       SELECT s_suppkey,

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -22,8 +22,9 @@ import scala.collection.mutable.ArrayBuffer
   * views, and its body is the oracle's text. `edgeViews` is the one
   * owner of the family's shared relations — `graph_e` (the edge list),
   * `graph_sym` (its symmetric closure) and `graph_deg` (the symmetric
-  * degree table) — and `overEdges` runs one body in Spark over those
-  * views and in DuckDB after the CTEs that derive them. A CTE-spelled
+  * degree table) — and one statement runs in Spark over those views
+  * (`overEdges`) and in DuckDB after the CTEs that derive them
+  * (`withEdgeCtes`). A CTE-spelled
   * edge build would re-run the incidence self-join at every reference
   * on Spark, because Catalyst inlines CTEs (three unrolled PageRank
   * iterations reference it ~7×); DuckDB materializes its CTEs. The
@@ -108,15 +109,20 @@ object Graph {
       spark.sql(sql).persist().createOrReplaceTempView(view)
   }
 
-  /** A query over the shared edge relations and its oracle: the same
-    * `body` (its own CTEs, then its SELECT) after `w`. Spark reads the
-    * relations from `edgeViews`; DuckDB derives them in CTEs of the same
-    * names before the body. */
-  private def overEdges(body: String, w: String = "WITH"): (Q, String) = (
-    (spark, sfDir) => { edgeViews(spark, sfDir); spark.sql(s"$w $body") },
+  /** How Spark runs a statement over the shared edge relations: it
+    * reads them from `edgeViews`. */
+  private def overEdges(stmt: String): Q =
+    (spark, sfDir) => { edgeViews(spark, sfDir); spark.sql(stmt) }
+
+  /** The oracle of a statement over the shared edge relations: DuckDB
+    * derives them in CTEs of the same names, first in its WITH clause,
+    * before the statement's own CTEs. */
+  private def withEdgeCtes(stmt: String): String = {
+    val w = if (stmt.startsWith("WITH RECURSIVE ")) "WITH RECURSIVE" else "WITH"
     s"""$w $EdgeCte,
       graph_sym AS MATERIALIZED ($SymSql),
-      graph_deg AS MATERIALIZED ($DegSql),$body""")
+      graph_deg AS MATERIALIZED ($DegSql),${stmt.stripPrefix(s"$w ")}"""
+  }
 
   // Directed association rules (support / confidence / lift — the
   // market-basket complement of text_pmi_bigrams' symmetric score):
@@ -766,20 +772,26 @@ object Graph {
       FROM ppr3 WHERE CAST(q AS BIGINT) > 0
       ORDER BY ppr_q DESC, node LIMIT 20"""
 
-  private val shared: Map[String, (Q, String)] = Map(
-    "graph_degree_stats" -> overEdges(DegreeStatsSql),
-    "graph_khop" -> overEdges(KhopSql),
-    "graph_label_prop" -> overEdges(LabelPropSql),
-    "graph_modularity" -> overEdges(ModularitySql),
-    "graph_adamic_adar" -> overEdges(AdamicAdarSql),
-    "graph_pagerank" -> overEdges(PageRankSql),
-    "graph_ppr" -> overEdges(PprSql),
-    "graph_harmonic_centrality" -> overEdges(HarmonicSql),
-    "graph_assortativity" -> overEdges(AssortativitySql),
-    "graph_local_clustering" -> overEdges(LocalClusteringSql),
-    "graph_reach_recursive" -> overEdges(ReachSql, "WITH RECURSIVE"))
+  // the queries Spark and DuckDB run as one statement (QueryModule.shared):
+  // over the shared edge relations, and over the tables alone
+  private val sharedOverEdges = QueryModule.shared(Map(
+    "graph_degree_stats" -> s"WITH $DegreeStatsSql",
+    "graph_khop" -> s"WITH $KhopSql",
+    "graph_label_prop" -> s"WITH $LabelPropSql",
+    "graph_modularity" -> s"WITH $ModularitySql",
+    "graph_adamic_adar" -> s"WITH $AdamicAdarSql",
+    "graph_pagerank" -> s"WITH $PageRankSql",
+    "graph_ppr" -> s"WITH $PprSql",
+    "graph_harmonic_centrality" -> s"WITH $HarmonicSql",
+    "graph_assortativity" -> s"WITH $AssortativitySql",
+    "graph_local_clustering" -> s"WITH $LocalClusteringSql",
+    "graph_reach_recursive" -> s"WITH RECURSIVE $ReachSql"),
+    run = overEdges(_), oracleOf = withEdgeCtes(_))
+  private val shared = QueryModule.shared(Map(
+    "recsys_user_cf" -> UserCfSql,
+    "recsys_item_sim" -> ItemSimSql))
 
-  val queries: Map[String, Q] = shared.map { case (name, (q, _)) => name -> q } ++ Map(
+  val queries: Map[String, Q] = sharedOverEdges.queries ++ shared.queries ++ Map(
     // Driver loop over checkpointed rounds, each a fixed RDD program
     // (as for kcore, and more so: the single-statement spelling's
     // scalar subqueries re-derive TWO rounds of cand/sel/jump chains
@@ -834,7 +846,6 @@ object Graph {
       import spark.implicits._
       rows.toSeq.toDF("round", "n", "total_cost_q")
     }),
-    "recsys_user_cf" -> Tables.sql(UserCfSql),
     "recsys_als_step" -> Tables.sql(alsStepSql(spark = true)),
     // Driver loop over checkpointed peels, each a fixed RDD program
     // (`kcorePeel`), and the 8 trajectory numbers are driver-side
@@ -867,7 +878,6 @@ object Graph {
       rows.toSeq.toDF("round", "n_nodes", "n_edges")
     }),
     "graph_assoc_rules" -> Tables.sql(assocSql(spark = true)),
-    "recsys_item_sim" -> Tables.sql(ItemSimSql),
     // sssp keeps the single-statement spelling on BOTH sides: unlike
     // reach_recursive (UnionLoopExec re-plans its step each iteration),
     // the unrolled relaxations sit in one plan where ReuseExchange
@@ -895,7 +905,7 @@ object Graph {
     })
   )
 
-  val oracle: Map[String, String] = shared.map { case (name, (_, sql)) => name -> sql } ++ Map(
+  val oracle: Map[String, String] = sharedOverEdges.oracle ++ shared.oracle ++ Map(
     "graph_mst_boruvka" -> mstSql("""
       WITH io AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
       ew AS MATERIALIZED (
@@ -903,11 +913,9 @@ object Graph {
                CAST(FLOOR(1000000.0 / COUNT(*)) AS BIGINT) AS cost
         FROM io a JOIN io b ON a.o = b.o AND a.p < b.p
         GROUP BY a.p, b.p HAVING COUNT(*) >= 2)""", "ew"),
-    "recsys_user_cf" -> UserCfSql,
     "recsys_als_step" -> alsStepSql(spark = false),
     "graph_kcore" -> kcoreSql(s"WITH $EdgeCte, sym0 AS MATERIALIZED ($SymSql)"),
     "graph_assoc_rules" -> assocSql(spark = false),
-    "recsys_item_sim" -> ItemSimSql,
     "graph_sssp" -> ssspSql(spark = false),
     "graph_triangles" -> (s"WITH $EdgeCte" + """
       SELECT (SELECT COUNT(*) FROM (SELECT src AS node FROM graph_e UNION SELECT dst AS node FROM graph_e) n) AS n_nodes,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Data-quality profiling and constraint validation — the pre-training
   * gate every production pipeline runs before a corpus or fact table is
@@ -84,13 +84,11 @@ object Profiling {
     * over a value column. Digit extraction is exact string arithmetic
     * on the cents-integer; expected frequencies log10(1+1/d) and the
     * deviations are per-digit double formulas on exact counts. Single
-    * aggregate to 9 rows. Dialect split on the string type name only. */
-  private def benfordSql(spark: Boolean): String = {
-    val str = if (spark) "STRING" else "VARCHAR"
-    s"""
+    * aggregate to 9 rows. DuckDB reads STRING as its VARCHAR. */
+  private val BenfordSql = """
       WITH d AS (
         SELECT CAST(SUBSTRING(CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT)
-                                   AS $str), 1, 1) AS INT) AS digit
+                                   AS STRING), 1, 1) AS INT) AS digit
         FROM orders WHERE o_totalprice > 0
       ),
       c AS (SELECT digit, COUNT(*) AS n FROM d GROUP BY digit),
@@ -99,7 +97,6 @@ object Profiling {
              ROUND(LOG10(1 + 1.0E0 / digit), 6) AS benford_expected,
              ROUND(n / tot - LOG10(1 + 1.0E0 / digit), 6) AS deviation
       FROM c CROSS JOIN t ORDER BY digit"""
-  }
 
   /** Functional-dependency discovery over a fixed candidate set — the
     * profiling pass that infers key/hierarchy structure (det → dep holds
@@ -218,21 +215,21 @@ object Profiling {
       ORDER BY generalized, nation, band"""
   }
 
-  val queries: Map[String, Q] = Map(
-    "privacy_kanonymity" -> Tables.sql(privacySql(spark = true)),
-    "profile_skew" -> Tables.sql(skewSql(spark = true)),
-    "profile_columns" -> Tables.sql(ProfileSql),
-    "validate_constraints" -> Tables.sql(ValidateSql),
-    "profile_benford" -> Tables.sql(benfordSql(spark = true)),
-    "profile_fd" -> Tables.sql(FdSql)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "privacy_kanonymity" -> privacySql(spark = false),
-    "profile_skew" -> skewSql(spark = false),
+  // the queries Spark and DuckDB run as one statement (QueryModule.shared)
+  private val shared = QueryModule.shared(Map(
     "profile_columns" -> ProfileSql,
     "validate_constraints" -> ValidateSql,
-    "profile_benford" -> benfordSql(spark = false),
-    "profile_fd" -> FdSql
+    "profile_fd" -> FdSql,
+    "profile_benford" -> BenfordSql
+  ))
+
+  val queries: Map[String, Q] = shared.queries ++ Map(
+    "privacy_kanonymity" -> Tables.sql(privacySql(spark = true)),
+    "profile_skew" -> Tables.sql(skewSql(spark = true))
+  )
+
+  val oracle: Map[String, String] = shared.oracle ++ Map(
+    "privacy_kanonymity" -> privacySql(spark = false),
+    "profile_skew" -> skewSql(spark = false)
   )
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Core relational surface: scan/filter/project, every join type, union,
   * sort/distribute/cluster, limit/top-k, subquery predicates.
@@ -546,28 +546,260 @@ object Relational {
       ORDER BY total_qty DESC, o_orderkey
       LIMIT 20"""
 
-  val queries: Map[String, Q] = Map(
-    "q3_shipping_priority" -> Tables.sql(Q3Sql),
-    "q5_local_supplier" -> Tables.sql(Q5Sql),
-    "q10_returned_items" -> Tables.sql(Q10Sql),
-    "q18_large_volume" -> Tables.sql(Q18Sql),
-    "q2_min_cost_supplier" -> Tables.sql(Q2Sql),
-    "q4_order_priority" -> Tables.sql(Q4Sql),
-    "q12_priority_class" -> Tables.sql(Q12Sql),
-    "q14_promo_revenue" -> Tables.sql(Q14Sql),
-    "q16_supplier_cnt" -> Tables.sql(Q16Sql),
-    "q19_disjunct_revenue" -> Tables.sql(Q19Sql),
-    "q22_inactive_customers" -> Tables.sql(Q22Sql),
-    "q6_forecast_revenue" -> Tables.sql(Q6Sql),
-    "q7_nation_volume" -> Tables.sql(Q7Sql),
-    "q8_market_share" -> Tables.sql(Q8Sql),
-    "q9_product_profit" -> Tables.sql(Q9Sql),
-    "q11_important_stock" -> Tables.sql(Q11Sql),
-    "q13_order_distribution" -> Tables.sql(Q13Sql),
-    "q15_top_supplier" -> Tables.sql(Q15Sql),
-    "q17_small_qty_revenue" -> Tables.sql(Q17Sql),
-    "q20_excess_stock" -> Tables.sql(Q20Sql),
-    "q21_waiting_suppliers" -> Tables.sql(Q21Sql),
+  // the queries Spark and DuckDB run as one statement (QueryModule.shared)
+  private val shared = QueryModule.shared(Map(
+    "q3_shipping_priority" -> Q3Sql,
+    "q5_local_supplier" -> Q5Sql,
+    "q10_returned_items" -> Q10Sql,
+    "q18_large_volume" -> Q18Sql,
+    "q2_min_cost_supplier" -> Q2Sql,
+    "q4_order_priority" -> Q4Sql,
+    "q12_priority_class" -> Q12Sql,
+    "q14_promo_revenue" -> Q14Sql,
+    "q16_supplier_cnt" -> Q16Sql,
+    "q19_disjunct_revenue" -> Q19Sql,
+    "q22_inactive_customers" -> Q22Sql,
+    "q6_forecast_revenue" -> Q6Sql,
+    "q7_nation_volume" -> Q7Sql,
+    "q8_market_share" -> Q8Sql,
+    "q9_product_profit" -> Q9Sql,
+    "q11_important_stock" -> Q11Sql,
+    "q13_order_distribution" -> Q13Sql,
+    "q15_top_supplier" -> Q15Sql,
+    "q17_small_qty_revenue" -> Q17Sql,
+    "q20_excess_stock" -> Q20Sql,
+    "q21_waiting_suppliers" -> Q21Sql,
+
+    // Slowly-changing-dimension Type 2 apply (Kimball's SCD2 — the
+    // INSERT OVERWRITE idiom every Hive warehouse runs for dimension
+    // history): a change batch (here: customers with a key-derived
+    // predicate, effective at their latest order date) closes the
+    // current row (valid_to = effective date, is_current = 0) and
+    // opens the new version; untouched customers keep their open row.
+    // Pure projection + union + one broadcast-size join on the change
+    // keys — at 100 TB the rewrite touches the dimension, never the
+    // fact, and the output is the bitemporal table as-of joins consume.
+    "scd2_apply" -> Scd2Sql,
+
+    // Relational division (Codd's ÷ — "FOR ALL" as SQL): customers
+    // whose orders span EVERY priority class that exists. The division
+    // compiles to one distinct-count aggregate against a 1-row scalar
+    // subquery — no correlated NOT EXISTS double negation, which would
+    // plan as a nested anti-join per candidate. Divisor cardinality is
+    // a broadcast scalar; the dividend aggregate is one shuffle on the
+    // customer key at any scale.
+    "join_division" -> """
+      SELECT c_custkey, c_name
+      FROM customer JOIN orders ON c_custkey = o_custkey
+      GROUP BY c_custkey, c_name
+      HAVING COUNT(DISTINCT o_orderpriority) =
+             (SELECT COUNT(DISTINCT o_orderpriority) FROM orders)
+      ORDER BY c_custkey""",
+
+    // TPC-H Q1 shape — the flagship end-to-end slice (scan → filter →
+    // partial/final hash agg → sort). Hive: GroupByOperator modes
+    // HASH→MERGEPARTIAL (QL/exec/GroupByOperator.java:733).
+    "q1_pricing_summary" -> """
+      SELECT l_returnflag, l_linestatus,
+             -- money sums on the exact integer grid (ROUND(x*10^s) ->
+             -- BIGINT -> DECIMAL): CAST(double AS DECIMAL) rounds through
+             -- DIFFERENT paths in the two engines (Spark RoundBase goes
+             -- via BigDecimal.decimal, i.e. the SHORTEST-representation
+             -- decimal of the double per Double.toString, then HALF_UP;
+             -- DuckDB: scaled multiply + rint), measured at sf1 as a
+             -- 4 micro-unit drift over 600k rows in sum_charge.
+             -- Only INTEGER-scale ROUND is boundary-safe (no x.5 decimal
+             -- can lie inside a non-tie double's shortest-repr interval);
+             -- fractional-scale ROUND on doubles stays engine-divergent.
+             -- ROUND here sees the bit-identical product double in both
+             -- engines, so the grid value is exact.
+             CAST(SUM(CAST(CAST(ROUND(l_quantity * 100) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 100 AS sum_qty,
+             CAST(SUM(CAST(CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 100 AS sum_base_price,
+             CAST(SUM(CAST(CAST(ROUND(l_extendedprice * (1 - l_discount) * 1000000) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 1000000 AS sum_disc_price,
+             CAST(SUM(CAST(CAST(ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1000000) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 1000000 AS sum_charge,
+             CAST(CAST(SUM(CAST(CAST(ROUND(l_quantity * 100) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 100 / COUNT(*) AS DOUBLE) AS avg_qty,
+             COUNT(*) AS count_order
+      FROM lineitem
+      WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+      GROUP BY l_returnflag, l_linestatus
+      ORDER BY l_returnflag, l_linestatus""",
+
+    // Filter + projection pushed into the parquet scan (PushedFilters /
+    // ReadSchema in .explain). Hive: FilterOperator + SelectOperator.
+    "scan_filter_project" -> """
+      SELECT l_orderkey, l_linenumber, l_quantity,
+             l_extendedprice * (1 - l_discount) AS net_price
+      FROM lineitem
+      WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
+                           AND TIMESTAMP '1996-03-31 00:00:00'
+        AND l_quantity < 5
+      ORDER BY l_orderkey, l_linenumber""",
+
+    // Shuffle equi-join (SortMergeJoinExec at scale; Hive reduce-side
+    // JoinOperator, QL/exec/JoinOperator.java).
+    "join_inner" -> """
+      SELECT o_orderkey, o_totalprice, c_name
+      FROM orders JOIN customer ON o_custkey = c_custkey
+      WHERE o_totalprice > 490000
+      ORDER BY o_orderkey""",
+
+    "join_left_outer" -> """
+      SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders
+      FROM customer LEFT OUTER JOIN orders
+        ON c_custkey = o_custkey AND o_orderstatus = 'F'
+      GROUP BY c_custkey, c_name
+      ORDER BY c_custkey""",
+
+    "join_right_outer" -> """
+      SELECT c_custkey, COUNT(o_orderkey) AS n_orders
+      FROM orders RIGHT OUTER JOIN customer ON o_custkey = c_custkey
+      GROUP BY c_custkey
+      ORDER BY c_custkey""",
+
+    // FULL OUTER over two pre-aggregated sides — exercises null-producing
+    // both-side join. COALESCE gives a non-null sort key.
+    "join_full_outer" -> """
+      SELECT COALESCE(c.nk, s.nk) AS nationkey,
+             COALESCE(c.n_cust, 0) AS n_cust,
+             COALESCE(s.n_supp, 0) AS n_supp
+      FROM (SELECT c_nationkey AS nk, COUNT(*) AS n_cust FROM customer GROUP BY c_nationkey) c
+      FULL OUTER JOIN (SELECT s_nationkey AS nk, COUNT(*) AS n_supp FROM supplier GROUP BY s_nationkey) s
+        ON c.nk = s.nk
+      ORDER BY nationkey""",
+
+    "join_cross" -> """
+      SELECT r1.r_name AS r1_name, r2.r_name AS r2_name
+      FROM region r1 CROSS JOIN region r2
+      ORDER BY r1_name, r2_name""",
+
+    // TPC-H Q3 shape: 3-way join + agg + top-k.
+    "join_multiway_topk" -> """
+      SELECT o_orderkey,
+             CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
+             CAST(o_orderdate AS DATE) AS odate
+      FROM customer JOIN orders ON c_custkey = o_custkey
+                    JOIN lineitem ON l_orderkey = o_orderkey
+      WHERE c_mktsegment = 'BUILDING'
+        AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+        AND l_shipdate  > TIMESTAMP '1998-01-01 00:00:00'
+      GROUP BY o_orderkey, o_orderdate
+      ORDER BY revenue DESC, o_orderkey
+      LIMIT 10""",
+
+    "union_all" -> """
+      SELECT pri, COUNT(*) AS cnt FROM (
+        SELECT o_orderpriority AS pri FROM orders WHERE o_orderstatus = 'F'
+        UNION ALL
+        SELECT o_orderpriority AS pri FROM orders WHERE o_totalprice > 300000
+      ) u GROUP BY pri ORDER BY pri""",
+
+    "union_distinct" -> """
+      SELECT nk FROM (
+        SELECT c_nationkey AS nk FROM customer
+        UNION
+        SELECT s_nationkey AS nk FROM supplier
+      ) u ORDER BY nk""",
+
+    // INTERSECT / EXCEPT (Hive 2.3 set-operation surface, rewritten by
+    // both engines to distinct semi/anti joins — never a sort-based
+    // set-difference pass; same shuffle key as the UNION DISTINCT).
+    "set_intersect" -> """
+      SELECT nk FROM (
+        SELECT c_nationkey AS nk FROM customer
+        INTERSECT
+        SELECT s_nationkey AS nk FROM supplier
+      ) t ORDER BY nk""",
+
+    "set_except" -> """
+      SELECT ck FROM (
+        SELECT o_custkey AS ck FROM orders WHERE o_totalprice > 400000
+        EXCEPT
+        SELECT c_custkey AS ck FROM customer WHERE c_mktsegment = 'BUILDING'
+      ) t ORDER BY ck""",
+
+    // Bag-semantics set ops (SQL:1999 INTERSECT ALL / EXCEPT ALL):
+    // multiplicity min / difference per value. Both engines rewrite to
+    // a counted aggregate + generate, so the shuffle stays on the value
+    // key — no row-pair matching. Multiset of nation keys per segment:
+    // how many BUILDING customers per nation survive pairing with a
+    // MACHINERY customer of the same nation, and the excess.
+    "set_intersect_all" -> IntersectAllSql,
+    "set_except_all" -> ExceptAllSql,
+    "join_lateral" -> LateralSql,
+    "diff_snapshot" -> DiffSnapshotSql,
+
+    // Uncorrelated IN subquery (Hive TOK_SUBQUERY_EXPR → semi-join
+    // rewrite, SemanticAnalyzer.genPlanForSubQueryPredicate).
+    "subquery_in" -> """
+      SELECT o_orderkey, o_totalprice
+      FROM orders
+      WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
+        AND o_totalprice > 450000
+      ORDER BY o_orderkey""",
+
+    // NOT IN with a null in the subquery: three-valued logic → empty
+    // result. Both engines must agree (SURVEY.md §7.3 trap #1).
+    "subquery_not_in_null" -> """
+      SELECT p_partkey FROM part
+      WHERE p_partkey NOT IN (SELECT NULLIF(l_partkey, 1) FROM lineitem)
+      ORDER BY p_partkey""",
+
+    "subquery_not_in" -> """
+      SELECT s_suppkey, s_name FROM supplier
+      WHERE s_suppkey NOT IN (SELECT l_suppkey FROM lineitem WHERE l_orderkey < 50)
+      ORDER BY s_suppkey""",
+
+    // Correlated EXISTS.
+    "subquery_exists" -> """
+      SELECT c_custkey, c_name
+      FROM customer c
+      WHERE EXISTS (SELECT 1 FROM orders o
+                    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 480000)
+      ORDER BY c_custkey""",
+
+    // Scalar subquery (exact: MAX — no float-accumulation drift).
+    "subquery_scalar" -> """
+      SELECT o_orderkey, o_totalprice
+      FROM orders
+      WHERE o_totalprice > (SELECT MAX(o_totalprice) FROM orders) * 0.97
+      ORDER BY o_orderkey""",
+
+    "distinct_project" -> """
+      SELECT DISTINCT c_mktsegment, c_nationkey
+      FROM customer
+      ORDER BY c_mktsegment, c_nationkey""",
+
+    // ORDER BY ... LIMIT → TakeOrderedAndProjectExec (Hive: TopN hash in
+    // ReduceSinkOperator via LimitPushdownOptimizer).
+    "topk" -> """
+      SELECT o_orderkey, o_totalprice
+      FROM orders
+      ORDER BY o_totalprice DESC, o_orderkey
+      LIMIT 10""",
+
+    "limit_offset" -> """
+      SELECT o_orderkey, o_custkey
+      FROM orders
+      ORDER BY o_orderkey
+      LIMIT 20 OFFSET 10""",
+
+    // Hive's MAPJOIN hint spelling — Spark honors it as a broadcast hint.
+    "join_mapjoin_hint" -> """
+      SELECT /*+ MAPJOIN(n) */ n_name, COUNT(*) AS n_supp
+      FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
+      GROUP BY n_name
+      ORDER BY n_name""",
+
+    // Multi-column global sort with explicit null placement (Spark's
+    // default NULLS FIRST on ASC differs from DuckDB's NULLS LAST —
+    // always explicit; SURVEY.md §7.3).
+    "sort_order_by_nulls" -> """
+      SELECT s_suppkey, NULLIF(s_acctbal, 0) AS bal
+      FROM supplier
+      ORDER BY bal DESC NULLS LAST, s_suppkey"""
+  ))
+
+  val queries: Map[String, Q] = shared.queries ++ Map(
 
     // Hive's null-safe equality join (`<=>`, GenericUDFOPEqualNS —
     // §2.1#6): NULL keys MATCH null keys, where `=` silently drops
@@ -649,32 +881,6 @@ object Relational {
         .orderBy(col("s_name"))
     }),
 
-    // Slowly-changing-dimension Type 2 apply (Kimball's SCD2 — the
-    // INSERT OVERWRITE idiom every Hive warehouse runs for dimension
-    // history): a change batch (here: customers with a key-derived
-    // predicate, effective at their latest order date) closes the
-    // current row (valid_to = effective date, is_current = 0) and
-    // opens the new version; untouched customers keep their open row.
-    // Pure projection + union + one broadcast-size join on the change
-    // keys — at 100 TB the rewrite touches the dimension, never the
-    // fact, and the output is the bitemporal table as-of joins consume.
-    "scd2_apply" -> Tables.sql(Scd2Sql),
-
-    // Relational division (Codd's ÷ — "FOR ALL" as SQL): customers
-    // whose orders span EVERY priority class that exists. The division
-    // compiles to one distinct-count aggregate against a 1-row scalar
-    // subquery — no correlated NOT EXISTS double negation, which would
-    // plan as a nested anti-join per candidate. Divisor cardinality is
-    // a broadcast scalar; the dividend aggregate is one shuffle on the
-    // customer key at any scale.
-    "join_division" -> Tables.sql("""
-      SELECT c_custkey, c_name
-      FROM customer JOIN orders ON c_custkey = o_custkey
-      GROUP BY c_custkey, c_name
-      HAVING COUNT(DISTINCT o_orderpriority) =
-             (SELECT COUNT(DISTINCT o_orderpriority) FROM orders)
-      ORDER BY c_custkey"""),
-
     // Bloom-prefiltered join — Hive 2.x's bloom_filter/in_bloom_filter
     // runtime semi-join reduction (SURVEY §2.5 [2.x],
     // GenericUDAFBloomFilter; the same design as Spark's own
@@ -702,77 +908,6 @@ object Relational {
         GROUP BY l.l_returnflag
         ORDER BY l.l_returnflag"""),
 
-    // TPC-H Q1 shape — the flagship end-to-end slice (scan → filter →
-    // partial/final hash agg → sort). Hive: GroupByOperator modes
-    // HASH→MERGEPARTIAL (QL/exec/GroupByOperator.java:733).
-    "q1_pricing_summary" -> Tables.sql("""
-      SELECT l_returnflag, l_linestatus,
-             -- money sums on the exact integer grid (ROUND(x*10^s) ->
-             -- BIGINT -> DECIMAL): CAST(double AS DECIMAL) rounds through
-             -- DIFFERENT paths in the two engines (Spark RoundBase goes
-             -- via BigDecimal.decimal, i.e. the SHORTEST-representation
-             -- decimal of the double per Double.toString, then HALF_UP;
-             -- DuckDB: scaled multiply + rint) and the r13 sf1 sweep
-             -- measured 4 micro-unit drift over 600k rows in sum_charge.
-             -- Only INTEGER-scale ROUND is boundary-safe (no x.5 decimal
-             -- can lie inside a non-tie double's shortest-repr interval);
-             -- fractional-scale ROUND on doubles stays engine-divergent.
-             -- ROUND here sees the bit-identical product double in both
-             -- engines, so the grid value is exact.
-             CAST(SUM(CAST(CAST(ROUND(l_quantity * 100) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 100 AS sum_qty,
-             CAST(SUM(CAST(CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 100 AS sum_base_price,
-             CAST(SUM(CAST(CAST(ROUND(l_extendedprice * (1 - l_discount) * 1000000) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 1000000 AS sum_disc_price,
-             CAST(SUM(CAST(CAST(ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1000000) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 1000000 AS sum_charge,
-             CAST(CAST(SUM(CAST(CAST(ROUND(l_quantity * 100) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 100 / COUNT(*) AS DOUBLE) AS avg_qty,
-             COUNT(*) AS count_order
-      FROM lineitem
-      WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-      GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus"""),
-
-    // Filter + projection pushed into the parquet scan (PushedFilters /
-    // ReadSchema in .explain). Hive: FilterOperator + SelectOperator.
-    "scan_filter_project" -> Tables.sql("""
-      SELECT l_orderkey, l_linenumber, l_quantity,
-             l_extendedprice * (1 - l_discount) AS net_price
-      FROM lineitem
-      WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
-                           AND TIMESTAMP '1996-03-31 00:00:00'
-        AND l_quantity < 5
-      ORDER BY l_orderkey, l_linenumber"""),
-
-    // Shuffle equi-join (SortMergeJoinExec at scale; Hive reduce-side
-    // JoinOperator, QL/exec/JoinOperator.java).
-    "join_inner" -> Tables.sql("""
-      SELECT o_orderkey, o_totalprice, c_name
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      WHERE o_totalprice > 490000
-      ORDER BY o_orderkey"""),
-
-    "join_left_outer" -> Tables.sql("""
-      SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders
-      FROM customer LEFT OUTER JOIN orders
-        ON c_custkey = o_custkey AND o_orderstatus = 'F'
-      GROUP BY c_custkey, c_name
-      ORDER BY c_custkey"""),
-
-    "join_right_outer" -> Tables.sql("""
-      SELECT c_custkey, COUNT(o_orderkey) AS n_orders
-      FROM orders RIGHT OUTER JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_custkey
-      ORDER BY c_custkey"""),
-
-    // FULL OUTER over two pre-aggregated sides — exercises null-producing
-    // both-side join. COALESCE gives a non-null sort key.
-    "join_full_outer" -> Tables.sql("""
-      SELECT COALESCE(c.nk, s.nk) AS nationkey,
-             COALESCE(c.n_cust, 0) AS n_cust,
-             COALESCE(s.n_supp, 0) AS n_supp
-      FROM (SELECT c_nationkey AS nk, COUNT(*) AS n_cust FROM customer GROUP BY c_nationkey) c
-      FULL OUTER JOIN (SELECT s_nationkey AS nk, COUNT(*) AS n_supp FROM supplier GROUP BY s_nationkey) s
-        ON c.nk = s.nk
-      ORDER BY nationkey"""),
-
     // Hive LEFT SEMI JOIN (JoinDesc.LEFT_SEMI_JOIN) — Spark left_semi.
     "join_left_semi" -> Tables.sql("""
       SELECT c_custkey, c_name
@@ -789,11 +924,6 @@ object Relational {
         .select("c_custkey", "c_name")
         .orderBy("c_custkey")
     }),
-
-    "join_cross" -> Tables.sql("""
-      SELECT r1.r_name AS r1_name, r2.r_name AS r2_name
-      FROM region r1 CROSS JOIN region r2
-      ORDER BY r1_name, r2_name"""),
 
     // Star join: fact × 3 small dims. DataFrame API with explicit
     // broadcast() hints — at 100 TB the dims stay broadcast
@@ -816,62 +946,6 @@ object Relational {
           count(lit(1)).as("n_items"))
         .orderBy(col("n_name"))
     }),
-
-    // TPC-H Q3 shape: 3-way join + agg + top-k.
-    "join_multiway_topk" -> Tables.sql("""
-      SELECT o_orderkey,
-             CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
-             CAST(o_orderdate AS DATE) AS odate
-      FROM customer JOIN orders ON c_custkey = o_custkey
-                    JOIN lineitem ON l_orderkey = o_orderkey
-      WHERE c_mktsegment = 'BUILDING'
-        AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        AND l_shipdate  > TIMESTAMP '1998-01-01 00:00:00'
-      GROUP BY o_orderkey, o_orderdate
-      ORDER BY revenue DESC, o_orderkey
-      LIMIT 10"""),
-
-    "union_all" -> Tables.sql("""
-      SELECT pri, COUNT(*) AS cnt FROM (
-        SELECT o_orderpriority AS pri FROM orders WHERE o_orderstatus = 'F'
-        UNION ALL
-        SELECT o_orderpriority AS pri FROM orders WHERE o_totalprice > 300000
-      ) u GROUP BY pri ORDER BY pri"""),
-
-    "union_distinct" -> Tables.sql("""
-      SELECT nk FROM (
-        SELECT c_nationkey AS nk FROM customer
-        UNION
-        SELECT s_nationkey AS nk FROM supplier
-      ) u ORDER BY nk"""),
-
-    // INTERSECT / EXCEPT (Hive 2.3 set-operation surface, rewritten by
-    // both engines to distinct semi/anti joins — never a sort-based
-    // set-difference pass; same shuffle key as the UNION DISTINCT).
-    "set_intersect" -> Tables.sql("""
-      SELECT nk FROM (
-        SELECT c_nationkey AS nk FROM customer
-        INTERSECT
-        SELECT s_nationkey AS nk FROM supplier
-      ) t ORDER BY nk"""),
-
-    "set_except" -> Tables.sql("""
-      SELECT ck FROM (
-        SELECT o_custkey AS ck FROM orders WHERE o_totalprice > 400000
-        EXCEPT
-        SELECT c_custkey AS ck FROM customer WHERE c_mktsegment = 'BUILDING'
-      ) t ORDER BY ck"""),
-
-    // Bag-semantics set ops (SQL:1999 INTERSECT ALL / EXCEPT ALL):
-    // multiplicity min / difference per value. Both engines rewrite to
-    // a counted aggregate + generate, so the shuffle stays on the value
-    // key — no row-pair matching. Multiset of nation keys per segment:
-    // how many BUILDING customers per nation survive pairing with a
-    // MACHINERY customer of the same nation, and the excess.
-    "set_intersect_all" -> Tables.sql(IntersectAllSql),
-    "set_except_all" -> Tables.sql(ExceptAllSql),
-    "join_lateral" -> Tables.sql(LateralSql),
-    "diff_snapshot" -> Tables.sql(DiffSnapshotSql),
     "join_pit_scd2" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
       // materialize-once: build the SCD2 dimension a single time,
@@ -883,61 +957,6 @@ object Relational {
       dim.createOrReplaceTempView("pit_scd2_dim")
       spark.sql(pitJoinSql("pit_scd2_dim", "/*+ BROADCAST(d) */"))
     }),
-
-    // Uncorrelated IN subquery (Hive TOK_SUBQUERY_EXPR → semi-join
-    // rewrite, SemanticAnalyzer.genPlanForSubQueryPredicate).
-    "subquery_in" -> Tables.sql("""
-      SELECT o_orderkey, o_totalprice
-      FROM orders
-      WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        AND o_totalprice > 450000
-      ORDER BY o_orderkey"""),
-
-    // NOT IN with a null in the subquery: three-valued logic → empty
-    // result. Both engines must agree (SURVEY.md §7.3 trap #1).
-    "subquery_not_in_null" -> Tables.sql("""
-      SELECT p_partkey FROM part
-      WHERE p_partkey NOT IN (SELECT NULLIF(l_partkey, 1) FROM lineitem)
-      ORDER BY p_partkey"""),
-
-    "subquery_not_in" -> Tables.sql("""
-      SELECT s_suppkey, s_name FROM supplier
-      WHERE s_suppkey NOT IN (SELECT l_suppkey FROM lineitem WHERE l_orderkey < 50)
-      ORDER BY s_suppkey"""),
-
-    // Correlated EXISTS.
-    "subquery_exists" -> Tables.sql("""
-      SELECT c_custkey, c_name
-      FROM customer c
-      WHERE EXISTS (SELECT 1 FROM orders o
-                    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 480000)
-      ORDER BY c_custkey"""),
-
-    // Scalar subquery (exact: MAX — no float-accumulation drift).
-    "subquery_scalar" -> Tables.sql("""
-      SELECT o_orderkey, o_totalprice
-      FROM orders
-      WHERE o_totalprice > (SELECT MAX(o_totalprice) FROM orders) * 0.97
-      ORDER BY o_orderkey"""),
-
-    "distinct_project" -> Tables.sql("""
-      SELECT DISTINCT c_mktsegment, c_nationkey
-      FROM customer
-      ORDER BY c_mktsegment, c_nationkey"""),
-
-    // ORDER BY ... LIMIT → TakeOrderedAndProjectExec (Hive: TopN hash in
-    // ReduceSinkOperator via LimitPushdownOptimizer).
-    "topk" -> Tables.sql("""
-      SELECT o_orderkey, o_totalprice
-      FROM orders
-      ORDER BY o_totalprice DESC, o_orderkey
-      LIMIT 10"""),
-
-    "limit_offset" -> Tables.sql("""
-      SELECT o_orderkey, o_custkey
-      FROM orders
-      ORDER BY o_orderkey
-      LIMIT 20 OFFSET 10"""),
 
     // DISTRIBUTE BY + SORT BY (Hive ReduceSinkOperator partition/order
     // keys) = repartition + sortWithinPartitions. Final global orderBy
@@ -1019,13 +1038,6 @@ object Relational {
         SELECT s_nationkey, s_suppkey FROM supplier CLUSTER BY s_nationkey
       ) t
       ORDER BY s_nationkey, s_suppkey"""),
-
-    // Hive's MAPJOIN hint spelling — Spark honors it as a broadcast hint.
-    "join_mapjoin_hint" -> Tables.sql("""
-      SELECT /*+ MAPJOIN(n) */ n_name, COUNT(*) AS n_supp
-      FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-      GROUP BY n_name
-      ORDER BY n_name"""),
 
     // SMB join over bucketed+sorted tables (Hive
     // SortedMergeBucketMapJoinOptimizer): both sides bucketed by the join
@@ -1150,39 +1162,10 @@ object Relational {
                AND (br.b_right IS NULL OR wr.ymax > br.b_right))
       SELECT p.o_orderkey, p.x AS o_totalprice, p.y AS o_orderdate
       FROM pts p JOIN sv ON p.x = sv.x AND p.y = sv.ymax
-      ORDER BY o_totalprice DESC, o_orderkey"""),
-
-    // Multi-column global sort with explicit null placement (Spark's
-    // default NULLS FIRST on ASC differs from DuckDB's NULLS LAST —
-    // always explicit; SURVEY.md §7.3).
-    "sort_order_by_nulls" -> Tables.sql("""
-      SELECT s_suppkey, NULLIF(s_acctbal, 0) AS bal
-      FROM supplier
-      ORDER BY bal DESC NULLS LAST, s_suppkey""")
+      ORDER BY o_totalprice DESC, o_orderkey""")
   )
 
-  val oracle: Map[String, String] = Map(
-    "q3_shipping_priority" -> Q3Sql,
-    "q5_local_supplier" -> Q5Sql,
-    "q10_returned_items" -> Q10Sql,
-    "q18_large_volume" -> Q18Sql,
-    "q2_min_cost_supplier" -> Q2Sql,
-    "q4_order_priority" -> Q4Sql,
-    "q12_priority_class" -> Q12Sql,
-    "q14_promo_revenue" -> Q14Sql,
-    "q16_supplier_cnt" -> Q16Sql,
-    "q19_disjunct_revenue" -> Q19Sql,
-    "q22_inactive_customers" -> Q22Sql,
-    "q6_forecast_revenue" -> Q6Sql,
-    "q7_nation_volume" -> Q7Sql,
-    "q8_market_share" -> Q8Sql,
-    "q9_product_profit" -> Q9Sql,
-    "q11_important_stock" -> Q11Sql,
-    "q13_order_distribution" -> Q13Sql,
-    "q15_top_supplier" -> Q15Sql,
-    "q17_small_qty_revenue" -> Q17Sql,
-    "q20_excess_stock" -> Q20Sql,
-    "q21_waiting_suppliers" -> Q21Sql,
+  val oracle: Map[String, String] = shared.oracle ++ Map(
 
     // ANSI spelling of null-safe equality
     "join_null_safe" -> """
@@ -1195,8 +1178,8 @@ object Relational {
     // UNIQUE JOIN reference semantics: N-way full outer on the key,
     // rows kept iff a PRESERVE'd leg is PRESENT — encoded with per-leg
     // TRUE markers (in_a/in_c), NOT key-nullness: uniqueJoin emits
-    // preserved legs' NULL-KEY rows null-padded (the r14 pinned
-    // semantics), and a `k IS NOT NULL` filter would encode presence
+    // preserved legs' NULL-KEY rows null-padded (the semantics
+    // UniqueJoinAndVirtualColumnSpec pins), and a `k IS NOT NULL` filter would encode presence
     // only under a non-null-key fixture premise. Markers stay correct
     // either way: an absent leg's marker surfaces as NULL after the
     // full outer join, so `in_a OR in_c` is TRUE exactly when some
@@ -1220,8 +1203,8 @@ object Relational {
     // file_row_number/filename, so (fname, offset) is compared against
     // an independent reader of the real file layout — valid on ANY
     // fixture (single-file driver SFs AND multi-part ScaleGen dirs; the
-    // old rank-by-doc_id formulation needed a single-file premise and
-    // was excluded from the r13 sf1 sweep). __GRAFT_DOCUMENTS_PARQUET__
+    // rank-by-doc_id formulation would need a single-file premise).
+    // __GRAFT_DOCUMENTS_PARQUET__
     // is resolved to the fixture's layout by Verify at dump time.
     "scan_block_offset" -> """
       SELECT doc_id, fname, block_offset
@@ -1242,16 +1225,6 @@ object Relational {
       GROUP BY s_name
       ORDER BY s_name""",
 
-    "scd2_apply" -> Scd2Sql,
-
-    "join_division" -> """
-      SELECT c_custkey, c_name
-      FROM customer JOIN orders ON c_custkey = o_custkey
-      GROUP BY c_custkey, c_name
-      HAVING COUNT(DISTINCT o_orderpriority) =
-             (SELECT COUNT(DISTINCT o_orderpriority) FROM orders)
-      ORDER BY c_custkey""",
-
     // the PLAIN join — the bloom prefilter must be result-invariant
     // (no false negatives; false positives die at the exact join)
     "join_bloom_prefilter" -> """
@@ -1261,68 +1234,6 @@ object Relational {
       WHERE o_orderpriority = '1-URGENT'
       GROUP BY l_returnflag
       ORDER BY l_returnflag""",
-
-    "q1_pricing_summary" -> """
-      SELECT l_returnflag, l_linestatus,
-             -- money sums on the exact integer grid (ROUND(x*10^s) ->
-             -- BIGINT -> DECIMAL): CAST(double AS DECIMAL) rounds through
-             -- DIFFERENT paths in the two engines (Spark RoundBase goes
-             -- via BigDecimal.decimal, i.e. the SHORTEST-representation
-             -- decimal of the double per Double.toString, then HALF_UP;
-             -- DuckDB: scaled multiply + rint) and the r13 sf1 sweep
-             -- measured 4 micro-unit drift over 600k rows in sum_charge.
-             -- Only INTEGER-scale ROUND is boundary-safe (no x.5 decimal
-             -- can lie inside a non-tie double's shortest-repr interval);
-             -- fractional-scale ROUND on doubles stays engine-divergent.
-             -- ROUND here sees the bit-identical product double in both
-             -- engines, so the grid value is exact.
-             CAST(SUM(CAST(CAST(ROUND(l_quantity * 100) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 100 AS sum_qty,
-             CAST(SUM(CAST(CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 100 AS sum_base_price,
-             CAST(SUM(CAST(CAST(ROUND(l_extendedprice * (1 - l_discount) * 1000000) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 1000000 AS sum_disc_price,
-             CAST(SUM(CAST(CAST(ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1000000) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 1000000 AS sum_charge,
-             CAST(CAST(SUM(CAST(CAST(ROUND(l_quantity * 100) AS BIGINT) AS DECIMAL(18,0))) AS DOUBLE) / 100 / COUNT(*) AS DOUBLE) AS avg_qty,
-             COUNT(*) AS count_order
-      FROM lineitem
-      WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-      GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus""",
-
-    "scan_filter_project" -> """
-      SELECT l_orderkey, l_linenumber, l_quantity,
-             l_extendedprice * (1 - l_discount) AS net_price
-      FROM lineitem
-      WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
-                           AND TIMESTAMP '1996-03-31 00:00:00'
-        AND l_quantity < 5
-      ORDER BY l_orderkey, l_linenumber""",
-
-    "join_inner" -> """
-      SELECT o_orderkey, o_totalprice, c_name
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      WHERE o_totalprice > 490000
-      ORDER BY o_orderkey""",
-
-    "join_left_outer" -> """
-      SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders
-      FROM customer LEFT OUTER JOIN orders
-        ON c_custkey = o_custkey AND o_orderstatus = 'F'
-      GROUP BY c_custkey, c_name
-      ORDER BY c_custkey""",
-
-    "join_right_outer" -> """
-      SELECT c_custkey, COUNT(o_orderkey) AS n_orders
-      FROM orders RIGHT OUTER JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_custkey
-      ORDER BY c_custkey""",
-
-    "join_full_outer" -> """
-      SELECT COALESCE(c.nk, s.nk) AS nationkey,
-             COALESCE(c.n_cust, 0) AS n_cust,
-             COALESCE(s.n_supp, 0) AS n_supp
-      FROM (SELECT c_nationkey AS nk, COUNT(*) AS n_cust FROM customer GROUP BY c_nationkey) c
-      FULL OUTER JOIN (SELECT s_nationkey AS nk, COUNT(*) AS n_supp FROM supplier GROUP BY s_nationkey) s
-        ON c.nk = s.nk
-      ORDER BY nationkey""",
 
     "join_left_semi" -> """
       SELECT c_custkey, c_name
@@ -1338,11 +1249,6 @@ object Relational {
                         WHERE o_custkey = c_custkey AND o_totalprice > 495000)
       ORDER BY c_custkey""",
 
-    "join_cross" -> """
-      SELECT r1.r_name AS r1_name, r2.r_name AS r2_name
-      FROM region r1 CROSS JOIN region r2
-      ORDER BY r1_name, r2_name""",
-
     "join_broadcast_star" -> """
       SELECT n_name,
              CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
@@ -1354,111 +1260,13 @@ object Relational {
       WHERE r_name = 'ASIA'
       GROUP BY n_name
       ORDER BY n_name""",
-
-    "join_multiway_topk" -> """
-      SELECT o_orderkey,
-             CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
-             CAST(o_orderdate AS DATE) AS odate
-      FROM customer JOIN orders ON c_custkey = o_custkey
-                    JOIN lineitem ON l_orderkey = o_orderkey
-      WHERE c_mktsegment = 'BUILDING'
-        AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        AND l_shipdate  > TIMESTAMP '1998-01-01 00:00:00'
-      GROUP BY o_orderkey, o_orderdate
-      ORDER BY revenue DESC, o_orderkey
-      LIMIT 10""",
-
-    "union_all" -> """
-      SELECT pri, COUNT(*) AS cnt FROM (
-        SELECT o_orderpriority AS pri FROM orders WHERE o_orderstatus = 'F'
-        UNION ALL
-        SELECT o_orderpriority AS pri FROM orders WHERE o_totalprice > 300000
-      ) u GROUP BY pri ORDER BY pri""",
-
-    "union_distinct" -> """
-      SELECT nk FROM (
-        SELECT c_nationkey AS nk FROM customer
-        UNION
-        SELECT s_nationkey AS nk FROM supplier
-      ) u ORDER BY nk""",
-
-    "set_intersect" -> """
-      SELECT nk FROM (
-        SELECT c_nationkey AS nk FROM customer
-        INTERSECT
-        SELECT s_nationkey AS nk FROM supplier
-      ) t ORDER BY nk""",
-
-    "set_except" -> """
-      SELECT ck FROM (
-        SELECT o_custkey AS ck FROM orders WHERE o_totalprice > 400000
-        EXCEPT
-        SELECT c_custkey AS ck FROM customer WHERE c_mktsegment = 'BUILDING'
-      ) t ORDER BY ck""",
-
-    "set_intersect_all" -> IntersectAllSql,
-    "set_except_all" -> ExceptAllSql,
-    "join_lateral" -> LateralSql,
-    "diff_snapshot" -> DiffSnapshotSql,
     "join_pit_scd2" -> PitScd2Sql,
-
-    "subquery_in" -> """
-      SELECT o_orderkey, o_totalprice
-      FROM orders
-      WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        AND o_totalprice > 450000
-      ORDER BY o_orderkey""",
-
-    "subquery_not_in_null" -> """
-      SELECT p_partkey FROM part
-      WHERE p_partkey NOT IN (SELECT NULLIF(l_partkey, 1) FROM lineitem)
-      ORDER BY p_partkey""",
-
-    "subquery_not_in" -> """
-      SELECT s_suppkey, s_name FROM supplier
-      WHERE s_suppkey NOT IN (SELECT l_suppkey FROM lineitem WHERE l_orderkey < 50)
-      ORDER BY s_suppkey""",
-
-    "subquery_exists" -> """
-      SELECT c_custkey, c_name
-      FROM customer c
-      WHERE EXISTS (SELECT 1 FROM orders o
-                    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 480000)
-      ORDER BY c_custkey""",
-
-    "subquery_scalar" -> """
-      SELECT o_orderkey, o_totalprice
-      FROM orders
-      WHERE o_totalprice > (SELECT MAX(o_totalprice) FROM orders) * 0.97
-      ORDER BY o_orderkey""",
-
-    "distinct_project" -> """
-      SELECT DISTINCT c_mktsegment, c_nationkey
-      FROM customer
-      ORDER BY c_mktsegment, c_nationkey""",
-
-    "topk" -> """
-      SELECT o_orderkey, o_totalprice
-      FROM orders
-      ORDER BY o_totalprice DESC, o_orderkey
-      LIMIT 10""",
-
-    "limit_offset" -> """
-      SELECT o_orderkey, o_custkey
-      FROM orders
-      ORDER BY o_orderkey
-      LIMIT 20 OFFSET 10""",
 
     "sort_cluster_by" -> """
       SELECT l_suppkey, l_orderkey, l_linenumber
       FROM lineitem
       WHERE l_quantity >= 49
       ORDER BY l_suppkey, l_orderkey, l_linenumber""",
-
-    "sort_order_by_nulls" -> """
-      SELECT s_suppkey, NULLIF(s_acctbal, 0) AS bal
-      FROM supplier
-      ORDER BY bal DESC NULLS LAST, s_suppkey""",
 
     // flat single-prefix-max formulation — a different decomposition of
     // the same dominance math than the Spark side's bucketed two-level
@@ -1509,12 +1317,6 @@ object Relational {
       FROM s4
       ORDER BY zkey, o_orderkey
       LIMIT 200""",
-
-    "join_mapjoin_hint" -> """
-      SELECT n_name, COUNT(*) AS n_supp
-      FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-      GROUP BY n_name
-      ORDER BY n_name""",
 
     "join_bucketed_smb" -> """
       SELECT o.o_orderstatus AS status,

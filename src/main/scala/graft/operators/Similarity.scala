@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{QueryModule, Tables}
 import graft.functions.GraftFunctions
 
 /** Similarity search over the embedding column (Array[Float], dim 64).
@@ -1014,7 +1014,19 @@ object Similarity {
       .orderBy(col("rank"))
   }
 
-  val queries: Map[String, Q] = Map(
+  // the queries Spark and DuckDB run as one statement (QueryModule.shared)
+  private val shared = QueryModule.shared(Map(
+    // Record linkage by TRUE Damerau-Levenshtein (adjacent-char-swap
+    // corruption — the typo class DL prices at 1 edit where plain
+    // Levenshtein needs 2): blocked candidates scored by the codegen'd
+    // kernel, best match per dirty record by (dist, pid). Integer
+    // distances -> exact oracle against DuckDB's same-recurrence
+    // builtin. self_hit separates true recoveries from exact-name
+    // doppelgangers (TPC-H part names repeat), deterministically.
+    "link_fuzzy_match" -> linkFuzzySql
+  ))
+
+  val queries: Map[String, Q] = shared.queries ++ Map(
     "link_blocking_metrics" -> Tables.sql(blockingMetricsSql(spark = true)),
     "embed_hard_negatives" -> Tables.sql(hardNegSql(spark = true)),
     "embed_quantile_norm" -> Tables.sql(quantileNormSql(spark = true)),
@@ -1404,6 +1416,12 @@ object Similarity {
       pqAdcTopK(codes, qd)
     }),
 
+    // Record linkage by Jaro-Winkler (dropped-char corruption): same
+    // blocked shape with the length bucket shifted by one; ranking runs
+    // on the ROUNDED score so tie-breaks are engine-independent even in
+    // principle (the kernels are bit-identical anyway).
+    "link_jaro_winkler" -> Tables.sql(linkJaroSql("jaro_winkler")),
+
     // Per-dimension winsorization audit — the outlier-clipping feature
     // prep run before quantization or whitening: exact p05/p95 per
     // coordinate, how many values each side clips, and the post-clip
@@ -1414,21 +1432,6 @@ object Similarity {
     // clip on the identical boundary, and the post-clip mean goes
     // through floor-quantized integer-valued sums (the Clustering
     // discipline) so reduction order cannot leak.
-    // Record linkage by TRUE Damerau-Levenshtein (adjacent-char-swap
-    // corruption — the typo class DL prices at 1 edit where plain
-    // Levenshtein needs 2): blocked candidates scored by the codegen'd
-    // kernel, best match per dirty record by (dist, pid). Integer
-    // distances -> exact oracle against DuckDB's same-recurrence
-    // builtin. self_hit separates true recoveries from exact-name
-    // doppelgangers (TPC-H part names repeat), deterministically.
-    "link_fuzzy_match" -> Tables.sql(linkFuzzySql),
-
-    // Record linkage by Jaro-Winkler (dropped-char corruption): same
-    // blocked shape with the length bucket shifted by one; ranking runs
-    // on the ROUNDED score so tie-breaks are engine-independent even in
-    // principle (the kernels are bit-identical anyway).
-    "link_jaro_winkler" -> Tables.sql(linkJaroSql("jaro_winkler")),
-
     "embed_winsorize" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
       spark.sql("""
@@ -1526,7 +1529,7 @@ object Similarity {
   private def deletedVecs: Column =
     col("vec_id") >= 50 && col("vec_id") % 10 === 3
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = shared.oracle ++ Map(
     "link_blocking_metrics" -> blockingMetricsSql(spark = false),
     "embed_hard_negatives" -> hardNegSql(spark = false),
     "embed_quantile_norm" -> quantileNormSql(spark = false),
@@ -1667,10 +1670,8 @@ object Similarity {
                + COALESCE(CAST(1.0 AS DOUBLE) / (60 + lex_rn), CAST(0.0 AS DOUBLE)) AS rrf
       FROM dense FULL OUTER JOIN lex USING (doc_id)
       ORDER BY rrf DESC, doc_id""",
-
-    // dialect-shared statements; DuckDB's builtins implement the same
-    // true-DL recurrence / floored-transposition JW (validated pairwise)
-    "link_fuzzy_match" -> linkFuzzySql,
+    // DuckDB's builtin implements the same floored-transposition JW
+    // (validated pairwise)
     "link_jaro_winkler" -> linkJaroSql("jaro_winkler_similarity"),
 
     "ann_cosine_topk" -> """

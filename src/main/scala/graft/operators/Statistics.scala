@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Statistical analysis operators — the hypothesis-testing / model-fit
   * layer analysts run directly in SQL (Hive exposes the raw material
@@ -113,7 +113,7 @@ object Statistics {
                CAST(SUM(r) AS DOUBLE)     AS t,
                -- rank×cents product sum crosses Long.Max at sf10
                -- (rank ≤ 3e5 × revenue-cents ~1.5e8 over 3e5 rows ≈
-               -- 1.4e19 — r13 divergence class 2): each product still
+               -- 1.4e19): each product still
                -- fits BIGINT, the SUM runs in DECIMAL(38,0), exact in
                -- both engines, then one nearest-double conversion
                CAST(SUM(CAST(i * r AS DECIMAL(38,0))) AS DOUBLE) AS wi
@@ -142,7 +142,7 @@ object Statistics {
                -- the Long.Max cliff kruskal/gini hit a decade earlier;
                -- now exact to 1e38, ~sf7e21) and convert to DOUBLE via
                -- VARCHAR: DuckDB's direct int128→double cast is not
-               -- correctly rounded (r14 divergence subclass) while
+               -- correctly rounded while
                -- string→double is, in BOTH engines — below the old
                -- cliff this yields the bit-identical double the BIGINT
                -- cast produced, so small-SF results are unchanged
@@ -165,7 +165,7 @@ object Statistics {
       ORDER BY pri_a, pri_b"""
 
   /** Mann–Whitney U (urgent vs low priority, order value): rank-based,
-    * but computed on the VALUE DOMAIN, not by ranking rows (r17, the
+    * but computed on the VALUE DOMAIN, not by ranking rows (the
     * Quantiles discipline): the doubled mid-rank 2·rank + ties − 1 is
     * CONSTANT across a value's tie group — it equals 2·cb + c + 1
     * where cb = rows strictly below v and c = rows at v — so the rank
@@ -232,8 +232,8 @@ object Statistics {
       s AS (
         -- rank-product sums go through DECIMAL: with doubled ranks
         -- ra,rb <= 2n, SUM(ra*ra) ~ 4n^3/3 crosses Long.Max at
-        -- n ~ 1.3e6 rows per group (the r13 sf1 sweep hit 1.06e19 at
-        -- n = 2e6 -- ANSI long overflow). The decimal sums are exact
+        -- n ~ 1.3e6 rows per group (sf1 hit 1.06e19 at n = 2e6 --
+        -- ANSI long overflow). The decimal sums are exact
         -- integers; the one CAST to DOUBLE at the end is the same
         -- correctly-rounded conversion in both engines.
         SELECT rf, COUNT(*) AS n,
@@ -289,8 +289,8 @@ object Statistics {
 
   /** One-way ANOVA across order priorities (the omnibus companion of
     * the pairwise t-tests): within/between sums of squares from exact
-    * whole-dollar integer sums. The r14 magnitude audit put the old
-    * BIGINT Σv² total at ≈5.4e18 by ~sf20 (the kruskal/gini Long.Max
+    * whole-dollar integer sums. A magnitude audit put a BIGINT Σv²
+    * total at ≈5.4e18 by ~sf20 (the kruskal/gini Long.Max
     * class, one decade out), so the square sums now run
     * DECIMAL(19,0)×DECIMAL(19,0) → DECIMAL(38,0) — exact to 1e38.
     * The cross-group Σsᵢ²/nᵢ term is the kruskal-style remainder-free
@@ -312,7 +312,7 @@ object Statistics {
     * (correctly-rounded IEEE mul/div on bit-identical operands), and
     * the term it perturbs is < n — 1e-10 of sq. DECIMAL(38,0)→DOUBLE
     * conversions route via VARCHAR (DuckDB's direct int128→double cast
-    * is not correctly rounded — r14 divergence subclass). */
+    * is not correctly rounded). */
   private val AnovaSql = """
       WITH x AS (
         SELECT o_orderpriority AS pri,
@@ -408,7 +408,7 @@ object Statistics {
 
   /** Kruskal–Wallis rank-based one-way test across all five order
     * priorities (the nonparametric companion of stats_anova, built on
-    * the Mann–Whitney doubled-mid-rank discipline — and like it (r17)
+    * the Mann–Whitney doubled-mid-rank discipline — and like it
     * computed on the VALUE DOMAIN: per-(value, group) histogram counts
     * join the value-level cumulative, s2 = Σ_v cg·(2·cb+c+1); the one
     * unpartitioned window runs over the whole-dollar price grid,
@@ -439,14 +439,13 @@ object Statistics {
         FROM h JOIN w ON h.v = w.v
         GROUP BY h.pri
       ),
-      -- rank-sum square term Σ s2²/(4n), EXACT and order-free (the r13
-      -- divergence class 2 a decade up: the old ROUND(rs*rs/n) BIGINT
-      -- crossed Long.Max at sf10 — measured 1.7e20). Remainder-free
+      -- rank-sum square term Σ s2²/(4n), EXACT and order-free (a
+      -- ROUND(rs*rs/n) BIGINT crosses Long.Max at sf10 — measured
+      -- 1.7e20). Remainder-free
       -- decomposition with q = ⌊s2/(2n)⌋, r = s2 − q·2n:
       --   s2²/(4n) = q²·n + q·r + ⌊r²/(4n)⌋   (fraction dropped, both
       -- engines identically). Every piece is BIGINT-exact except q²·n.
-      -- WIDTH TRAP (divergence class 10, found LIVE at the r17 sf10
-      -- re-sweep): DuckDB 1.0.0 computes a product of two decimals
+      -- WIDTH TRAP (found at sf10): DuckDB 1.0.0 computes a product of two decimals
       -- that BOTH fit INT64 storage (width ≤ 18) in INT64 and only
       -- CLAMPS the result width at 18 — D(13)×D(13) is D(18,0), so
       -- q²·n ≈ 1.7e20 overflowed LOUDLY at sf10 (never silently). The
@@ -625,8 +624,8 @@ object Statistics {
       s"CAST(SUM(CAST($a * $b AS DECIMAL(38, 0))) AS DOUBLE) AS s_${a}_$b" }
     // ONE m row cross-joined with a constant pair relation, not six
     // UNION ALL selects FROM m — under CTE inlining each branch
-    // re-ran the whole moments aggregate (6 lineitem scans, r18 plan
-    // audit; DuckDB materializes the CTE so its values are unchanged
+    // re-ran the whole moments aggregate (6 lineitem scans in the
+    // plan; DuckDB materializes the CTE so its values are unchanged
     // either way). Per-pair arithmetic is the identical IEEE chain,
     // now selected by CASE.
     val corrCase = "CASE " + pairs.map { case (a, b) =>
@@ -929,7 +928,7 @@ object Statistics {
   // median's 32 value-grid sorts) at bench-friendly volume — the
   // statistic's machinery is identical at any slice
   // REPARTITION before the 32× replica explode (the linkage-scorer
-  // lesson, r18): lineitem scans as ONE split at test scale and the
+  // lesson): lineitem scans as ONE split at test scale and the
   // explode + MIX64 draw chain sits below the first exchange, so the
   // 4.8M-row multiplied stream ran on a single core — three times
   // over, since the inlined CTE chain is re-derived per reference.
@@ -1018,8 +1017,8 @@ object Statistics {
       ORDER BY replica_id"""
 
   /** Micro-unit fixed-point quotient trunc(1e6·x/d) without the x*1e6
-    * BIGINT overflow, via a TWO-LEVEL split (round-9 upgrade from the
-    * one-level r*1e6 spelling). Level 1: |x| = q·d + r with r < d, so
+    * BIGINT overflow, via a TWO-LEVEL split (a one-level r*1e6 split
+    * overflows in turn). Level 1: |x| = q·d + r with r < d, so
     * 1e6·x/d = 1e6·q + 1e6·r/d. Level 2: 1e6·r/d = 1000·⌊1000r/d⌋ +
     * ⌊1000·((1000r) mod d)/d⌋ — exact because 1000r = q₁d + r₁ gives
     * 1e6·r = 1000·q₁·d + 1000·r₁ and both remainders are < d. Each
@@ -1552,13 +1551,34 @@ object Statistics {
       ORDER BY discount_pct"""
   }
 
-  val queries: Map[String, Q] = Map(
+  // the queries Spark and DuckDB run as one statement (QueryModule.shared)
+  private val shared = QueryModule.shared(Map(
+    "stats_mann_kendall" -> MannKendallSql,
+    "stats_delta_method" -> DeltaMethodSql,
+    "stats_proportion_ztest" -> PropZSql,
+    "stats_hill" -> HillSql,
+    "stats_logistic_irls" -> LogisticIrlsSql,
+    "stats_ols2" -> Ols2Sql,
+    "stats_corr_matrix" -> CorrMatrixSql,
+    "stats_kendall" -> KendallSql,
+    "stats_cuped" -> CupedSql,
+    "stats_regression" -> RegressionSql,
+    "stats_chisq" -> ChisqSql,
+    "stats_gini" -> GiniSql,
+    "stats_ttest" -> TTestSql,
+    "stats_mannwhitney" -> MannWhitneySql,
+    "stats_spearman" -> SpearmanSql,
+    "stats_anova" -> AnovaSql,
+    "stats_ks" -> KsSql,
+    "stats_kruskal" -> KruskalSql
+  ))
+
+  val queries: Map[String, Q] = shared.queries ++ Map(
     "stats_calibration" -> Tables.sql(calibrationSql(spark = true)),
     "stats_did" -> Tables.sql(didSql(spark = true)),
     "stats_srm" -> Tables.sql(srmSql(spark = true)),
     "stats_sprt" -> Tables.sql(sprtSql(spark = true)),
     "stats_capture_recapture" -> Tables.sql(captureRecaptureSql(spark = true)),
-    "stats_mann_kendall" -> Tables.sql(MannKendallSql),
     "stats_dawid_skene" -> Tables.sql(dawidSkeneSql(spark = true)),
     "stats_conformal" -> Tables.sql(conformalSql(spark = true)),
     "stats_fleiss_kappa" -> Tables.sql(fleissSql(spark = true)),
@@ -1566,33 +1586,15 @@ object Statistics {
     "stats_mcnemar"      -> Tables.sql(mcnemarSql(spark = true)),
     "stats_bootstrap_poisson" -> Tables.sql(bootstrapSql(spark = true)),
     "stats_bootstrap_median" -> Tables.sql(bootstrapMedianSql(spark = true)),
-    "stats_delta_method" -> Tables.sql(DeltaMethodSql),
-    "stats_proportion_ztest" -> Tables.sql(PropZSql),
-    "stats_hill" -> Tables.sql(HillSql),
-    "stats_logistic_irls" -> Tables.sql(LogisticIrlsSql),
-    "stats_ols2"        -> Tables.sql(Ols2Sql),
-    "stats_corr_matrix" -> Tables.sql(CorrMatrixSql),
-    "stats_kendall"     -> Tables.sql(KendallSql),
-    "stats_cuped"       -> Tables.sql(CupedSql),
-    "stats_regression"  -> Tables.sql(RegressionSql),
-    "stats_chisq"       -> Tables.sql(ChisqSql),
-    "stats_gini"        -> Tables.sql(GiniSql),
-    "stats_ttest"       -> Tables.sql(TTestSql),
-    "stats_mannwhitney" -> Tables.sql(MannWhitneySql),
-    "stats_spearman"    -> Tables.sql(SpearmanSql),
-    "stats_theilsen"    -> Tables.sql(theilSenSql(spark = true)),
-    "stats_anova"       -> Tables.sql(AnovaSql),
-    "stats_ks"          -> Tables.sql(KsSql),
-    "stats_kruskal"     -> Tables.sql(KruskalSql)
+    "stats_theilsen"    -> Tables.sql(theilSenSql(spark = true))
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = shared.oracle ++ Map(
     "stats_calibration" -> calibrationSql(spark = false),
     "stats_did" -> didSql(spark = false),
     "stats_srm" -> srmSql(spark = false),
     "stats_sprt" -> sprtSql(spark = false),
     "stats_capture_recapture" -> captureRecaptureSql(spark = false),
-    "stats_mann_kendall" -> MannKendallSql,
     "stats_dawid_skene" -> dawidSkeneSql(spark = false),
     "stats_conformal" -> conformalSql(spark = false),
     "stats_fleiss_kappa" -> fleissSql(spark = false),
@@ -1600,23 +1602,6 @@ object Statistics {
     "stats_mcnemar"      -> mcnemarSql(spark = false),
     "stats_bootstrap_poisson" -> bootstrapSql(spark = false),
     "stats_bootstrap_median" -> bootstrapMedianSql(spark = false),
-    "stats_delta_method" -> DeltaMethodSql,
-    "stats_proportion_ztest" -> PropZSql,
-    "stats_hill" -> HillSql,
-    "stats_logistic_irls" -> LogisticIrlsSql,
-    "stats_ols2"        -> Ols2Sql,
-    "stats_corr_matrix" -> CorrMatrixSql,
-    "stats_kendall"     -> KendallSql,
-    "stats_cuped"       -> CupedSql,
-    "stats_regression"  -> RegressionSql,
-    "stats_chisq"       -> ChisqSql,
-    "stats_gini"        -> GiniSql,
-    "stats_ttest"       -> TTestSql,
-    "stats_mannwhitney" -> MannWhitneySql,
-    "stats_spearman"    -> SpearmanSql,
-    "stats_theilsen"    -> theilSenSql(spark = false),
-    "stats_anova"       -> AnovaSql,
-    "stats_ks"          -> KsSql,
-    "stats_kruskal"     -> KruskalSql
+    "stats_theilsen"    -> theilSenSql(spark = false)
   )
 }

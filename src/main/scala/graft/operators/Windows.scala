@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.Tables
+import graft.{QueryModule, Tables}
 
 /** Window / analytic functions (SURVEY.md §2.6) — Hive's PTF engine
   * (QL/exec/PTFOperator.java + QL/udf/ptf/WindowingTableFunction.java):
@@ -163,8 +163,8 @@ object Windows {
                CAST(COUNT(*) OVER f AS BIGINT) AS n,
                CAST(SUM(rev) OVER f AS BIGINT) AS s,
                -- rev² ≈ 1e20 per day at sf10 (daily revenue ~1e10) and
-               -- the 7-day BIGINT sum crossed Long.Max there (r13
-               -- divergence class 2): the square products run
+               -- the 7-day BIGINT sum crossed Long.Max there: the
+               -- square products run
                -- DECIMAL(19,0)×DECIMAL(19,0) → DECIMAL(38,0), width-
                -- legal in both engines and exact to 1e38
                SUM(CAST(rev AS DECIMAL(19,0)) * CAST(rev AS DECIMAL(19,0))) OVER f AS ss
@@ -174,7 +174,7 @@ object Windows {
       SELECT d, CAST(rev AS DOUBLE) AS revenue,
              -- integer-grid round (ROUND(x·10^s)→BIGINT→/10^s): a
              -- fractional-scale ROUND on these doubles hit a 4-dp half
-             -- boundary at sf10 (1e-4 divergence, r13 class 3); the
+             -- boundary at sf10 (a 1e-4 divergence); the
              -- scale-0 ROUND sees the bit-identical double in both
              -- engines (IEEE sqrt/÷ are correctly rounded), so the
              -- grid value is exact
@@ -188,16 +188,14 @@ object Windows {
       FROM r ORDER BY d"""
   }
 
-  val queries: Map[String, Q] = Map(
-    "window_drawdown" -> Tables.sql(drawdownSql(spark = true)),
-    "window_rolling_stats" -> Tables.sql(rollingSql(spark = true)),
-    "window_rfm_segmentation" -> Tables.sql(rfmSql(spark = true)),
-    "window_abc_analysis" -> Tables.sql(AbcSql),
-    "window_nth_value" -> Tables.sql(NthValueSql),
-    "window_monthly_trend" -> Tables.sql(MonthlyTrendSql),
+  // the queries Spark and DuckDB run as one statement (QueryModule.shared)
+  private val shared = QueryModule.shared(Map(
+    "window_abc_analysis" -> AbcSql,
+    "window_nth_value" -> NthValueSql,
+    "window_monthly_trend" -> MonthlyTrendSql,
 
     // Ranking family + running sum over ROWS frame.
-    "window_rank_rows_frame" -> Tables.sql("""
+    "window_rank_rows_frame" -> """
       SELECT c_custkey, c_nationkey,
              ROW_NUMBER() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rn,
              RANK() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rnk,
@@ -206,10 +204,10 @@ object Windows {
                PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_bal
       FROM customer
-      ORDER BY c_nationkey, rn"""),
+      ORDER BY c_nationkey, rn""",
 
     // RANGE frame with a numeric offset (Hive ValueBoundaryScanner).
-    "window_range_frame" -> Tables.sql("""
+    "window_range_frame" -> """
       SELECT o_orderkey, o_totalprice,
              COUNT(*) OVER (ORDER BY o_totalprice
                RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW) AS n_within_10k,
@@ -217,28 +215,28 @@ object Windows {
                RANGE BETWEEN 10000 PRECEDING AND 10000 FOLLOWING) AS DOUBLE) AS sum_within_10k
       FROM orders
       WHERE o_orderkey <= 1000
-      ORDER BY o_totalprice, o_orderkey"""),
+      ORDER BY o_totalprice, o_orderkey""",
 
-    "window_lead_lag" -> Tables.sql("""
+    "window_lead_lag" -> """
       SELECT event_id, user_id, event_type,
              LAG(event_type, 1, '<start>') OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
              LEAD(event_type, 1, '<end>') OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type,
              LAG(value, 2) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS value_2_back
       FROM events
       WHERE user_id <= 20
-      ORDER BY user_id, event_id"""),
+      ORDER BY user_id, event_id""",
 
     // ntile / percent_rank / cume_dist — exact rational values, identical
     // doubles in both engines.
-    "window_ntile_cume" -> Tables.sql("""
+    "window_ntile_cume" -> """
       SELECT s_suppkey,
              NTILE(4) OVER (ORDER BY s_acctbal, s_suppkey) AS quartile,
              CAST(PERCENT_RANK() OVER (ORDER BY s_acctbal, s_suppkey) AS DOUBLE) AS pct_rnk,
              CAST(CUME_DIST() OVER (ORDER BY s_acctbal, s_suppkey) AS DOUBLE) AS cume
       FROM supplier
-      ORDER BY s_suppkey"""),
+      ORDER BY s_suppkey""",
 
-    "window_first_last" -> Tables.sql("""
+    "window_first_last" -> """
       SELECT c_custkey, c_nationkey,
              FIRST_VALUE(c_name) OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey
                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS richest,
@@ -246,11 +244,11 @@ object Windows {
                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS poorest
       FROM customer
       WHERE c_custkey <= 300
-      ORDER BY c_custkey"""),
+      ORDER BY c_custkey""",
 
     // Sliding ROWS frame; avg expressed as exact SUM(decimal)/COUNT so
     // both engines' sliding-window accumulation strategies can't drift.
-    // Window order tiebreak (r14 sf10 find): the fixture's
+    // Window order tiebreak (found at sf10): the fixture's
     // (l_orderkey, l_linenumber) is NOT unique (TPC-H-ish, not TPC-H),
     // so a ROWS frame ordered by linenumber alone is underspecified —
     // engines agreed on tie order at small SFs by file-layout luck and
@@ -258,7 +256,7 @@ object Windows {
     // frame CONTENTS value-deterministic: rows still tied after
     // (linenumber, quantity) are interchangeable for quantity
     // aggregates. Same fix in window_running_median.
-    "window_sliding_avg" -> Tables.sql("""
+    "window_sliding_avg" -> """
       SELECT l_orderkey, l_linenumber,
              CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) OVER w3 AS DOUBLE)
                   / COUNT(*) OVER w3 AS DOUBLE) AS avg3_qty
@@ -266,7 +264,13 @@ object Windows {
       WHERE l_orderkey <= 400
       WINDOW w3 AS (PARTITION BY l_orderkey ORDER BY l_linenumber, l_quantity
                     ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-      ORDER BY l_orderkey, l_linenumber"""),
+      ORDER BY l_orderkey, l_linenumber"""
+  ))
+
+  val queries: Map[String, Q] = shared.queries ++ Map(
+    "window_drawdown" -> Tables.sql(drawdownSql(spark = true)),
+    "window_rolling_stats" -> Tables.sql(rollingSql(spark = true)),
+    "window_rfm_segmentation" -> Tables.sql(rfmSql(spark = true)),
 
     // Running exact median per key — the EXACT percentile aggregate
     // evaluated over a growing ROWS frame (Hive: GenericUDAFPercentile
@@ -299,71 +303,10 @@ object Windows {
       ORDER BY o_custkey, o_orderkey""")
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = shared.oracle ++ Map(
     "window_drawdown" -> drawdownSql(spark = false),
     "window_rolling_stats" -> rollingSql(spark = false),
     "window_rfm_segmentation" -> rfmSql(spark = false),
-    "window_abc_analysis" -> AbcSql,
-    "window_nth_value" -> NthValueSql,
-    "window_monthly_trend" -> MonthlyTrendSql,
-
-    "window_rank_rows_frame" -> """
-      SELECT c_custkey, c_nationkey,
-             ROW_NUMBER() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rn,
-             RANK() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rnk,
-             DENSE_RANK() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS drnk,
-             CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) OVER (
-               PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_bal
-      FROM customer
-      ORDER BY c_nationkey, rn""",
-
-    "window_range_frame" -> """
-      SELECT o_orderkey, o_totalprice,
-             COUNT(*) OVER (ORDER BY o_totalprice
-               RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW) AS n_within_10k,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (ORDER BY o_totalprice
-               RANGE BETWEEN 10000 PRECEDING AND 10000 FOLLOWING) AS DOUBLE) AS sum_within_10k
-      FROM orders
-      WHERE o_orderkey <= 1000
-      ORDER BY o_totalprice, o_orderkey""",
-
-    "window_lead_lag" -> """
-      SELECT event_id, user_id, event_type,
-             LAG(event_type, 1, '<start>') OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
-             LEAD(event_type, 1, '<end>') OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type,
-             LAG(value, 2) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS value_2_back
-      FROM events
-      WHERE user_id <= 20
-      ORDER BY user_id, event_id""",
-
-    "window_ntile_cume" -> """
-      SELECT s_suppkey,
-             NTILE(4) OVER (ORDER BY s_acctbal, s_suppkey) AS quartile,
-             CAST(PERCENT_RANK() OVER (ORDER BY s_acctbal, s_suppkey) AS DOUBLE) AS pct_rnk,
-             CAST(CUME_DIST() OVER (ORDER BY s_acctbal, s_suppkey) AS DOUBLE) AS cume
-      FROM supplier
-      ORDER BY s_suppkey""",
-
-    "window_first_last" -> """
-      SELECT c_custkey, c_nationkey,
-             FIRST_VALUE(c_name) OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS richest,
-             LAST_VALUE(c_name) OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS poorest
-      FROM customer
-      WHERE c_custkey <= 300
-      ORDER BY c_custkey""",
-
-    "window_sliding_avg" -> """
-      SELECT l_orderkey, l_linenumber,
-             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) OVER w3 AS DOUBLE)
-                  / COUNT(*) OVER w3 AS DOUBLE) AS avg3_qty
-      FROM lineitem
-      WHERE l_orderkey <= 400
-      WINDOW w3 AS (PARTITION BY l_orderkey ORDER BY l_linenumber, l_quantity
-                    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-      ORDER BY l_orderkey, l_linenumber""",
 
     // QUANTILE_CONT over the same frame — same linear-interpolation
     // definition as Spark's exact PERCENTILE

@@ -2,15 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The fixed-threshold/cap adjudication gate (r17, verdict #2).
+/** The fixed-threshold/cap adjudication gate.
   *
-  * Two consecutive rounds found operators that sat oracle-green while
-  * silently degraded at scale, because a constant tuned at sf0.01-0.1
-  * drifted out of its regime as a corpus-dependent distribution
-  * shifted: the fixed 6-plane LSH geometry (r15 — per-bucket occupancy
-  * grows linearly with the corpus) and the fixed `ppl <= 30` curation
-  * gate (r16 — the corpus-trained LM's perplexity floor drifts past
-  * any constant). Both are instances of ONE defect class. This spec
+  * Operators have sat oracle-green while silently degraded at scale,
+  * because a constant tuned at sf0.01-0.1 drifted out of its regime as
+  * a corpus-dependent distribution shifted: the fixed 6-plane LSH
+  * geometry (per-bucket occupancy grows linearly with the corpus) and
+  * the fixed `ppl <= 30` curation gate (the corpus-trained LM's
+  * perplexity floor drifts past any constant). Both are instances of
+  * ONE defect class. This spec
   * turns the lesson into a standing gate: every comparison-form
   * threshold constant in the operator sources is detected by pattern
   * and must carry exactly one classification:
@@ -24,7 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    control computed from corpus stats (the LSH occupancy target 64
   *    maintained by pe = min p with n <= 64*2^p; the quantile gate).
   *  - fixed(<drift>): deliberately constant, with the direction of
-  *    scale drift stated — these are the sites a future round must
+  *    scale drift stated — these are the sites a future change must
   *    re-examine when a rowratio suspect fires.
   *
   * A NEW constant matching the detectors (or a new occurrence of a
@@ -52,7 +52,7 @@ class ThresholdInventorySpec extends AnyFunSuite {
   )
 
   /** Comment-stripped source so prose mentioning a number never counts
-    * as a site — WITHOUT blinding the detectors (r17 review finding):
+    * as a site — WITHOUT blinding the detectors:
     * a `*`-led line is dropped only INSIDE a real block comment (SQL
     * multiplication continuations like `* CAST(v AS ...)` are code),
     * and a `//` starts a line comment only OUTSIDE string literals
@@ -232,7 +232,8 @@ class ThresholdInventorySpec extends AnyFunSuite {
     ("TextAnalysis.scala", "topk-limit", ".limit(20)") ->
       (1, "invariant: fixed-size top-k report contract (BPE savings)"),
     ("Windows.scala", "probe-set", "user_id <= 20") ->
-      (2, "fixed: RFM probe cohort by design, spark+oracle"),
+      (1, "fixed: window_lead_lag's probe cohort by design, one statement " +
+          "both engines run"),
     ("Windows.scala", "tau-cut", "<= 0.5") ->
       (1, "invariant: ABC-class cumulative-share quantile cut (ratio)"),
     ("Windows.scala", "tau-cut", "<= 0.8") ->
@@ -243,7 +244,7 @@ class ThresholdInventorySpec extends AnyFunSuite {
     val found = detected()
     val unreviewed = found.keySet -- inventory.keySet
     assert(unreviewed.isEmpty,
-      s"UNCLASSIFIED threshold sites (the r15/r16 silent-degradation " +
+      s"UNCLASSIFIED threshold sites (the silent-degradation " +
         s"class): ${unreviewed.toSeq.sortBy(_.toString)} — classify each " +
         "in ThresholdInventorySpec.inventory as invariant / adaptive / " +
         "fixed(<drift direction>)")
