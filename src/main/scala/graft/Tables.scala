@@ -8,6 +8,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import graft.plans.Spread
 
 /** Registers the driver-generated parquet testdata (TESTDATA.md) as temp
   * views so queries can be expressed in the Hive-ish SQL dialect Spark SQL
@@ -196,26 +197,11 @@ object Tables {
     }
   }
 
-  /** Scale the shared SQL texts' repartition hints to the session.
-    *
-    * The query texts spell `/*+ REPARTITION(32) */` because the SAME
-    * string is the DuckDB oracle text (the hint parses as a plain block
-    * comment there, so Spark and the oracle share one statement). But
-    * the literal 32 is the local bench host's core count, wrong in both
-    * directions anywhere else: at `local[8]` it over-splits the tiny
-    * inputs, and on a cluster-sized session it would COALESCE a
-    * thousands-of-splits scan down to 32 tasks — a hard parallelism cap
-    * (guide §2.5). At execution time the Spark side rewrites the width
-    * to the session's `defaultParallelism` (= the configured core
-    * count locally, total executor cores on a cluster); the oracle text
-    * keeps the comment verbatim. REPARTITION(1) spellings are exactness
-    * contracts (single partial per group), never rewritten. */
-  def scaleHints(spark: SparkSession, q: String): String =
-    q.replace("REPARTITION(32)",
-      s"REPARTITION(${spark.sparkContext.defaultParallelism})")
-
   /** Standard shape of a harness query: register views and functions,
-    * run SQL. */
+    * run SQL. A width-free `/*+ REPARTITION */` in `q` marks a relation
+    * whose rows are spread over the session's cores before the kernel
+    * work above it (`graft.plans.Spread`); DuckDB reads the hint as a
+    * comment, so the oracle runs the same text. */
   def sql(q: String): (SparkSession, String) => DataFrame =
-    (spark, sfDir) => { register(spark, sfDir); spark.sql(scaleHints(spark, q)) }
+    (spark, sfDir) => { register(spark, sfDir); Spread.hints(spark.sql(q)) }
 }

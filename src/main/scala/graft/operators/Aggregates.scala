@@ -165,7 +165,7 @@ object Aggregates {
     s"""
       WITH ps AS (
         SELECT $pcts AS p
-        FROM (SELECT /*+ REPARTITION(32) */ l_extendedprice FROM lineitem) li
+        FROM (SELECT /*+ REPARTITION */ l_extendedprice FROM lineitem) li
       ), b AS (
         SELECT ROUND(p[$i1], 6) AS p1, ROUND(p[$i2], 6) AS p2, ROUND(p[$i3], 6) AS p3
         FROM ps
@@ -300,7 +300,7 @@ object Aggregates {
     * at a trim boundary. */
   private val TrimmedMeanSql = """
       WITH c AS (
-        SELECT /*+ REPARTITION(32) */ l_returnflag AS rf,
+        SELECT /*+ REPARTITION */ l_returnflag AS rf,
                CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS v
         FROM lineitem
       ),
@@ -392,7 +392,7 @@ object Aggregates {
     * division. */
   private val WinsorizedMeanSql = """
       WITH c AS (
-        SELECT /*+ REPARTITION(32) */ l_returnflag AS rf,
+        SELECT /*+ REPARTITION */ l_returnflag AS rf,
                CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS v
         FROM lineitem
       ),

@@ -308,7 +308,7 @@ object Curation {
     "text_chunks" -> Tables.sql("""
       WITH t AS (
         SELECT doc_id, TOKENIZE(text) AS toks
-        FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)
+        FROM (SELECT /*+ REPARTITION */ doc_id, text FROM documents)
       ), c AS (
         SELECT doc_id, toks, s
         FROM t LATERAL VIEW EXPLODE(SEQUENCE(0, SIZE(toks) - 1, 48)) ch AS s
@@ -362,7 +362,7 @@ object Curation {
       WITH base AS (
         SELECT doc_id, text, MD5(CAST(text AS BINARY)) AS digest,
                (doc_id % 5 = 4) AS is_new
-        FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)
+        FROM (SELECT /*+ REPARTITION */ doc_id, text FROM documents)
       ), exact AS (
         SELECT DISTINCT n.doc_id
         FROM base n JOIN base o ON n.digest = o.digest
@@ -434,10 +434,10 @@ object Curation {
     // the per-doc shingling (the expensive part) happens once per doc
     // overall. Two pruned column scans beat materializing a corpus-wide
     // gram table at 100 TB, so the inlining is left as-is deliberately.
-    // (The REPARTITION(32) hint is a testdata artifact shared by the
-    // text_* queries — documents.parquet is one file locally, so the
-    // hint buys local[32] parallelism; a real corpus arrives in
-    // thousands of splits and the hint would be dropped.) n_shared
+    // (The REPARTITION hint spreads the shingling over the session's
+    // cores: documents.parquet is one split locally. The doc_id % 97
+    // predicates stay above its exchange, below the SHINGLE_SET
+    // projection.) n_shared
     // counts DISTINCT shared shingles (both sides are set-valued by
     // construction).
     // LEARNED quality scorer — distributed ML training living inside
@@ -491,7 +491,7 @@ object Curation {
     "text_decontaminate" -> Tables.sql("""
       WITH sh AS (
         SELECT doc_id, SHINGLE_SET(text, 5) AS grams
-        FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)
+        FROM (SELECT /*+ REPARTITION */ doc_id, text FROM documents)
       ), bench AS (
         SELECT DISTINCT gram
         FROM sh LATERAL VIEW EXPLODE(grams) g AS gram
@@ -523,13 +523,12 @@ object Curation {
     // 100 TB of metadata through one task. The only other moves are a
     // 1-row total aggregate and the final groupBy on seq_id.
     "pack_sequences" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
       import spark.implicits._
-      val docs = spark.sql(Tables.scaleHints(spark, """
+      val docs = Tables.sql("""
         SELECT doc_id, n_tok FROM (
           SELECT doc_id, SIZE(TOKENIZE(text)) AS n_tok
-          FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents))
-        WHERE n_tok > 0"""))
+          FROM (SELECT /*+ REPARTITION */ doc_id, text FROM documents))
+        WHERE n_tok > 0""")(spark, sfDir)
       val total = docs.agg(sum(col("n_tok"))).head.getLong(0)
       val bins = math.max(1L, math.ceil(total / 2048.0).toLong)
       val ranked = docs.orderBy(col("n_tok").desc, col("doc_id"))
@@ -551,13 +550,12 @@ object Curation {
     // within a band-width of each other. Per-shard imbalance vs the
     // perfect 1/8 share in exact micro units.
     "pack_shards" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
       import spark.implicits._
-      val docs = spark.sql(Tables.scaleHints(spark, """
+      val docs = Tables.sql("""
         SELECT doc_id, n_tok FROM (
           SELECT doc_id, SIZE(TOKENIZE(text)) AS n_tok
-          FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents))
-        WHERE n_tok > 0"""))
+          FROM (SELECT /*+ REPARTITION */ doc_id, text FROM documents))
+        WHERE n_tok > 0""")(spark, sfDir)
       val ranked = docs.orderBy(col("n_tok").desc, col("doc_id"))
         .rdd.zipWithIndex
         .map { case (r, i) => (r.getLong(0), r.getInt(1), i) }

@@ -64,12 +64,10 @@ object Dedup {
     * partition at test scale, which would serialize the per-row work.
     *
     * An empty gram set gets no band rows, so its document is never a
-    * candidate. The guard sits in the band explode, not in a filter on
-    * `sh`: Spark pushes a filter through the REPARTITION hint into the
-    * one-task scan stage, which would shingle every document serially. */
+    * candidate. */
   private[operators] def minhashBandCtes(
       carry: String = "",
-      from: String = "(SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)"): String = {
+      from: String = "(SELECT /*+ REPARTITION */ doc_id, text FROM documents)"): String = {
     val c = if (carry.isEmpty) "" else s"$carry, "
     s"""sh AS (
         SELECT doc_id, ${c}SHINGLE_SET(text, 3) AS grams FROM $from
@@ -122,17 +120,14 @@ object Dedup {
     * document's n - ceil(tau·n) + 1 rarest grams. ONE spelling for
     * dedup_ngram_jaccard/dedup_edit_verify (tau 0.5) and
     * dedup_containment (tau 0.8). An empty gram set explodes to no
-    * posting, so its document is never a candidate. As in
-    * `minhashBandCtes`, the guard sits in the explode: from an explode
-    * of the bare `grams` column Spark infers `SIZE(grams) > 0` and
-    * pushes it, SHINGLE_SET and all, into the one-task scan stage. */
+    * posting, so its document is never a candidate. */
   private def prefixCtes(tau: Double): String = s"""
       sh AS (
         SELECT doc_id, source, SHINGLE_SET(text, 3) AS grams
-        FROM (SELECT /*+ REPARTITION(32) */ doc_id, source, text FROM documents)
+        FROM (SELECT /*+ REPARTITION */ doc_id, source, text FROM documents)
       ), inv AS (
         SELECT doc_id, source, SIZE(grams) AS n, gram
-        FROM sh LATERAL VIEW EXPLODE(IF(SIZE(grams) > 0, grams, ARRAY())) g AS gram
+        FROM sh LATERAL VIEW EXPLODE(grams) g AS gram
       ), df AS (
         SELECT source, gram, COUNT(*) AS df FROM inv GROUP BY source, gram
       ), prefix AS (
@@ -287,15 +282,11 @@ object Dedup {
     // (band, key) equi-join.
     "dedup_simhash" -> Tables.sql("""
       WITH sh AS (
-        -- sim is declared non-null: from the hamming filter on a nullable
-        -- sim Spark infers `sim IS NOT NULL` and pushes it, SIMHASH64 and
-        -- all, through the hint into the one-task scan stage
-        SELECT doc_id, toks, COALESCE(SIMHASH64(toks), 0) AS sim
+        SELECT doc_id, toks, SIMHASH64(toks) AS sim
         FROM (SELECT doc_id, TOKENIZE(text) AS toks
-              FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents))
+              FROM (SELECT /*+ REPARTITION */ doc_id, text FROM documents))
       ), bands AS (
-        -- a document without tokens gets no band rows: the guard sits in
-        -- the explode, not in a filter Spark would push into the scan
+        -- a document without tokens gets no band rows
         SELECT doc_id, sim, band,
                CASE WHEN band < 6 THEN (sim >> (band * 9)) & 511
                     ELSE (sim >> 54) & 1023 END AS bandkey
@@ -341,15 +332,14 @@ object Dedup {
     // arithmetic is exact string hashing + integer counts — the oracle
     // replicates it verbatim.
     "dedup_substring" -> ((spark, sfDir) => {
-      Tables.register(spark, sfDir)
       // persist the (doc_id, window-hash) table: it feeds the hot-window
       // aggregate AND both self-join sides — inlined (Spark CTEs don't
       // materialize), the tokenize+shingle+MD5 kernel would run 3× over
       // the corpus (same lesson as lshCandidatePairs)
-      val w = spark.sql(Tables.scaleHints(spark, """
+      val w = Tables.sql("""
         SELECT doc_id, MD5(win) AS wh
-        FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents)
-        LATERAL VIEW EXPLODE(SHINGLE_SET(text, 15)) s AS win""")).persist()
+        FROM (SELECT /*+ REPARTITION */ doc_id, text FROM documents)
+        LATERAL VIEW EXPLODE(SHINGLE_SET(text, 15)) s AS win""")(spark, sfDir).persist()
       val cool = w.groupBy(col("wh")).agg(count(lit(1)).as("c"))
         .where(col("c") <= 64).select(col("wh"))
       w.select(col("doc_id").as("doc_a"), col("wh"))
@@ -497,6 +487,7 @@ object Dedup {
     // keep rule u·csize < 2^32 — pure integer compare, exact in both
     // engines. Per-csize keep counts report the realized thinning.
     "curation_dedup_aware_sample" -> ((spark, sfDir) => {
+      Tables.register(spark, sfDir)
       val docCsize = spark.table("documents").select(col("doc_id"))
         .join(nearDupLabels(spark, sfDir)
           .select(col("node").as("doc_id"), clusterSize), Seq("doc_id"), "left")
@@ -755,17 +746,16 @@ object Dedup {
     * digest among those, and represent their near-dup cluster (its
     * min doc_id; clusters are over the full corpus). */
   private def curatedSurvivors(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.register(spark, sfDir)
     // components directly over the pair graph — dedup_clusters' final
     // cluster-size join and ORDER BY serve its own output contract and
     // would be dead weight under this anti-join consumer
     val nonRep = nearDupLabels(spark, sfDir)
       .where(col("node") =!= col("comp"))
       .select(col("node").as("drop_id"))
-    val base = spark.sql(Tables.scaleHints(spark, """
+    val base = Tables.sql("""
       SELECT doc_id, lang, TOKENIZE(text) AS toks,
              MD5(CAST(text AS BINARY)) AS digest
-      FROM (SELECT /*+ REPARTITION(32) */ * FROM documents)"""))
+      FROM (SELECT /*+ REPARTITION */ * FROM documents)""")(spark, sfDir)
       .where(size(col("toks")) >= 10 &&
         size(array_distinct(col("toks"))).cast("double") / size(col("toks")) >= 0.2)
     val reps = base.groupBy(col("digest")).agg(min(col("doc_id")).as("keep_id"))

@@ -4,11 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Hashing
+import graft.plans.Spread
 
 /** Multimodal-column plumbing: media as opaque `binary` payloads with
   * typed metadata, decoded/feature-extracted per partition.
   *
-  * The IMAGE and AUDIO halves are REAL as of round 5: payloads whose
+  * The IMAGE and AUDIO halves are REAL: payloads whose
   * magic bytes identify a PNG/JPEG/GIF/BMP are decoded with
   * `javax.imageio` (true pixel dimensions, BT.601 mean luma, 8-bin luma
   * histogram features, nearest-neighbor resize — MultimodalImageSpec
@@ -17,7 +18,7 @@ import graft.functions.Hashing
   * sample rate/channels/frames, exact RMS, amplitude histogram —
   * MultimodalAudioSpec pins sample-exact goldens). Both are
   * JDK-resident: no external codec needed. The FRAME stage is real too
-  * as of round 6 for the one multi-frame format the JDK decodes:
+  * for the one multi-frame format the JDK decodes:
   * animated GIF via ImageIO's GIF reader (`FrameCodec`) — true frame
   * counts and exact per-frame mean luma, with per-frame goldens in
   * MultimodalImageSpec. Only payloads NO JDK codec can decode (true
@@ -538,19 +539,16 @@ object Multimodal {
     }
   }
 
-  /** Shared media input: documents as opaque binary payloads,
-    * repartitioned so per-row codec work parallelizes (the small file
-    * scans as one partition at test scale). */
+  /** Shared media input: documents as opaque binary payloads, spread
+    * over the session's cores so per-row codec work parallelizes (the
+    * small file scans as one partition at test scale). */
   private def mediaInput(spark: SparkSession, sfDir: String)
       : org.apache.spark.sql.Dataset[MediaRow] = {
     Tables.register(spark, sfDir)
     import spark.implicits._
-    spark.table("documents")
+    Spread.over(spark.table("documents")
       .select(col("doc_id"), col("lang").as("fmt"),
-        col("text").cast("binary").as("payload"))
-      // session parallelism, not a literal core count: a cluster-sized
-      // session must not be capped at 32 codec tasks (guide §2.5)
-      .repartition(spark.sparkContext.defaultParallelism)
+        col("text").cast("binary").as("payload")))
       .as[MediaRow]
   }
 

@@ -77,7 +77,7 @@ object Similarity {
                CONCAT(SUBSTR(p_name, 1, 3), SUBSTR(p_name, 5, 1),
                       SUBSTR(p_name, 4, 1), SUBSTR(p_name, 6)) AS dname,
                SUBSTR(p_name, 1, 3) AS blk, LENGTH(p_name) AS len
-        FROM (SELECT /*+ REPARTITION(32) */ p_partkey, p_name
+        FROM (SELECT /*+ REPARTITION */ p_partkey, p_name
               FROM part WHERE p_partkey % 5 = 0) src
       )"""
 
@@ -138,7 +138,7 @@ object Similarity {
         SELECT p_partkey AS did,
                CONCAT(SUBSTR(p_name, 1, 4), SUBSTR(p_name, 6)) AS dname,
                SUBSTR(p_name, 1, 4) AS blk, LENGTH(p_name) - 1 AS len
-        FROM (SELECT /*+ REPARTITION(32) */ p_partkey, p_name
+        FROM (SELECT /*+ REPARTITION */ p_partkey, p_name
               FROM part WHERE p_partkey % 7 = 0) src
       ), cand AS (
         SELECT d.did, p.p_partkey AS pid,

@@ -640,7 +640,7 @@ object Statistics {
       FROM m CROSS JOIN (VALUES $pairRows) AS p(var_a, var_b)"""
     s"""
       WITH x AS (
-        SELECT /*+ REPARTITION(32) */
+        SELECT /*+ REPARTITION */
                ${vars.map { case (n, e) => s"$e AS $n" }.mkString(", ")}
         FROM lineitem
       ),
@@ -935,7 +935,7 @@ object Statistics {
   // Spark comment-hint only; DuckDB parses it as a block comment.
   private val BootstrapLi = """
       li AS (
-        SELECT /*+ REPARTITION(32) */
+        SELECT /*+ REPARTITION */
                l_orderkey * 8 + l_linenumber AS k,
                CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS cents
         FROM lineitem

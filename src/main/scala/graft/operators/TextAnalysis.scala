@@ -596,7 +596,7 @@ object TextAnalysis {
       FROM (
         SELECT EXPLODE(NGRAMS_TOPK(toks, 2, 20, 500000)) AS g
         FROM (SELECT TOKENIZE(text) AS toks
-              FROM (SELECT /*+ REPARTITION(32) */ text FROM documents))
+              FROM (SELECT /*+ REPARTITION */ text FROM documents))
       )
       ORDER BY freq DESC, ngram"""),
 
@@ -608,7 +608,7 @@ object TextAnalysis {
       FROM (
         SELECT EXPLODE(CONTEXT_NGRAMS(toks, ARRAY('data', CAST(NULL AS STRING)), 10, 100000)) AS g
         FROM (SELECT TOKENIZE(text) AS toks
-              FROM (SELECT /*+ REPARTITION(32) */ text FROM documents))
+              FROM (SELECT /*+ REPARTITION */ text FROM documents))
       )
       ORDER BY freq DESC, follower"""),
 
@@ -656,7 +656,7 @@ object TextAnalysis {
              fp[0] AS first_fp,
              ARRAY_MIN(fp) AS min_fp
       FROM (SELECT doc_id, WINNOW_FINGERPRINT(text, 8, 4) AS fp
-            FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents))
+            FROM (SELECT /*+ REPARTITION */ doc_id, text FROM documents))
       ORDER BY doc_id"""),
 
     // Corpus diversity monitoring per source: token Shannon entropy +

@@ -10,7 +10,8 @@ object Explain {
     val name = args.headOption.getOrElse(sys.error("usage: Explain <query> [sfDir]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     // SPARK_GRAFT_CPUS lets a plan audit reproduce the bench session's
-    // width-dependent nodes (the r19 session-derived repartition hints)
+    // width-dependent nodes (a REPARTITION hint spreads at the session's
+    // defaultParallelism)
     val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
     val spark = ToolSession.local(cores)
     val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -118,6 +118,15 @@ class PipelineSpec extends AnyFunSuite {
     assert(got.forall(t => sizes(t._2) == t._3))
   }
 
+  test("curation_dedup_aware_sample builds in a session that registered no tables") {
+    // a query registers what it reads: no earlier query's registration
+    // may be needed for `documents` to resolve
+    val fresh = spark.newSession()
+    val rows = Dedup.queries("curation_dedup_aware_sample")(fresh, LocalSpark.sf).collect()
+    val docs = rows.map(_.getAs[Long]("n_docs")).sum
+    assert(docs == spark.read.parquet(s"${LocalSpark.sf}/documents.parquet").count())
+  }
+
   test("connectedComponents converges in O(log n) rounds on a 64-node chain") {
     // the worst case for hash-min label propagation, which needs
     // diameter-1 = 63 rounds on a path graph. The round count is pinned
@@ -399,8 +408,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("pipeline_curate_ppl quantile gate: covers >= 2n/3 of scored docs and t is minimal") {
-    // the r16 fix for the fixed ppl<=30 gate that kept ZERO docs at
-    // sf10 (corpus-LM perplexity floor drifts with scale). Pin the two
+    // a fixed ppl<=30 gate kept ZERO docs at sf10 (the corpus-LM
+    // perplexity floor drifts with scale). Pin the two
     // properties that make the quantile gate scale-proof: the kept
     // fraction can never fall below 2/3 (so the gate cannot silently
     // empty at ANY fixture), and t is the MINIMAL ppl value covering

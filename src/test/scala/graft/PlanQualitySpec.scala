@@ -1,10 +1,17 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+import java.util.concurrent.TimeUnit.SECONDS
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 
@@ -23,16 +30,38 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   /** The round-robin exchanges (the shape a REPARTITION hint plans) of
-    * an executed plan, AQE stages included, each as the conditions of
-    * the filters below it that call a graft kernel. */
-  private def hintExchanges(p: SparkPlan): Seq[Seq[String]] = {
+    * an executed plan, AQE stages and cached plans included, each with
+    * the conditions of the filters below it that call a graft kernel. */
+  private def hintExchanges(p: SparkPlan): Seq[(ShuffleExchangeExec, Seq[String])] = {
     val walk = new AdaptiveSparkPlanHelper {}
     val isKernel = (e: Expression) => e.getClass.getName.startsWith("graft.")
+    val cached = walk.collect(p) { case m: InMemoryTableScanExec => m.relation.cachedPlan }
     walk.collect(p) {
       case x: ShuffleExchangeExec if x.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => x
-    }.map(x => walk.collect(x.child) {
+    }.map(x => x -> walk.collect(x.child) {
       case f: FilterExec if f.condition.find(isKernel).isDefined => f.condition.sql
-    })
+    }) ++ cached.flatMap(hintExchanges)
+  }
+
+  /** The executed plan of every action that building and collecting
+    * query `q` runs: an eager query's own actions, then its result. */
+  private def executedPlans(q: String): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val sentinel = spark.range(1)
+    val seen = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe eq sentinel.queryExecution) seen.countDown() else plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries(q)(spark, LocalSpark.sf).collect()
+      // listener events arrive in order: the sentinel's comes last
+      sentinel.collect()
+      assert(seen.await(60, SECONDS), "the sentinel action never reached the listener")
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
   }
 
   test("scan_filter_project pushes filters and prunes columns at the parquet scan") {
@@ -57,7 +86,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("join_pit_scd2 broadcasts the materialized SCD2 dimension") {
-    // the round-8 materialize-once shape: the dimension is a persisted
+    // the materialize-once shape: the dimension is a persisted
     // view broadcast into the fact join — losing the broadcast (or
     // re-deriving the dimension inside the join) regresses 1.7s -> 4.9s
     val p = plan("join_pit_scd2")
@@ -111,8 +140,8 @@ class PlanQualitySpec extends AnyFunSuite {
   test("dedup_semantic pairs via a per-cluster kernel; kmeans assignment is a narrow map") {
     val p = plan("dedup_semantic")
     // SemDeDup's whole point: candidate pairs come from within the
-    // learned cluster only, never an all-pairs product — and since
-    // round 12, not even from a cluster self-JOIN: the relational pair
+    // learned cluster only, never an all-pairs product — and not
+    // even from a cluster self-JOIN: the relational pair
     // spelling materialized O(Σ|c|²) ~1 KB rows (263 s at sf10, all
     // bandwidth); the flatMapGroups kernel shuffles O(n) rows once and
     // emits only Tau-survivors
@@ -136,7 +165,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("kmeans assignment plan is O(1) in k — flat at k=256, no literal centroid structs") {
-    // the round-5 literal-centroid spelling put k·dim constants in one
+    // a literal-centroid spelling puts k·dim constants in one
     // projection: invisible at k=8, a plan/codegen bomb at the
     // k=10⁴–10⁵ SemDeDup regime the module documents. Gate: at k=256
     // the executed plan stays the SAME SIZE as k=8 (one broadcast
@@ -234,9 +263,8 @@ class PlanQualitySpec extends AnyFunSuite {
   test("custom text expressions stay inside whole-stage codegen") {
     // TOKENIZE/STOPWORD_RATIO/SHINGLE_SET implement doGenCode — a
     // CodegenFallback expression anywhere in a projection knocks the
-    // WHOLE stage out of codegen (round-1 state for every kernel except
-    // CosineSim), so the scan→project pipeline of the text queries must
-    // show a codegen span around its Project
+    // WHOLE stage out of codegen, so the scan→project pipeline of the
+    // text queries must show a codegen span around its Project
     for (q <- Seq("text_quality", "text_fingerprint")) {
       val df = SparkEntry.queries(q)(spark, LocalSpark.sf)
       df.collect()
@@ -275,17 +303,17 @@ class PlanQualitySpec extends AnyFunSuite {
   test("text_decontaminate broadcasts the benchmark gram set; corpus side never shuffles pre-join") {
     val p = plan("text_decontaminate")
     assert(p.contains("BroadcastHashJoin"), s"bench grams must broadcast:\n$p")
-    // the gram probe must not be a shuffled join: beyond the explicit
-    // local-parallelism REPARTITION(32) hint, the only Exchanges are the
-    // per-doc COUNT aggregate, the final left join, and the ORDER BY
+    // the gram probe must not be a shuffled join: beyond the REPARTITION
+    // hint's spread exchange, the only Exchanges are the per-doc COUNT
+    // aggregate, the final left join, and the ORDER BY
     assert(!p.contains("SortMergeJoin [gram"), "gram probe must not sort-merge")
   }
 
   test("repartition hints track the session's parallelism, not the bench host's 32") {
-    // the shared SQL texts spell REPARTITION(32) (comment-identical for
-    // the DuckDB oracle); Tables.scaleHints must rewrite the width to
-    // defaultParallelism at execution — this session is local[4], so a
-    // surviving literal 32 means a query path bypassed the rewrite
+    // the shared SQL texts spell a width-free REPARTITION (a comment to
+    // the DuckDB oracle); graft plans it at the session's
+    // defaultParallelism, this session's 4 cores, never at a width
+    // written into a query
     val dp = spark.sparkContext.defaultParallelism
     for (q <- Seq("link_fuzzy_match", "stats_bootstrap_median",
                   "agg_trimmed_mean", "stats_corr_matrix",
@@ -294,7 +322,7 @@ class PlanQualitySpec extends AnyFunSuite {
       assert(p.contains(s"RoundRobinPartitioning($dp)"),
         s"$q: hint width must be the session's $dp:\n$p")
       assert(!p.contains("RoundRobinPartitioning(32)"),
-        s"$q: literal 32-wide repartition survived the rewrite:\n$p")
+        s"$q: a literal 32-wide repartition:\n$p")
     }
   }
 
@@ -302,16 +330,64 @@ class PlanQualitySpec extends AnyFunSuite {
     // the hint's round-robin exchange exists to spread per-row kernel
     // work over the session's cores; a kernel filter below it runs in
     // the scan stage, one task at test scale, so every document is
-    // shingled or tokenized serially before the parallel stage starts
-    for (q <- Seq("dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_edit_verify",
-                  "dedup_containment", "dedup_simhash", "dedup_incremental",
-                  "text_decontaminate_fuzzy", "text_context_ngrams", "text_ngrams_topk")) {
-      val df = SparkEntry.queries(q)(spark, LocalSpark.sf)
-      df.collect()
-      val hints = hintExchanges(df.queryExecution.executedPlan)
-      assert(hints.nonEmpty, s"$q plans no round-robin exchange")
-      assert(hints.flatten.isEmpty, s"$q filters on a graft kernel in its scan stage: ${hints.flatten}")
+    // shingled or tokenized serially before the parallel stage starts.
+    // Every hinted query whose plans show its hint: the components
+    // queries hand the MinHash pairs to their loop as an RDD, and
+    // dedup_minhash_lsh covers that front end.
+    val dp = spark.sparkContext.defaultParallelism
+    val hinted =
+      for (q <- Seq("agg_trimmed_mean", "agg_winsorized_mean",
+                    "dedup_containment", "dedup_edit_verify", "dedup_incremental",
+                    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
+                    "dedup_substring", "link_blocking_metrics", "link_fuzzy_match",
+                    "link_jaro_winkler", "multimodal_audio_fp", "multimodal_decode",
+                    "multimodal_frames", "multimodal_phash_pairs", "multimodal_resize",
+                    "pack_sequences", "pack_shards", "pipeline_curate",
+                    "pipeline_curate_ppl", "stats_bootstrap_median",
+                    "stats_bootstrap_poisson", "stats_corr_matrix", "text_chunks",
+                    "text_context_ngrams", "text_decontaminate",
+                    "text_decontaminate_fuzzy", "text_fingerprint", "text_ngrams_topk"))
+      yield q -> executedPlans(q).flatMap(hintExchanges)
+    val offenders = hinted.flatMap {
+      case (q, Nil) => Seq(s"$q plans no round-robin exchange")
+      case (q, hints) => hints.collect {
+        case (x, _) if x.outputPartitioning != RoundRobinPartitioning(dp) ||
+            x.shuffleOrigin != REPARTITION_BY_NUM =>
+          s"$q spreads as ${x.outputPartitioning}, ${x.shuffleOrigin}, not over the session's $dp cores"
+        case (_, below) if below.nonEmpty =>
+          s"$q filters on a graft kernel in its scan stage: ${below.mkString(", ")}"
+      }
     }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("a filter above a width-free REPARTITION stays above its exchange in a twice-read CTE and an IN subquery") {
+    Tables.register(spark, LocalSpark.sf)
+    spark.range(1, 41).selectExpr("id", "REPEAT('w ', CAST(id % 5 AS INT)) AS text")
+      .createOrReplaceTempView("spread_docs")
+    val q = """
+      WITH t AS (
+        SELECT id, TOKENIZE(text) AS toks
+        FROM (SELECT /*+ REPARTITION */ id, text FROM spread_docs)
+      )
+      SELECT a.id, SIZE(a.toks) AS n
+      FROM t a JOIN t b ON a.id = b.id + 1
+      WHERE SIZE(a.toks) > 0 AND a.id IN (SELECT id FROM t WHERE SIZE(toks) > 1)"""
+    try {
+      val df = Tables.sql(q)(spark, LocalSpark.sf)
+      val rows = df.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+      val plain = spark.sql(q.replace("/*+ REPARTITION */", ""))
+        .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+      assert(rows.nonEmpty && rows == plain)
+      val hints = hintExchanges(df.queryExecution.executedPlan)
+      assert(hints.nonEmpty, "the hint planned no round-robin exchange")
+      val dp = spark.sparkContext.defaultParallelism
+      for ((x, below) <- hints) {
+        assert(x.outputPartitioning == RoundRobinPartitioning(dp) &&
+          x.shuffleOrigin == REPARTITION_BY_NUM, s"${x.outputPartitioning}, ${x.shuffleOrigin}")
+        assert(below.isEmpty, s"a kernel filter crossed the hint: $below")
+      }
+    } finally spark.catalog.dropTempView("spread_docs")
   }
 
   test("text_repetition aggregates partially before both exchanges (map-side combine)") {
@@ -338,7 +414,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("dedup_embedding_cosine: salted SHUFFLE_MERGE self-join, never a broadcast") {
-    // the r14 sf10 scale-killer: Spark broadcast the self-join side and
+    // the sf10 scale-killer: Spark broadcast the self-join side and
     // ran the full pair expansion on ONE input partition. The pin:
     // sort-merge on (label, salt) — a broadcast here means the salt
     // (and all 32 cores) are dead weight again. W is adaptive now, so

@@ -146,8 +146,14 @@ class SessionSetupSpec extends AnyFunSuite with Matchers {
       // JVM-wide DataFrame slot
       "WeakHashMap" -> Set("Tables.scala"),
       "extraOptimizations" -> Set("plans/MvRewrite.scala"),
-      "extraStrategies" -> Set("plans/TopKPerKey.scala"),
-      "AtomicReference[DataFrame]" -> Set.empty[String])
+      "extraStrategies" -> Set("plans/TopKPerKey.scala", "plans/Spread.scala"),
+      "AtomicReference[DataFrame]" -> Set.empty[String],
+      // a scan is spread by one mechanism, `plans/Spread.scala`, at the
+      // session's width: no query writes a width, rewrites hint text or
+      // repartitions by hand
+      "scaleHints" -> Set.empty[String],
+      "REPARTITION(32)" -> Set.empty[String],
+      ".repartition(spark.sparkContext.defaultParallelism" -> Set.empty[String])
     val root = Paths.get("src/main/scala/graft")
     val sources: Seq[(String, String)] = {
       val walk = Files.walk(root)
